@@ -98,15 +98,21 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
             else:
                 write_table(ctx, result.good, tgt,
                             os.path.join(out_dir, f"{tgt}.parquet"))
-        # the good write fired obs_all (total + bad counts in the
-        # SAME pass); only spend a second conversion scan collecting
-        # bad samples when there is something to sample — on a clean
-        # table this halves the per-table cost (r10 rehearsal cliff)
-        bad_total = (result.bad_count_from_good_pass()
-                     if target == "parquet" else None)
-        if bad_total == 0:
-            n_bad = 0
+        # the exact conversion-bad count comes from data already in
+        # hand: the good write fired obs_all (total + bad counts in the
+        # SAME pass) on parquet; the row-writer sinks run an RDD
+        # action, which fires no observation, so there it is the
+        # sources pass's row total minus what the writer saw.  Only
+        # spend a second conversion scan collecting bad samples when
+        # there is something to sample — on a clean table this halves
+        # the per-table cost (r10 rehearsal cliff)
+        if wstats is None:
+            bad_total = result.bad_count_from_good_pass()
         else:
+            bad_total = max(0, ctx._tstats(src_table).rows
+                            - wstats.rows_written - wstats.rows_dropped)
+        n_bad = 0
+        if bad_total != 0:
             n_bad = write_bad_data(
                 result.bad, os.path.join(out_dir, f"{tgt}.dropped.txt"))
         if wstats is not None:
@@ -114,7 +120,7 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
             # fire; take the counts from the writer's accumulators
             result.record_stats(ctx, src_table,
                                 good_n=wstats.rows_written,
-                                bad_n=n_bad + wstats.rows_dropped)
+                                bad_n=bad_total + wstats.rows_dropped)
             # rows the writer's constraint bisection rejected are
             # counted into bad stats (and flip the exit code), so they
             # must leave an artifact too — first-N samples, like the

@@ -651,34 +651,44 @@ def _against_store_tail(engine: str, batch_src: str, eval_src: str,
     return render(t, engine)
 
 
+CURATION_RELATIONS = ("eval_grams", "boiler_grams", "vocab", "totals",
+                      "doc_ids")
+
+
 def curation_store_write(spark, docs_df, store_path: str,
-                         eval_mod: int = CUR_EVAL_MOD,
-                         mode: str = "overwrite") -> None:
+                         eval_mod: int = CUR_EVAL_MOD) -> None:
     """Compute the corpus-side curation aggregates for ``docs_df``
-    (documents schema) and persist them as the parquet CURATION
+    (documents schema) and publish them as the parquet CURATION
     STORE:
 
       {store}/eval_grams    distinct eval-set 4-grams (tiny)
       {store}/boiler_grams  corpus 5-grams with DF >= {BOILER_MIN_DOCS}
       {store}/vocab         corpus unigram counts
       {store}/totals        1 row: corpus token total
+      {store}/doc_ids       the docs folded in so far (fold ledger)
 
     For a 100 TB corpus these are MB-to-low-GB relations computed in
     ONE pass each over the corpus text; every future batch is scored
     against them without re-reading (or re-tokenizing) a single
     corpus byte — the same amortization contract as dedup's signature
     store and the ANN index store."""
-    with scoped_parser_mode(spark, "true"):
-        docs_df.createOrReplaceTempView("__cur_store_in")
-        ctes = _store_build_ctes("spark", "__cur_store_in",
-                                 eval_mod=eval_mod)
-        for name in ("eval_grams", "boiler_grams", "vocab"):
-            spark.sql(ctes[name]).write.mode(mode) \
-                .parquet(f"{store_path}/{name}")
-        spark.read.parquet(f"{store_path}/vocab") \
-            .createOrReplaceTempView("__cur_store_vocab")
-        spark.sql(ctes["totals"].format(vocab="__cur_store_vocab")) \
-            .write.mode(mode).parquet(f"{store_path}/totals")
+    from .storecache import publish_store, write_relations
+
+    def build(tmp: str) -> None:
+        with scoped_parser_mode(spark, "true"):
+            docs_df.createOrReplaceTempView("__cur_store_in")
+            ctes = _store_build_ctes("spark", "__cur_store_in",
+                                     eval_mod=eval_mod)
+            write_relations(tmp, {name: spark.sql(ctes[name]) for name in
+                                  ("eval_grams", "boiler_grams", "vocab")})
+            spark.read.parquet(f"{tmp}/vocab") \
+                .createOrReplaceTempView("__cur_store_vocab")
+            write_relations(tmp, {
+                "totals": spark.sql(
+                    ctes["totals"].format(vocab="__cur_store_vocab")),
+                "doc_ids": docs_df.select("doc_id")})
+
+    publish_store(store_path, build)
 
 
 def curation_store_append(spark, store_path: str, docs_df) -> None:
@@ -691,6 +701,12 @@ def curation_store_append(spark, store_path: str, docs_df) -> None:
     retained (a gram must re-earn the floor within a merge window —
     the bounded-state tradeoff, documented).
 
+    The fold rewrites all relations at once, so it is ONE
+    storecache.rewrite_store build-and-swap under the exclusive lock:
+    a crash mid-fold leaves the old store intact.  Docs already in
+    the ``doc_ids`` ledger are skipped, so replaying a fold (the
+    streaming gate's at-least-once window) changes nothing.
+
     Consequence bound (pinned by
     tests/test_pipeline.py::test_curation_store_3batch_chain_drift_bound):
     scoring a later batch against a store appended from batches 1-2
@@ -699,131 +715,108 @@ def curation_store_append(spark, store_path: str, docs_df) -> None:
     (incremental retains a subset of ref's boiler grams, so
     n_boiler_grams_inc <= ref) and bounded at <= 0.10 absolute
     boiler_frac per document on the test corpus."""
-    from .storecache import store_lock
+    from .storecache import rewrite_store
 
-    # shared mutation lock for the WHOLE read-merge-overwrite fold:
-    # a compaction snapshotting between this fold's reads and writes
-    # would destroy the fold at swap time (storecache.store_lock)
-    with store_lock(store_path, exclusive=False):
-        _curation_store_append_locked(spark, store_path, docs_df)
-
-
-def _curation_store_append_locked(spark, store_path: str,
-                                  docs_df) -> None:
     with scoped_parser_mode(spark, "true"):
-        docs_df.createOrReplaceTempView("__cur_app_in")
-        toks = render(TOKENS, "spark")
-        g5 = _gram_expr("spark", 5, clamp=True)
-        g4 = _gram_expr("spark", 4)
-        # batch increments
-        inc_df = spark.sql(f"""
-            SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs FROM (
-                SELECT DISTINCT doc_id, gram FROM (
-                    SELECT doc_id, explode(g) AS gram
-                    FROM (SELECT doc_id, {g5} AS g
-                          FROM (SELECT doc_id, {toks} AS tk
-                                FROM __cur_app_in) _c) _g) _x) _d
-            GROUP BY gram""").localCheckpoint()
-        inc_df.createOrReplaceTempView("__cur_app_g5")
-        old = spark.read.parquet(f"{store_path}/boiler_grams") \
-            .localCheckpoint()
-        old.createOrReplaceTempView("__cur_app_boiler_old")
-        merged = spark.sql(f"""
-            SELECT gram, CAST(SUM(n_docs) AS BIGINT) AS n_docs FROM (
-                SELECT * FROM __cur_app_boiler_old
-                UNION ALL SELECT * FROM __cur_app_g5) _u
-            GROUP BY gram HAVING SUM(n_docs) >= {BOILER_MIN_DOCS}
-        """).localCheckpoint()
-        merged.write.mode("overwrite") \
-            .parquet(f"{store_path}/boiler_grams")
-        # vocab + totals merge
-        vinc = spark.sql(f"""
-            SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM (
-                SELECT explode(tk) AS tok
-                FROM (SELECT {toks} AS tk FROM __cur_app_in) _c) _t
-            GROUP BY tok""").localCheckpoint()
-        vinc.createOrReplaceTempView("__cur_app_vinc")
-        vold = spark.read.parquet(f"{store_path}/vocab").localCheckpoint()
-        vold.createOrReplaceTempView("__cur_app_vold")
-        vmerged = spark.sql("""
-            SELECT tok, CAST(SUM(n) AS BIGINT) AS n FROM (
-                SELECT * FROM __cur_app_vold
-                UNION ALL SELECT * FROM __cur_app_vinc) _u
-            GROUP BY tok""").localCheckpoint()
-        vmerged.write.mode("overwrite").parquet(f"{store_path}/vocab")
-        spark.sql("""SELECT CAST(SUM(n) AS BIGINT) AS t
-                     FROM __cur_app_vold
-                     UNION ALL
-                     SELECT CAST(SUM(n) AS BIGINT) FROM __cur_app_vinc""") \
-            .groupBy().sum("t").selectExpr("CAST(`sum(t)` AS BIGINT) AS t") \
-            .write.mode("overwrite").parquet(f"{store_path}/totals")
-        # new eval grams (batch docs on the eval residue) — merged with
-        # the existing store via DISTINCT-union + overwrite, like
-        # boiler_grams/vocab: a bare mode('append') deduplicated only
-        # within the batch, so a gram seen in several appended batches
-        # (or already stored) got duplicate rows and the ev join in
-        # _against_store_tail multiplied matches, inflating
-        # n_eval_grams (ADVICE r9)
-        spark.sql(f"""
-            SELECT DISTINCT gram FROM (
-                SELECT explode(g) AS gram
-                FROM (SELECT {g4} AS g
-                      FROM (SELECT doc_id, {toks} AS tk FROM __cur_app_in)
-                      _c WHERE doc_id % {CUR_EVAL_MOD} = 0
-                         AND size(tk) >= 4) _g) _e
-        """).createOrReplaceTempView("__cur_app_ev_new")
-        eold = spark.read.parquet(f"{store_path}/eval_grams") \
-            .localCheckpoint()
-        eold.createOrReplaceTempView("__cur_app_ev_old")
-        emerged = spark.sql("""
-            SELECT DISTINCT gram FROM (
-                SELECT * FROM __cur_app_ev_old
-                UNION ALL SELECT * FROM __cur_app_ev_new) _u
-        """).localCheckpoint()
-        emerged.write.mode("overwrite").parquet(f"{store_path}/eval_grams")
+        rewrite_store(spark, store_path, CURATION_RELATIONS,
+                      lambda snap: _curation_fold(spark, snap, docs_df))
+
+
+def _curation_fold(spark, snap: dict, docs_df) -> dict:
+    """The fold law: old relations + the batch's NEW docs -> the
+    replacement relations."""
+    new_docs = docs_df.join(snap["doc_ids"], "doc_id",
+                            "left_anti").localCheckpoint()
+    new_docs.createOrReplaceTempView("__cur_app_in")
+    toks = render(TOKENS, "spark")
+    g5 = _gram_expr("spark", 5, clamp=True)
+    g4 = _gram_expr("spark", 4)
+    # batch increments
+    spark.sql(f"""
+        SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs FROM (
+            SELECT DISTINCT doc_id, gram FROM (
+                SELECT doc_id, explode(g) AS gram
+                FROM (SELECT doc_id, {g5} AS g
+                      FROM (SELECT doc_id, {toks} AS tk
+                            FROM __cur_app_in) _c) _g) _x) _d
+        GROUP BY gram""").createOrReplaceTempView("__cur_app_g5")
+    snap["boiler_grams"].createOrReplaceTempView("__cur_app_boiler_old")
+    boiler = spark.sql(f"""
+        SELECT gram, CAST(SUM(n_docs) AS BIGINT) AS n_docs FROM (
+            SELECT * FROM __cur_app_boiler_old
+            UNION ALL SELECT * FROM __cur_app_g5) _u
+        GROUP BY gram HAVING SUM(n_docs) >= {BOILER_MIN_DOCS}
+    """)
+    # vocab + totals merge
+    spark.sql(f"""
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM (
+            SELECT explode(tk) AS tok
+            FROM (SELECT {toks} AS tk FROM __cur_app_in) _c) _t
+        GROUP BY tok""").localCheckpoint() \
+        .createOrReplaceTempView("__cur_app_vinc")
+    snap["vocab"].createOrReplaceTempView("__cur_app_vold")
+    vocab = spark.sql("""
+        SELECT tok, CAST(SUM(n) AS BIGINT) AS n FROM (
+            SELECT * FROM __cur_app_vold
+            UNION ALL SELECT * FROM __cur_app_vinc) _u
+        GROUP BY tok""")
+    totals = spark.sql("""SELECT CAST(SUM(n) AS BIGINT) AS t
+                 FROM __cur_app_vold
+                 UNION ALL
+                 SELECT CAST(SUM(n) AS BIGINT) FROM __cur_app_vinc""") \
+        .groupBy().sum("t").selectExpr("CAST(`sum(t)` AS BIGINT) AS t")
+    # new eval grams (batch docs on the eval residue), DISTINCT-union
+    # merged with the stored ones: a bare append deduplicated only
+    # within the batch, so a gram seen in several appended batches
+    # (or already stored) got duplicate rows and the ev join in
+    # _against_store_tail multiplied matches, inflating n_eval_grams
+    # (ADVICE r9)
+    spark.sql(f"""
+        SELECT DISTINCT gram FROM (
+            SELECT explode(g) AS gram
+            FROM (SELECT {g4} AS g
+                  FROM (SELECT doc_id, {toks} AS tk FROM __cur_app_in)
+                  _c WHERE doc_id % {CUR_EVAL_MOD} = 0
+                     AND size(tk) >= 4) _g) _e
+    """).createOrReplaceTempView("__cur_app_ev_new")
+    snap["eval_grams"].createOrReplaceTempView("__cur_app_ev_old")
+    eval_grams = spark.sql("""
+        SELECT DISTINCT gram FROM (
+            SELECT * FROM __cur_app_ev_old
+            UNION ALL SELECT * FROM __cur_app_ev_new) _u
+    """)
+    return {"eval_grams": eval_grams, "boiler_grams": boiler,
+            "vocab": vocab, "totals": totals,
+            "doc_ids": snap["doc_ids"].unionByName(
+                new_docs.select("doc_id"))}
 
 
 def curation_store_compact(spark, store_path: str,
                            max_files_per_relation: int = 4) -> dict:
     """Compact the persisted curation store (VERDICT r10 ask 8).  The
-    four relations are rewritten whole on every append (overwrite
-    merge), so unlike the signature store they don't accumulate epoch
-    files — but each overwrite inherits the shuffle partitioning of
-    the merge (32+ part files for KB-scale relations), and replayed
-    appends can leave duplicate eval_grams rows from the pre-r9
-    append path.  Compaction re-buckets every relation to
-    ``max_files_per_relation`` files, re-asserts the boilerplate DF
-    floor, and DISTINCTs eval_grams; vocab/totals are content-exact
-    rewrites (their counts are additive state that nothing can
-    legitimately dedupe).  Scoring any batch against the store before
-    and after is EXACTLY equal column-for-column (pinned by
-    tests/test_pipeline.py).  Returns per-relation file counts."""
-    from .storecache import replace_store, store_lock
+    relations are rewritten whole on every fold, so unlike the
+    signature store they don't accumulate epoch files — but each fold
+    inherits the shuffle partitioning of the merge (32+ part files
+    for KB-scale relations), and stores folded by the pre-r9 append
+    path can hold duplicate eval_grams rows.  Compaction re-buckets
+    every relation to ``max_files_per_relation`` files, re-asserts
+    the boilerplate DF floor, and DISTINCTs eval_grams; the other
+    relations are content-exact rewrites (their counts are additive
+    state that nothing can legitimately dedupe).  Scoring any batch
+    against the store before and after is EXACTLY equal
+    column-for-column (pinned by tests).  Returns per-relation file
+    counts."""
+    from .storecache import rewrite_store
 
-    stats = {}
-    # ONE exclusive lock on the store ROOT for all four relations:
-    # curation_store_append locks the root (its fold spans all
-    # relations), so per-sub locks would not exclude it — and the
-    # lock must span snapshot + swap, or a fold landing in between
-    # is destroyed by the swap (the live-admission e2e's lesson)
-    with store_lock(store_path, exclusive=True):
-        for name in ("eval_grams", "boiler_grams", "vocab", "totals"):
-            sub = f"{store_path}/{name}"
-            df = spark.read.parquet(sub)
-            files_before = len(df.inputFiles())
-            if name == "eval_grams":
-                df = df.distinct()
-            elif name == "boiler_grams":
-                df = df.where(f"n_docs >= {BOILER_MIN_DOCS}")
-            fixed = df.coalesce(max_files_per_relation) \
-                .localCheckpoint()
-            replace_store(sub, lambda tmp, d=fixed: d.write.parquet(tmp),
-                          pre_locked=True)
-            stats[name] = {
-                "files_before": files_before,
-                "files_after": len(
-                    spark.read.parquet(sub).inputFiles())}
-    return stats
+    def law(snap):
+        out = dict(snap)
+        out["eval_grams"] = snap["eval_grams"].distinct()
+        out["boiler_grams"] = snap["boiler_grams"].where(
+            f"n_docs >= {BOILER_MIN_DOCS}")
+        return {name: df.coalesce(max_files_per_relation)
+                for name, df in out.items()}
+
+    return rewrite_store(spark, store_path, CURATION_RELATIONS, law)
 
 
 def curate_against_store(spark, store_path: str, batch_df):
@@ -887,20 +880,13 @@ def curation_store_entry_fn(spark, sf_dir: str, mod: int = CUR_MOD,
     runs (dedup_incremental_against_store's protocol), so the
     measured cost is the batch-sized scoring probe — never the
     corpus-side aggregate build."""
-    import hashlib
-    import os
-
-    from .storecache import publish_store, store_path
+    from .storecache import fixture_store
 
     src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
-    ident = hashlib.sha1(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}".encode()).hexdigest()[:16]
-    store = store_path("curation", ident)
+    store = fixture_store("curation", src, mod, res)
     docs = read_spread(spark, src)
-    publish_store(store, lambda tmp: curation_store_write(
-        spark, docs.where(f"doc_id % {mod} < {res}"), tmp))
+    curation_store_write(spark, docs.where(f"doc_id % {mod} < {res}"),
+                         store)
     return curate_against_store(
         spark, store, docs.where(f"doc_id % {mod} >= {res}"))
 

@@ -1141,8 +1141,7 @@ def lsh_verified_pairs_fn(spark, sf_dir: str):
                                         gram_source="__mh_grams"))
 
 
-def dedup_clusters_fn(spark, sf_dir: str, max_iters: int = 20,
-                      pairs=None):
+def dedup_clusters_fn(spark, sf_dir: str, pairs=None):
     """Near-dup CLUSTER ASSIGNMENT: connected components over the
     LSH-verified pair graph, via iterative min-label propagation —
     every doc in a component converges to the component's minimum
@@ -1153,9 +1152,10 @@ def dedup_clusters_fn(spark, sf_dir: str, max_iters: int = 20,
     action is a count of changed labels), each round is one
     edge-labels equi-join + min-aggregate, and labels are
     localCheckpoint()ed so lineage stays flat. Rounds needed = graph
-    diameter — tiny for dup clusters (near-cliques); ``max_iters``
-    bounds pathological chains. The oracle recomputes components with
-    a recursive CTE (transitive closure + MIN) — engine-independent
+    diameter — tiny for dup clusters (near-cliques); the loop runs
+    until no label changes, so a long chain costs more rounds but
+    still ends canonical. The oracle recomputes components with a
+    recursive CTE (transitive closure + MIN) — engine-independent
     agreement on every component.
     """
     from pyspark.sql import functions as F
@@ -1211,26 +1211,13 @@ def dedup_clusters_fn(spark, sf_dir: str, max_iters: int = 20,
     # is still "last step changed nothing" (monotone fixpoint: a no-op
     # step can never be followed by a change), and an odd-round
     # convergence just means the cycle's second step is a no-op.
-    # max_iters still bounds total STEPS, so pathological chains run
-    # exactly as many updates as before.
-    labels = None
-    converged = False
-    for cycle in range(max_iters // 2):
-        one = first_step().select("doc", "label") if cycle == 0 \
-            else prop(labels).select("doc", "label")
+    one = first_step().select("doc", "label")
+    while True:
         new = prop(one).localCheckpoint()
-        changed = new.where("chg").count()
         labels = new.select("doc", "label")
-        if changed == 0:
-            converged = True
+        if new.where("chg").count() == 0:
             break
-    if max_iters % 2 and not converged:
-        # odd bound: the documented step budget ends on a single step
-        one = first_step() if labels is None else prop(labels)
-        labels = one.select("doc", "label").localCheckpoint()
-    if labels is None:            # max_iters == 0: identity labels
-        labels = (edges.select(F.col("doc_a").alias("doc")).distinct()
-                  .select("doc", F.col("doc").alias("label")))
+        one = prop(labels).select("doc", "label")
     return labels.select(F.col("doc").alias("doc_id"),
                          F.col("label").alias("cluster_id"))
 
@@ -2086,28 +2073,35 @@ def dedup_incremental_fn(spark, sf_dir: str, mod: int = INCOMING_MOD,
 # persistent signature store (the production incremental-dedup flow)
 # ---------------------------------------------------------------------------
 
-def signature_store_write(spark, docs_df, store_path: str,
-                          mode: str = "overwrite") -> None:
-    """Compute MinHash signatures for ``docs_df`` (documents schema)
-    and persist them as the parquet SIGNATURE STORE — the append-only
-    corpus-side state of incremental dedup. Signatures are |docs| x
-    (1 + K) longs: the store for a 100 TB corpus is ~1/1000th of the
-    text and is the ONLY thing future batches ever read — the corpus
-    text is never re-tokenized."""
-    from .storecache import store_lock
+def _signature_relations(docs_df) -> dict:
+    """The signature store's one relation (the store root): MinHash
+    signatures for ``docs_df`` (documents schema).  r16: vectorized
+    md5 kernel (bit-identical to the HOF template; see
+    minhash_lsh_pairs_fn); r17: the parquet write is the signature's
+    ONLY consumer, so it computes inside the write action (no
+    pre-write checkpoint barrier)."""
+    return {"": vectorized_signature_df(docs_df, materialize=False)}
 
-    # r16: vectorized md5 kernel signature (bit-identical to the HOF
-    # template; see minhash_lsh_pairs_fn) — the store for a given
-    # corpus is byte-for-byte what the SQL form wrote.  r17: the
-    # parquet write is the signature's ONLY consumer, so it computes
-    # inside the write action (no pre-write checkpoint barrier).
-    sig = vectorized_signature_df(docs_df, materialize=False)
-    # shared mutation lock: an append landing while a compaction is
-    # between its snapshot and its swap would be silently destroyed
-    # by the swap (storecache.store_lock) — serialize writers only;
-    # probes never lock
-    with store_lock(store_path, exclusive=False):
-        sig.write.mode(mode).parquet(store_path)
+
+def signature_store_write(spark, docs_df, store_path: str) -> None:
+    """Publish the parquet SIGNATURE STORE for ``docs_df`` — the
+    append-only corpus-side state of incremental dedup. Signatures
+    are |docs| x (1 + K) longs: the store for a 100 TB corpus is
+    ~1/1000th of the text and is the ONLY thing future batches ever
+    read — the corpus text is never re-tokenized."""
+    from .storecache import publish_store, write_relations
+
+    publish_store(store_path, lambda tmp: write_relations(
+        tmp, _signature_relations(docs_df)))
+
+
+def signature_store_append(spark, store_path: str, docs_df) -> None:
+    """Append ``docs_df``'s signatures to the store (shared lock).
+    At-least-once replay appends the same rows twice; that never
+    changes a verdict (see signature_store_compact)."""
+    from .storecache import append_store
+
+    append_store(store_path, _signature_relations(docs_df))
 
 
 def signature_store_compact(spark, store_path: str,
@@ -2119,8 +2113,8 @@ def signature_store_compact(spark, store_path: str,
     of small files carrying duplicate rows.  Compaction = DISTINCT over
     whole rows (replay duplicates are bit-identical: signatures are
     deterministic functions of the text) + re-bucket to
-    ``ceil(rows / rows_per_file)`` files hash-partitioned on doc_id +
-    atomic directory swap (storecache.replace_store).
+    ``ceil(rows / rows_per_file)`` files hash-partitioned on doc_id,
+    swapped in by storecache.rewrite_store.
 
     DECISION-INVARIANT by construction: the probe's ``dup_of`` is a
     MIN over candidate doc_ids, bucket degrade reps are MIN(doc_id),
@@ -2130,53 +2124,44 @@ def signature_store_compact(spark, store_path: str,
     probe output bit-identical pre-compact, post-compact, and vs a
     from-scratch store).  Returns
     ``{rows_before, rows_after, files_before, files_after}``."""
-    from .storecache import replace_store, store_lock
+    from .storecache import rewrite_store
 
-    # the EXCLUSIVE lock covers snapshot AND swap: locking only the
-    # swap lets a concurrent shared-lock append land between this
-    # snapshot and the swap and be destroyed by it (caught by the
-    # live-admission e2e — fork A lost epoch-1's signatures)
-    with store_lock(store_path, exclusive=True):
-        df = spark.read.parquet(store_path)
-        files_before = len(df.inputFiles())
-        rows_before = df.count()
-        # materialize BEFORE the swap: the plan reads the directory
-        # the swap is about to replace
+    rows = {}
+
+    def law(snap):
+        df = snap[""]
+        rows["rows_before"] = df.count()
         compacted = df.distinct().localCheckpoint()
-        rows_after = compacted.count()
-        n_files = max(1, -(-rows_after // rows_per_file))
-        replace_store(store_path, lambda tmp: compacted
-                      .repartition(n_files, "doc_id")
-                      .write.parquet(tmp), pre_locked=True)
-    return {"rows_before": rows_before, "rows_after": rows_after,
-            "files_before": files_before,
-            "files_after": len(
-                spark.read.parquet(store_path).inputFiles())}
+        rows["rows_after"] = compacted.count()
+        n_files = max(1, -(-rows["rows_after"] // rows_per_file))
+        return {"": compacted.repartition(n_files, "doc_id")}
+
+    files = rewrite_store(spark, store_path, [""], law)[""]
+    return {**rows, **files}
 
 
 def signature_store_evict(spark, store_path: str,
                           drop_where: str) -> dict:
     """Evict signatures matching the SQL predicate ``drop_where``
     (e.g. ``"doc_id IN (...)"`` for takedowns, or a range predicate
-    for retention) from the persisted store, with the same
-    materialize-then-atomic-swap discipline as compaction.  Unlike
-    compaction this DELIBERATELY changes future decisions: batches
-    duplicating an evicted doc stop being flagged — that is the point
+    for retention) from the persisted store, through the same
+    storecache.rewrite_store swap as compaction.  Unlike compaction
+    this DELIBERATELY changes future decisions: batches duplicating an
+    evicted doc stop being flagged — that is the point
     (right-to-be-forgotten / retention); everything else is untouched
     (pinned by tests)."""
-    from .storecache import replace_store, store_lock
+    from .storecache import rewrite_store
 
-    with store_lock(store_path, exclusive=True):
-        df = spark.read.parquet(store_path)
-        rows_before = df.count()
-        kept = df.where(f"NOT ({drop_where})").localCheckpoint()
-        rows_after = kept.count()
-        replace_store(store_path,
-                      lambda tmp: kept.write.parquet(tmp),
-                      pre_locked=True)
-    return {"rows_before": rows_before, "rows_after": rows_after,
-            "evicted": rows_before - rows_after}
+    rows = {}
 
+    def law(snap):
+        rows["rows_before"] = snap[""].count()
+        kept = snap[""].where(f"NOT ({drop_where})").localCheckpoint()
+        rows["rows_after"] = kept.count()
+        return {"": kept}
+
+    rewrite_store(spark, store_path, [""], law)
+    return {**rows, "evicted": rows["rows_before"] - rows["rows_after"]}
 
 def dedup_incremental_against_store(spark, store_path: str, batch_df,
                                     admit: bool = False):
@@ -2192,6 +2177,8 @@ def dedup_incremental_against_store(spark, store_path: str, batch_df,
     Scale: one batch-sized signature job, one batch-sized band probe
     against bucketed store keys, one batch-sized append. Nothing is
     ever recomputed over the corpus."""
+    from .storecache import append_store
+
     with scoped_parser_mode(spark, "true"):
         # r16: vectorized md5 kernel for the batch signature
         # (bit-identical to the HOF template; see minhash_lsh_pairs_fn).
@@ -2254,7 +2241,7 @@ def dedup_incremental_against_store(spark, store_path: str, batch_df,
             """)
             excluded = verdicts.select("doc_id").union(intra)
             clean_sig = batch_sig.join(excluded, "doc_id", "left_anti")
-            clean_sig.write.mode("append").parquet(store_path)
+            append_store(store_path, {"": clean_sig})
         return verdicts
 
 
@@ -2263,34 +2250,20 @@ def dedup_incremental_store_entry_fn(spark, sf_dir: str,
                                      res: int = INCOMING_RES):
     """Registry/bench twin of dedup_incremental probing the PERSISTED
     signature store — the amortized production shape (VERDICT r7 ask
-    6): the corpus-side store is built once per fixture (keyed by the
-    documents file's identity) and REUSED across runs, so the measured
+    6): the corpus-side store is built once per fixture identity
+    (storecache.fixture_store) and REUSED across runs, so the measured
     cost is the batch-sized probe, not the corpus signature recompute
     the harness-shaped entry (dedup_incremental) pays every run.
     Value-identical to dedup_incremental_sql: the store holds exactly
     the corpus docs' signatures, the probe is the same asymmetric band
     join."""
-    import hashlib
-    import os
-
-    from .storecache import publish_store, store_path
+    from .storecache import fixture_store
 
     src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
-    # key on the fixture's FULL identity (absolute path + ns mtime +
-    # size), not its basename + whole-second mtime — two fixtures
-    # sharing a basename regenerated within the same second must not
-    # collide (code-review r8).  The store lives in the per-user 0700
-    # cache (ADVICE r8: the old world-shared /tmp path was
-    # pre-creatable by other users and accumulated stale stores);
-    # store_path() evicts superseded fixture identities.
-    ident = hashlib.sha1(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}".encode()).hexdigest()[:16]
-    store = store_path("sig", ident)
+    store = fixture_store("sig", src, mod, res)
     docs = read_spread(spark, src)
-    publish_store(store, lambda tmp: signature_store_write(
-        spark, docs.where(f"doc_id % {mod} < {res}"), tmp))
+    signature_store_write(spark, docs.where(f"doc_id % {mod} < {res}"),
+                          store)
     return dedup_incremental_against_store(
         spark, store, docs.where(f"doc_id % {mod} >= {res}"))
 
@@ -2300,9 +2273,19 @@ def dedup_incremental_store_entry_fn(spark, sf_dir: str,
 # (VERDICT r14 ask 5 — the substring-span family's production flow)
 # ---------------------------------------------------------------------------
 
-def gram_store_write(spark, docs_df, store_path: str,
-                     mode: str = "overwrite") -> None:
-    """Tokenize ``docs_df`` (documents schema) ONCE and persist its
+def _gram_relations(spark, docs_df) -> dict:
+    """The gram store's one relation (the store root): per-gram
+    occurrence counts ``(h, n_occ)`` of ``docs_df`` (documents
+    schema)."""
+    docs_df.createOrReplaceTempView("__substr_store_in")
+    with scoped_parser_mode(spark, "true"):
+        g = _substr_gram_df(spark, "__substr_store_in")
+        return {"": g.groupBy("h").count().withColumnRenamed(
+            "count", "n_occ")}
+
+
+def gram_store_write(spark, docs_df, store_path: str) -> None:
+    """Tokenize ``docs_df`` (documents schema) ONCE and publish its
     per-gram occurrence counts ``(h, n_occ)`` as the parquet 5-GRAM
     STORE — the corpus-side state of incremental ExactSubstr.  The
     store for a 100 TB corpus is one row per DISTINCT gram (bounded
@@ -2313,18 +2296,18 @@ def gram_store_write(spark, docs_df, store_path: str,
     n_occ) rows; the probe tests PRESENCE of h (any corpus
     occurrence makes a batch position duplicated), so replayed or
     duplicate h rows can never change a verdict — the same
-    decision-invariance argument as signature_store_compact.  Writers
-    take the shared storecache lock (appends of distinct batches
-    commute; a compaction would take it exclusively)."""
-    from .storecache import store_lock
+    decision-invariance argument as signature_store_compact."""
+    from .storecache import publish_store, write_relations
 
-    docs_df.createOrReplaceTempView("__substr_store_in")
-    with scoped_parser_mode(spark, "true"):
-        g = _substr_gram_df(spark, "__substr_store_in")
-        counts = g.groupBy("h").count().withColumnRenamed(
-            "count", "n_occ")
-        with store_lock(store_path, exclusive=False):
-            counts.write.mode(mode).parquet(store_path)
+    publish_store(store_path, lambda tmp: write_relations(
+        tmp, _gram_relations(spark, docs_df)))
+
+
+def gram_store_append(spark, store_path: str, docs_df) -> None:
+    """Append ``docs_df``'s gram counts to the store (shared lock)."""
+    from .storecache import append_store
+
+    append_store(store_path, _gram_relations(spark, docs_df))
 
 
 _SUBSTR_ISL_SELECT = f"""SELECT doc_id,
@@ -2355,7 +2338,7 @@ def substring_probe_against_store(spark, store_path: str, batch_df,
     Scale: one batch-sized tokenize, one batch-sized hash join
     against the store's distinct gram hashes (8-byte keys — never
     text), one per-doc window; nothing corpus-sized recomputes."""
-    from .storecache import store_lock
+    from .storecache import append_store
 
     with scoped_parser_mode(spark, "true"):
         batch_df.createOrReplaceTempView("__substr_batch_in")
@@ -2387,8 +2370,7 @@ def substring_probe_against_store(spark, store_path: str, batch_df,
                 SELECT h, COUNT(*) AS n_occ
                 FROM __substr_batch_g GROUP BY h
             """)
-            with store_lock(store_path, exclusive=False):
-                batch_counts.write.mode("append").parquet(store_path)
+            append_store(store_path, {"": batch_counts})
         return spans
 
 
@@ -2434,23 +2416,15 @@ def substring_incremental_store_entry_fn(spark, sf_dir: str,
                                          mod: int = INCOMING_MOD,
                                          res: int = INCOMING_RES):
     """Registry/bench twin: the corpus-side gram store is built once
-    per fixture identity (same keying and per-user 0700 cache as the
+    per fixture identity (storecache.fixture_store, like the
     signature store) and REUSED across runs, so the measured cost is
     the batch-sized probe — the amortized production shape of the
     substring family, mirroring dedup_incremental_against_store."""
-    import hashlib
-    import os
-
-    from .storecache import publish_store, store_path
+    from .storecache import fixture_store
 
     src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
-    ident = hashlib.sha1(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}".encode()).hexdigest()[:16]
-    store = store_path("substrgrams", ident)
+    store = fixture_store("substrgrams", src, mod, res)
     docs = read_spread(spark, src)
-    publish_store(store, lambda tmp: gram_store_write(
-        spark, docs.where(f"doc_id % {mod} < {res}"), tmp))
+    gram_store_write(spark, docs.where(f"doc_id % {mod} < {res}"), store)
     return substring_probe_against_store(
         spark, store, docs.where(f"doc_id % {mod} >= {res}"))

@@ -1141,19 +1141,22 @@ def synth_audio_fp_dedup(ids: DataFrame,
 
 
 def audio_fp_store_write(spark, media_df: DataFrame, store_path: str,
-                         mode: str = "overwrite",
                          batch_size: int = 256,
                          hamming_k: int = 3) -> None:
-    """Audio twin of phash_store_write: decode ONCE, persist
+    """Audio twin of phash_store_write: decode ONCE, publish
     (media_id, afp64) hashes + the bucket sidecar in the shared
     hash64 store layout — every store/probe/compaction invariant
-    (merge laws, star-invariant MIN, lock discipline) carries over
-    verbatim because the relation shape is identical."""
-    from .storecache import store_lock
+    (merge laws, star-invariant MIN) carries over verbatim because
+    the relation shape is identical."""
+    _publish_hashes(store_path, lambda: _afp_df(media_df, batch_size),
+                    hamming_k)
 
-    ph = _afp_df(media_df, batch_size).localCheckpoint()
-    with store_lock(store_path, exclusive=False):
-        _phash_store_append(ph, store_path, hamming_k, mode=mode)
+
+def audio_fp_store_append(spark, store_path: str, media_df: DataFrame,
+                          batch_size: int = 256,
+                          hamming_k: int = 3) -> None:
+    """Decode a clip batch and append its afp64 hashes (shared lock)."""
+    _append_hashes(store_path, _afp_df(media_df, batch_size), hamming_k)
 
 
 def audio_fp_probe_against_store(spark, store_path: str,
@@ -1167,20 +1170,9 @@ def audio_fp_probe_against_store(spark, store_path: str,
     from the sidecar; dup_of = star-invariant MIN verified corpus
     match).  With ``admit=True`` the clean intra-batch keepers
     append, same filter as the image gate."""
-    from .storecache import store_lock
-
-    batch_ph = _afp_df(batch_media, batch_size).localCheckpoint()
-    verdicts = phash_probe_hashes(spark, store_path, batch_ph,
-                                  hamming_k)
-    if admit:
-        excluded = (verdicts.select("media_id").unionByName(
-            phash_intra_batch_excluded(batch_ph, hamming_k)
-            .select("media_id")).distinct())
-        clean = batch_ph.join(excluded, "media_id",
-                              "left_anti").localCheckpoint()
-        with store_lock(store_path, exclusive=False):
-            _phash_store_append(clean, store_path, hamming_k)
-    return verdicts
+    return _probe_and_admit(
+        spark, store_path, _afp_df(batch_media, batch_size)
+        .localCheckpoint(), hamming_k, admit)
 
 
 def afp_incremental_entry_fn(spark, sf_dir: str,
@@ -1191,32 +1183,9 @@ def afp_incremental_entry_fn(spark, sf_dir: str,
     REUSED across runs — the measured cost is the batch-sized PCM
     decode + probe.  Same mod-7 batch split (coprime with the
     200-class structure)."""
-    import hashlib as _hashlib
-    import os as _os
-
-    from .storecache import publish_store, store_path
-
-    src = f"{sf_dir}/documents.parquet"
-    st = _os.stat(src)
-    ident = _hashlib.sha1(
-        f"{_os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}|afp-v1".encode()).hexdigest()[:16]
-    store = store_path("afp", ident)
-    docs = read_cached(spark, src)
-
-    def hashes_for(pred: str) -> DataFrame:
-        ids = docs.where(pred).selectExpr(
-            f"explode(sequence(doc_id * {AFP_VARIANTS}, "
-            f"doc_id * {AFP_VARIANTS} + {AFP_VARIANTS - 1})) "
-            "AS media_id")
-        # fused synth→hash (r16): see phash_incremental_entry_fn
-        return synth_afp_hashes(ids)
-
-    publish_store(store, lambda tmp: _hash_store_publish(
-        hashes_for(f"doc_id % {mod} < {res}"), tmp))
-    return phash_probe_hashes(
-        spark, store, hashes_for(f"doc_id % {mod} >= {res}")
-        .localCheckpoint())
+    return _hash_incremental_entry(
+        spark, sf_dir, "afp", "afp-v1", AFP_VARIANTS, synth_afp_hashes,
+        phash_probe_hashes, mod, res)
 
 
 def _phash_bucket_partials(ph: DataFrame, hamming_k: int) -> DataFrame:
@@ -1234,38 +1203,43 @@ def _phash_bucket_partials(ph: DataFrame, hamming_k: int) -> DataFrame:
                  F.expr("min_by(phash, media_id)").alias("rep_ph")))
 
 
-def _phash_store_append(ph: DataFrame, store_path: str,
-                        hamming_k: int, mode: str = "append") -> None:
-    """Write a (media_id, phash) relation into the store layout:
-    ``{store}/hashes`` (16 bytes/image) + ``{store}/buckets_k{k}``
-    (the per-(b, slice) partial aggregates).  The sidecar is keyed by
-    the Hamming radius because the pigeonhole slicing depends on it —
-    a probe at a different k reads a different sidecar path and fails
-    loudly instead of silently joining mismatched slices."""
-    ph.write.mode(mode).parquet(f"{store_path}/hashes")
-    _phash_bucket_partials(ph, hamming_k).write.mode(mode).parquet(
-        f"{store_path}/buckets_k{hamming_k}")
+def _hash_relations(ph: DataFrame, hamming_k: int) -> dict:
+    """The hash64 store layout for a materialized (media_id, phash)
+    relation: ``hashes`` (16 bytes/image) + ``buckets_k{k}`` (the
+    per-(b, slice) partial aggregates).  The sidecar is keyed by the
+    Hamming radius because the pigeonhole slicing depends on it — a
+    probe at a different k reads a different sidecar path and fails
+    loudly instead of silently joining mismatched slices.  A temporal
+    (media_id, slot, phash) relation gets per-slot partials, with the
+    same merge laws."""
+    partials = (_thash_bucket_partials if "slot" in ph.columns
+                else _phash_bucket_partials)
+    return {"hashes": ph, f"buckets_k{hamming_k}": partials(ph, hamming_k)}
 
 
-def _hash_store_publish(ph_df: DataFrame, store_path: str,
-                        hamming_k: int = 3) -> None:
-    """Write an already-computed (media_id, phash) relation as a
-    fresh hash64 store — phash_store_write minus the decode, for the
-    fused synth→hash entry paths (same lock discipline, same
-    layout)."""
-    from .storecache import store_lock
+def _publish_hashes(store_path: str, hashes: Callable[[], DataFrame],
+                    hamming_k: int = 3) -> None:
+    """Publish the hash relation ``hashes()`` (computed once, only if
+    no store exists yet) as a fresh hash64 store."""
+    from .storecache import publish_store, write_relations
 
-    ph = ph_df.localCheckpoint()
-    with store_lock(store_path, exclusive=False):
-        _phash_store_append(ph, store_path, hamming_k,
-                            mode="overwrite")
+    publish_store(store_path, lambda tmp: write_relations(
+        tmp, _hash_relations(hashes().localCheckpoint(), hamming_k)))
+
+
+def _append_hashes(store_path: str, ph: DataFrame,
+                   hamming_k: int) -> None:
+    """Append a hash relation to a hash64 store (shared lock)."""
+    from .storecache import append_store
+
+    append_store(store_path,
+                 _hash_relations(ph.localCheckpoint(), hamming_k))
 
 
 def phash_store_write(spark, media_df: DataFrame, store_path: str,
-                      mode: str = "overwrite",
                       batch_size: int = 256,
                       hamming_k: int = 3) -> None:
-    """Decode ``media_df`` ONCE and persist the PHASH STORE — the
+    """Decode ``media_df`` ONCE and publish the PHASH STORE — the
     corpus-side state of incremental perceptual dedup:
 
       {store}/hashes       (media_id, phash) — 16 bytes per image
@@ -1275,41 +1249,38 @@ def phash_store_write(spark, media_df: DataFrame, store_path: str,
                            over the whole store
 
     Future batches read only these; the corpus media is never
-    re-decoded.  Writers take the shared storecache lock (appends of
-    distinct batches commute — both relations are append-only
-    partials); duplicate rows from at-least-once replay are harmless:
-    the probe takes a MIN over verified candidates and the sidecar's
-    merge laws are idempotent in the decision (a doubled n can only
-    push a bucket INTO star-degrade, and dup_of is star-invariant),
-    the same decision-invariance argument as the signature store."""
-    from .dedup import MAX_BUCKET  # noqa: F401  (doc anchor)
-    from .storecache import store_lock
+    re-decoded.  Appends of distinct batches commute (both relations
+    are append-only partials); duplicate rows from at-least-once
+    replay are harmless: the probe takes a MIN over verified
+    candidates and the sidecar's merge laws are idempotent in the
+    decision (a doubled n can only push a bucket INTO star-degrade,
+    and dup_of is star-invariant), the same decision-invariance
+    argument as the signature store."""
+    _publish_hashes(store_path, lambda: _phash_df(media_df, batch_size),
+                    hamming_k)
 
-    ph = _phash_df(media_df, batch_size).localCheckpoint()
-    with store_lock(store_path, exclusive=False):
-        _phash_store_append(ph, store_path, hamming_k, mode=mode)
+
+def phash_store_append(spark, store_path: str, media_df: DataFrame,
+                       batch_size: int = 256,
+                       hamming_k: int = 3) -> None:
+    """Decode an image batch and append its hashes (shared lock)."""
+    _append_hashes(store_path, _phash_df(media_df, batch_size),
+                   hamming_k)
 
 
 def phash_store_compact(spark, store_path: str,
-                        hamming_k: int = 3) -> None:
-    """Rebuild the bucket sidecar to one row per (b, slice) and
-    rewrite the hashes — the storecache replace_store protocol
-    (exclusive lock around snapshot + swap, pre_locked because flock
-    is not reentrant).  Run when many small admits have accumulated
-    partial rows; the probe is correct without it (it re-aggregates
-    partials), compaction just caps sidecar size at the true bucket
-    count."""
-    from .storecache import replace_store, store_lock
+                        hamming_k: int = 3) -> dict:
+    """Rebuild the bucket sidecar to one row per bucket and rewrite
+    the hashes, through storecache.rewrite_store.  Run when many
+    small admits have accumulated partial rows; the probe is correct
+    without it (it re-aggregates partials), compaction just caps
+    sidecar size at the true bucket count.  Serves every hash64 kind
+    (phash, afp, vhash, and the slot-carrying thash layout)."""
+    from .storecache import rewrite_store
 
-    with store_lock(store_path, exclusive=True):
-        hashes = spark.read.parquet(
-            f"{store_path}/hashes").localCheckpoint()
-
-        def build(tmp: str) -> None:
-            _phash_store_append(hashes, tmp, hamming_k,
-                                mode="overwrite")
-
-        replace_store(store_path, build, pre_locked=True)
+    return rewrite_store(
+        spark, store_path, ["hashes"], lambda snap: _hash_relations(
+            snap["hashes"].localCheckpoint(), hamming_k))
 
 
 def phash_probe_against_store(spark, store_path: str,
@@ -1342,19 +1313,24 @@ def phash_probe_against_store(spark, store_path: str,
     Scale: one batch-sized decode, one batch-sized join against
     16-bit slice buckets of 8-byte hashes, never pixels; bucket stats
     come from the persisted sidecar, never a window over the store."""
-    from .storecache import store_lock
+    return _probe_and_admit(
+        spark, store_path, _phash_df(batch_media, batch_size)
+        .localCheckpoint(), hamming_k, admit)
 
-    batch_ph = _phash_df(batch_media, batch_size).localCheckpoint()
+
+def _probe_and_admit(spark, store_path: str, batch_ph: DataFrame,
+                     hamming_k: int, admit: bool) -> DataFrame:
+    """phash_probe_hashes + (``admit``) the filtered append of the
+    batch's clean intra-batch keepers."""
     verdicts = phash_probe_hashes(spark, store_path, batch_ph,
                                   hamming_k)
     if admit:
         excluded = (verdicts.select("media_id").unionByName(
             phash_intra_batch_excluded(batch_ph, hamming_k)
             .select("media_id")).distinct())
-        clean = batch_ph.join(excluded, "media_id",
-                              "left_anti").localCheckpoint()
-        with store_lock(store_path, exclusive=False):
-            _phash_store_append(clean, store_path, hamming_k)
+        _append_hashes(store_path,
+                       batch_ph.join(excluded, "media_id", "left_anti"),
+                       hamming_k)
     return verdicts
 
 
@@ -1481,38 +1457,41 @@ def phash_incremental_entry_fn(spark, sf_dir: str,
     """Registry/bench twin: the corpus-side phash store is built once
     per fixture identity (per-user 0700 cache, storecache keying) and
     REUSED across runs — the measured cost is the batch-sized decode
-    + probe, mirroring dedup_incremental_store_entry_fn."""
-    import hashlib as _hashlib
-    import os as _os
+    + probe, mirroring dedup_incremental_store_entry_fn.  The version
+    token v2 marks the 6-container fixture + box-filter dHash +
+    hashes/buckets store layout generation."""
+    return _hash_incremental_entry(
+        spark, sf_dir, "phash", "v2", PHASH_VARIANTS, synth_phash_hashes,
+        phash_probe_hashes, mod, res)
 
-    from .storecache import publish_store, store_path
+
+def _hash_incremental_entry(spark, sf_dir: str, kind: str, version: str,
+                            variants: int, synth, probe, mod: int,
+                            res: int) -> DataFrame:
+    """The shared body of the four hash64 incremental entries: a
+    ``kind`` store over the corpus split's ``variants`` media per doc,
+    keyed by fixture identity + split + ``version`` (the token
+    invalidates caches across fixture/kernel generations, which the
+    path/mtime key alone cannot see), then ``probe`` with the batch
+    split's hashes."""
+    from .storecache import fixture_store
 
     src = f"{sf_dir}/documents.parquet"
-    st = _os.stat(src)
-    # the version token invalidates caches across fixture/kernel
-    # generations (v2: 6-container fixture + box-filter dHash +
-    # hashes/buckets store layout) — the path/mtime key alone cannot
-    # see code changes
-    ident = _hashlib.sha1(
-        f"{_os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}|v2".encode()).hexdigest()[:16]
-    store = store_path("phash", ident)
+    store = fixture_store(kind, src, mod, res, version)
     docs = read_cached(spark, src)
 
     def hashes_for(pred: str) -> DataFrame:
         ids = docs.where(pred).selectExpr(
-            f"explode(sequence(doc_id * {PHASH_VARIANTS}, "
-            f"doc_id * {PHASH_VARIANTS} + {PHASH_VARIANTS - 1})) "
-            "AS media_id")
+            f"explode(sequence(doc_id * {variants}, "
+            f"doc_id * {variants} + {variants - 1})) AS media_id")
         # fused synth→hash (r16): content bytes never cross the JVM
-        # boundary; rows identical to _phash_df(synth_media(ids, …))
-        return synth_phash_hashes(ids)
+        # boundary; rows identical to the decode kernel over
+        # synth_media(ids, …)
+        return synth(ids)
 
-    publish_store(store, lambda tmp: _hash_store_publish(
-        hashes_for(f"doc_id % {mod} < {res}"), tmp))
-    return phash_probe_hashes(
-        spark, store, hashes_for(f"doc_id % {mod} >= {res}")
-        .localCheckpoint())
+    _publish_hashes(store, lambda: hashes_for(f"doc_id % {mod} < {res}"))
+    return probe(spark, store, hashes_for(f"doc_id % {mod} >= {res}")
+                 .localCheckpoint())
 
 
 # ---------------------------------------------------------------------------
@@ -1732,16 +1711,21 @@ def synth_video_phash_dedup(ids: DataFrame,
 
 
 def video_phash_store_write(spark, media_df: DataFrame,
-                            store_path: str, mode: str = "overwrite",
-                            batch_size: int = 256,
+                            store_path: str, batch_size: int = 256,
                             hamming_k: int = 3) -> None:
-    """Video twin of phash_store_write: persist (media_id, vhash64)
+    """Video twin of phash_store_write: publish (media_id, vhash64)
     + the bucket sidecar in the shared hash64 store layout."""
-    from .storecache import store_lock
+    _publish_hashes(store_path, lambda: _vhash_df(media_df, batch_size),
+                    hamming_k)
 
-    ph = _vhash_df(media_df, batch_size).localCheckpoint()
-    with store_lock(store_path, exclusive=False):
-        _phash_store_append(ph, store_path, hamming_k, mode=mode)
+
+def video_phash_store_append(spark, store_path: str,
+                             media_df: DataFrame, batch_size: int = 256,
+                             hamming_k: int = 3) -> None:
+    """Decode a clip batch and append its vhash64 hashes (shared
+    lock)."""
+    _append_hashes(store_path, _vhash_df(media_df, batch_size),
+                   hamming_k)
 
 
 def video_phash_probe_against_store(spark, store_path: str,
@@ -1753,20 +1737,9 @@ def video_phash_probe_against_store(spark, store_path: str,
     against the persisted vhash store — only the batch decodes
     frames; bucket stats come from the sidecar; dup_of =
     star-invariant MIN; filtered admission like the image gate."""
-    from .storecache import store_lock
-
-    batch_ph = _vhash_df(batch_media, batch_size).localCheckpoint()
-    verdicts = phash_probe_hashes(spark, store_path, batch_ph,
-                                  hamming_k)
-    if admit:
-        excluded = (verdicts.select("media_id").unionByName(
-            phash_intra_batch_excluded(batch_ph, hamming_k)
-            .select("media_id")).distinct())
-        clean = batch_ph.join(excluded, "media_id",
-                              "left_anti").localCheckpoint()
-        with store_lock(store_path, exclusive=False):
-            _phash_store_append(clean, store_path, hamming_k)
-    return verdicts
+    return _probe_and_admit(
+        spark, store_path, _vhash_df(batch_media, batch_size)
+        .localCheckpoint(), hamming_k, admit)
 
 
 def vhash_incremental_entry_fn(spark, sf_dir: str,
@@ -1776,32 +1749,9 @@ def vhash_incremental_entry_fn(spark, sf_dir: str,
     corpus-side vhash store built once per fixture identity, reused
     across runs — the measured cost is the batch-sized frame decode
     + probe.  Same mod-7 split (coprime with the 200 classes)."""
-    import hashlib as _hashlib
-    import os as _os
-
-    from .storecache import publish_store, store_path
-
-    src = f"{sf_dir}/documents.parquet"
-    st = _os.stat(src)
-    ident = _hashlib.sha1(
-        f"{_os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}|vhash-v1".encode()).hexdigest()[:16]
-    store = store_path("vhash", ident)
-    docs = read_cached(spark, src)
-
-    def hashes_for(pred: str) -> DataFrame:
-        ids = docs.where(pred).selectExpr(
-            f"explode(sequence(doc_id * {VHASH_VARIANTS}, "
-            f"doc_id * {VHASH_VARIANTS} + {VHASH_VARIANTS - 1})) "
-            "AS media_id")
-        # fused synth→hash (r16): see phash_incremental_entry_fn
-        return synth_vhash_hashes(ids)
-
-    publish_store(store, lambda tmp: _hash_store_publish(
-        hashes_for(f"doc_id % {mod} < {res}"), tmp))
-    return phash_probe_hashes(
-        spark, store, hashes_for(f"doc_id % {mod} >= {res}")
-        .localCheckpoint())
+    return _hash_incremental_entry(
+        spark, sf_dir, "vhash", "vhash-v1", VHASH_VARIANTS,
+        synth_vhash_hashes, phash_probe_hashes, mod, res)
 
 
 # ---------------------------------------------------------------------------
@@ -2170,45 +2120,26 @@ def _thash_bucket_partials(th: DataFrame,
                  F.expr("min_by(phash, media_id)").alias("rep_ph")))
 
 
-def _thash_store_append(th: DataFrame, store_path: str,
-                        hamming_k: int, mode: str = "append") -> None:
-    """Write a (media_id, slot, phash) relation into the temporal
-    store layout: ``{store}/hashes`` (~24 bytes per clip-slot) +
-    ``{store}/buckets_k{k}`` (the per-(slot, b, slice) partials).
-    Sidecar keyed by the Hamming radius in the path, same loud-
-    failure contract as the image store."""
-    th.write.mode(mode).parquet(f"{store_path}/hashes")
-    _thash_bucket_partials(th, hamming_k).write.mode(mode).parquet(
-        f"{store_path}/buckets_k{hamming_k}")
-
-
-def _thash_store_publish(th_df: DataFrame, store_path: str,
-                         hamming_k: int = 3) -> None:
-    """_hash_store_publish for the temporal (slot-carrying) layout."""
-    from .storecache import store_lock
-
-    th = th_df.localCheckpoint()
-    with store_lock(store_path, exclusive=False):
-        _thash_store_append(th, store_path, hamming_k,
-                            mode="overwrite")
-
-
 def video_thash_store_write(spark, media_df: DataFrame,
-                            store_path: str, mode: str = "overwrite",
-                            batch_size: int = 256,
+                            store_path: str, batch_size: int = 256,
                             hamming_k: int = 3) -> None:
-    """Decode ``media_df`` ONCE and persist the TEMPORAL video hash
+    """Decode ``media_df`` ONCE and publish the TEMPORAL video hash
     store — THASH_SLOTS (media_id, slot, phash) rows per clip plus
-    the bucket sidecar.  Same locking and append-commutativity
-    arguments as phash_store_write; replayed duplicate rows remain
-    decision-invariant because the probe's dup_of is a MIN over
-    verified voted partners and doubled sidecar n only pushes
-    buckets INTO star-degrade."""
-    from .storecache import store_lock
+    the per-(slot, b, slice) bucket sidecar.  Same append-
+    commutativity arguments as phash_store_write; replayed duplicate
+    rows remain decision-invariant because the probe's dup_of is a
+    MIN over verified voted partners and doubled sidecar n only
+    pushes buckets INTO star-degrade."""
+    _publish_hashes(store_path, lambda: _thash_df(media_df, batch_size),
+                    hamming_k)
 
-    th = _thash_df(media_df, batch_size).localCheckpoint()
-    with store_lock(store_path, exclusive=False):
-        _thash_store_append(th, store_path, hamming_k, mode=mode)
+
+def video_thash_store_append(spark, store_path: str,
+                             media_df: DataFrame, batch_size: int = 256,
+                             hamming_k: int = 3) -> None:
+    """Decode a clip batch and append its slot hashes (shared lock)."""
+    _append_hashes(store_path, _thash_df(media_df, batch_size),
+                   hamming_k)
 
 
 def thash_probe_hashes(spark, store_path: str, batch_th: DataFrame,
@@ -2320,32 +2251,9 @@ def thash_incremental_entry_fn(spark, sf_dir: str,
     identity and cached, the measured cost is the batch-sized
     3-frame decode + voted probe.  Same mod-7 split (coprime with
     the 200-class structure)."""
-    import hashlib as _hashlib
-    import os as _os
-
-    from .storecache import publish_store, store_path
-
-    src = f"{sf_dir}/documents.parquet"
-    st = _os.stat(src)
-    ident = _hashlib.sha1(
-        f"{_os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{mod}|{res}|thash-v1".encode()).hexdigest()[:16]
-    store = store_path("thash", ident)
-    docs = read_cached(spark, src)
-
-    def hashes_for(pred: str) -> DataFrame:
-        ids = docs.where(pred).selectExpr(
-            f"explode(sequence(doc_id * {THASH_VARIANTS}, "
-            f"doc_id * {THASH_VARIANTS} + {THASH_VARIANTS - 1})) "
-            "AS media_id")
-        # fused synth→hash (r16): see phash_incremental_entry_fn
-        return synth_thash_hashes(ids)
-
-    publish_store(store, lambda tmp: _thash_store_publish(
-        hashes_for(f"doc_id % {mod} < {res}"), tmp))
-    return thash_probe_hashes(
-        spark, store, hashes_for(f"doc_id % {mod} >= {res}")
-        .localCheckpoint())
+    return _hash_incremental_entry(
+        spark, sf_dir, "thash", "thash-v1", THASH_VARIANTS,
+        synth_thash_hashes, thash_probe_hashes, mod, res)
 
 
 def resize_images(media: DataFrame, out_w: int = 2, out_h: int = 2,

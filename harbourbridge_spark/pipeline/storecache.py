@@ -1,38 +1,68 @@
-"""Per-user on-disk cache for fixture-keyed persisted stores.
+"""The persisted-store protocol shared by every corpus store family.
 
-The *_against_store registry entries amortize corpus-side state (the
-dedup signature store, the ANN index store, the curation gram/stat
-store) across bench runs by persisting it once per fixture identity.
-ADVICE r8: the original scheme rooted those stores at a predictable
-world-shared temp path (``/tmp/hb_sig_store_<ident>``), which on a
-multi-user host lets any other user pre-create the path (a poisoned
-store or a symlink) that the probe would then trust, and stale stores
-from regenerated fixtures accumulated forever.
+A STORE is a directory of parquet relations that amortizes corpus-side
+state across batches: the batch is tokenized / decoded / embedded, the
+corpus side is read only from the store.  The families keep their
+kernels, their relation layout, their merge or compaction law and
+their probes; this module owns everything else, so every family gets
+the same identity, crash-safety and lock behaviour.
 
-This module fixes both:
+Layout per kind (``<relation>`` sub-directories; ``.`` = the store
+root is itself the one relation):
 
-- stores live under ONE per-user root created with mode 0700
-  (``$XDG_CACHE_HOME`` or ``~/.cache``, falling back to a
-  uid-suffixed tempdir when no home exists).  The root is verified to
-  be an owned, non-symlink, 0700 directory on every call — a
-  pre-created foreign directory raises instead of being trusted;
-- within the root, each store is ``<kind>_<ident>``; acquiring a
-  store for ``(kind, ident)`` EVICTS the oldest other ``<kind>_*``
-  entries past a small keep bound (stale fixture identities from
-  earlier regenerations age out) — the cache is bounded per kind per
-  user while the handful of live fixture scales (sf0.001 tests,
-  sf0.01 oracle, sf0.1 bench) keep their stores concurrently, which
-  is what makes the probe-only bench entries measure the amortized
-  shape.
+==============  ==========================================  ==========
+kind            relations                                   module
+==============  ==========================================  ==========
+``sig``         ``.`` (doc_id, MinHash signature)           dedup
+``substrgrams`` ``.`` (h, n_occ) 5-gram occurrence counts   dedup
+``curation``    ``eval_grams``, ``boiler_grams``, ``vocab``, curation
+                ``totals``, ``doc_ids`` (fold ledger)
+``annidx``      ``grid``, ``centroids``, ``codes``          similarity
+``phash``,      ``hashes`` (media_id, phash),               multimodal
+``afp``,        ``buckets_k{k}`` (b, slice, n, rep, rep_ph)
+``vhash``       bucket partials keyed by the Hamming radius
+``thash``       the same two relations with a ``slot``      multimodal
+                column in both
+==============  ==========================================  ==========
 
-Writers keep the build-into-tmp-then-rename protocol so a concurrent
-or crashed builder can never publish a partial store.
+Verbs:
+
+- :func:`publish_store` builds a NEW store into a private sibling
+  directory and renames it into place, so no reader can ever see a
+  partial store and a build that raises leaves nothing at the target.
+  An existing store wins (publishing is idempotent per path; fixture
+  stores are keyed by :func:`fixture_store`).
+- :func:`append_store` appends a batch's rows to some relations of an
+  existing store under the SHARED lock.
+- :func:`rewrite_store` replaces a store by a law over a snapshot of
+  its relations (compaction, eviction, the curation fold) under the
+  EXCLUSIVE lock, which spans snapshot, build and swap
+  (:func:`replace_store`).
+
+Lock rules (:func:`store_lock`): only writers lock.  Appends of
+distinct batches commute, so they share the lock; a rewrite excludes
+every append, because an append landing between the rewrite's
+snapshot and its swap would be silently destroyed by the swap (a lost
+update).  Readers never lock: a probe racing a swap dies with a
+missing-input error and the streaming layer retries with a fresh
+listing.
+
+Fixture stores live under ONE per-user root created with mode 0700
+(``$XDG_CACHE_HOME`` or ``~/.cache``, falling back to a uid-suffixed
+tempdir when no home exists); the root is verified to be an owned,
+non-symlink, 0700 directory on every call, so a directory pre-created
+by another user raises instead of being trusted.  Each store is
+``<kind>_<ident>``; resolving one EVICTS the oldest other
+``<kind>_*`` entries past a small keep bound, so stale fixture
+identities age out while the few live fixture scales keep their
+stores.
 """
 
 from __future__ import annotations
 
 import contextlib
 import fcntl
+import hashlib
 import os
 import shutil
 import stat
@@ -41,22 +71,8 @@ import tempfile
 
 @contextlib.contextmanager
 def store_lock(target: str, exclusive: bool = True):
-    """Advisory lock serializing store MUTATIONS (never reads).
-
-    The compaction-vs-append race is a LOST UPDATE, not a torn read:
-    ``replace_store`` rebuilds from a point-in-time snapshot, so an
-    append (new signature part files, a curation fold's
-    read-merge-overwrite) landing between snapshot and swap would be
-    silently destroyed by the swap.  Readers need no lock — a probe
-    racing a swap dies with a missing-input error and the streaming
-    layer retries with a fresh listing (test-pinned) — so probes
-    never block compaction and vice versa; only WRITERS serialize:
-    compaction takes the lock exclusively, appends take it shared
-    (concurrent appends of distinct batches commute — signature
-    appends are disjoint part files; curation folds are
-    read-merge-overwrite and DO conflict with each other, but the
-    streaming admission loop is the only curation appender and runs
-    one micro-batch at a time).
+    """Advisory lock serializing store MUTATIONS (never reads): appends
+    take it shared, rewrites exclusively (see the module docstring).
 
     flock scopes to one host (this repo's execution shape); a
     multi-writer cluster deployment would swap this for its
@@ -71,6 +87,18 @@ def store_lock(target: str, exclusive: bool = True):
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
+
+
+def _relation_path(store: str, name: str) -> str:
+    """Path of relation ``name`` of ``store`` ("" = the root)."""
+    return f"{store}/{name}" if name else store
+
+
+def write_relations(store: str, relations: dict,
+                    mode: str = "errorifexists") -> None:
+    """Write ``{name: DataFrame}`` into the store layout."""
+    for name, df in relations.items():
+        df.write.mode(mode).parquet(_relation_path(store, name))
 
 
 def _user_cache_root() -> str:
@@ -107,8 +135,8 @@ def store_path(kind: str, ident: str) -> str:
     """Path for the ``(kind, ident)`` store; evicts all but the
     newest ``_KEEP_PER_KIND`` OTHER ``<kind>_*`` entries (stale
     fixture identities age out; concurrent live scales survive).
-    Does not create the store itself — callers check existence and
-    build via :func:`publish_store`."""
+    Does not create the store itself — build it with
+    :func:`publish_store`."""
     root = _user_cache_root()
     name = f"{kind}_{ident}"
     others = []
@@ -126,35 +154,70 @@ def store_path(kind: str, ident: str) -> str:
     return os.path.join(root, name)
 
 
-def replace_store(target: str, build, pre_locked: bool = False) -> None:
-    """Compaction twin of :func:`publish_store`: ``build(tmp_path)`` a
-    REPLACEMENT for an EXISTING store into a private sibling dir, then
-    swap it in (rename old aside -> rename new in -> drop old).  A
-    reader that grabbed the old path keeps a consistent snapshot (the
-    rename doesn't disturb open handles on POSIX); a crash between the
-    two renames leaves the ``.old.<pid>`` directory behind for manual
-    recovery rather than a half-written store.  The ``build`` callable
-    MUST materialize its input before writing (``localCheckpoint``) —
-    it is replacing the very directory a lazy plan would re-read.
+def fixture_store(kind: str, src: str, *params) -> str:
+    """Cache path of the ``kind`` store built from fixture file
+    ``src`` with build parameters ``params``.  The identity is the
+    fixture's FULL identity (absolute path + ns mtime + size), so two
+    fixtures sharing a basename, or one regenerated within the same
+    second, never collide; a version token among ``params``
+    invalidates stores across kernel or layout generations."""
+    st = os.stat(src)
+    key = "|".join([os.path.abspath(src), str(st.st_mtime_ns),
+                    str(st.st_size), *map(str, params)])
+    return store_path(kind, hashlib.sha1(key.encode()).hexdigest()[:16])
+
+
+def publish_store(target: str, build) -> None:
+    """Run ``build(tmp_path)`` into a private sibling dir, then rename
+    it to ``target`` — the exists-check can never observe a partial
+    store, a build that raises leaves nothing behind, and losing a
+    rename race to a concurrent builder is fine (the winner built
+    the same content from the same input).  An existing store wins:
+    ``build`` is not called."""
+    if os.path.exists(target):
+        return
+    parent = os.path.dirname(os.path.abspath(target))
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=os.path.basename(target) + ".",
+                           suffix=".tmp", dir=parent)
+    try:
+        built = os.path.join(tmp, "store")
+        build(built)
+        try:
+            os.rename(built, target)
+        except OSError:
+            if not os.path.exists(target):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def append_store(target: str, relations: dict) -> None:
+    """Append ``{name: DataFrame}`` to an existing store under the
+    SHARED lock.  Lazy frames compute inside the lock, so a rewrite
+    can never snapshot the store between their compute and their
+    write."""
+    with store_lock(target, exclusive=False):
+        write_relations(target, relations, "append")
+
+
+def replace_store(target: str, build) -> None:
+    """Swap in a REPLACEMENT for an existing store: under the store's
+    EXCLUSIVE lock, ``build(tmp_path)`` snapshots ``target`` and writes
+    the replacement into a private sibling dir, then the swap renames
+    old aside -> new in -> drops old.  Taking the snapshot INSIDE
+    ``build`` is the contract: a snapshot taken before the lock could
+    miss an append that the swap then destroys.  A reader that
+    grabbed the old path keeps a consistent snapshot (the rename
+    doesn't disturb open handles on POSIX); a crash between the two
+    renames leaves the ``.old.<pid>`` directory behind for manual
+    recovery rather than a half-written store.
 
     On an object store / HDFS deployment the two renames map to the
-    FileSystem.rename metadata operation; the pattern is unchanged.
-
-    Holds the store's EXCLUSIVE mutation lock for build + swap so a
-    concurrent APPEND cannot land between the build's snapshot and
-    the swap and be silently destroyed (see :func:`store_lock`;
-    readers never take the lock and ride the swap-retry instead).
-    CALLER CONTRACT: if the replacement is built from a SNAPSHOT
-    taken before this call, the caller must take the exclusive lock
-    around snapshot + this call itself and pass ``pre_locked=True``
-    (flock is not reentrant — a second exclusive acquisition in the
-    same thread deadlocks); the e2e that caught this had a compact
-    swap in a stale pre-append snapshot because only the swap was
-    locked."""
+    FileSystem.rename metadata operation; the pattern is unchanged."""
     target = os.path.abspath(target)
     parent = os.path.dirname(target)
-    with (contextlib.nullcontext() if pre_locked
-          else store_lock(target, exclusive=True)):
+    with store_lock(target, exclusive=True):
         tmp = tempfile.mkdtemp(prefix=os.path.basename(target) + ".",
                                suffix=".tmp", dir=parent)
         old = os.path.join(
@@ -173,23 +236,24 @@ def replace_store(target: str, build, pre_locked: bool = False) -> None:
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-def publish_store(target: str, build) -> None:
-    """Run ``build(tmp_path)`` into a private sibling dir, then rename
-    it to ``target`` — the exists-check can never observe a partial
-    store, and losing a rename race to a concurrent builder is fine
-    (the winner built the same content from the same fixture)."""
-    if os.path.exists(target):
-        return
-    parent = os.path.dirname(target)
-    tmp = tempfile.mkdtemp(prefix=os.path.basename(target) + ".",
-                           suffix=".tmp", dir=parent)
-    try:
-        built = os.path.join(tmp, "store")
-        build(built)
-        try:
-            os.rename(built, target)
-        except OSError:
-            if not os.path.exists(target):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+def rewrite_store(spark, target: str, names, law) -> dict:
+    """Replace the store by ``law(snapshot)``: ``snapshot`` maps each
+    relation in ``names`` to a DataFrame over its current files, and
+    the law returns the replacement relations ``{name: DataFrame}``
+    (the whole layout).  Runs under :func:`replace_store`'s exclusive
+    lock, so no append can land between the snapshot and the swap.
+    Returns ``{name: {files_before, files_after}}``."""
+    stats = {}
+
+    def build(tmp: str) -> None:
+        snap = {n: spark.read.parquet(_relation_path(target, n))
+                for n in names}
+        for n, df in snap.items():
+            stats[n] = {"files_before": len(df.inputFiles())}
+        write_relations(tmp, law(snap))
+
+    replace_store(target, build)
+    for n, s in stats.items():
+        s["files_after"] = len(spark.read.parquet(
+            _relation_path(target, n)).inputFiles())
+    return stats

@@ -4068,286 +4068,6 @@ _CHANGED_THIS_ROUND: list[str] = [
     "multimodal_decode_ppm", "warc_salvage_stats",
 ]
 
-_CHANGED_ROUND_15: list[str] = [
-    # round 15, slot 1: the r14 carry-over (pinned 51st last round,
-    # slipped past the 50-slot window) leads per the declared policy
-    "multimodal_decode_ppm",
-    # round 15, VERDICT r14 ask 1: the 9 remaining entries whose last
-    # OFFICIAL window was r11 rotate back in next
-    "dedup_exact_substrings", "dedup_semdedup", "embedding_kmeans",
-    "event_funnel", "event_funnel_unconverted", "html_extract",
-    "props_field_inference", "substring_dedup_apply",
-    "substring_dup_stats",
-    # round 15, VERDICT r14 ask 6: the PSL snapshot grew past 3k
-    # rules — the url family's rendered suffix IN-lists changed, so
-    # the whole family re-pins (changed expression ⇒ re-checked)
-    "url_canonicalize", "url_domain_caps", "domain_stats",
-    "url_quality_filter",
-    # round 15, VERDICT r14 ask 4: perceptual near-dup image hashing
-    # — new entry (dHash over decoded rasters + Hamming-<=k
-    # pigeonhole-slice LSH)
-    "multimodal_phash_dedup",
-    # round 15, VERDICT r14 ask 5: incremental ExactSubstr against a
-    # persisted 5-gram occurrence store — new entry
-    "substring_incremental",
-    # round 15, beyond-ask: incremental phash probe against the
-    # persisted store (the ask-4 operator's production ingest shape)
-    "multimodal_phash_incremental",
-    # round 15, beyond-ask: perceptual AUDIO near-dup fingerprint —
-    # the ask-4 construction carried to PCM
-    "multimodal_audio_fp_dedup",
-]
-
-_CHANGED_ROUND_14: list[str] = [
-    # round 14, VERDICT r13 ask 2: the 10 entries whose last OFFICIAL
-    # window was r10 rotate back in FIRST (local sweeps covered them
-    # every round, but three rounds outside the official artifact is
-    # drift the driver cannot see)
-    "ann_lsh", "ann_recall_clustered", "ann_sq_rerank",
-    "curation_against_store", "curation_store_probe",
-    "dedup_embedding_lsh", "dedup_incremental", "dedup_winnow_pairs",
-    "event_second_boundaries", "lsh_bucket_stats",
-    # round 14: salvage_stats gained the n_unusable column + the
-    # whole-file sentinel fix + guarded drop_frac denominator
-    # (ADVICE r13 medium) — schema and oracle changed
-    "warc_salvage_stats",
-    # round 14: parser mode now build-scoped with restore
-    # (ADVICE r13) — expression wrapper changed
-    "row_transform_goldens",
-    # round 14: overflow-free sampling hash (reduce mod M BEFORE the
-    # multiply — ADVICE r13): every entry rendering hash_mod_expr or
-    # the kmeans keep_hash re-pins (values identical, text changed)
-    "ccnet_ppl_buckets", "mixture_sample_temperature",
-    "stratified_sample", "cluster_balanced_sample",
-    "corpus_curation", "corpus_curation_materialized",
-    # round 14: PSL-backed registered_domain (VERDICT r13 ask 4) —
-    # the url family's shared CTE + fixture changed (com.br /
-    # github.io / *.np slices), url_quality_filter blocklists on the
-    # registered domain and emits it
-    "url_canonicalize", "url_domain_caps", "domain_stats",
-    "url_quality_filter",
-    # round 14: the Arrow-conf mutation fix (VERDICT r13 ask 3)
-    # rewrote every bulk-media kernel's dispatch (_resliced wrapper
-    # replaces the session conf.set) — per the pin policy the whole
-    # routed family re-checks officially.  The two vorbis entries do
-    # NOT pin (analyze_vorbis/_salvage never had the conf.set and
-    # are byte-unchanged).  NOTE: 51 pins vs the 50-slot window —
-    # multimodal_decode_ppm is deliberately LAST and slips to r15
-    # (it is the most unit-saturated pure decoder of the family and
-    # is green in this round's full local sweep); r15 must pin it.
-    "multimodal_features", "multimodal_decode_flac",
-    "multimodal_decode_mp3", "multimodal_decode_mp3_lsf",
-    "multimodal_decode_aiff", "multimodal_audio_analysis",
-    "multimodal_decode_wav", "multimodal_decode_bmp",
-    "multimodal_decode_png", "multimodal_decode_tiff",
-    "multimodal_decode_jpeg", "multimodal_decode_jpeg_progressive",
-    "multimodal_meta_mp3", "multimodal_meta_mp4",
-    "multimodal_decode_gif", "multimodal_decode_gif_animated",
-    "multimodal_mp4_frames", "multimodal_mp4_frames_frag",
-    "multimodal_decode_mjpeg", "multimodal_meta_vp8",
-    "multimodal_meta_ogg", "multimodal_decode_g711",
-    "multimodal_meta_h264", "multimodal_decode_webp",
-    "multimodal_resize", "multimodal_frame_features",
-    "multimodal_decode_y4m", "multimodal_pixel_dedup",
-    "multimodal_decode_ppm",
-]
-
-_CHANGED_ROUND_13: list[str] = [
-    # round 13: salvage-drop drift report (VERDICT r12 ask 7) — new
-    # entry over a corrupt_mod fixture (every doc_id % 17 == 3
-    # record deterministically damaged; per-file + corpus-total
-    # drop accounting with the exact-integer drop_frac column)
-    "warc_salvage_stats",
-    # round 13: line dedup keep-first keys widened from one 48-bit
-    # md5 slice to two disjoint 60-bit slices (VERDICT r12 ask 2 —
-    # 100 TB line cardinality vs the 48-bit birthday term)
-    "line_dedup_ccnet",
-    # round 13: Vorbis floor0 / end-of-packet-truncated audio
-    # packets degrade to counted silence instead of ValueError
-    # (VERDICT r12 ask 5) — new salvage entry over a damaged fixture
-    # lattice; analyze_vorbis also dropped its build-time
-    # arrow.maxRecordsPerBatch session mutation (ADVICE)
-    "multimodal_decode_vorbis", "multimodal_decode_vorbis_salvage",
-    # round 13: temperature-scaled source mixing — new entry (the
-    # rebalancing sampler every multi-source training recipe runs)
-    "mixture_sample_temperature",
-    # round 13: session-conf scoping (confscope.py) — every parser-
-    # mode set is now build-scoped with restore.  Expressions are
-    # parse-identical so the cohort does not re-pin, EXCEPT
-    # bpe_apply: its '\s+' template had silently inherited the mode
-    # _learn_merges leaked (latent coupling bug, now owns its scope)
-    "bpe_apply", "bpe_train",
-    # round 13: CCNet head/middle/tail perplexity split — new entry
-    "ccnet_ppl_buckets",
-    # round 13: RefinedWeb URL quality gate — new entry
-    "url_quality_filter",
-]
-
-_CHANGED_ROUND_12: list[str] = [
-    # round 12: WARC ingestion robustness overhaul (VERDICT r11 asks
-    # 2/5 + five ADVICE items): record/member SALVAGE with counted
-    # dropped-meta rows replaces whole-file drop in the kernels,
-    # charset-aware body decode (Content-Type param -> strict UTF-8
-    # -> <meta> sniff -> latin-1) in _parse_one, errors='replace'
-    # header decode, gzip inflate ceiling, zlib.error containment,
-    # and the build-time arrow.maxRecordsPerBatch session mutation
-    # removed — every entry routing through warc_records/_parse_one
-    # re-pins.  (html_extract does NOT pin: html.py only GAINED
-    # strip_html_col; the template form is byte-unchanged.)
-    "warc_ingest", "warc_ingest_gzip", "warc_stats",
-    "warc_to_documents",
-    # round 12: native Ogg Vorbis sample decoder (VERDICT r11 ask 7)
-    # — new entry (in-stream codebooks, floor1, residue 2, IMDCT)
-    "multimodal_decode_vorbis",
-    # round 12: published web-cleaning recipes — new entries (CCNet
-    # line dedup, Gopher rules, C4 filters)
-    "line_dedup_ccnet", "gopher_quality_rules", "c4_clean",
-    # round 12: DSIR Spark strategy rewritten (token arrays
-    # materialized before the bigram lambda — Catalyst collapsed the
-    # split() into the lambda, O(tokens^2)/doc; 7.4 -> 2.6 s at
-    # sf0.1) — values bit-identical but the expression changed, so
-    # both entries re-pin per the rotation policy
-    "dsir_importance", "dsir_select",
-]
-
-_CHANGED_ROUND_11: list[str] = [
-    # round 11: native MP3 Layer III sample decoder (VERDICT r10
-    # ask 3) — new entries (MPEG-1, then the MPEG-2/2.5 LSF layout)
-    "multimodal_decode_mp3", "multimodal_decode_mp3_lsf",
-    # round 11: exact substring-span dedup (ExactSubstr) — new
-    # entries (manifest + observability stats + keep-first apply)
-    "dedup_exact_substrings", "substring_dup_stats",
-    "substring_dedup_apply",
-    # round 11: MP4 sample-table parse + MJPEG-in-MP4 frame decode —
-    # new entries (frame fan-out index + per-frame pixel decode)
-    "multimodal_mp4_frames", "multimodal_decode_mjpeg",
-    "multimodal_mp4_frames_frag",
-    # round 11: URL/domain curation family — new entries
-    "url_canonicalize", "url_domain_caps", "domain_stats",
-    # round 11: BPE tokenizer (train + apply) — new entries
-    "bpe_train", "bpe_apply",
-    # round 11: lossy-WebP VP8 frame-header walker — new entry
-    "multimodal_meta_vp8",
-    # round 11: WARC crawl-archive ingestion + HTML extraction — new
-    # entries (plain + gzip-member parse, per-file stats, and the
-    # end-to-end WARC -> documents closed-form chain)
-    "warc_ingest", "warc_ingest_gzip", "warc_stats",
-    "warc_to_documents", "html_extract",
-    # round 11: DSIR hashed-ngram importance selection — new entries
-    "dsir_importance", "dsir_select",
-    # round 11: TIFF 6.0 decode (none/LZW/PackBits + predictor 2,
-    # OpenJDK-conformance-pinned LZW) — new entry
-    "multimodal_decode_tiff",
-    # round 11: H.264 SPS metadata parse (exp-Golomb + avcC walk) —
-    # new entry
-    "multimodal_meta_h264",
-    # round 11: G.711 mu-law/A-law telephony WAV decode — new entry
-    # (wav_samples gained the format-6/7 expansion branch)
-    "multimodal_decode_g711",
-    # round 11: Ogg page walk + Vorbis/Opus ID headers — new entry
-    "multimodal_meta_ogg",
-    # round 11: SemDeDup (k-means + within-cluster cosine keep-first)
-    # — new entry; embedding_kmeans re-pins (kmeans_sql refactored
-    # over the shared _kmeans_ctes helper)
-    "dedup_semdedup", "embedding_kmeans", "cluster_balanced_sample",
-    # round 11: dynamo NUMERIC-fit regex made escape-mode-independent
-    # ('\\.' -> '[.]'; the latent conf-coupling bug exposed by the
-    # new test ordering) — the entry routing through it re-pins
-    "props_field_inference",
-    # round 11: the shared multimodal plumbing changed — synth_media
-    # gained the mp3_tone and mp4_mjpeg format branches.  Per the standing policy
-    # (VERDICT r8 ask 1), every entry routed through a changed
-    # function is pinned even when its own branch is untouched.
-    # (The r11 store-compaction commit is pure function ADDITIONS —
-    # curation_store_compact / signature_store_compact/evict /
-    # compact_admission_output — no existing entry routes through
-    # changed code, so no store-family pins; the distributed schema
-    # pass rewrote sources/pgdump.py, which no oracle entry routes
-    # through — covered by the staged-vs-distributed differentials
-    # and CLI units instead.)
-    "multimodal_features", "multimodal_decode_wav",
-    "multimodal_decode_bmp", "multimodal_decode_png",
-    "multimodal_decode_jpeg", "multimodal_decode_jpeg_progressive",
-    "multimodal_meta_mp3", "multimodal_meta_mp4",
-    "multimodal_decode_gif", "multimodal_decode_gif_animated",
-    "multimodal_decode_ppm", "multimodal_decode_webp",
-    "multimodal_decode_flac", "multimodal_decode_aiff",
-    "multimodal_audio_analysis",
-    "multimodal_resize", "multimodal_frame_features",
-    "multimodal_decode_y4m", "multimodal_pixel_dedup",
-]
-
-_CHANGED_ROUND_10: list[str] = [
-    # round 10: the r9 red row — mean_quality/dup_frac moved to exact
-    # integer micro-unit half-up arithmetic (VERDICT r9 ask 1;
-    # curation.py corpus_drift_sql)
-    "corpus_drift",
-    # round 10: vp8l decoder changed (ADVICE r9 — max_symbol read
-    # semantics, predictor-13 truncating division, repeat-overflow
-    # strictness); the webp entry routes through vp8l.decode
-    "multimodal_decode_webp",
-    # round 10: probe tail re-plumbed onto a once-materialized
-    # tokenization (the 14s-per-join Catalyst re-tokenization fix)
-    # + the new probe-only split entry (VERDICT r9 ask 4)
-    "curation_against_store", "curation_store_probe",
-    "corpus_curation_materialized",
-    # round 10: native FLAC codec (VERDICT r9 ask 7) — new entries,
-    # plus the whole multimodal family re-pinned because the SHARED
-    # plumbing changed (decode_audio gained the fLaC dispatch,
-    # synth_media the flac/flac_tone formats; the r9 pin-policy
-    # precedent)
-    "multimodal_decode_flac", "multimodal_audio_analysis",
-    # round 10: migration->corpus bridge, bigram LM surprisal,
-    # AIFF decode, integer-exact k-means + diversity sampling
-    # (new entries)
-    "corpus_from_relational", "bigram_surprisal",
-    "multimodal_decode_aiff", "embedding_kmeans",
-    "cluster_balanced_sample",
-    "multimodal_features", "multimodal_decode_wav",
-    "multimodal_decode_bmp", "multimodal_decode_png",
-    "multimodal_decode_jpeg", "multimodal_decode_jpeg_progressive",
-    "multimodal_meta_mp3", "multimodal_meta_mp4",
-    "multimodal_decode_gif", "multimodal_decode_gif_animated",
-    "multimodal_decode_ppm", "multimodal_resize",
-    "multimodal_frame_features", "multimodal_decode_y4m",
-    "multimodal_pixel_dedup",
-]
-
-_CHANGED_ROUND_9: list[str] = [
-    # round 9: outside both the r7 and r8 windows (module was
-    # byte-identical all round 8, but the official gate never saw it
-    # — VERDICT r8 ask 1 names it first)
-    "corpus_curation",
-    # round 9: decode_mp3_meta gained the `truncated` output slot
-    # (ADVICE r8) — schema + oracle changed
-    "multimodal_meta_mp3",
-    # round 9: signature store relocated to the per-user 0700 cache
-    # (ADVICE r8, pipeline/storecache.py)
-    "dedup_incremental_against_store",
-    # round 9: ann_against_store_fn gained atexit cleanup of the
-    # per-process store parent (ADVICE r8)
-    "ann_against_store",
-    # round 9 NEW entries (never checked; pinned for explicitness —
-    # the least-recently-checked sort would front them anyway)
-    "ann_store_probe", "curation_against_store", "corpus_drift",
-    "multimodal_decode_gif_animated", "multimodal_decode_webp",
-    "winnow_fp_stats",
-    # round 9: the shared multimodal plumbing changed — decode_image
-    # gained the native-WEBP branch, synth_media the
-    # gif_animated/webp formats, sample_frames the native
-    # animated-GIF dispatch.  Per the revised policy, EVERY entry
-    # routed through a changed function is pinned even when its own
-    # format's branch is behaviorally untouched — changed code is
-    # always officially re-checked (VERDICT r8 ask 1).
-    "multimodal_features", "multimodal_decode_wav",
-    "multimodal_decode_bmp", "multimodal_decode_png",
-    "multimodal_decode_jpeg", "multimodal_decode_jpeg_progressive",
-    "multimodal_meta_mp4", "multimodal_decode_gif",
-    "multimodal_decode_ppm", "multimodal_resize",
-    "multimodal_frame_features", "multimodal_decode_y4m",
-    "multimodal_pixel_dedup",
-]
-
 
 def _last_checked() -> dict[str, int]:
     """name -> most recent round whose CORRECTNESS file contains it

@@ -142,9 +142,10 @@ _FOOTER_MEMO: dict = {}
 def _row_groups(path: str) -> int | None:
     """Parquet footer row-group count — the true splittability bound.
     None when the footer can't be read (stay conservative: no spread).
-    Memoized per (path, mtime_ns, size): the footer is immutable for
-    an unchanged file, and hot paths probe the same fixtures per
-    bench run."""
+    Successful reads are memoized per (path, mtime_ns, size): the
+    footer is immutable for an unchanged file, and hot paths probe the
+    same fixtures per bench run.  Failures are not: a transient read
+    error must not pin "no spread" on the file for the process."""
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
@@ -156,7 +157,7 @@ def _row_groups(path: str) -> int | None:
         import pyarrow.parquet as pq
         groups = pq.ParquetFile(path).metadata.num_row_groups
     except Exception:   # noqa: BLE001 — any footer trouble: no spread
-        groups = None
+        return None
     if len(_FOOTER_MEMO) < 4096:       # bound driver memory
         _FOOTER_MEMO[key] = groups
     return groups

@@ -13,5 +13,4 @@ from .batch_writer import (BatchWriterConfig,  # noqa: F401
 from .dbapi_writer import (DbApiInsertWriter,  # noqa: F401
                            write_table_dbapi)
 from .jdbc_writer import JdbcBatchWriter, JdbcWriteError  # noqa: F401
-from .sqlite_writer import (SqliteInsertWriter, sqlite_ddl,  # noqa: F401
-                            write_table_to_sqlite)
+from .sqlite_writer import sqlite_ddl, write_table_to_sqlite  # noqa: F401

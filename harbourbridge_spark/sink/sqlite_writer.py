@@ -15,8 +15,9 @@ not only the injected-closure test seam:
   of one Spanner mutation group), so a failed batch leaves no partial
   rows and retry-splitting re-attempts a clean sub-batch.
 
-Swapping in a production JDBC/Spanner writer means replacing
-``SqliteInsertWriter`` with a callable holding the real endpoint; the
+The inserts run through the generic DB-API writer
+(``sink/dbapi_writer``) with a sqlite connect factory; swapping in a
+production endpoint means passing its connect factory instead — the
 batching machinery is unchanged.
 """
 
@@ -24,7 +25,6 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
-from dataclasses import dataclass, field
 
 from .. import types as tt
 from ..context import MigrationContext
@@ -75,53 +75,13 @@ def _adapt(v):
     return v
 
 
-@dataclass
-class SqliteInsertWriter:
-    """Picklable executor-side insert callable for write_with_batching.
-
-    One connection + one transaction per batch: commits are atomic per
-    batch, errors raise (IntegrityError included) so the bisection in
-    write_with_batching can split and isolate. ``busy_timeout_ms``
-    covers cross-process lock contention between concurrent executor
-    tasks.
-    """
-
-    db_path: str
-    table: str
-    columns: list = field(default_factory=list)
-    busy_timeout_ms: int = 30_000
-
-    def __call__(self, rows: list) -> None:
-        import sqlite3
-        cols = ", ".join(f'"{c}"' for c in self.columns)
-        qs = ", ".join("?" for _ in self.columns)
-        sql = f'INSERT INTO "{self.table}" ({cols}) VALUES ({qs})'
-        con = sqlite3.connect(self.db_path,
-                              timeout=self.busy_timeout_ms / 1000.0)
-        try:
-            con.execute(f"PRAGMA busy_timeout = {self.busy_timeout_ms}")
-            with con:  # one transaction per batch
-                con.executemany(sql, [tuple(_adapt(v) for v in r)
-                                      for r in rows])
-        finally:
-            con.close()
-
-
 def write_table_to_sqlite(ctx: MigrationContext, df, tgt_table: str,
                           db_path: str, config=None):
     """End-to-end K1 against the sqlite endpoint: create the table from
-    the converted schema, then run the batching+bisection writer over
-    the DataFrame. Returns WriteStats."""
-    import sqlite3
-
-    from .batch_writer import write_with_batching
-    ddl = sqlite_ddl(ctx, tgt_table)
-    con = sqlite3.connect(db_path)
-    try:
-        with con:
-            con.execute(ddl)
-    finally:
-        con.close()
-    cols = list(ctx.sp_schema[tgt_table].col_names)
-    writer = SqliteInsertWriter(db_path, tgt_table, cols)
-    return write_with_batching(df.select(*cols), writer, config)
+    the converted schema, then run the DB-API batching+bisection
+    writer over the DataFrame. Returns WriteStats."""
+    from .dbapi_writer import SqliteConnectFactory, write_table_dbapi
+    return write_table_dbapi(
+        df, SqliteConnectFactory(db_path), tgt_table,
+        list(ctx.sp_schema[tgt_table].col_names),
+        ddl=sqlite_ddl(ctx, tgt_table), config=config)

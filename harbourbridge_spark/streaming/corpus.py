@@ -26,7 +26,7 @@ Semantics / scale notes:
   crash-replays — duplicate signatures only create extra dup-candidate
   edges against the same doc_id, which the verdict's MIN/aggregate
   semantics absorb (documented store contract;
-  pipeline/dedup.signature_store_write).
+  pipeline/dedup.signature_store_append).
 - Per micro-batch the work is batch-bound: one signature job over the
   new docs, one asymmetric band probe against bucketed store keys
   (corpus-side MAX_BUCKET star-degrade), one batch-sized append.  The
@@ -159,26 +159,22 @@ def compact_admission_output(spark: SparkSession, out_dir: str,
     swap and be silently destroyed (the signature-store lost-update
     fix, applied to the verdict output; e2e-pinned by
     test_live_compaction.test_output_compaction_under_live_sink)."""
-    import os
+    from ..pipeline.storecache import replace_store
 
-    from ..pipeline.storecache import replace_store, store_lock
+    stats = {}
 
-    with store_lock(out_dir, exclusive=True):
+    def build(tmp: str) -> None:
         df = spark.read.parquet(out_dir)
-        files_before = len(df.inputFiles())
-        rows = df.count()
-        snap = df.localCheckpoint()
-        replace_store(out_dir, lambda tmp: snap
-                      .repartition(max(1, files_per_epoch *
-                                       snap.select("epoch")
-                                       .distinct().count()), "epoch")
-                      .write.partitionBy("epoch").parquet(tmp),
-                      pre_locked=True)
-        after = spark.read.parquet(out_dir)
-        assert after.count() == rows
-    return {"files_before": files_before,
-            "files_after": len(after.inputFiles()),
-            "rows": rows}
+        stats["files_before"] = len(df.inputFiles())
+        stats["rows"] = df.count()
+        n_epochs = df.select("epoch").distinct().count()
+        (df.repartition(max(1, files_per_epoch * n_epochs), "epoch")
+         .write.partitionBy("epoch").parquet(tmp))
+
+    replace_store(out_dir, build)
+    after = spark.read.parquet(out_dir)
+    assert after.count() == stats["rows"]
+    return {**stats, "files_after": len(after.inputFiles())}
 
 
 def streaming_corpus_admission(stream: DataFrame, sig_store: str,
@@ -249,9 +245,8 @@ def streaming_corpus_admission(stream: DataFrame, sig_store: str,
         admitted_ids = verdict.where("admitted").select("doc_id")
         admitted = batch_df.join(admitted_ids, "doc_id")
         # grow both stores with ONLY the admitted docs
-        from ..pipeline.dedup import signature_store_write
-        signature_store_write(spark, admitted, sig_store,
-                              mode="append")
+        from ..pipeline.dedup import signature_store_append
+        signature_store_append(spark, sig_store, admitted)
         curation_store_append(spark, cur_store, admitted)
 
     writer = (stream.writeStream
@@ -312,9 +307,8 @@ def streaming_media_admission(stream: DataFrame, phash_store: str,
     hashes keyed by 16-bit slices; the store is never decoded, only
     its hash parquet + bucket sidecar are read."""
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..pipeline.multimodal import (_afp_df, _phash_df,
-                                           _phash_store_append,
-                                           _vhash_df,
+        from ..pipeline.multimodal import (_afp_df, _append_hashes,
+                                           _phash_df, _vhash_df,
                                            phash_intra_batch_excluded,
                                            phash_probe_hashes)
         from ..pipeline.storecache import store_lock
@@ -338,10 +332,9 @@ def streaming_media_admission(stream: DataFrame, phash_store: str,
                 verdict.write.mode("overwrite").parquet(
                     f"{out_dir}/epoch={int(epoch_id)}")
             # grow the store with the admitted keepers only
-            clean = (verdict.where("admitted").select("media_id")
-                     .join(batch_ph, "media_id"))
-            with store_lock(phash_store, exclusive=False):
-                _phash_store_append(clean, phash_store, hamming_k)
+            _append_hashes(phash_store,
+                           verdict.where("admitted").select("media_id")
+                           .join(batch_ph, "media_id"), hamming_k)
 
         _run_with_swap_retry(attempt)
 

@@ -89,6 +89,32 @@ def test_cli_sqlite_writer_dropped_rows_leave_artifact(spark, tmp_path):
     assert body.strip().count("\n") == 1
 
 
+def test_cli_sqlite_counts_every_bad_row_past_the_sample_cap(
+        spark, tmp_path):
+    """The row-writer sinks fire no observation, so the conversion-bad
+    count must not be the number of samples written (capped at 100):
+    150 malformed rows are 150 bad rows, and 100 samples persist."""
+    rows = [f"{i}\t{i}.25" for i in range(1, 51)]
+    rows += [f"{i}\tnot-a-number" for i in range(51, 201)]
+    dump = tmp_path / "bad.sql"
+    dump.write_text(
+        "CREATE TABLE public.acct (id integer NOT NULL, bal numeric(10,2));\n"
+        "ALTER TABLE ONLY public.acct ADD CONSTRAINT a_pk "
+        "PRIMARY KEY (id);\n"
+        "COPY public.acct (id, bal) FROM stdin;\n"
+        + "\n".join(rows) + "\n\\.\n")
+    out = str(tmp_path / "out")
+    ctx = migrate_dump(spark, str(dump), "postgres", out, target="sqlite")
+    con = sqlite3.connect(os.path.join(out, "migrated.db"))
+    n = con.execute("SELECT COUNT(*) FROM acct").fetchone()[0]
+    con.close()
+    assert n == 50
+    assert ctx.bad_rows() == 150
+    assert ctx.table_stats["acct"].good_rows == 50
+    samples = open(os.path.join(out, "acct.dropped.txt")).read()
+    assert samples.count("\ncols=") == 100
+
+
 def test_cli_dump_to_derby_with_progress(spark, tmp_path):
     """--target derby + --progress: the full CLI lifecycle writes a
     real Derby database through the driver-local executeBatch writer

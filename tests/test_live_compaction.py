@@ -104,7 +104,8 @@ def test_compaction_during_live_admission_stream(spark, tmp_path):
     from harbourbridge_spark.pipeline.curation import (
         curation_store_compact, curation_store_write)
     from harbourbridge_spark.pipeline.dedup import (
-        signature_store_compact, signature_store_write)
+        signature_store_append, signature_store_compact,
+        signature_store_write)
     from harbourbridge_spark.streaming.corpus import (
         document_stream, streaming_corpus_admission)
 
@@ -136,8 +137,7 @@ def test_compaction_during_live_admission_stream(spark, tmp_path):
         signature_store_write(spark, corpus, sig)
         # crash-replay shape: half the corpus signatures land twice,
         # so the live compact genuinely removes rows
-        signature_store_write(spark, corpus.where("doc_id < 5"), sig,
-                              mode="append")
+        signature_store_append(spark, sig, corpus.where("doc_id < 5"))
         curation_store_write(spark, corpus, cur)
         os.makedirs(sdir)
         return sig, cur, sdir, out, ckpt

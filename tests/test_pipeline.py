@@ -652,6 +652,21 @@ def test_dedup_clusters_label_propagation(spark, tmp_path):
     assert all(v in (1, 50) for v in out.values())
 
 
+def test_dedup_clusters_long_chain_ends_canonical(spark):
+    """A 30-node path graph has diameter 29: label propagation needs
+    29 steps, and every node must still end labelled by the
+    component's min doc_id (the oracle's recursive closure)."""
+    from harbourbridge_spark.pipeline.dedup import dedup_clusters_fn
+
+    ids = [1000 - 7 * i for i in range(30)]      # min at the far end
+    pairs = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(29)],
+        "doc_a long, doc_b long")
+    out = {r.doc_id: r.cluster_id for r in
+           dedup_clusters_fn(spark, "unused", pairs=pairs).collect()}
+    assert out == {d: min(ids) for d in ids}
+
+
 def test_kafka_shaped_decode(spark):
     """decode_kafka_events turns a Kafka-shaped frame into the events
     schema: JSON values parse, malformed values yield NULL columns

@@ -78,3 +78,25 @@ def test_read_cached_rewrite_invalidates(spark, tmp_path):
     b = read_cached(spark, f)
     assert b is not a
     assert b.count() == 2
+
+
+def test_row_groups_retries_a_failed_footer_read(tmp_path, monkeypatch):
+    """A transient footer-read failure answers None (no spread) but is
+    not memoized: the next call reads the footer again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from harbourbridge_spark import scan
+
+    f = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": list(range(10))}), f,
+                   row_group_size=4)
+    real = pq.ParquetFile
+
+    def flaky(*a, **k):
+        raise OSError("transient read failure")
+
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    assert scan._row_groups(f) is None
+    monkeypatch.setattr(pq, "ParquetFile", real)
+    assert scan._row_groups(f) == 3

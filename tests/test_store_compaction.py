@@ -51,8 +51,8 @@ def test_signature_compact_decision_invariant_repairs_counts(
     store — with the probe output bit-identical before compaction,
     after compaction, and against a from-scratch store."""
     from harbourbridge_spark.pipeline.dedup import (
-        dedup_incremental_against_store, signature_store_compact,
-        signature_store_write)
+        dedup_incremental_against_store, signature_store_append,
+        signature_store_compact, signature_store_write)
 
     base = 40_000_000
     corpus = spark.createDataFrame(
@@ -71,8 +71,8 @@ def test_signature_compact_decision_invariant_repairs_counts(
     # lands twice — admit=True itself re-probes and would skip, but a
     # crash between the append and the checkpoint commit replays the
     # bare append
-    signature_store_write(spark, b1, sig, mode="append")
-    signature_store_write(spark, b1, sig, mode="append")
+    signature_store_append(spark, sig, b1)
+    signature_store_append(spark, sig, b1)
 
     b2 = spark.createDataFrame(
         [(base + 1000 + i, "s", "en", t) for i, t in enumerate(uniq)],
@@ -180,8 +180,8 @@ def test_streaming_admission_decisions_invariant_across_compact(
     from harbourbridge_spark.pipeline.curation import (
         curation_store_compact, curation_store_write)
     from harbourbridge_spark.pipeline.dedup import (
-        dedup_incremental_against_store, signature_store_compact,
-        signature_store_write)
+        dedup_incremental_against_store, signature_store_append,
+        signature_store_compact, signature_store_write)
     from harbourbridge_spark.streaming.corpus import (
         compact_admission_output, document_stream,
         streaming_corpus_admission)
@@ -225,7 +225,7 @@ def test_streaming_admission_decisions_invariant_across_compact(
             f"{out}/epoch=0").where("admitted").collect()]
         replay = spark.createDataFrame(
             [row for row in batch1 if row[0] in adm_ids], DOCS_COLS)
-        signature_store_write(spark, replay, sig, mode="append")
+        signature_store_append(spark, sig, replay)
         forks[fork] = (sig, cur, sdir, out, ckpt)
 
     # fork A compacts EVERYTHING; fork B is the untouched control

@@ -11,6 +11,10 @@ Usage:
   python tools/ab_bench.py TREE_A TREE_B entry1 entry2 ...
   (or entry prefixes with a trailing '*': multimodal_*)
 
+Sessions run on ``local[$SPARK_GRAFT_CPUS]`` (default 32, as in
+bench.py) with bench.py's shuffle-partition count, so an A/B on a
+small box is not oversubscribed.
+
 Prints one JSON blob with, per entry, the per-pass raw readings AND
 the per-pass in-child canaries (VERDICT r13 ask 5): normalization
 pairs each reading with the canary measured in the SAME JVM, so the
@@ -32,9 +36,10 @@ sys.path.insert(0, tree)
 from pyspark.sql import SparkSession
 from harbourbridge_spark import queries as Q
 
-spark = (SparkSession.builder.master("local[32]")
+cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")    # bench.py's default
+spark = (SparkSession.builder.master(f"local[{cpus}]")
          .appName("ab-bench")
-         .config("spark.sql.shuffle.partitions", "32")
+         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

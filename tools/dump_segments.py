@@ -153,16 +153,10 @@ def main() -> int:
     # broadcast + members⋈inc join) vs r17 (store scan ⋈ broadcast hit
     # rows), over the same store + batch hashes, WITHOUT the final
     # checkpoint so the whole probe plan is visible.
-    import hashlib as _h
-    from harbourbridge_spark.pipeline.storecache import (
-        publish_store, store_path)
+    from harbourbridge_spark.pipeline.storecache import fixture_store
     src = f"{SF}/documents.parquet"
-    st = os.stat(src)
-    ident = _h.sha1(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{M.PHASH_INC_MOD}|{M.PHASH_INC_RES}|v2".encode()) \
-        .hexdigest()[:16]
-    store = store_path("phash", ident)
+    store = fixture_store("phash", src, M.PHASH_INC_MOD, M.PHASH_INC_RES,
+                          "v2")
     dcs = read_cached(spark, src)
 
     def hashes_for(pred: str):
@@ -172,9 +166,8 @@ def main() -> int:
             "AS media_id")
         return M.synth_phash_hashes(ids)
 
-    publish_store(store, lambda tmp: M._hash_store_publish(
-        hashes_for(f"doc_id % {M.PHASH_INC_MOD} < {M.PHASH_INC_RES}"),
-        tmp))
+    M._publish_hashes(store, lambda: hashes_for(
+        f"doc_id % {M.PHASH_INC_MOD} < {M.PHASH_INC_RES}"))
     batch_ph = hashes_for(
         f"doc_id % {M.PHASH_INC_MOD} >= {M.PHASH_INC_RES}") \
         .localCheckpoint()

@@ -69,7 +69,8 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from harbourbridge_spark.pipeline.multimodal import (
-        phash_probe_against_store, phash_store_write, synth_media)
+        phash_probe_against_store, phash_store_append, phash_store_write,
+        synth_media)
 
     wave_docs = int(os.environ.get("PHASH_WAVE_DOCS", "125000"))
     probe_docs = int(os.environ.get("PHASH_PROBE_DOCS",
@@ -120,8 +121,10 @@ def main() -> int:
         for w in range(n_waves):
             lo, hi = w * wave_docs, (w + 1) * wave_docs
             t0 = time.time()
-            phash_store_write(spark, media_for(lo, hi), store,
-                              mode="overwrite" if w == 0 else "append")
+            if w == 0:
+                phash_store_write(spark, media_for(lo, hi), store)
+            else:
+                phash_store_append(spark, store, media_for(lo, hi))
             index_sec = round(time.time() - t0, 1)
             store_rows = store_count()
             assert store_rows == VARIANTS * hi, store_rows
