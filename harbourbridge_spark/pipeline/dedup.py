@@ -8,10 +8,13 @@ hash-compared exactly.
 Scale design:
 - exact dedup: one shuffle on the 48-bit content hash (not the full
   text — the classic shuffle-size optimization);
-- MinHash-LSH: shingle explode is a projection; signatures are one
-  groupBy(doc); banding turns the quadratic candidate search into
-  equi-joins on band keys (shuffle on band buckets, skew-bounded
-  because bucket size is capped by collision probability);
+- MinHash-LSH: signatures are per-row (no explode, no groupBy) — on
+  the Spark side an Arrow kernel maps each document's shingles through
+  one memoized md5-hash48 call (hashing.hash48_memo); banding turns
+  the quadratic candidate search into equi-joins on band keys through
+  ONE band template both engines run (_bands_clause_window_at: one
+  window sizes each bucket, buckets over MAX_BUCKET degrade to star
+  pairs);
 - SimHash: projection + 32 conditional sums per doc, pairs via
   band-blocked join on half-signatures (a Hamming-distance<=k search
   needs only ceil(32/(k+1)) blocks by pigeonhole);
@@ -32,7 +35,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from .hashing import MERSENNE61, hash48, minhash_coeffs, perm_sql
+from .hashing import (MERSENNE61, hash48, hash48_memo, minhash_coeffs,
+                      perm_sql)
 from .text import TOKENS, norm_text, render
 
 MINHASH_K = 16
@@ -230,25 +234,11 @@ def minhash_signature_sql(engine: str, k: int = MINHASH_K,
     return render(t, engine)
 
 
-def _bands_clause(sig_source: str) -> str:
-    """Shared band-expansion + size-capped bucket CTEs over a signature
-    relation. The ``sized`` groupBy is a map-side-combinable count on
-    the band key; buckets under MAX_BUCKET pair all-vs-all (``ok``);
-    buckets OVER the cap degrade to STAR pairing (``big_star``: every
-    member pairs with the bucket's min-doc representative) — O(n) per
-    bucket instead of O(n^2), so giant duplicate clusters (boilerplate-
-    heavy corpora) still surface in the near-dup path instead of being
-    silently dropped. Deterministic in both engines (min doc_id rep);
-    observable via lsh_bucket_stats_sql."""
-    n_bands = MINHASH_K // BAND_SIZE
-    return _bands_clause_at(sig_source, n_bands, BAND_SIZE)
-
-
 def _band_expand_clause(sig_source: str, n_bands: int,
                         band_size: int, cte_name: str = "bands") -> str:
     """Just the band-expansion CTE text (``<cte_name> AS (...)``) over
-    a signature relation — shared by the symmetric self-join clause
-    below and the asymmetric incremental probes (which instantiate it
+    a signature relation — shared by the band clause below, the bucket
+    stats and the asymmetric incremental probes (which instantiate it
     twice under different names; the name is a parameter so no caller
     has to string-surgery the SQL)."""
     band_key = "CASE t.band " + " ".join(
@@ -263,24 +253,6 @@ def _band_expand_clause(sig_source: str, n_bands: int,
     )"""
 
 
-def _bands_clause_at(sig_source: str, n_bands: int, band_size: int) -> str:
-    """_bands_clause for an explicit (bands, rows) choice — see
-    bands_rows_for for deriving one from a Jaccard threshold."""
-    return f"""{_band_expand_clause(sig_source, n_bands, band_size)}, sized AS (
-        SELECT band, key, COUNT(*) AS n, MIN(doc_id) AS rep
-        FROM bands GROUP BY band, key
-    ), ok AS (
-        SELECT b.doc_id, b.band, b.key
-        FROM bands b JOIN sized s
-          ON s.band = b.band AND s.key = b.key AND s.n <= {MAX_BUCKET}
-    ), big_star AS (
-        SELECT s.rep AS doc_a, b.doc_id AS doc_b
-        FROM bands b JOIN sized s
-          ON s.band = b.band AND s.key = b.key AND s.n > {MAX_BUCKET}
-        WHERE b.doc_id <> s.rep
-    )"""
-
-
 _PAIRS_SELECT = """SELECT DISTINCT doc_a, doc_b FROM (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM ok a JOIN ok b
@@ -292,24 +264,22 @@ _PAIRS_SELECT = """SELECT DISTINCT doc_a, doc_b FROM (
 
 def _bands_clause_window_at(sig_source: str, n_bands: int,
                             band_size: int) -> str:
-    """SPARK-side twin of _bands_clause_at with the bucket size/rep
-    computed by ONE window over the band expansion instead of a
-    groupBy + two bands⋈sized joins (r17; the shape the simhash
-    candidate clause has always used, `_simhash_cand_clause`).  Same
-    CTE contract (``ok``, ``big_star``) so _PAIRS_SELECT is shared;
-    values identical: COUNT(*)/MIN(doc_id) OVER (PARTITION BY band,
-    key) are exactly sized's aggregates, delivered on every member
-    row.  Measured at sf0.1: candidate checkpoint 1.46-1.94 s
-    (template) → 1.15-1.28 s (window), 101,251 pairs bit-identical.
+    """The band clause, the same text for Spark and DuckDB: band
+    expansion plus size-capped bucket CTEs over a signature relation,
+    for an explicit (bands, rows) choice (see bands_rows_for).  ONE
+    window over the expansion delivers each bucket's size and min-doc
+    representative on every member row (the shape of
+    `_simhash_cand_clause`).  Buckets under MAX_BUCKET pair all-vs-all
+    (``ok``); buckets OVER the cap degrade to STAR pairing
+    (``big_star``: every member pairs with the representative) — O(n)
+    per bucket instead of O(n^2), so giant duplicate clusters
+    (boilerplate-heavy corpora) still surface in the near-dup path
+    instead of being silently dropped.  Deterministic in both engines
+    (min doc_id rep); observable via lsh_bucket_stats_sql.
 
     Scale note (guide §2.5): a degenerate bucket concentrates in one
-    window partition, the same concentration the template's two SMJs
-    already had (each sorts the bucket in one task pre-AQE-split);
-    the window does it once.  The MAX_BUCKET star-degrade bounds the
-    downstream explosion identically.  The ORACLE templates keep the
-    groupBy+join form — this clause is only rendered in Spark
-    execution strategies, so every declared single-statement SQL is
-    unchanged."""
+    window partition; the MAX_BUCKET star-degrade bounds the
+    downstream explosion."""
     return f"""{_band_expand_clause(sig_source, n_bands, band_size)}, ann AS (
         SELECT doc_id, band, key,
                COUNT(*) OVER w AS n, MIN(doc_id) OVER w AS rep
@@ -330,98 +300,109 @@ def minhash_bands_sql(engine: str, sig_source: str,
     cache the signature once (see minhash_lsh_pairs_fn) while the
     oracle keeps the single-statement CTE form. Banding is solved from
     the target Jaccard ``threshold`` (bands_rows_for); the default
-    solves to the historical 4x4."""
+    solves to 4x4."""
     b, r = bands_rows_for(threshold)
-    clause = _bands_clause_window_at(sig_source, b, r) \
-        if engine == "spark" else _bands_clause_at(sig_source, b, r)
     t = f"""
-    WITH {clause}
+    WITH {_bands_clause_window_at(sig_source, b, r)}
+    {_PAIRS_SELECT}
+    """
+    return render(t, engine)
+
+
+def minhash_lsh_pairs_sql(engine: str,
+                          threshold: float = DEFAULT_JACCARD_T,
+                          fast: bool = False) -> str:
+    """MinHash-LSH candidate pairs as one statement (the oracle form):
+    the signature CTE (md5 shingle hash, or the code-point hash with
+    ``fast=True``; see minhash_signature_sql) followed by the
+    minhash_bands_sql tail — band the signature, self-join on band
+    keys, distinct pairs. The join is on the band hash — equality
+    only, no quadratic scan, and bucket membership is capped at
+    MAX_BUCKET (skew guard).
+
+    Bands expand via a VALUES cross join (one signature computation
+    per side, not one per band). The candidate search is a band-key
+    self-join, which distributes bucket expansion across tasks — a
+    collect_list/flatten bucket expansion was measured 2-4x WORSE
+    because giant buckets become single-row quadratic arrays with no
+    parallelism.  Banding derives from the target Jaccard
+    ``threshold`` via bands_rows_for (default 0.7 -> 4x4)."""
+    sig = minhash_signature_sql(engine, fast=fast)
+    b, r = bands_rows_for(threshold)
+    t = f"""
+    WITH sig AS ({sig}),
+    {_bands_clause_window_at('sig', b, r)}
     {_PAIRS_SELECT}
     """
     return render(t, engine)
 
 
 def minhash_lsh_pairs_fn(spark, sf_dir: str,
-                         threshold: float = DEFAULT_JACCARD_T):
-    """Spark execution strategy for the LSH pairs: materialize the
-    signature ONCE (localCheckpoint + temp view) before the self-join —
-    the CTE form would inline the whole shingle/hash pipeline into
-    every reference (4 here: both join sides x the sized/ok split),
-    and .cache() silently fails to match re-analyzed CTE plans on
-    Spark 4.1 (the executed plan showed 4 full md5/shingle recomputes
-    with the cache "enabled"). The checkpointed signature is |docs| x
-    17 longs — tiny. Produces exactly the rows of
-    minhash_lsh_pairs_sql.
-
-    ``threshold`` is the production knob (VERDICT r7 ask 5): banding
-    is DERIVED from the target Jaccard threshold via bands_rows_for —
-    lower it and the banding reshapes (more bands, fewer rows) so the
-    S-curve's knee lands on it. The default 0.7 solves to the same
-    4x4 banding the pipeline has always used (frozen oracles).
-
-    r16 (optimization round): the signature comes from the vectorized
-    md5 Arrow kernel (bit-identical to the HOF SQL template by
-    construction AND by the test_pipeline kernel-vs-SQL pin) — Spark
+                         threshold: float = DEFAULT_JACCARD_T,
+                         fast: bool = False):
+    """Spark execution strategy for the LSH pairs: the signature comes
+    from the vectorized Arrow kernel (the md5 kernel, or the
+    code-point kernel with ``fast=True``), materialized ONCE
+    (localCheckpoint + temp view) before the band self-join.  Spark
     evaluates transform()/aggregate() lambda bodies interpreted per
-    element, which made the HOF signature stage ~3x the kernel cost
-    (guide §4.1/§4.2; the oracle keeps the single-statement HOF
-    form)."""
-    vectorized_signature_view(spark, sf_dir, "__mh_sig")
+    element, which made the SQL signature stage ~3x the kernel cost
+    (guide §4.1/§4.2), and the CTE form would inline the signature
+    into every reference of the band join.  Produces exactly the rows
+    of minhash_lsh_pairs_sql(engine, threshold, fast).
+
+    ``threshold`` is the production knob: banding is DERIVED from the
+    target Jaccard threshold via bands_rows_for — lower it and the
+    banding reshapes (more bands, fewer rows) so the S-curve's knee
+    lands on it. The default 0.7 solves to 4x4."""
+    vectorized_signature_view(
+        spark, sf_dir, "__mh_sig",
+        kernel=_minhash_numpy_signature if fast else None)
     with scoped_parser_mode(spark, "true"):
         return spark.sql(minhash_bands_sql("spark", "__mh_sig", threshold))
 
 
-_SHINGLE_CACHE_CAP = 1 << 21   # per-task md5 memo bound (~100 MB worst)
-
-
-def _md5_sig_kernel(cache: dict | None = None):
-    """Build the md5 signature kernel, optionally wired to a PER-TASK
-    shingle-hash memo (guide §4.5 shape: heavyweight state constructed
-    once per task, amortized over every batch).  Shingles are 5-char
-    windows and repeat massively across documents of one partition, so
-    the memo turns most md5 calls into a dict hit; the cap bounds
-    worker memory on adversarially diverse corpora (hits past the cap
-    simply compute — values never change, only speed).  hash48(s) ==
-    int(md5(s)[:12], 16) == first 6 digest bytes big-endian — the
-    ``int.from_bytes`` form skips the hex round-trip.  The K
-    permutation mins run as ONE (K, n) vectorized op."""
-    import hashlib
+def _md5_sig_kernel(memo: dict):
+    """Build the md5 signature kernel over a PER-TASK shingle-hash
+    memo (guide §4.5 shape: heavyweight state constructed once per
+    task, amortized over every batch; see hash48_memo).  Shingles are
+    distinct code-point slices (Python slicing == substring
+    semantics; array_min is multiplicity-blind and the SQL template
+    hashes a distinct array too).  The K permutation mins run as ONE
+    (K, n) vectorized op."""
     coeffs = np.asarray(minhash_coeffs(MINHASH_K), np.int64)
     a_col = coeffs[:, 0:1]
     b_col = coeffs[:, 1:2]
-    get = cache.get if cache is not None else None
 
     def kern(text: str) -> list:
         n = max(len(text) - SHINGLE + 1, 1)
-        shingles = {text[i:i + SHINGLE] for i in range(n)}
-        hs = np.empty(len(shingles), np.int64)
-        if get is None:
-            for j, s in enumerate(shingles):
-                hs[j] = int.from_bytes(
-                    hashlib.md5(s.encode("utf-8")).digest()[:6], "big")
-        else:
-            for j, s in enumerate(shingles):
-                h = get(s)
-                if h is None:
-                    h = int.from_bytes(
-                        hashlib.md5(s.encode("utf-8")).digest()[:6],
-                        "big")
-                    if len(cache) < _SHINGLE_CACHE_CAP:
-                        cache[s] = h
-                hs[j] = h
+        hs = np.asarray(
+            hash48_memo({text[i:i + SHINGLE] for i in range(n)}, memo),
+            np.int64)
         return ((a_col * hs[None, :] + b_col) % MERSENNE61) \
             .min(axis=1).tolist()
     return kern
 
 
 def _minhash_md5_signature(text: str) -> list:
-    """Vectorized twin of the md5 signature: hash48(s) ==
-    int(md5(s)[:12], 16) is computable exactly with hashlib (SQL md5
-    hashes the UTF-8 bytes; so does ``s.encode()``), and shingles are
-    plain code-point slices (Python slicing == substring semantics).
-    Distinct shingles only — array_min is multiplicity-blind and the
-    SQL template hashes a distinct array too."""
-    return _md5_sig_kernel()(text)
+    """One document's md5 signature — the twin of
+    minhash_signature_sql() that the kernel-vs-template tests pin."""
+    return _md5_sig_kernel({})(text)
+
+
+def _text_udf(make_kernel, return_type: str):
+    """Iterator pandas_udf mapping a normalized-text column through
+    the per-document kernel ``make_kernel()`` builds once per task, so
+    a per-task memo serves every batch.  None maps to None (SQL:
+    transform(NULL)=NULL), so null-text docs flow through exactly like
+    the templates."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(return_type)
+    def text_udf(texts_it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        k = make_kernel()
+        for texts in texts_it:
+            yield texts.map(lambda t: None if t is None else k(t))
+    return text_udf
 
 
 def vectorized_signature_df(docs, kernel=None, materialize=True):
@@ -429,30 +410,20 @@ def vectorized_signature_df(docs, kernel=None, materialize=True):
     DataFrame, computed by an Arrow-batched pandas_udf kernel
     (default: the md5 kernel, bit-identical to
     minhash_signature_sql()).  The scale-path signature stage shared
-    by the verified-pair / clustering / observability operators AND
-    (r16) the registry LSH / incremental / store-write paths — see
-    minhash_lsh_pairs_fast_fn's docstring for why the kernel beats
-    the interpreted SQL higher-order functions.  The udf is the
-    ITERATOR form so the per-task shingle-hash memo (guide §4.5)
-    builds once per task and serves every batch.
+    by the LSH pairs, verified-pair, clustering, observability,
+    incremental and store-write paths — see minhash_lsh_pairs_fn for
+    why the kernel beats the interpreted SQL higher-order functions.
 
-    ``materialize=False`` (r17) skips the localCheckpoint for callers
-    that consume the signature exactly ONCE (single-reference plans:
-    the non-admitting store probe, the store write) — the checkpoint
-    there was a pure extra driver action; multi-reference callers keep
-    the default so the kernel never re-runs per reference."""
+    ``materialize=False`` skips the localCheckpoint for callers that
+    consume the signature exactly ONCE (single-reference plans: the
+    non-admitting store probe, the store write); multi-reference
+    callers keep the default so the kernel never re-runs per
+    reference."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
 
-    @pandas_udf(ArrayType(LongType()))
-    def sig_udf(texts_it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        k = kernel if kernel is not None else _md5_sig_kernel({})
-        for texts in texts_it:
-            # None -> None (SQL: transform(NULL)=NULL -> NULL mins),
-            # so null-text docs flow through exactly like the template
-            yield texts.map(lambda t: None if t is None else k(t))
-
+    sig_udf = _text_udf(
+        (lambda: kernel) if kernel is not None
+        else (lambda: _md5_sig_kernel({})), "array<bigint>")
     docs = docs.select("doc_id", F.trim(F.lower("text")).alias("nt"))
     # callers pass a spread input (scan.read_spread) — the documents
     # fixture is a single parquet row group → 1 scan partition, and
@@ -483,10 +454,11 @@ def _minhash_numpy_signature(text: str) -> list:
     single utf-32 reinterpret (ord(c) == ascii(c) in Spark AND DuckDB,
     hashing.hash31_poly's contract), rolling 31-bit polynomial over
     SHINGLE-wide windows as vectorized numpy, then the K permutation
-    mins as K vector ops.  Bit-identical to
-    minhash_signature_sql(fast=True): short texts pad with 0
-    (== ascii('')), and every intermediate fits int64 (hash < 2^31,
-    a <= 2K+1, so a*h+b < 2^36)."""
+    mins as K vector ops — a few vector ops per document where the
+    SQL form evaluates ~|shingles| x K interpreted lambda bodies.
+    Bit-identical to minhash_signature_sql(fast=True): short texts
+    pad with 0 (== ascii('')), and every intermediate fits int64
+    (hash < 2^31, a <= 2K+1, so a*h+b < 2^36)."""
     cp = np.frombuffer(text.encode("utf-32-le"), dtype="<u4") \
         .astype(np.int64)
     if len(cp) < SHINGLE:
@@ -499,112 +471,12 @@ def _minhash_numpy_signature(text: str) -> list:
             for a, b in minhash_coeffs(MINHASH_K)]
 
 
-def minhash_lsh_pairs_fast_fn(spark, sf_dir: str,
-                              threshold: float = DEFAULT_JACCARD_T):
-    """minhash_lsh_pairs_fn with the signature computed in a
-    VECTORIZED Arrow-batched pandas_udf instead of SQL higher-order
-    functions — the corpus-scale knob, and the repo's documented
-    escape hatch used for its stated reason: Spark evaluates lambda
-    bodies inside transform()/aggregate() interpreted per element
-    (outside whole-stage codegen), so the ~|docs| x |shingles| x K
-    expression evaluations dominate every LSH bench no matter how
-    cheap the shingle hash is (swapping md5 for an arithmetic
-    polynomial inside the lambda measured NET SLOWER — more expression
-    nodes per element).  numpy turns the same arithmetic into a few
-    vector ops per document: measured 3.3s -> 0.8s on the signature
-    stage and >=2x end-to-end vs dedup_minhash_lsh at sf0.1.
-
-    Values are bit-identical to minhash_signature_sql(fast=True) (the
-    single-statement form the DuckDB oracle runs), verified by the
-    driver gate.  Same localCheckpoint caching, same banding/skew
-    guards, and same solver-derived ``threshold`` knob as the md5
-    path."""
-    vectorized_signature_view(spark, sf_dir, "__mh_sig_fast",
-                              kernel=_minhash_numpy_signature)
-    with scoped_parser_mode(spark, "true"):
-        return spark.sql(
-            minhash_bands_sql("spark", "__mh_sig_fast", threshold))
-
-
-def minhash_lsh_pairs_fast_sql(engine: str,
-                               threshold: float = DEFAULT_JACCARD_T
-                               ) -> str:
-    """Single-statement (oracle) form of the fast-hash LSH pairs."""
-    sig = minhash_signature_sql(engine, fast=True)
-    b, r = bands_rows_for(threshold)
-    t = f"""
-    WITH sig AS ({sig}),
-    {_bands_clause_at('sig', b, r)}
-    {_PAIRS_SELECT}
-    """
-    return render(t, engine)
-
-
-def minhash_lsh_pairs_sql(engine: str,
-                          threshold: float = DEFAULT_JACCARD_T) -> str:
-    """MinHash-LSH candidate pairs: band the signature (bands of
-    BAND_SIZE), self-join on band keys, distinct pairs. The join is on
-    the band hash — equality only, no quadratic scan, and bucket
-    membership is capped at MAX_BUCKET (skew guard).
-
-    Bands expand via a VALUES cross join (one signature computation
-    per side, not one per band). The candidate search is a band-key
-    self-join: Spark inlines the CTE into both sides (signature
-    computed twice in this single-statement form — the executable
-    Spark path minhash_lsh_pairs_fn caches it once), but the join
-    distributes bucket expansion across tasks — a collect_list/flatten
-    bucket expansion was measured 2-4x WORSE because giant buckets
-    become single-row quadratic arrays with no parallelism.
-
-    Banding derives from the target Jaccard ``threshold`` via
-    bands_rows_for (default 0.7 -> the historical 4x4)."""
-    sig = minhash_signature_sql(engine)
-    b, r = bands_rows_for(threshold)
-    t = f"""
-    WITH sig AS ({sig}),
-    {_bands_clause_at('sig', b, r)}
-    {_PAIRS_SELECT}
-    """
-    return render(t, engine)
-
-
-def minhash_lsh_pairs_at_sql(engine: str, threshold: float,
-                             k: int = MINHASH_K) -> str:
-    """minhash_lsh_pairs_sql with banding DERIVED from a target Jaccard
-    threshold via bands_rows_for — the production knob: lower the
-    threshold and the banding reshapes (more bands, fewer rows) so the
-    S-curve's knee lands on it. The default K=16/r=4 pipeline is
-    unchanged (frozen oracles); this entry point is for other operating
-    points."""
-    b, r = bands_rows_for(threshold, k)
-    sig = minhash_signature_sql(engine, k)
-    t = f"""
-    WITH sig AS ({sig}),
-    {_bands_clause_at('sig', b, r)}
-    {_PAIRS_SELECT}
-    """
-    return render(t, engine)
-
-
-def lsh_bucket_stats_sql(engine: str) -> str:
-    """Observability for the LSH skew guard: band-bucket population
-    stats, including how many buckets (and docs) the MAX_BUCKET cap
-    drops from candidate generation. At 100 TB this is the query you
-    run to tune the cap before the pair join."""
-    sig = minhash_signature_sql(engine)
+def _bucket_stats_tail(sig_source: str) -> str:
+    """Band expansion over ``sig_source`` plus the bucket-population
+    aggregate — the body lsh_bucket_stats_sql and lsh_bucket_stats_fn
+    share."""
     n_bands = MINHASH_K // BAND_SIZE
-    band_key = "CASE t.band " + " ".join(
-        "WHEN {b} THEN concat_ws(',', {cols})".format(
-            b=b, cols=", ".join(
-                f"m{i}" for i in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)))
-        for b in range(n_bands)) + " END"
-    values = ",".join(f"({b})" for b in range(n_bands))
-    t = f"""
-    WITH sig AS ({sig}),
-    bands AS (
-        SELECT doc_id, t.band, {band_key} AS key
-        FROM sig CROSS JOIN (VALUES {values}) AS t(band)
-    ), sized AS (
+    return f"""{_band_expand_clause(sig_source, n_bands, BAND_SIZE)}, sized AS (
         SELECT band, key, COUNT(*) AS n
         FROM bands GROUP BY band, key
     )
@@ -614,7 +486,17 @@ def lsh_bucket_stats_sql(engine: str) -> str:
                AS BIGINT) AS n_capped_buckets,
            CAST(SUM(CASE WHEN n > {MAX_BUCKET} THEN n ELSE 0 END)
                AS BIGINT) AS n_docs_in_capped
-    FROM sized
+    FROM sized"""
+
+
+def lsh_bucket_stats_sql(engine: str) -> str:
+    """Observability for the LSH skew guard: band-bucket population
+    stats, including how many buckets (and docs) the MAX_BUCKET cap
+    drops from candidate generation. At 100 TB this is the query you
+    run to tune the cap before the pair join."""
+    t = f"""
+    WITH sig AS ({minhash_signature_sql(engine)}),
+    {_bucket_stats_tail('sig')}
     """
     return render(t, engine)
 
@@ -623,45 +505,9 @@ def lsh_bucket_stats_fn(spark, sf_dir: str):
     """Spark strategy for lsh_bucket_stats: the same bucket-population
     aggregate, over the vectorized md5 signature view instead of the
     inline HOF signature CTE (identical values; see
-    minhash_lsh_pairs_fast_fn for the why)."""
+    minhash_lsh_pairs_fn for the why)."""
     vectorized_signature_view(spark, sf_dir, "__mh_sig_stats")
-    n_bands = MINHASH_K // BAND_SIZE
-    band_key = "CASE t.band " + " ".join(
-        "WHEN {b} THEN concat_ws(',', {cols})".format(
-            b=b, cols=", ".join(
-                f"m{i}" for i in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)))
-        for b in range(n_bands)) + " END"
-    values = ",".join(f"({b})" for b in range(n_bands))
-    return spark.sql(f"""
-    WITH bands AS (
-        SELECT doc_id, t.band, {band_key} AS key
-        FROM __mh_sig_stats CROSS JOIN (VALUES {values}) AS t(band)
-    ), sized AS (
-        SELECT band, key, COUNT(*) AS n
-        FROM bands GROUP BY band, key
-    )
-    SELECT COUNT(*) AS n_buckets,
-           CAST(MAX(n) AS BIGINT) AS max_bucket,
-           CAST(SUM(CASE WHEN n > {MAX_BUCKET} THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_capped_buckets,
-           CAST(SUM(CASE WHEN n > {MAX_BUCKET} THEN n ELSE 0 END)
-               AS BIGINT) AS n_docs_in_capped
-    FROM sized
-    """)
-
-
-def minhash_lsh_pairs_at_fn(spark, sf_dir: str, threshold: float):
-    """Spark strategy for the derived-banding candidates: banding
-    solved from the threshold (bands_rows_for), signature from the
-    vectorized md5 kernel view — identical values to
-    minhash_lsh_pairs_at_sql."""
-    b, r = bands_rows_for(threshold)
-    vectorized_signature_view(spark, sf_dir, "__mh_sig_at")
-    with scoped_parser_mode(spark, "true"):
-        return spark.sql(render(f"""
-        WITH {_bands_clause_window_at('__mh_sig_at', b, r)}
-        {_PAIRS_SELECT}
-        """, "spark"))
+    return spark.sql(f"WITH {_bucket_stats_tail('__mh_sig_stats')}")
 
 
 def dedup_keep_first_sql(engine: str) -> str:
@@ -729,36 +575,19 @@ def _hamming(a: str, b: str, engine: str) -> str:
     return f"CAST(bit_count(xor({a}, {b})) AS BIGINT)"
 
 
-def _simhash_kernel(bits: int = 32, cache: dict | None = None):
-    """Build the per-doc SimHash kernel, optionally wired to a
-    PER-TASK token-hash memo (r17; the _md5_sig_kernel shape, guide
-    §4.5): tokens repeat massively across documents of a partition,
-    so most md5 calls become a dict hit.  Values are unchanged — the
-    memo only caches hash48(token), never votes."""
-    import hashlib
+def _simhash_kernel(bits: int, memo: dict):
+    """Build the per-doc SimHash kernel over a PER-TASK token-hash
+    memo (see hash48_memo): tokens repeat massively across documents
+    of a partition, so most md5 calls become a dict hit.  Values are
+    unchanged — the memo only caches hash48(token), never votes."""
     import re
-    get = cache.get if cache is not None else None
     bit_range = np.arange(bits)
     bit_shift = np.arange(bits, dtype=np.int64)
 
     def kern(nt: str) -> int:
-        toks = re.split(r"\s+", nt, flags=re.ASCII)
-        if get is None:
-            hs = np.fromiter(
-                (int.from_bytes(
-                    hashlib.md5(t.encode("utf-8")).digest()[:6], "big")
-                 for t in toks), np.int64, len(toks))
-        else:
-            hs = np.empty(len(toks), np.int64)
-            for j, t in enumerate(toks):
-                h = get(t)
-                if h is None:
-                    h = int.from_bytes(
-                        hashlib.md5(t.encode("utf-8")).digest()[:6],
-                        "big")
-                    if len(cache) < _SHINGLE_CACHE_CAP:
-                        cache[t] = h
-                hs[j] = h
+        hs = np.asarray(
+            hash48_memo(re.split(r"\s+", nt, flags=re.ASCII), memo),
+            np.int64)
         ones = ((hs[:, None] >> bit_range) & 1)
         votes = (2 * ones - 1).sum(axis=0)
         return int(((votes >= 0).astype(np.int64) << bit_shift).sum())
@@ -771,31 +600,21 @@ def _simhash_int(nt: str, bits: int = 32) -> int:
     ASCII class, and both splits keep leading/trailing empty fields —
     md5-hash48 per token (multiplicity kept: the SQL explode counts
     duplicate tokens), per-bit +1/-1 vote sums, then the integer
-    signature with bit j set iff vote_j >= 0.  hash48(t) ==
-    int(md5(t)[:12], 16) == first 6 digest bytes big-endian."""
-    return _simhash_kernel(bits)(nt)
+    signature with bit j set iff vote_j >= 0."""
+    return _simhash_kernel(bits, {})(nt)
 
 
 def simhash_signature_view(spark, sf_dir: str, view: str,
                            bits: int = 32):
     """Temp view of the checkpointed integer SimHash signature from the
-    Arrow-batched kernel (bit-identical to the SQL vote CTEs)."""
+    Arrow-batched kernel (bit-identical to the SQL vote CTEs).  SQL
+    drops null-text docs entirely (explode of NULL emits no rows), so
+    nulls are filtered out before the kernel."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
 
-    @pandas_udf(LongType())
-    def sig_udf(texts_it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # ITERATOR form (r17, guide §4.5): the per-task token-hash
-        # memo builds once per task and serves every batch.  SQL drops
-        # null-text docs entirely (explode of NULL emits no rows); the
-        # callers filter nulls out, and None maps to None as a belt
-        k = _simhash_kernel(bits, {})
-        for texts in texts_it:
-            yield texts.map(lambda t: None if t is None else k(t))
-
+    sig_udf = _text_udf(lambda: _simhash_kernel(bits, {}), "bigint")
     # read_spread spreads the single-row-group scan so the kernel
-    # does not serialize into one task (r16)
+    # does not serialize into one task
     docs = (read_spread(spark, f"{sf_dir}/documents.parquet")
             .select("doc_id", F.trim(F.lower("text")).alias("nt"))
             .where(F.col("nt").isNotNull()))
@@ -820,11 +639,12 @@ def simhash_fn(spark, sf_dir: str, bits: int = 32):
 
 def _simhash_cand_clause(keyed_source: str) -> str:
     """Shared slice-bucket candidate CTEs with the MAX_BUCKET skew
-    guard (same policy as the MinHash band join, _bands_clause): a
-    bucket over the cap degrades to STAR pairing against its min-doc
-    representative — O(n) per bucket instead of O(n^2), so a
-    boilerplate-heavy corpus whose signatures collapse onto few
-    signatures cannot make a slice bucket quadratic. Star candidates
+    guard (same policy as the MinHash band clause,
+    _bands_clause_window_at): a bucket over the cap degrades to STAR
+    pairing against its min-doc representative — O(n) per bucket
+    instead of O(n^2), so a boilerplate-heavy corpus whose signatures
+    collapse onto few signatures cannot make a slice bucket
+    quadratic. Star candidates
     still pass the exact popcount verify, so emitted pairs stay
     correct; only recall inside degenerate buckets degrades (the
     documented LSH trade)."""
@@ -987,34 +807,18 @@ def ngram_jaccard_pairs_sql(engine: str, n: int = 3,
     return render(t, engine)
 
 
-def _gram_set_kernel(cache: dict | None = None, n: int = 3):
-    """Build the hashed-gram-set kernel, optionally wired to a
-    PER-TASK gram-hash memo (the _md5_sig_kernel pattern: word
-    n-grams repeat across documents, so most md5 calls become dict
-    hits; the shared cap bounds worker memory)."""
-    import hashlib
+def _gram_set_kernel(memo: dict, n: int = 3):
+    """Build the hashed-gram-set kernel over a PER-TASK gram-hash memo
+    (see hash48_memo: word n-grams repeat across documents, so most
+    md5 calls become dict hits)."""
     import re
     split = re.compile(r"\s+", flags=re.ASCII).split
-    get = cache.get if cache is not None else None
 
     def kern(nt: str) -> list:
         toks = split(nt)
-        grams = {" ".join(toks[i:i + n])
-                 for i in range(max(len(toks) - n, 0) + 1)}
-        if get is None:
-            return [int.from_bytes(
-                hashlib.md5(g.encode("utf-8")).digest()[:6], "big")
-                for g in grams]
-        out = []
-        for g in grams:
-            h = get(g)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.md5(g.encode("utf-8")).digest()[:6], "big")
-                if len(cache) < _SHINGLE_CACHE_CAP:
-                    cache[g] = h
-            out.append(h)
-        return out
+        return hash48_memo({" ".join(toks[i:i + n])
+                            for i in range(max(len(toks) - n, 0) + 1)},
+                           memo)
     return kern
 
 
@@ -1024,7 +828,7 @@ def _hashed_gram_set(nt: str, n: int = 3) -> list:
     0..max(len-n, 0) — short docs yield one partial gram, exactly like
     concat_ws skipping out-of-range elements — distinct, md5-hash48
     per gram.  Order-free: consumers only do set intersections."""
-    return _gram_set_kernel(n=n)(nt)
+    return _gram_set_kernel({}, n)(nt)
 
 
 def lsh_verify_sql(engine: str, cand_source: str, n: int = 3,
@@ -1084,9 +888,7 @@ def lsh_verified_pairs_fn(spark, sf_dir: str):
     are doc_id equi-joins; no quadratic term anywhere.
 
     The candidate signature comes from the vectorized md5 kernel
-    (bit-identical to the SQL template the oracle inlines; the
-    interpreted-HOF SQL form remains the dedup_minhash_lsh registry
-    entry's own benchmark)."""
+    (bit-identical to the SQL template the oracle inlines)."""
     vectorized_signature_view(spark, sf_dir, "__mh_sig_md5")
     with scoped_parser_mode(spark, "true"):
         read_spread(spark, f"{sf_dir}/documents.parquet") \
@@ -1106,27 +908,19 @@ def lsh_verified_pairs_fn(spark, sf_dir: str):
         # word 3-grams, values identical to the SQL template — same token
         # split as the SimHash kernel, same md5 hash48)
         from pyspark.sql import functions as F
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import ArrayType, LongType
 
-        @pandas_udf(ArrayType(LongType()))
-        def gram_udf(texts_it: Iterator[pd.Series]
-                     ) -> Iterator[pd.Series]:
-            k = _gram_set_kernel({})   # per-task gram-hash memo
-            for texts in texts_it:
-                yield texts.map(lambda t: None if t is None else k(t))
-
+        gram_udf = _text_udf(lambda: _gram_set_kernel({}), "array<bigint>")
         ids = (pairs.select(F.col("doc_a").alias("doc_id"))
                .union(pairs.select(F.col("doc_b").alias("doc_id")))
                .distinct())
-        # plain read (r16): the candidate-id semi-join prunes the corpus
+        # plain read: the candidate-id semi-join prunes the corpus
         # to a tiny relation in one cheap task — spreading the full text
         # column ahead of it would shuffle the whole corpus for nothing;
         # the repartition AFTER the join is what feeds the gram kernel
         docs = (read_cached(spark, f"{sf_dir}/documents.parquet")
                 .join(ids, "doc_id")
                 .select("doc_id", F.trim(F.lower("text")).alias("nt")))
-        # spread the gram kernel (r16): AQE coalesces the tiny
+        # spread the gram kernel: AQE coalesces the tiny
         # semi-join output to ~1 post-shuffle partition, serializing
         # the Python stage into one task — same starvation class as
         # the single-row-group signature scan.  Unconditional (no
@@ -1989,18 +1783,7 @@ INCOMING_MOD = 10
 INCOMING_RES = 8        # doc_id % 10 >= 8 stands in for the new batch
 
 
-def _incremental_tail(mod: int, res: int) -> str:
-    """Asymmetric band probe over ``bands``: incoming docs join only
-    EXISTING-side buckets (sized on the existing side; over-cap
-    buckets degrade to the min-existing-doc representative, the same
-    star policy as the symmetric join). Engine-portable as-is."""
-    return f"""ex AS (
-        SELECT doc_id, band, key FROM bands
-        WHERE doc_id % {mod} < {res}
-    ), inc AS (
-        SELECT doc_id, band, key FROM bands
-        WHERE doc_id % {mod} >= {res}
-    ), sized AS (
+_PROBE_TAIL = f"""sized AS (
         SELECT band, key, COUNT(*) AS n, MIN(doc_id) AS rep
         FROM ex GROUP BY band, key
     ), cand AS (
@@ -2019,6 +1802,21 @@ def _incremental_tail(mod: int, res: int) -> str:
            CAST(COUNT(*) AS BIGINT) AS n_corpus_matches,
            MIN(dup_of) AS dup_of
     FROM cand GROUP BY new_doc"""
+
+
+def _incremental_tail(mod: int, res: int) -> str:
+    """Asymmetric band probe over ``bands``: incoming docs join only
+    EXISTING-side buckets (_PROBE_TAIL: sized on the existing side
+    ``ex``; over-cap buckets degrade to the min-existing-doc
+    representative, the same star policy as the symmetric join).
+    Engine-portable as-is."""
+    return f"""ex AS (
+        SELECT doc_id, band, key FROM bands
+        WHERE doc_id % {mod} < {res}
+    ), inc AS (
+        SELECT doc_id, band, key FROM bands
+        WHERE doc_id % {mod} >= {res}
+    ), {_PROBE_TAIL}"""
 
 
 def dedup_incremental_sql(engine: str, mod: int = INCOMING_MOD,
@@ -2054,12 +1852,9 @@ def dedup_incremental_sql(engine: str, mod: int = INCOMING_MOD,
 
 def dedup_incremental_fn(spark, sf_dir: str, mod: int = INCOMING_MOD,
                          res: int = INCOMING_RES):
-    """Spark strategy: signature materialized once (the
-    minhash_lsh_pairs_fn lesson — the CTE form would recompute the
-    shingle/md5 pipeline for the ex/inc/sized references), then the
-    asymmetric probe SQL.  r16: the signature comes from the
-    vectorized md5 Arrow kernel (bit-identical to the HOF template;
-    see minhash_lsh_pairs_fn)."""
+    """Spark strategy: the vectorized md5 signature materialized once
+    (the CTE form would recompute it for the ex/inc/sized references;
+    see minhash_lsh_pairs_fn), then the asymmetric probe SQL."""
     with scoped_parser_mode(spark, "true"):
         vectorized_signature_view(spark, sf_dir, "__mhinc_sig")
         n_bands = MINHASH_K // BAND_SIZE
@@ -2180,46 +1975,25 @@ def dedup_incremental_against_store(spark, store_path: str, batch_df,
     from .storecache import append_store
 
     with scoped_parser_mode(spark, "true"):
-        # r16: vectorized md5 kernel for the batch signature
-        # (bit-identical to the HOF template; see minhash_lsh_pairs_fn).
-        # r17 negative result, kept ON the checkpoint: computing the
-        # signature inside the verdicts action (materialize=False) was
-        # measured 2.0-2.6 s vs 1.5-1.8 s with the checkpoint — the
-        # probe's cand UNION references ``inc`` twice, so the CTE
-        # inlining re-runs the Arrow kernel per reference and the
-        # double evaluation costs more than the barrier it saves.
+        # kept ON the checkpoint: computing the signature inside the
+        # verdicts action (materialize=False) measured 2.0-2.6 s vs
+        # 1.5-1.8 s with it — the probe's cand UNION references ``inc``
+        # twice, so the CTE inlining re-runs the Arrow kernel per
+        # reference and the double evaluation costs more than the
+        # barrier it saves.
         batch_sig = vectorized_signature_df(batch_df)
         batch_sig.createOrReplaceTempView("__inc_batch_sig")
-        # read_store (r16): listing-keyed relation memo — the probe
+        # read_store: listing-keyed relation memo — the probe
         # re-resolves the store only when its file set actually changed
         read_store(spark, store_path) \
             .createOrReplaceTempView("__inc_store_sig")
         n_bands = MINHASH_K // BAND_SIZE
         verdicts = spark.sql(f"""
-        WITH {_band_expand_clause('__inc_store_sig', n_bands, BAND_SIZE)},
-        ex AS (SELECT doc_id, band, key FROM bands),
+        WITH {_band_expand_clause('__inc_store_sig', n_bands, BAND_SIZE,
+                                  cte_name='ex')},
         {_band_expand_clause('__inc_batch_sig', n_bands, BAND_SIZE,
-                             cte_name='inc_bands')},
-        inc AS (SELECT doc_id, band, key FROM inc_bands),
-        sized AS (
-            SELECT band, key, COUNT(*) AS n, MIN(doc_id) AS rep
-            FROM ex GROUP BY band, key
-        ), cand AS (
-            SELECT i.doc_id AS new_doc, e.doc_id AS dup_of
-            FROM inc i
-            JOIN sized s ON s.band = i.band AND s.key = i.key
-                        AND s.n <= {MAX_BUCKET}
-            JOIN ex e ON e.band = i.band AND e.key = i.key
-            UNION
-            SELECT i.doc_id AS new_doc, s.rep AS dup_of
-            FROM inc i
-            JOIN sized s ON s.band = i.band AND s.key = i.key
-                        AND s.n > {MAX_BUCKET}
-        )
-        SELECT new_doc AS doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_corpus_matches,
-               MIN(dup_of) AS dup_of
-        FROM cand GROUP BY new_doc
+                             cte_name='inc')},
+        {_PROBE_TAIL}
         """).localCheckpoint()
         if admit:
             # WITHIN-batch near-duplicates must not all be admitted: two

@@ -178,22 +178,15 @@ def _fcnt_kernel():
     BIGINT) % 1024 (48 bits, so BIGINT % is plain non-negative
     modulo); NULL
     text yields no rows (SQL: explode of NULL emits nothing).  The
-    gram→bucket memo is per-task state amortized over batches
-    (guide §4.5), capped to bound worker memory."""
-    import hashlib
+    gram→hash48 memo (hashing.hash48_memo) is per-task state
+    amortized over batches (guide §4.5), capped to bound worker
+    memory."""
     import re
     from collections import Counter
 
-    memo: dict = {}
+    from .hashing import hash48_memo
 
-    def bucket(g: str) -> int:
-        b = memo.get(g)
-        if b is None:
-            b = int(hashlib.md5(g.encode("utf-8")).hexdigest()[:12],
-                    16) % N_BUCKETS
-            if len(memo) < 2_000_000:
-                memo[g] = b
-        return b
+    memo: dict = {}
 
     def run(batches):
         for pdf in batches:
@@ -206,10 +199,10 @@ def _fcnt_kernel():
                 if nt is None:
                     continue
                 toks = re.split(r"\s+", nt, flags=re.ASCII)
-                cnt = Counter(bucket(t) for t in toks)
-                if len(toks) >= 2:
-                    cnt.update(bucket(toks[i] + " " + toks[i + 1])
-                               for i in range(len(toks) - 1))
+                grams = toks + [toks[i] + " " + toks[i + 1]
+                                for i in range(len(toks) - 1)]
+                cnt = Counter([h % N_BUCKETS
+                               for h in hash48_memo(grams, memo)])
                 for b, c in cnt.items():
                     doc_out.append(doc_id)
                     lang_out.append(lang)

@@ -14,6 +14,8 @@ are (a*h + b) mod P with P = 2^61-1; a bounded so a*h stays < 2^63.
 
 from __future__ import annotations
 
+import hashlib
+
 MERSENNE61 = (1 << 61) - 1
 HASH_BITS = 48
 
@@ -38,6 +40,32 @@ def duck_hash48(expr: str) -> str:
 
 def hash48(expr: str, engine: str) -> str:
     return spark_hash48(expr) if engine == "spark" else duck_hash48(expr)
+
+
+HASH48_MEMO_CAP = 1 << 21   # per-task memo bound (~100 MB worst)
+
+
+def hash48_memo(strings, memo: dict) -> list:
+    """Python twin of hash48 over every string in ``strings``:
+    int(md5(s)[:12], 16) == the first 6 digest bytes big-endian (SQL
+    md5 hashes the UTF-8 bytes; so does ``s.encode()``).  Values are
+    memoized in ``memo``, which a kernel builds once per task:
+    shingles, tokens and grams repeat massively across the documents
+    of one partition, so most md5 calls become a dict hit.  The cap
+    bounds worker memory on adversarially diverse input; past it,
+    misses simply compute.  The loop lives here so a kernel makes one
+    call per document."""
+    get = memo.get
+    out = []
+    for s in strings:
+        h = get(s)
+        if h is None:
+            h = int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:6],
+                               "big")
+            if len(memo) < HASH48_MEMO_CAP:
+                memo[s] = h
+        out.append(h)
+    return out
 
 
 def spark_hash_slice(expr: str, start: int = 1, nhex: int = 15) -> str:

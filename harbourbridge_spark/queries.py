@@ -1993,16 +1993,17 @@ REGISTRY["dedup_minhash_lsh"] = QuerySpec(
     "candidate pairs (signature cached once on the Spark side); no "
     "quadratic scan; band buckets capped at MAX_BUCKET (skew guard)")
 REGISTRY["dedup_minhash_lsh_t35"] = QuerySpec(
-    lambda spark, sf_dir: _dedup.minhash_lsh_pairs_at_fn(
+    lambda spark, sf_dir: _dedup.minhash_lsh_pairs_fn(
         spark, sf_dir, 0.35),
-    _dedup.minhash_lsh_pairs_at_sql("duckdb", 0.35),
+    _dedup.minhash_lsh_pairs_sql("duckdb", 0.35),
     "MinHash-LSH candidates at a DERIVED operating point: banding "
     "solved from a target Jaccard threshold of 0.35 (8 bands of 2 via "
     "bands_rows_for) — the production knob next to the frozen K=16/r=4 "
     "default; signature from the vectorized md5 kernel")
 REGISTRY["dedup_minhash_lsh_fast"] = QuerySpec(
-    _dedup.minhash_lsh_pairs_fast_fn,
-    _dedup.minhash_lsh_pairs_fast_sql("duckdb"),
+    lambda spark, sf_dir: _dedup.minhash_lsh_pairs_fn(
+        spark, sf_dir, fast=True),
+    _dedup.minhash_lsh_pairs_sql("duckdb", fast=True),
     "MinHash-LSH with the arithmetic 31-bit shingle hash computed in "
     "a vectorized Arrow-batched numpy kernel (no md5, no per-element "
     "HOF interpretation) — the signature-cost knob for corpus scale; "
@@ -2832,7 +2833,7 @@ def q_multimodal_jpeg_progressive(spark: SparkSession,
     "VBR-correct accounting a corpus pipeline filters on.  The "
     "truncated flag (ADVICE r8) is 0 on every clean fixture and 1 "
     "when the walk stops on corrupt mid-stream bytes")
-def q_multimodal_mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_multimodal_meta_mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline.multimodal import extract_features, synth_media
     ids = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"))

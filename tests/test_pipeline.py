@@ -405,14 +405,24 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark, tmp_path):
     """10k identical documents put every doc in the same band buckets;
     the MAX_BUCKET guard must degrade those buckets to star pairing
     (each member vs the min-doc representative — 9,999 pairs, stats
-    report the cap) instead of forming a ~10^8-pair quadratic join."""
+    report the cap) instead of forming a ~10^8-pair quadratic join.
+    A second group of exactly MAX_BUCKET identical docs sits on the
+    other side of the ``n <= MAX_BUCKET`` cut and must still pair
+    all-vs-all (32,640 pairs).  The Spark strategy and the DuckDB
+    rendering of the same band template must return the same pairs."""
+    import duckdb
     import pyspark.sql.functions as F
     from harbourbridge_spark.pipeline import dedup as D
 
+    n_big, n_cap = 10_000, D.MAX_BUCKET
+    assert n_cap == 256
     sf_dir = str(tmp_path)
-    spark.range(10_000).select(
+    spark.range(n_big + n_cap).select(
         F.col("id").alias("doc_id"),
-        F.lit("identical boilerplate text repeated everywhere").alias("text"),
+        F.when(F.col("id") < n_big,
+               F.lit("identical boilerplate text repeated everywhere"))
+         .otherwise(F.lit("QZXJ 0123456789 #$%&*@!~^ QZXJ 0123456789"))
+         .alias("text"),
         F.lit("en").alias("lang"),
         F.lit("web").alias("source"),
         F.lit(48).alias("n_chars"),
@@ -423,14 +433,26 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark, tmp_path):
     pairs = D.minhash_lsh_pairs_fn(spark, sf_dir)
     rows = pairs.collect()
     elapsed = time.time() - t0
-    # every bucket is over the cap -> star pairs to the representative
-    assert len(rows) == 9_999
-    assert all(r.doc_a == 0 for r in rows)
+    got = {(r.doc_a, r.doc_b) for r in rows}
+    # the 10k bucket is over the cap -> star pairs to the representative
+    star = {(0, i) for i in range(1, n_big)}
+    # the MAX_BUCKET bucket is at the cap -> all-vs-all
+    full = {(i, j) for i in range(n_big, n_big + n_cap)
+            for j in range(i + 1, n_big + n_cap)}
+    assert len(star) == 9_999 and len(full) == 32_640
+    assert len(rows) == len(got) == 9_999 + 32_640
+    assert got == star | full
     assert elapsed < 60  # quadratic join would blow far past this
 
+    # the DuckDB rendering of the same single band template
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/documents.parquet/*.parquet')")
+    assert set(con.execute(
+        D.minhash_lsh_pairs_sql("duckdb")).fetchall()) == got
+
     # the SQL template's contract is caller-registered views (as in the
-    # oracle gate); minhash_lsh_pairs_fn no longer registers `documents`
-    # as a side effect since the r16 vectorized-signature switch
+    # oracle gate); minhash_lsh_pairs_fn does not register `documents`
     spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .createOrReplaceTempView("documents")
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
@@ -2320,13 +2342,16 @@ def test_gif_lzw_deferred_clear_full_table():
 
 
 def test_minhash_threshold_knob_on_flagship_path(spark):
-    """threshold= is a first-class knob on the flagship LSH path
-    (VERDICT r7 ask 5): banding derives from the solver, the default
-    0.7 reproduces the historical 4x4 SQL byte-for-byte, and a
-    non-default threshold matches the dedicated at_fn/at_sql pair."""
+    """threshold= is a first-class knob on the flagship LSH path:
+    banding derives from the solver, the default 0.7 reproduces the
+    4x4 SQL byte-for-byte, and a non-default threshold on the Spark
+    strategy matches the DuckDB rendering of the same template."""
+    import duckdb
+
+    from harbourbridge_spark.oraclecheck import register_views
     from harbourbridge_spark.pipeline import dedup as D
 
-    # default == historical banding, both engines, both hash kernels
+    # default == 4x4 banding, both hash kernels
     b, r = D.bands_rows_for(D.DEFAULT_JACCARD_T)
     assert (b, r) == (D.MINHASH_K // D.BAND_SIZE, D.BAND_SIZE)
     assert D.minhash_bands_sql("spark", "s") == D.minhash_bands_sql(
@@ -2336,15 +2361,17 @@ def test_minhash_threshold_knob_on_flagship_path(spark):
     got = {(rw.doc_a, rw.doc_b) for rw in
            D.minhash_lsh_pairs_fn(spark, sf_dir, threshold=0.35)
            .collect()}
-    want = {(rw.doc_a, rw.doc_b) for rw in
-            D.minhash_lsh_pairs_at_fn(spark, sf_dir, 0.35).collect()}
+    con = duckdb.connect()
+    register_views(con, sf_dir)
+    want = set(con.execute(
+        D.minhash_lsh_pairs_sql("duckdb", 0.35)).fetchall())
     assert got == want
     # the fast kernel honors the same knob (8x2 banding at 0.35)
     fast = {(rw.doc_a, rw.doc_b) for rw in
-            D.minhash_lsh_pairs_fast_fn(spark, sf_dir, threshold=0.35)
-            .collect()}
-    assert "WHEN 7 THEN" in D.minhash_lsh_pairs_fast_sql(
-        "spark", 0.35)          # 8 bands present in the derived SQL
+            D.minhash_lsh_pairs_fn(spark, sf_dir, threshold=0.35,
+                                   fast=True).collect()}
+    assert "WHEN 7 THEN" in D.minhash_lsh_pairs_sql(
+        "spark", 0.35, fast=True)   # 8 bands present in the derived SQL
     assert fast  # non-empty at this permissive threshold
 
 

@@ -3,9 +3,10 @@
 protocol, promoted to a tool per VERDICT r10 ask 2).
 
 Times the SAME oracle entries in two checked-out trees, each in its
-own subprocess (own JVM, own sys.path), interleaved A,B,B,A so slow
-box drift cancels, best-of-3 noop-writes per entry per pass, with the
-bench.py canary run in every subprocess for normalization.
+own subprocess (own JVM, own sys.path), interleaved A,B,B,A,B,A,A,B
+so slow box drift cancels and each tree holds as many outer as middle
+passes, best-of-3 noop-writes per entry per pass, with the bench.py
+canary run in every subprocess for normalization.
 
 Usage:
   python tools/ab_bench.py TREE_A TREE_B entry1 entry2 ...
@@ -111,14 +112,17 @@ def main() -> None:
     ents_b = expand(tree_b, patterns)
     shared = [n for n in ents_a if n in set(ents_b)]
     skipped = sorted(set(ents_a) ^ set(ents_b))
-    # interleave A,B,B,A; min across the two passes per tree.
-    # Every pass carries its OWN in-child canary (VERDICT r13 ask 5):
-    # the table records the per-pass canary next to each reading so
-    # exoneration never rests on cross-session canary inference —
-    # a reading and the box state it was taken under travel together.
-    runs = [run_tree(tree_a, shared), run_tree(tree_b, shared),
-            run_tree(tree_b, shared), run_tree(tree_a, shared)]
-    pass_a, pass_b = (runs[0], runs[3]), (runs[1], runs[2])
+    # interleave A,B,B,A,B,A,A,B: each tree holds two outer and two
+    # middle passes, so pass position cannot favour either tree; min
+    # across the four passes per tree.  Every pass carries its OWN
+    # in-child canary: the table records the per-pass canary next to
+    # each reading, so a reading and the box state it was taken under
+    # travel together.
+    order = "ABBABAAB"
+    trees = {"A": tree_a, "B": tree_b}
+    runs = [run_tree(trees[t], shared) for t in order]
+    pass_a = [r for t, r in zip(order, runs) if t == "A"]
+    pass_b = [r for t, r in zip(order, runs) if t == "B"]
     can_a_passes = [p["__canary__"] for p in pass_a]
     can_b_passes = [p["__canary__"] for p in pass_b]
     rows = {}
@@ -138,7 +142,7 @@ def main() -> None:
                                             if a_norm else None)}
     print(json.dumps({"canary_a_passes": can_a_passes,
                       "canary_b_passes": can_b_passes,
-                      "pass_order": "A,B,B,A",
+                      "pass_order": ",".join(order),
                       "skipped_not_in_both": skipped, "entries": rows},
                      indent=1))
 

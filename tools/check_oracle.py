@@ -7,6 +7,7 @@ Usage: python tools/check_oracle.py [name ...]
 Env:   CHECK_SHUFFLE_PARTITIONS=N (default 16) — run at a second
        partitioning to smoke out order-dependent float aggregation.
        CHECK_SF_DIR=/path (default /root/testdata/sf0.01).
+       SPARK_GRAFT_CPUS=N (default 16) — cores of the local master.
 
 The comparison itself lives in harbourbridge_spark.oraclecheck and is
 shared with tests/test_oracle_gate.py (the in-CI gate), so tool and CI
@@ -22,7 +23,7 @@ import time
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry  # noqa: E402
 from harbourbridge_spark.confscope import (  # noqa: E402
     apply_recommended)
@@ -37,10 +38,11 @@ def main() -> int:
     # partitionings (VERDICT r9 ask 1): order-dependent float
     # aggregation shows up as a hash flip between settings.
     nshuf = os.environ.get("CHECK_SHUFFLE_PARTITIONS", "16")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "16")
     # recommended confs (the Arrow input bound) applied from the one
     # source dict in confscope (ADVICE r15)
     spark = (apply_recommended(
-        SparkSession.builder.master("local[16]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("oracle-check")
         .config("spark.sql.shuffle.partitions", nshuf)
         .config("spark.sql.session.timeZone", "UTC")

@@ -14,9 +14,6 @@ Env:   PLANS_SF_DIR (default /root/testdata/sf0.1)
 
 import os
 import sys
-from typing import Iterator
-
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -65,36 +62,18 @@ def main() -> int:
     dump("minhash_signature_kernel_segment",
          D.vectorized_signature_df(docs, materialize=False))
 
-    # --- 2. Band candidate stage over the SAME checkpointed signature:
-    # r16 template (groupBy sized + two bands⋈sized joins) vs the r17
-    # window form — this round's reshape, value-identity pinned by
-    # tests/the oracle gate.
+    # --- 2. Band candidate stage over the checkpointed signature (the
+    # one window band template both engines run).
     D.vectorized_signature_view(spark, SF, "__mh_sig_dump")
-    b, r = D.bands_rows_for(D.DEFAULT_JACCARD_T)
     with scoped_parser_mode(spark, "true"):
-        dump("band_candidates_template_before", spark.sql(
-            f"WITH {D._bands_clause_at('__mh_sig_dump', b, r)}"
-            f" {D._PAIRS_SELECT}"))
-        dump("band_candidates_window_after", spark.sql(
-            f"WITH {D._bands_clause_window_at('__mh_sig_dump', b, r)}"
-            f" {D._PAIRS_SELECT}"))
+        cand_plan = spark.sql(D.minhash_bands_sql("spark", "__mh_sig_dump"))
+        dump("band_candidates_window", cand_plan)
 
-        # --- 3. Verify segment over checkpointed cand + grams (shape
-        # unchanged this round; the r17 glen variant measured a LOSS
-        # and was not adopted — this dump is the kept shape).
-        pairs = spark.sql(
-            D.minhash_bands_sql("spark", "__mh_sig_dump")) \
-            .localCheckpoint()
+        # --- 3. Verify segment over checkpointed cand + grams.
+        pairs = cand_plan.localCheckpoint()
         pairs.createOrReplaceTempView("__mh_cand_dump")
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import ArrayType, LongType
-
-        @pandas_udf(ArrayType(LongType()))
-        def gram_udf(texts_it: Iterator[pd.Series]
-                     ) -> Iterator[pd.Series]:
-            k = D._gram_set_kernel({})
-            for texts in texts_it:
-                yield texts.map(lambda t: None if t is None else k(t))
+        gram_udf = D._text_udf(lambda: D._gram_set_kernel({}),
+                               "array<bigint>")
 
         ids = (pairs.select(F.col("doc_a").alias("doc_id"))
                .union(pairs.select(F.col("doc_b").alias("doc_id")))
