@@ -158,12 +158,13 @@ def main() -> None:
                   glob.glob(os.path.join(here, "BENCH_r*.json"))
                   if (m := re.search(r"BENCH_r(\d+)\.json$", p))]
         rnd = (max(rounds) + 1) if rounds else 0
-        # secondary scaling runs (reduced core count) write a
-        # _c{cpus}-suffixed detail file (VERDICT r16 item 9): the r16
-        # 8-core run landed in BENCH_r17_detail.json and read as next
-        # round's data.  The main full-core run keeps the plain name.
-        suffix = "" if int(cpus) >= (os.cpu_count() or int(cpus)) \
-            else f"_c{cpus}"
+        # runs at an explicitly chosen core count (SPARK_GRAFT_CPUS
+        # set) write a _c{cpus}-suffixed detail file (VERDICT r16 item
+        # 9): the r16 8-core run landed in BENCH_r17_detail.json and
+        # read as next round's data.  The main run, at the default
+        # core count, keeps the plain name — whatever the host's core
+        # count, so an explicit run on a small host cannot take it.
+        suffix = f"_c{cpus}" if "SPARK_GRAFT_CPUS" in os.environ else ""
         detail_name = f"BENCH_r{rnd:02d}{suffix}_detail.json"
         detail = os.path.join(here, detail_name)
         with open(detail, "w") as f:

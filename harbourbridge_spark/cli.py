@@ -8,23 +8,34 @@
 Steps (mirroring cmd.CommandLine):
   1. schema pass over the dump -> SourceSchema -> target schema
   2. write schema file (pretty + legal DDL) + session file
-  3. data pass: staged COPY/INSERT rows -> typed conversion ->
-     good/bad split
-  4. write each table (parquet; interleave-aware co-partitioning)
-  5. write bad-data samples + conversion report
+  3. data pass: staged COPY/INSERT rows -> typed conversion -> one
+     pre-split relation per table, cut into good and bad rows
+  4. write every table at once, on a pool as wide as the session's
+     default parallelism (one table at a time for sinks sharing one
+     database file: sqlite, Derby): parquet (interleave-aware
+     co-partitioning), or the batched row writers
+  5. write each table's bad-data sample from the same conversion
+     pass — the row writers split bad rows off inside their partition
+     loop, and a parquet table of one input split samples a disk copy
+     of what its write converted — then record stats in dump order
+     and write the conversion report
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 
 from .confscope import apply_recommended
 from .context import MigrationContext
 from .ddl import write_schema_file
+from . import sink
 from .report import generate_report
 from .sink import write_bad_data, write_table
 from .sources import mysqldump, pgdump
@@ -74,47 +85,79 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
                                   out=progress_out)
 
     db_path = os.path.join(out_dir, "migrated.db")
-    for src_table, result in results.items():
+
+    def write_one(src_table: str, result) -> tuple:
+        """Write one table and its quarantine sample from a single
+        conversion pass; returns (WriteStats or None, bad-row count,
+        samples written).  Runs on a pool thread."""
         tgt = ctx.to_target[src_table]["name"]
         wstats = None
-        if meter is not None:
-            from .progress import track_table_job
-            tracker = track_table_job(spark, meter, src_table)
-        else:
-            import contextlib
-            tracker = contextlib.nullcontext()
-        # a real `with` so a write failure's exc_info reaches
-        # __exit__ and the failed table is NOT credited to the meter
-        with tracker:
-            if target == "sqlite":
-                from .sink import write_table_to_sqlite
-                wstats = write_table_to_sqlite(ctx, result.good, tgt,
-                                               db_path)
-            elif target == "derby":
-                from .sink.jdbc_writer import write_table_to_derby
-                wstats = write_table_to_derby(
-                    spark, ctx, result.good, tgt,
-                    os.path.join(out_dir, "migrated_derby"))
+        # a single-split table's sample scan would re-run its whole
+        # conversion as one more one-task job; on disk, it reads the
+        # rows the good write already converted (multi-split tables
+        # keep the plain plan: limit() stops at the first partitions
+        # holding enough bad rows)
+        cached = target == "parquet" and result.splits == 1
+        if cached:
+            result.pre.persist(StorageLevel.DISK_ONLY)
+        try:
+            if meter is not None:
+                from .progress import track_table_job
+                tracker = track_table_job(spark, meter, src_table)
             else:
-                write_table(ctx, result.good, tgt,
-                            os.path.join(out_dir, f"{tgt}.parquet"))
-        # the exact conversion-bad count comes from data already in
-        # hand: the good write fired obs_all (total + bad counts in the
-        # SAME pass) on parquet; the row-writer sinks run an RDD
-        # action, which fires no observation, so there it is the
-        # sources pass's row total minus what the writer saw.  Only
-        # spend a second conversion scan collecting bad samples when
-        # there is something to sample — on a clean table this halves
-        # the per-table cost (r10 rehearsal cliff)
-        if wstats is None:
-            bad_total = result.bad_count_from_good_pass()
-        else:
-            bad_total = max(0, ctx._tstats(src_table).rows
-                            - wstats.rows_written - wstats.rows_dropped)
-        n_bad = 0
-        if bad_total != 0:
-            n_bad = write_bad_data(
-                result.bad, os.path.join(out_dir, f"{tgt}.dropped.txt"))
+                tracker = contextlib.nullcontext()
+            # a real `with` so a write failure's exc_info reaches
+            # __exit__ and the failed table is NOT credited to the
+            # meter; entered here because job groups are per thread
+            with tracker:
+                if target == "sqlite":
+                    wstats = sink.write_table_to_sqlite(
+                        ctx, result.pre, tgt, db_path)
+                elif target == "derby":
+                    from .sink.jdbc_writer import write_table_to_derby
+                    wstats = write_table_to_derby(
+                        spark, ctx, result.pre, tgt,
+                        os.path.join(out_dir, "migrated_derby"))
+                else:
+                    write_table(ctx, result.good, tgt,
+                                os.path.join(out_dir, f"{tgt}.parquet"))
+            # the exact conversion-bad count comes from the write pass:
+            # the parquet write fired obs_all (total + bad counts in
+            # the same pass); the row writers split bad rows off in
+            # their partition loop and sampled them there
+            if wstats is None:
+                bad_total = result.bad_count_from_good_pass()
+                sample = result.bad
+            else:
+                bad_total, sample = wstats.rows_bad, wstats.bad_samples
+            n_bad = 0
+            if bad_total != 0:
+                n_bad = write_bad_data(
+                    sample, os.path.join(out_dir, f"{tgt}.dropped.txt"))
+        finally:
+            if cached:
+                result.pre.unpersist()
+        return wstats, bad_total, n_bad
+
+    # tables run concurrently; a sink that shares one database file
+    # takes them one at a time (sqlite locks the file per write
+    # transaction; the Derby writer is one driver-local connection)
+    width = 1 if target in ("sqlite", "derby") else \
+        min(len(results), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=max(width, 1)) as pool:
+        futures = {t: pool.submit(write_one, t, r)
+                   for t, r in results.items()}
+    # stats, artifacts and the report follow dump order, whatever
+    # order the tables finished in; a failed table is credited nothing
+    # and its error re-raises once every table has finished
+    failure = None
+    for src_table, result in results.items():
+        exc = futures[src_table].exception()
+        if exc is not None:
+            failure = failure or exc
+            continue
+        wstats, bad_total, n_bad = futures[src_table].result()
+        tgt = ctx.to_target[src_table]["name"]
         if wstats is not None:
             # foreachPartition is an RDD action — observations never
             # fire; take the counts from the writer's accumulators
@@ -134,7 +177,7 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
                     for row in wstats.dropped_samples or []:
                         f.write(repr(row) + "\n")
         else:
-            # observations populated by the writes above (A1/A8);
+            # observations populated by the write above (A1/A8);
             # bad_n comes from the good pass's obs_all — obs_bad may
             # never fire when the bad-sample scan was skipped
             result.record_stats(ctx, src_table, bad_n=bad_total)
@@ -142,6 +185,8 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
             dropped = os.path.join(out_dir, f"{tgt}.dropped.txt")
             if os.path.exists(dropped):
                 os.remove(dropped)
+    if failure is not None:
+        raise failure
 
     if meter is not None:
         meter.done()

@@ -42,6 +42,8 @@ MYSQL_NULL_MARKERS = ("NULL", "<nil>")
 # Sequence/ordering column name contributed by dump sources.
 SEQ_COL = "_hb_seq"
 ERRS_COL = "_hb_errs"
+# source row of a quarantined row, carried next to its typed columns
+SRC_COL = "_hb_src"
 
 
 @dataclass
@@ -464,6 +466,14 @@ class ConversionResult:
     obs_good: "object" = None   # pyspark Observation (A1/A8)
     obs_bad: "object" = None
     obs_all: "object" = None    # pre-split totals: rows + bad_rows
+    # the relation both rails are cut from: typed target columns +
+    # ERRS_COL + SRC_COL (the source row, set only on bad rows).  Row
+    # writers take it whole and split bad rows off inside their
+    # partition loop, so a table converts once per sink
+    pre: Optional[DataFrame] = None
+    # input splits the conversion runs as, when the source knows them
+    # from its file sizes or byte ranges (None: unknown)
+    splits: Optional[int] = None
 
     def bad_count_from_good_pass(self) -> "Optional[int]":
         """Bad-row count harvested from the observation the GOOD
@@ -502,10 +512,11 @@ class ConversionResult:
 
 
 def _assemble_result(ctx: MigrationContext, df: DataFrame,
-                     plans: list[ColumnPlan], src_table: str
-                     ) -> ConversionResult:
+                     plans: list[ColumnPlan], src_table: str,
+                     splits: Optional[int] = None) -> ConversionResult:
     """Shared tail of the converters: error-array split (D17),
-    synthetic PK (T14), and row observations (A1/A8)."""
+    synthetic PK (T14), and row observations (A1/A8).  ``good`` and
+    ``bad`` are both cut from one relation, ``pre``."""
     from pyspark.sql import Observation
 
     tgt_name = ctx.to_target[src_table]["name"]
@@ -515,8 +526,6 @@ def _assemble_result(ctx: MigrationContext, df: DataFrame,
     errs = F.filter(errs, lambda x: x.isNotNull())
     with_errs = df.withColumn(ERRS_COL, errs)
 
-    bad = with_errs.where(F.size(ERRS_COL) > 0)
-
     cols = [p.expr.alias(p.target_col) for p in plans]
     synth = ctx.synthetic_pkeys.get(tgt_name)
     if synth is not None:
@@ -525,6 +534,13 @@ def _assemble_result(ctx: MigrationContext, df: DataFrame,
                 f"table {src_table}: synthetic key requires {SEQ_COL}")
         cols.append(
             F.expr(_bit_reverse_sql(SEQ_COL)).alias(synth.col))
+    tgt_cols = [c.target_col for c in plans] + (
+        [synth.col] if synth is not None else [])
+    is_bad = F.size(ERRS_COL) > 0
+    pre = with_errs.select(
+        *cols, ERRS_COL,
+        F.when(is_bad, F.struct(*[with_errs[c] for c in df.columns]))
+        .alias(SRC_COL))
 
     obs_good, obs_bad, obs_all = Observation(), Observation(), \
         Observation()
@@ -536,32 +552,34 @@ def _assemble_result(ctx: MigrationContext, df: DataFrame,
     # whole conversion twice per table).  Catalyst does not push the
     # split filter through CollectMetrics, so the counts see every
     # row.
-    good = (with_errs
+    good = (pre
             .observe(obs_all, F.count(F.lit(1)).alias("rows"),
-                     F.sum((F.size(ERRS_COL) > 0).cast("long"))
-                     .alias("bad_rows"))
-            .where(F.size(ERRS_COL) == 0)
-            .select(*cols)
+                     F.sum(is_bad.cast("long")).alias("bad_rows"))
+            .where(~is_bad)
+            .select(*tgt_cols)
             .observe(obs_good, F.count(F.lit(1)).alias("rows")))
-    bad = bad.observe(obs_bad, F.count(F.lit(1)).alias("rows"))
+    bad = (pre.where(is_bad).select(f"{SRC_COL}.*", ERRS_COL)
+           .observe(obs_bad, F.count(F.lit(1)).alias("rows")))
     return ConversionResult(good=good, bad=bad,
                             obs_good=obs_good, obs_bad=obs_bad,
-                            obs_all=obs_all)
+                            obs_all=obs_all, pre=pre, splits=splits)
 
 
 def convert_table(ctx: MigrationContext, df: DataFrame, src_table: str,
-                  dialect: str, strict_arrays: bool = False
-                  ) -> ConversionResult:
+                  dialect: str, strict_arrays: bool = False,
+                  splits: Optional[int] = None) -> ConversionResult:
     """Convert one table's string DataFrame into its typed target shape,
     splitting off bad rows (D17). Appends the synthetic PK when the
     table has one (requires SEQ_COL in the input for determinism).
 
     Both output frames carry an Observation counting their rows — the
     progress/row-stats analogue (A1/A8) that piggybacks on whatever
-    action the sink runs, instead of extra count() jobs.
+    action the sink runs, instead of extra count() jobs.  ``splits``
+    is the input split count, when the source knows it
+    (ConversionResult.splits).
     """
     plans = plan_columns(ctx, src_table, dialect, strict_arrays)
-    return _assemble_result(ctx, df, plans, src_table)
+    return _assemble_result(ctx, df, plans, src_table, splits)
 
 
 def _spark_type_sql(t: tt.Type) -> str:

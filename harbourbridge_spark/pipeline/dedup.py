@@ -891,8 +891,6 @@ def lsh_verified_pairs_fn(spark, sf_dir: str):
     (bit-identical to the SQL template the oracle inlines)."""
     vectorized_signature_view(spark, sf_dir, "__mh_sig_md5")
     with scoped_parser_mode(spark, "true"):
-        read_spread(spark, f"{sf_dir}/documents.parquet") \
-            .createOrReplaceTempView("documents")   # verify stage reads it
         pairs = spark.sql(minhash_bands_sql("spark", "__mh_sig_md5"))
         # localCheckpoint materializes the candidate pairs ONCE and replaces
         # the CTE-heavy lineage with a scan of the checkpointed partitions.
@@ -2004,14 +2002,18 @@ def dedup_incremental_against_store(spark, store_path: str, batch_df,
             # every doc that collides with a SMALLER batch doc — the
             # min-doc representative of each candidate group is admitted,
             # consistent with the candidate-level semantics of the store
-            # probe itself.
+            # probe itself.  "Collides with a smaller doc" is "is not
+            # its bucket's minimum": one window per band bucket, linear
+            # in the batch even when every doc lands in one bucket (a
+            # self-join on the bucket would pair all n(n-1)/2 docs).
             intra = spark.sql(f"""
             WITH {_band_expand_clause('__inc_batch_sig', n_bands,
                                       BAND_SIZE)}
-            SELECT DISTINCT b.doc_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.key = b.key
-             AND a.doc_id < b.doc_id
+            SELECT DISTINCT doc_id FROM (
+              SELECT doc_id,
+                     MIN(doc_id) OVER (PARTITION BY band, key) AS rep
+              FROM bands)
+            WHERE doc_id <> rep
             """)
             excluded = verdicts.select("doc_id").union(intra)
             clean_sig = batch_sig.join(excluded, "doc_id", "left_anti")

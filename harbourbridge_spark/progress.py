@@ -98,9 +98,13 @@ class MigrationProgress:
         self.progress = Progress(sum(self.sizes.values()), message,
                                  verbose, out)
         self._done_bytes = 0
-        # task_tick runs on track_table_job's poller thread while
-        # table_done runs on the main thread; a single coarse lock keeps
-        # the pct-compare-and-write sequence atomic (display-only state).
+        # bytes done so far of each table still being written; several
+        # tables write at once, so the reported measure is their sum
+        self._inflight: dict = {}
+        # task_tick runs on the track_table_job poller threads while
+        # table_done runs on the writing threads; a single coarse lock
+        # keeps the pct-compare-and-write sequence atomic
+        # (display-only state).
         self._lock = threading.Lock()
 
     def task_tick(self, table: str, fraction: float) -> None:
@@ -108,13 +112,16 @@ class MigrationProgress:
         fraction = min(max(fraction, 0.0), 1.0)
         span = self.sizes.get(table, 0)
         with self._lock:
+            self._inflight[table] = int(span * fraction)
             self.progress.maybe_report(
-                self._done_bytes + int(span * fraction))
+                self._done_bytes + sum(self._inflight.values()))
 
     def table_done(self, table: str) -> None:
         with self._lock:
+            self._inflight.pop(table, None)
             self._done_bytes += self.sizes.get(table, 0)
-            self.progress.maybe_report(self._done_bytes)
+            self.progress.maybe_report(
+                self._done_bytes + sum(self._inflight.values()))
 
     def done(self) -> None:
         with self._lock:

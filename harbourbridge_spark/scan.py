@@ -38,6 +38,7 @@ the oracle gate re-runs every entry at a second partitioning.
 from __future__ import annotations
 
 import os
+import re
 
 # below this the single-task scan is cheaper than an exchange
 # (region/nation/supplier-class dimension tables)
@@ -163,15 +164,77 @@ def _row_groups(path: str) -> int | None:
     return groups
 
 
+_BYTE_SHIFTS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+                "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _conf_bytes(spark, key: str, default: int) -> int:
+    """A byte-size SQL conf ('128m', '4MB', '134217728b', '1048576')."""
+    v = spark.conf.get(key, None)
+    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]*)\s*", v or "")
+    if m is None or m.group(2).lower() not in _BYTE_SHIFTS:
+        return default
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2).lower()]
+
+
+def file_splits(spark, sizes) -> int:
+    """The partition count Spark's file scan cuts splittable files of
+    ``sizes`` bytes into (uncompressed text, parquet): the arithmetic
+    of Spark's ``FilePartition.maxSplitBytes`` and
+    ``getFilePartitions``, read from the session's confs, with no
+    planning.  A split is at most ``min(maxPartitionBytes,
+    max(openCostInBytes, total / minPartitionNum))`` bytes, where the
+    total charges every file ``openCostInBytes`` extra and
+    minPartitionNum defaults to ``defaultParallelism``; splits are
+    packed largest first, each one charged its length plus the open
+    cost.  So a file under the 4 MB open cost on a 4-core session is
+    one split, one task."""
+    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
+                            128 << 20)
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
+                            4 << 20)
+    min_parts = int(spark.conf.get("spark.sql.files.minPartitionNum", None)
+                    or spark.conf.get("spark.sql.leafNodeDefaultParallelism",
+                                      None)
+                    or spark.sparkContext.defaultParallelism)
+    sizes = list(sizes)
+    total = sum(s + open_cost for s in sizes)
+    max_split = min(max_bytes, max(open_cost, total // max(min_parts, 1)))
+    pieces = sorted((min(max_split, s - off) for s in sizes
+                     for off in range(0, s, max_split)), reverse=True)
+    parts, cur, open_files = 0, 0, 0
+    for p in pieces:
+        if cur + p > max_split and open_files:
+            parts, cur, open_files = parts + 1, 0, 0
+        cur += p + open_cost
+        open_files += 1
+    parts += 1 if open_files else 0
+    cap = spark.conf.get("spark.sql.files.maxPartitionNum", None)
+    return min(parts, int(cap)) if cap else parts
+
+
+def text_splits(spark, path: str) -> int:
+    """``file_splits`` for an uncompressed text source: one file, or a
+    directory of part files (hidden and ``_``-prefixed files are
+    skipped, as Spark's listing skips them)."""
+    if not os.path.isdir(path):
+        return file_splits(spark, [os.path.getsize(path)])
+    return file_splits(spark, [
+        os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)
+        if not f.startswith((".", "_"))])
+
+
 def scan_splits(df) -> int | None:
-    """Lower bound on the scan parallelism of ``df``'s input, derived
-    from its resolved file listing + parquet FOOTER row-group counts —
-    the replacement for the ``df.rdd.getNumPartitions()`` driver probe
-    (VERDICT r16 item 1: the RDD probe forces full physical planning
-    and plan→RDD conversion, measured 80-308 ms per call on this box
-    vs ~30 ms for ``inputFiles()`` on a fresh plan and ~1 ms per
-    memoized footer; at ~3 probes per synth-fed media entry that was
-    real latency at 0.5-2 s query scale).
+    """The scan parallelism of ``df``'s input, derived from its
+    resolved file listing: the parquet FOOTER row-group count, bounded
+    by the partitions Spark's byte-range arithmetic cuts the files
+    into (``file_splits``; small files pack together, and a row group
+    is read by one partition however many splits it spans).  It replaces the ``df.rdd.getNumPartitions()`` driver
+    probe (VERDICT r16 item 1: the RDD probe forces full physical
+    planning and plan→RDD conversion, measured 80-308 ms per call on
+    this box vs ~30 ms for ``inputFiles()`` on a fresh plan and ~1 ms
+    per memoized footer; at ~3 probes per synth-fed media entry that
+    was real latency at 0.5-2 s query scale).
 
     Returns None when the provenance is unknown (no input files, or a
     non-file source) — callers treat unknown as "not split enough" and
@@ -184,14 +247,15 @@ def scan_splits(df) -> int | None:
         return None
     if not files:
         return None
-    total = 0
+    groups, sizes = 0, []
     for uri in files:
         path = uri[7:] if uri.startswith("file://") else uri
         g = _row_groups(path)
         if g is None:
             return None
-        total += max(g, 1)
-    return total
+        groups += max(g, 1)
+        sizes.append(os.path.getsize(path))
+    return min(groups, file_splits(df.sparkSession, sizes))
 
 
 def read_spread(spark, path: str):

@@ -17,6 +17,12 @@ Re-expresses the reference's BatchWriter
 - dropped-row counts and samples surface through Spark accumulators
   (the analogue of droppedRowsFirstN / stats counters,
   batchwriter.go:217-244).
+- fed a conversion's pre-split relation (typed columns + ERRS_COL +
+  SRC_COL, see convert.ConversionResult.pre), the loop also routes
+  rows that failed conversion into a conversion-bad count and a
+  first-N sample, so the bad rows are found in the same pass that
+  writes the good ones (conversion.go:661-706 records bad rows during
+  its one data pass too).
 
 The write target is any picklable callable ``write(rows) -> None``
 that raises on failure — the same injection seam the reference's tests
@@ -29,6 +35,8 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
+
+from ..convert import ERRS_COL, SRC_COL
 
 # Thresholds mirror spanner/batchwriter.go:35-38 (Spanner hard limits
 # are 20,000 mutations / 100 MB per op; we cut at half / a fifth).
@@ -58,11 +66,14 @@ MAX_ERROR_KINDS = 100   # bound the distinct-error map (the reference's
 class WriteStats:
     batches: int
     rows_written: int
-    rows_dropped: int
+    rows_dropped: int       # rejected by the writer only
     retries: int
     dropped_samples: list = None
     errors: dict = None     # error string -> count, batchwriter.go
                             # Errors() parity (per failing write call)
+    rows_bad: int = 0       # failed conversion (quarantined)
+    bad_samples: list = None    # first-N of those, as dicts: source
+                                # columns + ERRS_COL
 
 
 def _error_key(e: Exception) -> str:
@@ -90,6 +101,7 @@ def run_batching_loop(rows_iter, write: Callable[[list], None],
                       add_retries: Callable[[int], None],
                       add_samples: Callable[[list], None],
                       add_errors: Callable[[dict], None] = lambda d: None,
+                      add_bad: Optional[Callable[[int, list], None]] = None,
                       ) -> None:
     """The per-partition batching + retry-splitting loop, factored out
     so the distributed path (foreachPartition, counters = Spark
@@ -97,7 +109,12 @@ def run_batching_loop(rows_iter, write: Callable[[list], None],
     counters = plain ints) execute IDENTICAL semantics:
     batchwriter.go:248-280 — try the batch; on failure split into
     SPLIT_FACTOR sub-batches and recurse; single failing rows are
-    dropped (counted + sampled)."""
+    dropped (counted + sampled).
+
+    With ``add_bad``, each row ends in (ERRS_COL, SRC_COL): a row with
+    failing columns is not written but counted, and the first
+    MAX_DROP_SAMPLES are sampled; ``add_bad(count, samples)`` fires
+    once at the end.  Good rows are written without the two columns."""
     budget = [cfg.retry_limit]
 
     def write_and_handle(rows: list) -> None:
@@ -124,25 +141,49 @@ def run_batching_loop(rows_iter, write: Callable[[list], None],
 
     batch: list = []
     nbytes = 0
+    n_bad, bad_samples = 0, []
     for row in rows_iter:
+        if add_bad is not None:
+            errs, src = row[-2], row[-1]
+            if errs:
+                n_bad += 1
+                if len(bad_samples) < MAX_DROP_SAMPLES:
+                    bad_samples.append({**src.asDict(),
+                                        ERRS_COL: list(errs)})
+                continue
+            row = row[:-2]
         batch.append(row)
         nbytes += _row_bytes(row)
         if len(batch) >= cfg.count_threshold or nbytes >= cfg.byte_threshold:
             write_and_handle(batch)
             batch, nbytes = [], 0
     write_and_handle(batch)
+    if add_bad is not None:
+        add_bad(n_bad, bad_samples)
+
+
+def quarantine_select(df: DataFrame, columns: list) -> tuple:
+    """(``df`` narrowed to ``columns``, whether it carries the
+    quarantine columns): a conversion's pre-split relation keeps
+    ERRS_COL and SRC_COL last, for the batching loop's bad-row split;
+    any other frame is written whole."""
+    if ERRS_COL in df.columns:
+        return df.select(*columns, ERRS_COL, SRC_COL), True
+    return df.select(*columns), False
 
 
 def write_with_batching(df: DataFrame,
                         write: Callable[[list], None],
-                        config: Optional[BatchWriterConfig] = None
-                        ) -> WriteStats:
+                        config: Optional[BatchWriterConfig] = None,
+                        quarantine: bool = False) -> WriteStats:
     """Run the batching+bisection write over every partition of ``df``.
 
     ``write`` executes on executors; it must be picklable and
     idempotent-enough for retries (the reference assumes insert
     semantics where duplicate writes surface AlreadyExists,
-    batchwriter.go:98-140).
+    batchwriter.go:98-140).  ``quarantine``: ``df`` ends in ERRS_COL,
+    SRC_COL (see quarantine_select), and rows that failed conversion
+    are counted and sampled instead of written.
     """
     from pyspark.accumulators import AccumulatorParam
 
@@ -162,6 +203,8 @@ def write_with_batching(df: DataFrame,
     acc_dropped = sc.accumulator(0)
     acc_retries = sc.accumulator(0)
     acc_samples = sc.accumulator([], _SampleAcc())
+    acc_bad = sc.accumulator(0)
+    acc_bad_samples = sc.accumulator([], _SampleAcc())
 
     class _ErrAcc(AccumulatorParam):
         def zero(self, v):
@@ -177,11 +220,16 @@ def write_with_batching(df: DataFrame,
 
     acc_errors = sc.accumulator({}, _ErrAcc())
 
+    def add_bad(n: int, samples: list) -> None:
+        acc_bad.add(n)
+        acc_bad_samples.add(samples)
+
     def handle_partition(rows_iter) -> None:
         run_batching_loop(rows_iter, write, cfg,
                           acc_batches.add, acc_written.add,
                           acc_dropped.add, acc_retries.add,
-                          acc_samples.add, acc_errors.add)
+                          acc_samples.add, acc_errors.add,
+                          add_bad if quarantine else None)
 
     df.foreachPartition(handle_partition)
     return WriteStats(batches=acc_batches.value,
@@ -189,20 +237,24 @@ def write_with_batching(df: DataFrame,
                       rows_dropped=acc_dropped.value,
                       retries=acc_retries.value,
                       dropped_samples=acc_samples.value,
-                      errors=acc_errors.value)
+                      errors=acc_errors.value,
+                      rows_bad=acc_bad.value,
+                      bad_samples=acc_bad_samples.value)
 
 
 def write_rows_locally(rows, write: Callable[[list], None],
-                       config: Optional[BatchWriterConfig] = None
-                       ) -> WriteStats:
+                       config: Optional[BatchWriterConfig] = None,
+                       quarantine: bool = False) -> WriteStats:
     """Driver-local batching+bisection over an in-memory row stream —
     the exact loop each foreachPartition task runs, for write targets
     only reachable from the driver process (e.g. an embedded-Derby
     JDBC connection through the Spark JVM's py4j gateway, which does
-    not serialize to executors)."""
+    not serialize to executors).  ``quarantine`` as in
+    write_with_batching."""
     cfg = config or BatchWriterConfig()
     stats = WriteStats(batches=0, rows_written=0, rows_dropped=0,
-                       retries=0, dropped_samples=[], errors={})
+                       retries=0, dropped_samples=[], errors={},
+                       bad_samples=[])
 
     def bump(field):
         def add(n):
@@ -221,8 +273,12 @@ def write_rows_locally(rows, write: Callable[[list], None],
             elif len(stats.errors) < MAX_ERROR_KINDS:
                 stats.errors[k] = n
 
+    def add_bad(n, samples):
+        stats.rows_bad += n
+        stats.bad_samples.extend(samples)     # one call, already capped
+
     run_batching_loop(iter(rows), write, cfg,
                       bump("batches"), bump("rows_written"),
                       bump("rows_dropped"), bump("retries"), add_samples,
-                      add_errors)
+                      add_errors, add_bad if quarantine else None)
     return stats

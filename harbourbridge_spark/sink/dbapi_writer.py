@@ -103,8 +103,10 @@ def write_table_dbapi(df, connect_factory: Callable[[], object],
     batching+bisection writer over every partition.  Returns
     WriteStats (rows_written / rows_dropped / retries / samples /
     errors — accumulator-fed, same shape as the sqlite and Derby
-    paths)."""
-    from .batch_writer import write_with_batching
+    paths).  Given a conversion's pre-split relation, rows that failed
+    conversion are counted and sampled inside the same pass
+    (WriteStats.rows_bad / bad_samples)."""
+    from .batch_writer import quarantine_select, write_with_batching
 
     if ddl is not None:
         con = connect_factory()
@@ -116,4 +118,5 @@ def write_table_dbapi(df, connect_factory: Callable[[], object],
             con.close()
     writer = DbApiInsertWriter(connect_factory, table, list(columns),
                                paramstyle)
-    return write_with_batching(df.select(*columns), writer, config)
+    rows, quarantine = quarantine_select(df, columns)
+    return write_with_batching(rows, writer, config, quarantine)

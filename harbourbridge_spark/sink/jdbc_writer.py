@@ -157,8 +157,9 @@ def write_table_to_derby(spark, ctx, df, tgt_table: str, db_dir: str,
     the batching+bisection loop DRIVER-SIDE over a streaming
     toLocalIterator of the DataFrame (constant driver memory; the
     py4j-backed writer cannot run on executors — see JdbcBatchWriter).
-    Returns WriteStats, same shape as write_table_to_sqlite."""
-    from .batch_writer import write_rows_locally
+    Returns WriteStats, same shape as write_table_to_sqlite (a
+    conversion's pre-split relation is split there too)."""
+    from .batch_writer import quarantine_select, write_rows_locally
 
     url = f"jdbc:derby:{db_dir};create=true"
     cols = list(ctx.sp_schema[tgt_table].col_names)
@@ -177,5 +178,6 @@ def write_table_to_derby(spark, ctx, df, tgt_table: str, db_dir: str,
                                      f"{str(e)[:400]}") from None
     finally:
         conn.close()
-    rows = (tuple(r) for r in df.select(*cols).toLocalIterator())
-    return write_rows_locally(rows, writer, config)
+    rows, quarantine = quarantine_select(df, cols)
+    return write_rows_locally((tuple(r) for r in rows.toLocalIterator()),
+                              writer, config, quarantine)

@@ -98,16 +98,21 @@ def create_database(spark, ctx: MigrationContext, db_name: str,
         spark.sql(f"ALTER TABLE {db_name}.`{name}` SET TBLPROPERTIES ({kv})")
 
 
-def write_bad_data(bad: DataFrame, path: str, max_rows: int = 100) -> int:
+def write_bad_data(bad, path: str, max_rows: int = 100) -> int:
     """K7 (conversion/conversion.go:661-706): write up to ``max_rows``
     sample bad rows (with their failing-column list) to a text file.
-    Returns the number of rows written."""
-    rows = bad.limit(max_rows).collect()
+    ``bad`` is a DataFrame of bad rows (one ``limit`` job), or sample
+    rows a row writer already collected in its write pass (dicts:
+    source columns + ERRS_COL; no Spark job).  Returns the number of
+    rows written."""
+    if isinstance(bad, DataFrame):
+        rows = [r.asDict() for r in bad.limit(max_rows).collect()]
+    else:
+        rows = [dict(r) for r in bad[:max_rows]]
     with open(path, "w", encoding="utf-8") as f:
         f.write("Bad rows (failing columns | source values)\n")
         f.write("-" * 60 + "\n")
-        for r in rows:
-            d = r.asDict()
+        for d in rows:
             errs = d.pop(ERRS_COL, [])
             d.pop("_hb_seq", None)
             f.write(f"cols={','.join(errs)} | {d}\n")

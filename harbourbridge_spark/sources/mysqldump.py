@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import schema_ir as ir
 from ..context import MigrationContext
 from ..convert import ConversionResult, convert_table
+from ..scan import text_splits
 from ..toddl import schema_to_ddl
 from ..types import SourceType
 from .pgdump import (StagingWriter, _DIST_MIN_SERIAL_SEC,
@@ -1389,7 +1390,8 @@ def _migrate_mysql_distributed(spark: SparkSession, ctx: MigrationContext,
             continue                    # unknown table: stats only
         df = _decode_staged_values(
             spark.read.text(txt_paths[t]), ctx, t)
-        results[t] = convert_table(ctx, df, t, "mysql")
+        results[t] = convert_table(ctx, df, t, "mysql",
+                                   splits=text_splits(spark, txt_paths[t]))
     return results
 
 
@@ -1729,5 +1731,6 @@ def migrate_mysql_dump(spark: SparkSession, dump_path: Union[str, list[str]],
         if src_table not in ctx.src_schema:
             continue
         df = read_staged_table(spark, ctx, src_table, path)
-        results[src_table] = convert_table(ctx, df, src_table, "mysql")
+        results[src_table] = convert_table(
+            ctx, df, src_table, "mysql", splits=text_splits(spark, path))
     return ctx, results

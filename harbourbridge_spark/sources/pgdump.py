@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from .. import schema_ir as ir
 from ..context import MigrationContext
 from ..convert import SEQ_COL, ConversionResult, convert_table
+from ..scan import text_splits
 from ..toddl import schema_to_ddl
 from ..types import SourceType
 
@@ -2355,7 +2356,9 @@ def migrate_pg_dump(spark: SparkSession, dump_path: Union[str, list[str]],
             ctx.unexpected(f"data for unknown table {src_table}")
             continue
         df = read_staged_table(spark, ctx, src_table, path)
-        results[src_table] = convert_table(ctx, df, src_table, "postgres")
+        results[src_table] = convert_table(
+            ctx, df, src_table, "postgres",
+            splits=text_splits(spark, path))
     return ctx, results
 
 
@@ -2704,15 +2707,19 @@ def _migrate_distributed(spark: SparkSession, ctx: MigrationContext,
             ctx.unexpected(f"data for unknown table {t}")
             continue
         dfs: list[DataFrame] = []
+        splits = 0
         if t in all_chunks:
+            # one task per byte-range chunk
             dfs.append(read_copy_chunks(spark, ctx, t, all_chunks[t]))
+            splits += len(all_chunks[t])
         if t in txt_paths:
             dfs.append(_decode_staged_values(
                 spark.read.text(txt_paths[t]), ctx, t))
+            splits += text_splits(spark, txt_paths[t])
         if not dfs:
             continue
         df = dfs[0]
         for d in dfs[1:]:
             df = df.unionByName(d)
-        results[t] = convert_table(ctx, df, t, "postgres")
+        results[t] = convert_table(ctx, df, t, "postgres", splits=splits)
     return results

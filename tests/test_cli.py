@@ -4,6 +4,8 @@ in, tables + schema + session + report out, for both sink targets."""
 import os
 import sqlite3
 
+import pytest
+
 from harbourbridge_spark.cli import migrate_dump
 
 P1 = """\
@@ -135,3 +137,187 @@ def test_cli_dump_to_derby_with_progress(spark, tmp_path):
     assert ctx.table_stats["acct"].good_rows == 4
     pcts = [int(m) for m in re.findall(r"(\d+)%", buf.getvalue())]
     assert pcts[0] == 0 and pcts[-1] == 100 and pcts == sorted(pcts)
+
+
+def _quarantine_dump(tmp_path):
+    """Two tables: `wide` with 150 bad rows (bad numeric), `narrow`
+    with 30 (bad integer), both next to good rows."""
+    wide = [f"{i}\t{i}.25" for i in range(1, 51)]
+    wide += [f"{i}\tnot-a-number" for i in range(51, 201)]
+    narrow = [f"{i}\t{i * 2}" for i in range(1, 21)]
+    narrow += [f"{i}\tx{i}" for i in range(21, 51)]
+    dump = tmp_path / "q.sql"
+    dump.write_text(
+        "CREATE TABLE public.wide (id integer NOT NULL, "
+        "bal numeric(10,2));\n"
+        "CREATE TABLE public.narrow (id integer NOT NULL, n integer);\n"
+        "COPY public.wide (id, bal) FROM stdin;\n"
+        + "\n".join(wide) + "\n\\.\n"
+        "COPY public.narrow (id, n) FROM stdin;\n"
+        + "\n".join(narrow) + "\n\\.\n")
+    return str(dump)
+
+
+def _sample_lines(path):
+    import ast
+    with open(path) as f:
+        return [(ln[5:ln.index(" | ")].split(","),
+                 ast.literal_eval(ln[ln.index(" | ") + 3:].strip()))
+                for ln in f if ln.startswith("cols=")]
+
+
+@pytest.mark.parametrize("target", ["parquet", "sqlite"])
+def test_cli_quarantine_samples_and_counts_from_the_write_pass(
+        spark, tmp_path, target):
+    """Both sinks take the bad rows from the conversion's single pass:
+    the samples hold min(bad, 100) rows, each naming a column whose
+    source value really fails its cast, and the bad-row stats are
+    exact past the sample cap."""
+    out = str(tmp_path / "out")
+    ctx = migrate_dump(spark, _quarantine_dump(tmp_path), "postgres", out,
+                       target=target)
+    for table, col, n_bad, n_good in (("wide", "bal", 150, 50),
+                                      ("narrow", "n", 30, 20)):
+        st = ctx.table_stats[table]
+        assert (st.rows, st.good_rows, st.bad_rows) == \
+            (n_bad + n_good, n_good, n_bad)
+        lines = _sample_lines(os.path.join(out, f"{table}.dropped.txt"))
+        assert len(lines) == min(n_bad, 100)
+        for cols, src in lines:
+            assert cols == [col]
+            value = src[col]
+            assert not value.lstrip("-").replace(".", "", 1).isdigit()
+    assert ctx.bad_rows() == 180
+    assert not os.path.exists(os.path.join(out, "wide.writer_dropped.txt"))
+
+
+def _three_table_dump(tmp_path):
+    """Three tables in non-alphabetical dump order, one with bad rows."""
+    zeta = "\n".join(f"{i}\tz{i}" for i in range(40))
+    alpha = "\n".join(f"{i}\t{i if i % 10 else 'bad'}" for i in range(60))
+    mid = "\n".join(f"{i}\t2024-01-{1 + i % 28:02d}" for i in range(25))
+    dump = tmp_path / "three.sql"
+    dump.write_text(
+        "CREATE TABLE public.zeta (id integer NOT NULL, v text);\n"
+        "ALTER TABLE ONLY public.zeta ADD CONSTRAINT zpk PRIMARY KEY (id);\n"
+        "CREATE TABLE public.alpha (id integer NOT NULL, n bigint);\n"
+        "ALTER TABLE ONLY public.alpha ADD CONSTRAINT apk PRIMARY KEY (id);\n"
+        "CREATE TABLE public.mid (id integer NOT NULL, d date);\n"
+        "ALTER TABLE ONLY public.mid ADD CONSTRAINT mpk PRIMARY KEY (id);\n"
+        f"COPY public.zeta (id, v) FROM stdin;\n{zeta}\n\\.\n"
+        f"COPY public.alpha (id, n) FROM stdin;\n{alpha}\n\\.\n"
+        f"COPY public.mid (id, d) FROM stdin;\n{mid}\n\\.\n")
+    return str(dump)
+
+
+@pytest.mark.parametrize("target", ["parquet", "sqlite"])
+def test_cli_pooled_tables_report_like_a_sequential_run(
+        spark, tmp_path, monkeypatch, target):
+    """Tables write concurrently, yet stats, report and session file
+    are the pinned values, byte-identical to a one-at-a-time run, and
+    the stats are recorded in dump order."""
+    import json
+
+    from harbourbridge_spark import cli
+
+    dump = _three_table_dump(tmp_path)
+    pooled = str(tmp_path / "pooled")
+    ctx = migrate_dump(spark, dump, "postgres", pooled, target=target)
+    assert list(ctx.table_stats) == ["zeta", "alpha", "mid"]
+    assert {t: (s.rows, s.good_rows, s.bad_rows)
+            for t, s in ctx.table_stats.items()} == \
+        {"zeta": (40, 40, 0), "alpha": (60, 54, 6), "mid": (25, 25, 0)}
+    session = json.load(open(os.path.join(pooled, "session.json")))
+    assert session["table_stats"]["alpha"]["bad_rows"] == 6
+    report = open(os.path.join(pooled, "report.txt")).read()
+    assert "Data conversion: OK (95.200% of 125 rows written to " \
+        "target)." in report
+    # the report lists tables alphabetically (report.go:99-110)
+    heads = [ln for ln in report.splitlines() if ln.startswith("Table ")]
+    assert heads == ["Table alpha", "Table mid", "Table zeta"]
+    assert "OK (90% of 60 rows written" in report
+    assert len(_sample_lines(os.path.join(pooled, "alpha.dropped.txt"))) == 6
+    for t in ("zeta", "mid"):
+        assert not os.path.exists(os.path.join(pooled, f"{t}.dropped.txt"))
+
+    real_pool = cli.ThreadPoolExecutor
+    monkeypatch.setattr(cli, "ThreadPoolExecutor",
+                        lambda max_workers: real_pool(max_workers=1))
+    serial = str(tmp_path / "serial")
+    migrate_dump(spark, dump, "postgres", serial, target=target)
+    for name in ("report.txt", "session.json", "alpha.dropped.txt"):
+        assert open(os.path.join(pooled, name)).read() == \
+            open(os.path.join(serial, name)).read(), name
+
+
+def test_cli_failed_table_write_raises_and_is_not_credited(
+        spark, tmp_path, monkeypatch):
+    """One table's write fails: migrate_dump re-raises that error once
+    the pool has drained, and credits no stats to that table."""
+    from harbourbridge_spark import cli
+    from harbourbridge_spark.context import MigrationContext
+
+    boom = RuntimeError("disk full")
+    real = cli.write_table
+
+    def flaky(ctx, df, tgt, path, **kw):
+        if tgt == "alpha":
+            raise boom
+        return real(ctx, df, tgt, path, **kw)
+
+    monkeypatch.setattr(cli, "write_table", flaky)
+    ctx = MigrationContext()
+    with pytest.raises(RuntimeError) as info:
+        migrate_dump(spark, _three_table_dump(tmp_path), "postgres",
+                     str(tmp_path / "out"), ctx)
+    assert info.value is boom
+    alpha = ctx.table_stats.get("alpha")
+    assert alpha is None or (alpha.good_rows, alpha.bad_rows) == (0, 0)
+    assert ctx.table_stats["zeta"].good_rows == 40
+
+
+def _leaf_names(df):
+    """Leaf operators of ``df``'s executed plan, after running it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+@pytest.mark.parametrize("max_split", [None, "128b"])
+def test_cli_single_split_sample_reads_the_cache(
+        spark, tmp_path, monkeypatch, max_split):
+    """A table converted as one input split samples its bad rows from
+    the disk copy the good write left (an in-memory-relation scan, no
+    second text scan); a multi-split table keeps the plain plan and is
+    never persisted."""
+    from harbourbridge_spark import cli
+
+    seen = []
+    real = cli.write_bad_data
+
+    def spy(bad, path, max_rows=100):
+        seen.append((_leaf_names(bad.limit(max_rows)),
+                     spark._jsparkSession.sharedState().cacheManager()
+                     .isEmpty()))
+        return real(bad, path, max_rows)
+
+    monkeypatch.setattr(cli, "write_bad_data", spy)
+    if max_split:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", max_split)
+    try:
+        migrate_dump(spark, _quarantine_dump(tmp_path), "postgres",
+                     str(tmp_path / "out"))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert len(seen) == 2
+    for leaves, cache_empty in seen:
+        if max_split is None:
+            assert "InMemoryTableScan" in leaves
+            assert not any(n.startswith("Scan text") for n in leaves)
+        else:
+            assert cache_empty
+            assert "InMemoryTableScan" not in leaves
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

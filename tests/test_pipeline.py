@@ -2190,6 +2190,74 @@ def test_incremental_store_excludes_within_batch_dups(spark, tmp_path):
     assert 301 in stored_ids and 302 not in stored_ids
 
 
+def test_incremental_store_admits_one_of_identical_batch_docs(
+        spark, tmp_path, monkeypatch):
+    """A batch of identical docs shares every band bucket: exactly the
+    min doc is admitted, and the within-batch exclusion is a window
+    over the buckets, not a band self-join (which would pair all
+    n(n-1)/2 docs per band — the degenerate-bucket shape of
+    test_lsh_bucket_cap_bounds_degenerate_buckets)."""
+    import pyspark.sql.functions as F
+    from harbourbridge_spark.pipeline import storecache
+
+    store = str(tmp_path / "sigstore3")
+    dedup.signature_store_write(spark, spark.createDataFrame(
+        [(1, "qq ww ee rr tt yy uu ii oo pp completely unrelated seed "
+             "corpus text", "en", "s", 60)],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long"), store)
+    n = 2_000
+    batch = spark.range(1000, 1000 + n).select(
+        F.col("id").alias("doc_id"),
+        F.lit("identical boilerplate text repeated in every batch doc")
+         .alias("text"),
+        F.lit("en").alias("lang"), F.lit("s").alias("source"),
+        F.lit(54).alias("n_chars"))
+    plans = []
+    real_append = storecache.append_store
+
+    def spy(path, frames):
+        plans.extend(df._jdf.queryExecution().optimizedPlan().toString()
+                     for df in frames.values())
+        return real_append(path, frames)
+
+    monkeypatch.setattr(storecache, "append_store", spy)
+    assert dedup.dedup_incremental_against_store(
+        spark, store, batch, admit=True).collect() == []
+    stored = {r.doc_id for r in
+              spark.read.parquet(store).select("doc_id").collect()}
+    assert stored == {1, 1000}
+    assert len(plans) == 1
+    # joins left: the band expansion's cross join with the band
+    # numbers and the anti-join that drops excluded docs
+    assert "Join Inner" not in plans[0]
+    assert "Join LeftAnti" in plans[0] and "Window" in plans[0]
+
+
+def test_lsh_verified_pairs_keeps_callers_documents_view(spark, tmp_path):
+    """The verify stage reads its own gram relation; the strategy
+    must not replace a caller's `documents` view as a side effect."""
+    docs = spark.createDataFrame(
+        [(i, t, "en", "s", len(t)) for i, t in enumerate(
+            ["the quick brown fox jumps over the lazy dog again and again",
+             "the quick brown fox jumps over the lazy dog again and again!",
+             "completely different words about gardens and summer bees"])],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long")
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    prior = spark.table("documents") \
+        if spark.catalog.tableExists("documents") else None
+    spark.range(7).createOrReplaceTempView("documents")
+    try:
+        pairs = dedup.lsh_verified_pairs_fn(spark, str(tmp_path)).collect()
+        assert {(r.doc_a, r.doc_b) for r in pairs} == {(0, 1)}
+        assert spark.table("documents").columns == ["id"]
+        assert spark.table("documents").count() == 7
+    finally:
+        spark.catalog.dropTempView("documents")
+        if prior is not None:
+            prior.createOrReplaceTempView("documents")
+
 def test_jpeg_422_subsample_roundtrip():
     """4:2:2 (horizontal-only chroma subsample) exercises the
     decoder's asymmetric upsample path end to end."""

@@ -80,3 +80,71 @@ def test_progress_monotone_through_two_table_migration(spark, tmp_path):
     assert pcts == sorted(pcts)                    # monotone
     # the first table's completion lands a strictly intermediate report
     assert any(0 < p < 100 for p in pcts)
+
+    # the CLI writes tables concurrently: over three pooled tables the
+    # meter still climbs monotonically from 0 to 100 and credits each
+    # table exactly once
+    from harbourbridge_spark import progress
+    from harbourbridge_spark.cli import migrate_dump
+
+    rows_c = ", ".join(f"({i}, 'c-{i}')" for i in range(250))
+    f.write_text(f.read_text().replace(
+        "INSERT INTO public.alpha",
+        "CREATE TABLE public.gamma (id integer NOT NULL, v text);\n"
+        f"INSERT INTO public.gamma VALUES {rows_c};\n"
+        "INSERT INTO public.alpha"))
+    credited = []
+    real_done = progress.MigrationProgress.table_done
+
+    def spy(self, table):
+        credited.append(table)
+        real_done(self, table)
+
+    progress.MigrationProgress.table_done = spy
+    try:
+        buf = io.StringIO()
+        migrate_dump(spark, str(f), "postgres", str(tmp_path / "cli"),
+                     show_progress=True, progress_out=buf)
+    finally:
+        progress.MigrationProgress.table_done = real_done
+    assert sorted(credited) == ["alpha", "beta", "gamma"]
+    pcts = _pcts(buf.getvalue())
+    assert pcts[0] == 0 and pcts[-1] == 100
+    assert pcts == sorted(pcts)
+
+
+def test_migration_progress_concurrent_tables_stress(tmp_path):
+    """Many tables ticking and finishing on concurrent threads: the
+    printed percent never goes back, and the meter ends at exactly the
+    sum of the table spans once every table is done."""
+    import sys
+    import threading
+
+    staged = {}
+    for i in range(16):
+        p = tmp_path / f"t{i}.tsv"
+        p.write_bytes(b"x" * (1000 + 37 * i))
+        staged[f"t{i}"] = str(p)
+    buf = io.StringIO()
+    meter = MigrationProgress(staged, verbose=True, out=buf)
+
+    def table(name):
+        for k in range(1, 201):
+            meter.task_tick(name, k / 200)
+        meter.table_done(name)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=table, args=(t,))
+                   for t in staged]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert meter.progress.progress == sum(meter.sizes.values())
+    pcts = _pcts(buf.getvalue())
+    assert pcts == sorted(pcts) and pcts[-1] == 100

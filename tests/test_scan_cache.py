@@ -100,3 +100,56 @@ def test_row_groups_retries_a_failed_footer_read(tmp_path, monkeypatch):
     assert scan._row_groups(f) is None
     monkeypatch.setattr(pq, "ParquetFile", real)
     assert scan._row_groups(f) == 3
+
+
+def test_scan_splits_bounded_by_byte_range_arithmetic(spark, tmp_path):
+    """A many-row-group parquet file under maxPartitionBytes is one
+    byte-range split: the estimate is the scan's real partition count
+    (not the row-group sum), so ``_spread_ids`` spreads it ahead of the
+    Python kernel."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from harbourbridge_spark import scan
+    from harbourbridge_spark.pipeline.multimodal import _spread_ids
+
+    f = str(tmp_path / "ids.parquet")
+    pq.write_table(pa.table({"media_id": list(range(200_000))}), f,
+                   row_group_size=10_000)
+    assert scan._row_groups(f) == 20
+    ids = spark.read.parquet(f)
+    real = ids.rdd.getNumPartitions()
+    assert scan.scan_splits(ids) == real
+    assert real < spark.sparkContext.defaultParallelism
+    plan = _spread_ids(ids)._jdf.queryExecution().optimizedPlan()
+    assert "Repartition" in plan.toString()
+
+
+@pytest.mark.parametrize("max_bytes,open_cost", [
+    (None, None), ("64k", "8k"), ("20k", "0")])
+def test_text_splits_match_spark_file_partitions(spark, tmp_path,
+                                                 max_bytes, open_cost):
+    """``text_splits`` reproduces the partition count of Spark's own
+    file scan for single files and part-file directories."""
+    from harbourbridge_spark.scan import text_splits
+
+    line = "x" * 99 + "\n"
+    single = tmp_path / "one.tsv"
+    single.write_text(line * 3000)                 # 300 kB
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for i, n in enumerate((10, 700, 1500, 40, 0)):
+        (parts / f"part-{i:05d}.txt").write_text(line * n)
+    (parts / "_SUCCESS").write_text("")
+    confs = {"spark.sql.files.maxPartitionBytes": max_bytes,
+             "spark.sql.files.openCostInBytes": open_cost}
+    try:
+        for k, v in confs.items():
+            if v is not None:
+                spark.conf.set(k, v)
+        for path in (str(single), str(parts)):
+            assert text_splits(spark, path) == \
+                spark.read.text(path).rdd.getNumPartitions(), path
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
