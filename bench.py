@@ -76,6 +76,34 @@ def canary_sec(spark, runs: int = 3) -> float:
     return round(best, 3)
 
 
+def detail_file_name(here: str, cpus, explicit_cpus: bool) -> str:
+    """Name of a sweep's detail artifact in directory ``here``.
+
+    The main sweep, at the default core count, is round = newest
+    ``BENCH_rNN.json`` the driver has left + 1 and keeps the plain name
+    ``BENCH_rNN_detail.json`` whatever the host's core count, so an
+    explicit run on a small host cannot take it.  A run at an explicitly
+    chosen core count (SPARK_GRAFT_CPUS set) writes
+    ``BENCH_rNN_c{cpus}_detail.json`` under the round of the newest
+    plain detail file, i.e. next to the main sweep it is compared with
+    (the r16 8-core run landed in BENCH_r17_detail.json and read as next
+    round's data).  With no main sweep yet it takes the main rule's
+    round."""
+    import glob
+    import re
+
+    def rounds(pattern: str) -> list:
+        return [int(m.group(1)) for p in
+                glob.glob(os.path.join(here, "BENCH_r*.json"))
+                if (m := re.fullmatch(pattern, os.path.basename(p)))]
+
+    rnd = max(rounds(r"BENCH_r(\d+)\.json"), default=-1) + 1
+    if not explicit_cpus:
+        return f"BENCH_r{rnd:02d}_detail.json"
+    swept = max(rounds(r"BENCH_r(\d+)_detail\.json"), default=rnd)
+    return f"BENCH_r{swept:02d}_c{cpus}_detail.json"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -142,30 +170,16 @@ def main() -> None:
     # ask 5): the driver's stdout-tail capture head-truncates the
     # one-line JSON when the registry is large (BENCH_r09 lost
     # q1-q21), so every entry's time must be recoverable from a file
-    # the line-length limit can't touch.  Round number = newest
-    # BENCH_r{N}.json the driver has left + 1 (re-runs within a round
-    # overwrite the same file — idempotent).
-    rnd = -1
+    # the line-length limit can't touch (named by detail_file_name;
+    # re-runs within a round overwrite the same file — idempotent).
     detail_name = None
     try:
-        import glob
-        import re
         if only:
             raise OSError          # subset A/B run: never clobber the
             # round detail artifact with a partial sweep
         here = os.path.dirname(os.path.abspath(__file__))
-        rounds = [int(m.group(1)) for p in
-                  glob.glob(os.path.join(here, "BENCH_r*.json"))
-                  if (m := re.search(r"BENCH_r(\d+)\.json$", p))]
-        rnd = (max(rounds) + 1) if rounds else 0
-        # runs at an explicitly chosen core count (SPARK_GRAFT_CPUS
-        # set) write a _c{cpus}-suffixed detail file (VERDICT r16 item
-        # 9): the r16 8-core run landed in BENCH_r17_detail.json and
-        # read as next round's data.  The main run, at the default
-        # core count, keeps the plain name — whatever the host's core
-        # count, so an explicit run on a small host cannot take it.
-        suffix = f"_c{cpus}" if "SPARK_GRAFT_CPUS" in os.environ else ""
-        detail_name = f"BENCH_r{rnd:02d}{suffix}_detail.json"
+        detail_name = detail_file_name(
+            here, cpus, "SPARK_GRAFT_CPUS" in os.environ)
         detail = os.path.join(here, detail_name)
         with open(detail, "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)

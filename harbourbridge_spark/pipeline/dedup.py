@@ -933,28 +933,92 @@ def lsh_verified_pairs_fn(spark, sf_dir: str):
                                         gram_source="__mh_grams"))
 
 
+# Largest verified-pair graph, in edge rows, that dedup_clusters_fn
+# solves in one union-find task; larger graphs take the distributed
+# label propagation.  The union-find task was faster at every size
+# measured on local[4] (10^4-10^7 edges, CHANGES.md), so the bound is
+# one Python worker's memory: ~135 B per node, at most two nodes per
+# edge, so ~270 MB at this bound against the 512 MB default of
+# spark.python.worker.memory.
+UNION_FIND_MAX_EDGES = 1_000_000
+
+
+def _union_find_labels(batches):
+    """mapInPandas body of the small-graph path: stream every edge
+    batch through a union-find, then emit one (doc_id, cluster_id) row
+    per node.  Union by min root keeps each root its component's min
+    doc_id; path halving keeps the trees flat."""
+    parent = {}
+
+    def find(x):
+        while True:
+            p = parent[x]
+            if p == x:
+                return x
+            parent[x] = x = parent[p]
+
+    for batch in batches:
+        for a, b in zip(batch["doc_a"].tolist(), batch["doc_b"].tolist()):
+            ra = find(parent.setdefault(a, a))
+            rb = find(parent.setdefault(b, b))
+            if ra < rb:
+                parent[rb] = ra
+            elif rb < ra:
+                parent[ra] = rb
+    nodes = list(parent)
+    yield pd.DataFrame({"doc_id": nodes,
+                        "cluster_id": [find(n) for n in nodes]},
+                       dtype="int64")
+
+
 def dedup_clusters_fn(spark, sf_dir: str, pairs=None):
     """Near-dup CLUSTER ASSIGNMENT: connected components over the
-    LSH-verified pair graph, via iterative min-label propagation —
-    every doc in a component converges to the component's minimum
-    doc_id (the canonical representative the removal step keeps).
+    LSH-verified pair graph — every doc in a component is labelled
+    with the component's minimum doc_id (the canonical representative
+    the removal step keeps).  Canonical labels make every correct
+    algorithm oracle-identical, so the edge count of ``pairs`` picks
+    one:
+
+    - at most UNION_FIND_MAX_EDGES edges (every dup graph the bench and
+      the oracle see): one task streams the edges' Arrow batches
+      through a union-find (_union_find_labels) and the labels are
+      localCheckpoint()ed once — two Spark jobs in all, the count and
+      the checkpoint, whatever the graph's shape;
+    - more: iterative min-label propagation (_propagated_labels), the
+      path for a graph too big for one worker.
+
+    ``pairs`` should be materialized, as the pairs=None path and
+    dedup_pipeline_materialized_fn checkpoint it: the count and the
+    union-find each read it in one task.  The oracle recomputes
+    components with a recursive CTE (transitive closure + MIN).
+    """
+    if pairs is None:
+        pairs = (lsh_verified_pairs_fn(spark, sf_dir)
+                 .select("doc_a", "doc_b").localCheckpoint())
+    # coalesce(1), not repartition(1): one task with no exchange, so
+    # under AQE each of the two actions is one job instead of two
+    one_task = pairs.select("doc_a", "doc_b").coalesce(1)
+    if one_task.count() > UNION_FIND_MAX_EDGES:
+        return _propagated_labels(pairs)
+    t = pairs.schema["doc_a"].dataType.simpleString()
+    return one_task.mapInPandas(
+        _union_find_labels, f"doc_id {t}, cluster_id {t}").localCheckpoint()
+
+
+def _propagated_labels(pairs):
+    """Connected components by iterative min-label propagation — the
+    large-graph path of dedup_clusters_fn.
 
     This is the iterative-algorithm pattern: the driver loop only
     orchestrates rounds (data never leaves the cluster; the per-round
     action is a count of changed labels), each round is one
     edge-labels equi-join + min-aggregate, and labels are
     localCheckpoint()ed so lineage stays flat. Rounds needed = graph
-    diameter — tiny for dup clusters (near-cliques); the loop runs
-    until no label changes, so a long chain costs more rounds but
-    still ends canonical. The oracle recomputes components with a
-    recursive CTE (transitive closure + MIN) — engine-independent
-    agreement on every component.
+    diameter; the loop runs until no label changes, so a long chain
+    costs more rounds but still ends canonical.
     """
     from pyspark.sql import functions as F
 
-    if pairs is None:
-        pairs = (lsh_verified_pairs_fn(spark, sf_dir)
-                 .select("doc_a", "doc_b").localCheckpoint())
     # symmetric edge list via inline-explode, not Union (r16, second
     # pass): the fused two-step cycle below references ``edges`` twice
     # in ONE plan, and Spark 4.1's Union constraint rewrite crashes on
@@ -1050,7 +1114,7 @@ def dedup_removal_manifest_oracle_sql() -> str:
 
 def dedup_pipeline_materialized_fn(spark, sf_dir: str):
     """The dedup chain as a real pipeline would run it: the expensive
-    stages (signature → candidates → verify; label propagation) are
+    stages (signature → candidates → verify; connected components) are
     materialized ONCE and every downstream consumer reads the
     materialized result — versus the per-query harness shape where
     dedup_clusters and dedup_removal_manifest each re-run the whole
@@ -1064,8 +1128,8 @@ def dedup_pipeline_materialized_fn(spark, sf_dir: str):
     pairs = (lsh_verified_pairs_fn(spark, sf_dir)
              .select("doc_a", "doc_b").localCheckpoint())
     # no re-checkpoint of clusters (r17): dedup_clusters_fn's return
-    # is already a projection OVER its loop's checkpointed labels, so
-    # the extra localCheckpoint was a pure serialization barrier (one
+    # is already checkpointed labels (or a projection over them), so
+    # an extra localCheckpoint is a pure serialization barrier (one
     # whole driver action re-materializing materialized rows)
     clusters = dedup_clusters_fn(spark, sf_dir, pairs=pairs)
     manifest = dedup_removal_manifest_fn(spark, sf_dir,
@@ -1112,9 +1176,10 @@ def dedup_pipeline_materialized_oracle_sql() -> str:
 def dedup_clusters_oracle_sql() -> str:
     """DuckDB oracle for dedup_clusters_fn: recursive-CTE transitive
     closure over the same verified-pair graph, then MIN(root) per doc.
-    Exact for the bounded oracle scale; the Spark side's label
-    propagation is the 100 TB path (closure is quadratic per
-    component, propagation is linear per round)."""
+    Exact for the bounded oracle scale (closure is quadratic per
+    component).  The Spark side picks its path by edge count: up to
+    UNION_FIND_MAX_EDGES one union-find task (linear in the edges),
+    above it label propagation, the 100 TB path (linear per round)."""
     cand = lsh_verified_pairs_sql("duckdb")
     return f"""
     WITH RECURSIVE cand AS ({cand}),

@@ -2117,10 +2117,12 @@ REGISTRY["dedup_clusters"] = QuerySpec(
     _dedup.dedup_clusters_fn,
     _dedup.dedup_clusters_oracle_sql(),
     "Near-dup cluster assignment: connected components over the "
-    "LSH-verified pair graph — iterative min-label propagation on the "
-    "Spark side (distributed, linear per round), recursive-CTE "
-    "transitive closure as the DuckDB oracle; every doc maps to its "
-    "component's min doc_id (the canonical keeper)")
+    "LSH-verified pair graph — on the Spark side one streamed "
+    "union-find task for graphs up to UNION_FIND_MAX_EDGES edges (two "
+    "Spark jobs), iterative min-label propagation above it "
+    "(distributed, linear per round); recursive-CTE transitive closure "
+    "as the DuckDB oracle; every doc maps to its component's min "
+    "doc_id (the canonical keeper)")
 _register_template(
     "ann_ivf",
     lambda engine: _sim.ann_ivf_sql(engine),

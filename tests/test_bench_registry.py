@@ -39,3 +39,21 @@ def test_no_silent_registry_growth_outside_the_partition():
     # count tracks the registry size minus the fixed exclusion count
     assert len(bench.BENCH_QUERIES) == len(Q.REGISTRY) - len(
         bench.BENCH_EXCLUDE)
+
+
+def test_reduced_core_detail_file_follows_the_main_sweep(tmp_path):
+    """A run at an explicit core count files its detail under the round
+    of the newest plain detail file; the main sweep keeps newest
+    BENCH_rNN.json + 1 and the plain name."""
+    name = bench.detail_file_name
+    assert name(tmp_path, "8", False) == "BENCH_r00_detail.json"
+    assert name(tmp_path, "8", True) == "BENCH_r00_c8_detail.json"
+    for f in ("BENCH_r17.json", "BENCH_r17_c8.json",
+              "BENCH_r17_detail.json", "BENCH_r18_c8_detail.json"):
+        (tmp_path / f).write_text("{}")
+    # round 18's main sweep has not run: an 8-core rerun sits by r17's
+    assert name(tmp_path, "8", True) == "BENCH_r17_c8_detail.json"
+    assert name(tmp_path, "32", False) == "BENCH_r18_detail.json"
+    (tmp_path / "BENCH_r18_detail.json").write_text("{}")
+    assert name(tmp_path, "8", True) == "BENCH_r18_c8_detail.json"
+    assert name(tmp_path, "32", False) == "BENCH_r18_detail.json"

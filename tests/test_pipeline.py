@@ -674,7 +674,17 @@ def test_dedup_clusters_label_propagation(spark, tmp_path):
     assert all(v in (1, 50) for v in out.values())
 
 
-def test_dedup_clusters_long_chain_ends_canonical(spark):
+@pytest.fixture(params=["union_find", "propagation"])
+def cc_path(request, monkeypatch):
+    """Run a dedup_clusters_fn test on each connected-components path:
+    a bound of 0 edges sends every non-empty graph to the propagation
+    loop."""
+    if request.param == "propagation":
+        monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    return request.param
+
+
+def test_dedup_clusters_long_chain_ends_canonical(spark, cc_path):
     """A 30-node path graph has diameter 29: label propagation needs
     29 steps, and every node must still end labelled by the
     component's min doc_id (the oracle's recursive closure)."""
@@ -687,6 +697,76 @@ def test_dedup_clusters_long_chain_ends_canonical(spark):
     out = {r.doc_id: r.cluster_id for r in
            dedup_clusters_fn(spark, "unused", pairs=pairs).collect()}
     assert out == {d: min(ids) for d in ids}
+
+
+def _reference_components(edges):
+    """Plain union-find: node -> its component's min id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_dedup_clusters_random_graph_matches_reference(spark, cc_path):
+    """Random cliques and chains, with duplicate edges, reversed
+    pairs, a self-pair and a chain whose min id sits at its far end:
+    both paths give exactly the reference union-find's labels."""
+    import random
+
+    from harbourbridge_spark.pipeline.dedup import dedup_clusters_fn
+
+    rng = random.Random(7)
+    ids = rng.sample(range(10, 10_000), 80)
+    edges, pos = [], 0
+    for size in (5, 4, 3, 2, 2):                       # near-cliques
+        comp = ids[pos:pos + size]
+        pos += size
+        edges += [(a, b) for i, a in enumerate(comp) for b in comp[i + 1:]
+                  if rng.random() < 0.8 or b == comp[i + 1]]
+    chain = sorted(ids[pos:pos + 12], reverse=True)   # min at far end
+    pos += 12
+    edges += list(zip(chain, chain[1:]))
+    rest = ids[pos:]
+    edges += [(rng.choice(rest), rng.choice(rest)) for _ in range(25)]
+    edges += [(b, a) for a, b in rng.sample(edges, 10)]  # reversed
+    edges += rng.sample(edges, 10)                       # duplicates
+    edges.append((3, 3))                                 # self-pair
+    rng.shuffle(edges)
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    out = {r.doc_id: r.cluster_id for r in
+           dedup_clusters_fn(spark, "unused", pairs=pairs).collect()}
+    want = _reference_components(edges)
+    assert out == want
+    assert want[3] == 3 and want[chain[0]] == chain[-1]
+
+
+def test_dedup_clusters_small_graph_is_two_spark_jobs(spark):
+    """The union-find path costs the edge count and the label
+    checkpoint, and the same job count on every call."""
+    from harbourbridge_spark.pipeline.dedup import dedup_clusters_fn
+
+    sc = spark.sparkContext
+    pairs = spark.range(0, 500, 1, 4).selectExpr(
+        "id AS doc_a", "id + 1 AS doc_b").localCheckpoint()
+    counts = []
+    for call in range(2):
+        group = f"dedup_clusters_jobs_{call}"
+        sc.setJobGroup(group, group)
+        try:
+            labels = dedup_clusters_fn(spark, "unused", pairs=pairs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert labels.where("cluster_id = 0").count() == 501
+    assert counts[0] == counts[1] <= 2
 
 
 def test_kafka_shaped_decode(spark):
