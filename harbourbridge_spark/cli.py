@@ -8,17 +8,22 @@
 Steps (mirroring cmd.CommandLine):
   1. schema pass over the dump -> SourceSchema -> target schema
   2. write schema file (pretty + legal DDL) + session file
-  3. data pass: staged COPY/INSERT rows -> typed conversion -> one
-     pre-split relation per table, cut into good and bad rows
-  4. write every table at once, on a pool as wide as the session's
-     default parallelism (one table at a time for sinks sharing one
-     database file: sqlite, Derby): parquet (interleave-aware
-     co-partitioning), or the batched row writers
+  3. data pass: the driver stages COPY/INSERT rows (or, distributed,
+     finds their byte ranges) and makes every ctx write; each table's
+     typed conversion — one pre-split relation, cut into good and bad
+     rows — is planned later, on the thread that writes it
+  4. every table at once, on a pool min(tables, default parallelism)
+     wide: build the table's conversion plan, then write it — parquet
+     (interleave-aware co-partitioning) or the batched row writers —
+     so one table's plan build (slow on a cold JVM) overlaps the
+     others' writes; sinks sharing one database file (sqlite, Derby)
+     hold a lock around the write call only
   5. write each table's bad-data sample from the same conversion
      pass — the row writers split bad rows off inside their partition
      loop, and a parquet table of one input split samples a disk copy
-     of what its write converted — then record stats in dump order
-     and write the conversion report
+     of what its write converted — then record stats in dump order,
+     remove the staging directory (also when a table failed) and
+     write the conversion report
 """
 
 from __future__ import annotations
@@ -26,6 +31,8 @@ from __future__ import annotations
 import argparse
 import contextlib
 import os
+import shutil
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
@@ -53,44 +60,71 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
     schema file + session file + report + dropped-row samples.
     ``dump_path`` may be a single path or a list (sharded dumps stage
     through one shared writer).  ``show_progress`` renders the A8
-    percent meter over the staged-bytes denominator.  ``ingest``
+    percent meter over the tables' input bytes.  ``ingest``
     selects the data pass: "staged" (driver splitter) or
     "distributed" (executor-side reads — the path for very large
     dumps: COPY byte-range scans for postgres, statement-shard
     tokenization for mysql)."""
     os.makedirs(out_dir, exist_ok=True)
     staging = os.path.join(out_dir, "_staging")
-    if dialect == "postgres":
-        ctx, results = pgdump.migrate_pg_dump(spark, dump_path, staging,
-                                              ctx, mode=ingest)
-    elif dialect == "mysql":
-        ctx, results = mysqldump.migrate_mysql_dump(spark, dump_path,
-                                                    staging, ctx,
-                                                    mode=ingest)
-    else:
-        raise ValueError(f"unknown dialect {dialect!r}")
+    try:
+        if dialect == "postgres":
+            ctx, results = pgdump.migrate_pg_dump(spark, dump_path, staging,
+                                                  ctx, mode=ingest)
+        elif dialect == "mysql":
+            ctx, results = mysqldump.migrate_mysql_dump(spark, dump_path,
+                                                        staging, ctx,
+                                                        mode=ingest)
+        else:
+            raise ValueError(f"unknown dialect {dialect!r}")
 
-    # schema + session files before data (cmd/cmd.go:51-52)
-    write_schema_file(ctx, os.path.join(out_dir, "schema.txt"))
+        # schema + session files before data (cmd/cmd.go:51-52)
+        write_schema_file(ctx, os.path.join(out_dir, "schema.txt"))
+        with open(os.path.join(out_dir, "session.json"), "w") as f:
+            f.write(ctx.to_json())
+        _write_tables(spark, ctx, results, out_dir, target,
+                      show_progress, progress_out)
+    finally:
+        # the staged copy of the data goes whether or not every table
+        # made it
+        shutil.rmtree(staging, ignore_errors=True)
+
+    report = generate_report(
+        ctx, driver_name=f"{dialect}-dump")
+    with open(os.path.join(out_dir, "report.txt"), "w") as f:
+        f.write(report)
+    # refresh the session file with final stats
     with open(os.path.join(out_dir, "session.json"), "w") as f:
         f.write(ctx.to_json())
+    return ctx
 
+
+def _write_tables(spark: SparkSession, ctx: MigrationContext,
+                  results: dict, out_dir: str, target: str,
+                  show_progress: bool, progress_out) -> None:
+    """Steps 4 and 5: plan, write and sample every table on a pool,
+    then record their stats in dump order."""
     meter = None
     if show_progress:
         from .progress import MigrationProgress
-        staged = {t: os.path.join(staging, f"{t}.tsv")
-                  for t in results
-                  if os.path.exists(os.path.join(staging, f"{t}.tsv"))}
-        meter = MigrationProgress(staged, message="Writing data",
-                                  out=progress_out)
+        meter = MigrationProgress(
+            {t: r.input_bytes or 0 for t, r in results.items()},
+            message="Writing data", out=progress_out)
 
     db_path = os.path.join(out_dir, "migrated.db")
+    # sqlite locks the file per write transaction and the Derby writer
+    # is one driver-local connection, so their writes go one at a time;
+    # their plan builds and samples still overlap
+    sink_lock = threading.Lock()
 
     def write_one(src_table: str, result) -> tuple:
-        """Write one table and its quarantine sample from a single
-        conversion pass; returns (WriteStats or None, bad-row count,
-        samples written).  Runs on a pool thread."""
+        """Build one table's conversion plan, write the table and its
+        quarantine sample from that single conversion pass; returns
+        (WriteStats or None, bad-row count, samples written).  Runs on
+        a pool thread."""
         tgt = ctx.to_target[src_table]["name"]
+        # the first access builds the plan, here, on this thread
+        pre = result.pre
         wstats = None
         # a single-split table's sample scan would re-run its whole
         # conversion as one more one-task job; on disk, it reads the
@@ -99,7 +133,7 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
         # holding enough bad rows)
         cached = target == "parquet" and result.splits == 1
         if cached:
-            result.pre.persist(StorageLevel.DISK_ONLY)
+            pre.persist(StorageLevel.DISK_ONLY)
         try:
             if meter is not None:
                 from .progress import track_table_job
@@ -111,13 +145,15 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
             # meter; entered here because job groups are per thread
             with tracker:
                 if target == "sqlite":
-                    wstats = sink.write_table_to_sqlite(
-                        ctx, result.pre, tgt, db_path)
+                    with sink_lock:
+                        wstats = sink.write_table_to_sqlite(
+                            ctx, pre, tgt, db_path)
                 elif target == "derby":
                     from .sink.jdbc_writer import write_table_to_derby
-                    wstats = write_table_to_derby(
-                        spark, ctx, result.pre, tgt,
-                        os.path.join(out_dir, "migrated_derby"))
+                    with sink_lock:
+                        wstats = write_table_to_derby(
+                            spark, ctx, pre, tgt,
+                            os.path.join(out_dir, "migrated_derby"))
                 else:
                     write_table(ctx, result.good, tgt,
                                 os.path.join(out_dir, f"{tgt}.parquet"))
@@ -136,14 +172,13 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
                     sample, os.path.join(out_dir, f"{tgt}.dropped.txt"))
         finally:
             if cached:
-                result.pre.unpersist()
+                pre.unpersist()
         return wstats, bad_total, n_bad
 
-    # tables run concurrently; a sink that shares one database file
-    # takes them one at a time (sqlite locks the file per write
-    # transaction; the Derby writer is one driver-local connection)
-    width = 1 if target in ("sqlite", "derby") else \
-        min(len(results), spark.sparkContext.defaultParallelism)
+    # every table plans, writes and samples concurrently, so one
+    # table's plan build (slow on a cold JVM) overlaps the others'
+    # writes
+    width = min(len(results), spark.sparkContext.defaultParallelism)
     with ThreadPoolExecutor(max_workers=max(width, 1)) as pool:
         futures = {t: pool.submit(write_one, t, r)
                    for t, r in results.items()}
@@ -191,18 +226,6 @@ def migrate_dump(spark: SparkSession, dump_path, dialect: str,
     if meter is not None:
         meter.done()
 
-    import shutil
-    shutil.rmtree(staging, ignore_errors=True)
-
-    report = generate_report(
-        ctx, driver_name=f"{dialect}-dump")
-    with open(os.path.join(out_dir, "report.txt"), "w") as f:
-        f.write(report)
-    # refresh the session file with final stats
-    with open(os.path.join(out_dir, "session.json"), "w") as f:
-        f.write(ctx.to_json())
-    return ctx
-
 
 def main(argv: Optional[list[str]] = None) -> int:
     p = argparse.ArgumentParser(
@@ -221,7 +244,7 @@ def main(argv: Optional[list[str]] = None) -> int:
                         "K1/K2 writer")
     p.add_argument("--progress", action="store_true",
                    help="render the percent progress meter (A8) over "
-                        "the staged-bytes denominator")
+                        "the input-bytes denominator")
     p.add_argument("--ingest", choices=["staged", "distributed"],
                    default="staged",
                    help="data pass: 'staged' splits rows on the "

@@ -25,8 +25,9 @@ pure JVM bit arithmetic.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -459,21 +460,68 @@ def bit_reverse64(col_name: str) -> Column:
     return F.expr(_bit_reverse_sql(col_name))
 
 
-@dataclass
 class ConversionResult:
-    good: DataFrame
-    bad: DataFrame      # source string columns + ERRS_COL (failing columns)
-    obs_good: "object" = None   # pyspark Observation (A1/A8)
-    obs_bad: "object" = None
-    obs_all: "object" = None    # pre-split totals: rows + bad_rows
-    # the relation both rails are cut from: typed target columns +
-    # ERRS_COL + SRC_COL (the source row, set only on bad rows).  Row
-    # writers take it whole and split bad rows off inside their
-    # partition loop, so a table converts once per sink
-    pre: Optional[DataFrame] = None
-    # input splits the conversion runs as, when the source knows them
-    # from its file sizes or byte ranges (None: unknown)
-    splits: Optional[int] = None
+    """One table's conversion: ``good`` (typed target columns) and
+    ``bad`` (source string columns + ERRS_COL, the failing columns),
+    their row Observations (A1/A8; ``obs_all`` holds the pre-split
+    totals: rows + bad_rows), and ``pre``, the relation both rails are
+    cut from: typed target columns + ERRS_COL + SRC_COL (the source
+    row, set only on bad rows).  Row writers take ``pre`` whole and
+    split bad rows off inside their partition loop, so a table
+    converts once per sink.
+
+    ``splits`` is the input split count the conversion runs as and
+    ``input_bytes`` the bytes it reads, when the source knows them
+    from its file sizes or byte ranges (None: unknown).
+
+    A ``deferred`` result builds its plan — the six fields above — on
+    first access, on whichever thread touches it first, so a caller
+    can build each table's plan on the thread that writes it.  The
+    precondition: a plan build touches no temp view, no session conf
+    and no ``ctx`` state beyond reading the table's schema, and parses
+    no SQL text whose meaning a session conf can change; then builds
+    can run concurrently with each other and with other tables'
+    writes, and their plans do not depend on when or where they ran.
+    Every ``ctx`` write of the data pass stays in the source's driver
+    pass.
+    """
+
+    _PLAN = ("good", "bad", "obs_good", "obs_bad", "obs_all", "pre")
+
+    def __init__(self, good: Optional[DataFrame] = None,
+                 bad: Optional[DataFrame] = None,
+                 obs_good: "object" = None, obs_bad: "object" = None,
+                 obs_all: "object" = None,
+                 pre: Optional[DataFrame] = None,
+                 splits: Optional[int] = None,
+                 input_bytes: Optional[int] = None) -> None:
+        self.good, self.bad, self.pre = good, bad, pre
+        self.obs_good, self.obs_bad, self.obs_all = \
+            obs_good, obs_bad, obs_all
+        self.splits, self.input_bytes = splits, input_bytes
+
+    @classmethod
+    def deferred(cls, build: Callable[[], "ConversionResult"],
+                 splits: Optional[int] = None,
+                 input_bytes: Optional[int] = None) -> "ConversionResult":
+        """A result whose plan fields come from ``build()``, called
+        once, on first access."""
+        self = cls.__new__(cls)
+        self.splits, self.input_bytes = splits, input_bytes
+        self._build, self._lock = build, threading.Lock()
+        return self
+
+    def __getattr__(self, name: str):
+        # reached only for a plan field a deferred result has not built
+        build = self.__dict__.get("_build")
+        if build is None or name not in self._PLAN:
+            raise AttributeError(name)
+        with self._lock:
+            if name not in self.__dict__:
+                built = build()
+                for f in self._PLAN:
+                    setattr(self, f, getattr(built, f))
+        return self.__dict__[name]
 
     def bad_count_from_good_pass(self) -> "Optional[int]":
         """Bad-row count harvested from the observation the GOOD
@@ -512,8 +560,8 @@ class ConversionResult:
 
 
 def _assemble_result(ctx: MigrationContext, df: DataFrame,
-                     plans: list[ColumnPlan], src_table: str,
-                     splits: Optional[int] = None) -> ConversionResult:
+                     plans: list[ColumnPlan], src_table: str
+                     ) -> ConversionResult:
     """Shared tail of the converters: error-array split (D17),
     synthetic PK (T14), and row observations (A1/A8).  ``good`` and
     ``bad`` are both cut from one relation, ``pre``."""
@@ -562,24 +610,22 @@ def _assemble_result(ctx: MigrationContext, df: DataFrame,
            .observe(obs_bad, F.count(F.lit(1)).alias("rows")))
     return ConversionResult(good=good, bad=bad,
                             obs_good=obs_good, obs_bad=obs_bad,
-                            obs_all=obs_all, pre=pre, splits=splits)
+                            obs_all=obs_all, pre=pre)
 
 
 def convert_table(ctx: MigrationContext, df: DataFrame, src_table: str,
-                  dialect: str, strict_arrays: bool = False,
-                  splits: Optional[int] = None) -> ConversionResult:
+                  dialect: str, strict_arrays: bool = False
+                  ) -> ConversionResult:
     """Convert one table's string DataFrame into its typed target shape,
     splitting off bad rows (D17). Appends the synthetic PK when the
     table has one (requires SEQ_COL in the input for determinism).
 
     Both output frames carry an Observation counting their rows — the
     progress/row-stats analogue (A1/A8) that piggybacks on whatever
-    action the sink runs, instead of extra count() jobs.  ``splits``
-    is the input split count, when the source knows it
-    (ConversionResult.splits).
+    action the sink runs, instead of extra count() jobs.
     """
     plans = plan_columns(ctx, src_table, dialect, strict_arrays)
-    return _assemble_result(ctx, df, plans, src_table, splits)
+    return _assemble_result(ctx, df, plans, src_table)
 
 
 def _spark_type_sql(t: tt.Type) -> str:

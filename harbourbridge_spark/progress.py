@@ -1,4 +1,4 @@
-"""A8: console percent-progress meter over a staged-bytes denominator.
+"""A8: console percent-progress meter over an input-bytes denominator.
 
 ``Progress`` reproduces the reference's progress reporter
 (/root/reference/internal/progress.go:24-85) exactly: integer percent
@@ -7,12 +7,12 @@ overwriting the previous percentage in place (or one line per report
 in verbose mode), ``done()`` forcing 100%.
 
 ``MigrationProgress`` + ``track_table_job`` supply the Spark wiring:
-the denominator is the total staged bytes of the migration (the same
+the denominator is the total input bytes of the migration (the same
 quantity the reference tracks per-table while copying rows), each
-table contributes its staged size, and while a table's conversion JOB
-is running a background poller maps the job's completed-task fraction
-into that table's byte span so percent advances *during* long writes,
-not just between tables.
+table contributes the bytes its conversion reads, and while a
+table's conversion JOB is running a background poller maps the job's
+completed-task fraction into that table's byte span so percent
+advances *during* long writes, not just between tables.
 
 Why a StatusTracker poller and not a SparkListener subclass: core
 ``SparkListener`` callbacks can only be implemented JVM-side (a
@@ -26,7 +26,6 @@ JVM classes to ship.
 
 from __future__ import annotations
 
-import os
 import sys
 import threading
 import time
@@ -83,18 +82,18 @@ class Progress:
 
 
 class MigrationProgress:
-    """Progress over a whole migration, denominated in staged bytes.
+    """Progress over a whole migration, denominated in input bytes.
 
-    ``staged_paths`` is the {table: staging_file} map the stagers
-    return; each table's weight is its staged file size, mirroring the
-    reference's per-table byte accounting.
+    ``sizes`` maps each table to the bytes its conversion reads (its
+    staged file, or the dump byte ranges and sequenced values a
+    distributed pass reads), mirroring the reference's per-table byte
+    accounting.
     """
 
-    def __init__(self, staged_paths: dict, message: str = "Writing data",
+    def __init__(self, sizes: dict, message: str = "Writing data",
                  verbose: bool = False,
                  out: Optional[TextIO] = None) -> None:
-        self.sizes = {t: os.path.getsize(p)
-                      for t, p in staged_paths.items()}
+        self.sizes = dict(sizes)
         self.progress = Progress(sum(self.sizes.values()), message,
                                  verbose, out)
         self._done_bytes = 0

@@ -213,15 +213,14 @@ def file_splits(spark, sizes) -> int:
     return min(parts, int(cap)) if cap else parts
 
 
-def text_splits(spark, path: str) -> int:
-    """``file_splits`` for an uncompressed text source: one file, or a
-    directory of part files (hidden and ``_``-prefixed files are
+def text_sizes(path: str) -> list[int]:
+    """The file sizes Spark's text scan of ``path`` reads: one file, or
+    a directory of part files (hidden and ``_``-prefixed files are
     skipped, as Spark's listing skips them)."""
     if not os.path.isdir(path):
-        return file_splits(spark, [os.path.getsize(path)])
-    return file_splits(spark, [
-        os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)
-        if not f.startswith((".", "_"))])
+        return [os.path.getsize(path)]
+    return [os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path) if not f.startswith((".", "_"))]
 
 
 def scan_splits(df) -> int | None:

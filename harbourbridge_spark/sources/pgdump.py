@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from .. import schema_ir as ir
 from ..context import MigrationContext
 from ..convert import SEQ_COL, ConversionResult, convert_table
-from ..scan import text_splits
+from ..scan import file_splits, text_sizes
 from ..toddl import schema_to_ddl
 from ..types import SourceType
 
@@ -2350,15 +2350,18 @@ def migrate_pg_dump(spark: SparkSession, dump_path: Union[str, list[str]],
         writer.close()
     staged = dict(writer.paths)
 
+    # each plan is built by whichever thread first touches the result
+    # (ConversionResult.deferred); this loop keeps the ctx writes
     results: dict[str, ConversionResult] = {}
     for src_table, path in staged.items():
         if src_table not in ctx.src_schema:
             ctx.unexpected(f"data for unknown table {src_table}")
             continue
-        df = read_staged_table(spark, ctx, src_table, path)
-        results[src_table] = convert_table(
-            ctx, df, src_table, "postgres",
-            splits=text_splits(spark, path))
+        sizes = text_sizes(path)
+        results[src_table] = ConversionResult.deferred(
+            lambda t=src_table, p=path: convert_table(
+                ctx, read_staged_table(spark, ctx, t, p), t, "postgres"),
+            splits=file_splits(spark, sizes), input_bytes=sum(sizes))
     return ctx, results
 
 
@@ -2701,25 +2704,30 @@ def _migrate_distributed(spark: SparkSession, ctx: MigrationContext,
         [t for t in order if t in span_bases and t in ctx.src_schema],
         staging_dir)
 
+    def build(t: str) -> ConversionResult:
+        dfs: list[DataFrame] = []
+        if t in all_chunks:
+            dfs.append(read_copy_chunks(spark, ctx, t, all_chunks[t]))
+        if t in txt_paths:
+            dfs.append(_decode_staged_values(
+                spark.read.text(txt_paths[t]), ctx, t))
+        df = dfs[0]
+        for d in dfs[1:]:
+            df = df.unionByName(d)
+        return convert_table(ctx, df, t, "postgres")
+
     results: dict[str, ConversionResult] = {}
     for t in order:
         if t not in ctx.src_schema:
             ctx.unexpected(f"data for unknown table {t}")
             continue
-        dfs: list[DataFrame] = []
-        splits = 0
-        if t in all_chunks:
-            # one task per byte-range chunk
-            dfs.append(read_copy_chunks(spark, ctx, t, all_chunks[t]))
-            splits += len(all_chunks[t])
-        if t in txt_paths:
-            dfs.append(_decode_staged_values(
-                spark.read.text(txt_paths[t]), ctx, t))
-            splits += text_splits(spark, txt_paths[t])
-        if not dfs:
+        if t not in all_chunks and t not in txt_paths:
             continue
-        df = dfs[0]
-        for d in dfs[1:]:
-            df = df.unionByName(d)
-        results[t] = convert_table(ctx, df, t, "postgres", splits=splits)
+        # one task per byte-range chunk, plus the sequenced values' splits
+        chunks = all_chunks.get(t, [])
+        sizes = text_sizes(txt_paths[t]) if t in txt_paths else []
+        results[t] = ConversionResult.deferred(
+            lambda t=t: build(t),
+            splits=len(chunks) + file_splits(spark, sizes),
+            input_bytes=sum(c.end - c.start for c in chunks) + sum(sizes))
     return results

@@ -274,6 +274,181 @@ def test_cli_failed_table_write_raises_and_is_not_credited(
     alpha = ctx.table_stats.get("alpha")
     assert alpha is None or (alpha.good_rows, alpha.bad_rows) == (0, 0)
     assert ctx.table_stats["zeta"].good_rows == 40
+    # the staged copy of the data and every table's disk cache go too
+    assert not os.path.exists(tmp_path / "out" / "_staging")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cli_plans_each_table_on_its_pool_thread(spark, tmp_path,
+                                                 monkeypatch):
+    """migrate_dump builds every table's conversion plan on the pool
+    thread that writes it; results taken straight from migrate_pg_dump
+    build on whichever thread first touches them."""
+    import threading
+
+    from harbourbridge_spark.sources import pgdump
+
+    threads = {}
+    real = pgdump.convert_table
+
+    def spy(ctx, df, src_table, *args, **kw):
+        threads[src_table] = threading.get_ident()
+        return real(ctx, df, src_table, *args, **kw)
+
+    monkeypatch.setattr(pgdump, "convert_table", spy)
+    dump = _three_table_dump(tmp_path)
+    migrate_dump(spark, dump, "postgres", str(tmp_path / "out"))
+    assert set(threads) == {"zeta", "alpha", "mid"}
+    assert threading.get_ident() not in threads.values()
+
+    threads.clear()
+    _, results = pgdump.migrate_pg_dump(spark, dump,
+                                        str(tmp_path / "staging"))
+    assert threads == {}
+    assert results["alpha"].good.count() == 54
+    assert threads == {"alpha": threading.get_ident()}
+    assert results["alpha"].splits == 1
+    assert results["alpha"].input_bytes == os.path.getsize(
+        tmp_path / "staging" / "alpha.tsv")
+
+
+def test_deferred_result_builds_once_under_concurrent_access():
+    """Many threads touching one deferred result race its first access:
+    the plan is built exactly once and every thread reads that build."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from harbourbridge_spark.convert import ConversionResult
+
+    builds = []
+
+    def build():
+        time.sleep(0.01)    # hold the build open while others arrive
+        builds.append(object())
+        return SimpleNamespace(good=builds[-1], bad=None, obs_good=None,
+                               obs_bad=None, obs_all=None, pre=None)
+
+    result = ConversionResult.deferred(build, splits=2, input_bytes=7)
+    assert (result.splits, result.input_bytes) == (2, 7) and builds == []
+    seen = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=lambda: seen.append(result.good))
+                   for _ in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(builds) == 1
+    assert len(seen) == 16 and all(g is builds[0] for g in seen)
+    with pytest.raises(AttributeError):
+        result.no_such_field
+
+
+@pytest.mark.parametrize("target", ["sqlite", "derby"])
+def test_cli_shared_file_sinks_write_one_table_at_a_time(
+        spark, tmp_path, monkeypatch, target):
+    """sqlite and Derby tables share one database file: the pool plans
+    them concurrently, but no two table writes overlap."""
+    import threading
+    import time
+
+    from harbourbridge_spark import sink
+    from harbourbridge_spark.sink import jdbc_writer
+
+    mod, name = (sink, "write_table_to_sqlite") if target == "sqlite" \
+        else (jdbc_writer, "write_table_to_derby")
+    real = getattr(mod, name)
+    spans = []
+
+    def timed(*args, **kw):
+        t0 = time.perf_counter()
+        time.sleep(0.2)     # widen each write, so an overlap would show
+        out = real(*args, **kw)
+        spans.append((t0, time.perf_counter(), threading.get_ident()))
+        return out
+
+    monkeypatch.setattr(mod, name, timed)
+    ctx = migrate_dump(spark, _three_table_dump(tmp_path), "postgres",
+                       str(tmp_path / "out"), target=target)
+    assert {t: s.good_rows for t, s in ctx.table_stats.items()} == \
+        {"zeta": 40, "alpha": 54, "mid": 25}
+    spans.sort()
+    assert len(spans) == 3
+    assert len({th for _, _, th in spans}) > 1     # pooled, not width 1
+    for (_, end, _), (start, _, _) in zip(spans, spans[1:]):
+        assert end <= start
+
+
+def test_cli_failed_plan_build_raises_and_is_not_credited(
+        spark, tmp_path, monkeypatch):
+    """A table whose plan build raises fails like a failed write: the
+    error re-raises once the pool has drained, that table is credited
+    nothing, and the other tables are written."""
+    from harbourbridge_spark.context import MigrationContext
+    from harbourbridge_spark.sources import pgdump
+
+    boom = RuntimeError("plan build failed")
+    real = pgdump.convert_table
+
+    def flaky(ctx, df, src_table, *args, **kw):
+        if src_table == "alpha":
+            raise boom
+        return real(ctx, df, src_table, *args, **kw)
+
+    monkeypatch.setattr(pgdump, "convert_table", flaky)
+    ctx = MigrationContext()
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError) as info:
+        migrate_dump(spark, _three_table_dump(tmp_path), "postgres",
+                     str(out), ctx)
+    assert info.value is boom
+    alpha = ctx.table_stats.get("alpha")
+    assert alpha is None or (alpha.good_rows, alpha.bad_rows) == (0, 0)
+    assert not os.path.exists(out / "alpha.parquet")
+    for table, n in (("zeta", 40), ("mid", 25)):
+        assert ctx.table_stats[table].good_rows == n
+        assert spark.read.parquet(str(out / f"{table}.parquet")).count() \
+            == n
+    assert not os.path.exists(out / "_staging")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("target", ["parquet", "sqlite"])
+def test_cli_pooled_plans_ignore_session_parse_state(
+        spark, tmp_path, monkeypatch, target):
+    """Plan builds run on pool threads, so they must not read session
+    parse state: with escapedStringLiterals on, the pooled run and a
+    width-1 run write byte-identical report, session and dropped
+    files — the same bytes as a run under the default conf."""
+    from harbourbridge_spark import cli
+
+    dump = _three_table_dump(tmp_path)
+    names = ("report.txt", "session.json", "alpha.dropped.txt")
+
+    def run(out):
+        migrate_dump(spark, dump, "postgres", str(tmp_path / out),
+                     target=target)
+        return [open(tmp_path / out / n).read() for n in names]
+
+    default = run("default")
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        pooled = run("pooled")
+        real_pool = cli.ThreadPoolExecutor
+        monkeypatch.setattr(cli, "ThreadPoolExecutor",
+                            lambda max_workers: real_pool(max_workers=1))
+        serial = run("serial")
+    finally:
+        spark.conf.unset(key)
+    assert pooled == serial == default
 
 
 def _leaf_names(df):

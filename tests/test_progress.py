@@ -6,6 +6,8 @@ import io
 import os
 import re
 
+import pytest
+
 from harbourbridge_spark.progress import (MigrationProgress, Progress,
                                           track_table_job)
 
@@ -66,9 +68,12 @@ def test_progress_monotone_through_two_table_migration(spark, tmp_path):
     ctx, results = pgdump.migrate_pg_dump(spark, str(f), staging)
     assert set(results) == {"alpha", "beta"}
 
-    staged = {t: os.path.join(staging, f"{t}.tsv") for t in results}
+    # each table weighs what its conversion reads: its staged TSV
+    sizes = {t: r.input_bytes for t, r in results.items()}
+    assert sizes == {t: os.path.getsize(os.path.join(staging, f"{t}.tsv"))
+                     for t in results}
     buf = io.StringIO()
-    meter = MigrationProgress(staged, verbose=True, out=buf)
+    meter = MigrationProgress(sizes, verbose=True, out=buf)
     for t in sorted(results):
         with track_table_job(spark, meter, t):
             results[t].good.write.mode("overwrite").parquet(
@@ -120,11 +125,7 @@ def test_migration_progress_concurrent_tables_stress(tmp_path):
     import sys
     import threading
 
-    staged = {}
-    for i in range(16):
-        p = tmp_path / f"t{i}.tsv"
-        p.write_bytes(b"x" * (1000 + 37 * i))
-        staged[f"t{i}"] = str(p)
+    staged = {f"t{i}": 1000 + 37 * i for i in range(16)}
     buf = io.StringIO()
     meter = MigrationProgress(staged, verbose=True, out=buf)
 
@@ -148,3 +149,44 @@ def test_migration_progress_concurrent_tables_stress(tmp_path):
     assert meter.progress.progress == sum(meter.sizes.values())
     pcts = _pcts(buf.getvalue())
     assert pcts == sorted(pcts) and pcts[-1] == 100
+
+
+_DISTRIBUTED_DUMPS = {
+    "postgres": (
+        "CREATE TABLE public.alpha (id integer NOT NULL, v text);\n"
+        "CREATE TABLE public.beta (id integer NOT NULL, v text);\n"
+        "COPY public.alpha (id, v) FROM stdin;\n"
+        + "".join(f"{i}\ta-{i}\n" for i in range(400)) + "\\.\n"
+        "INSERT INTO public.beta VALUES "
+        + ", ".join(f"({i}, 'b-{i}')" for i in range(300)) + ";\n"),
+    "mysql": (
+        "CREATE TABLE `alpha` (`id` int NOT NULL, `v` text, "
+        "PRIMARY KEY (`id`));\n"
+        "CREATE TABLE `beta` (`id` int NOT NULL, `v` text, "
+        "PRIMARY KEY (`id`));\n"
+        "INSERT INTO `alpha` VALUES "
+        + ",".join(f"({i},'a-{i}')" for i in range(400)) + ";\n"
+        "INSERT INTO `beta` VALUES "
+        + ",".join(f"({i},'b-{i}')" for i in range(300)) + ";\n"),
+}
+
+
+@pytest.mark.parametrize("dialect", ["postgres", "mysql"])
+def test_progress_monotone_through_distributed_migration(
+        spark, tmp_path, dialect):
+    """A distributed pass stages no TSVs: each table weighs the bytes
+    its conversion reads (COPY byte ranges, sequenced values), so the
+    meter starts below 100% and climbs monotonically to 100%."""
+    from harbourbridge_spark.cli import migrate_dump
+
+    f = tmp_path / "d.sql"
+    f.write_text(_DISTRIBUTED_DUMPS[dialect])
+    buf = io.StringIO()
+    ctx = migrate_dump(spark, str(f), dialect, str(tmp_path / "out"),
+                       show_progress=True, progress_out=buf,
+                       ingest="distributed")
+    assert {t: s.good_rows for t, s in ctx.table_stats.items()} == \
+        {"alpha": 400, "beta": 300}
+    pcts = _pcts(buf.getvalue())
+    assert pcts[0] < 100 and pcts[-1] == 100
+    assert pcts == sorted(pcts)

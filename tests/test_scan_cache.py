@@ -129,9 +129,10 @@ def test_scan_splits_bounded_by_byte_range_arithmetic(spark, tmp_path):
     (None, None), ("64k", "8k"), ("20k", "0")])
 def test_text_splits_match_spark_file_partitions(spark, tmp_path,
                                                  max_bytes, open_cost):
-    """``text_splits`` reproduces the partition count of Spark's own
-    file scan for single files and part-file directories."""
-    from harbourbridge_spark.scan import text_splits
+    """``file_splits`` over ``text_sizes`` reproduces the partition
+    count of Spark's own file scan for single files and part-file
+    directories."""
+    from harbourbridge_spark.scan import file_splits, text_sizes
 
     line = "x" * 99 + "\n"
     single = tmp_path / "one.tsv"
@@ -148,7 +149,7 @@ def test_text_splits_match_spark_file_partitions(spark, tmp_path,
             if v is not None:
                 spark.conf.set(k, v)
         for path in (str(single), str(parts)):
-            assert text_splits(spark, path) == \
+            assert file_splits(spark, text_sizes(path)) == \
                 spark.read.text(path).rdd.getNumPartitions(), path
     finally:
         for k in confs:
