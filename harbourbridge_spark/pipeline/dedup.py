@@ -9,8 +9,9 @@ Scale design:
 - exact dedup: one shuffle on the 48-bit content hash (not the full
   text — the classic shuffle-size optimization);
 - MinHash-LSH: signatures are per-row (no explode, no groupBy) — on
-  the Spark side an Arrow kernel maps each document's shingles through
-  one memoized md5-hash48 call (hashing.hash48_memo); banding turns
+  the Spark side an Arrow kernel hashes each document's code-point
+  shingles and takes all K permutation minima in one numpy pass
+  (_minhash_signature); banding turns
   the quadratic candidate search into equi-joins on band keys through
   ONE band template both engines run (_bands_clause_window_at: one
   window sizes each bucket, buckets over MAX_BUCKET degrade to star
@@ -35,8 +36,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from .hashing import (MERSENNE61, hash48, hash48_memo, minhash_coeffs,
-                      perm_sql)
+from .hashing import (MINHASH_FAMILY, MINHASH_PRIME, hash48, hash48_memo,
+                      minhash_coeffs, perm_sql)
 from .text import TOKENS, norm_text, render
 
 MINHASH_K = 16
@@ -142,17 +143,6 @@ def exact_dedup_sql(engine: str) -> str:
     return render(t, engine)
 
 
-def _shingles_over(engine: str, nt: str = "nt") -> str:
-    """Distinct character 5-gram shingles over a BOUND normalized-text
-    column ``nt``. Binding matters: inlining trim(lower(text)) into the
-    per-shingle lambda makes the engine recompute the normalization for
-    every shingle — O(len^2) per document, measured 3x slower at
-    sf0.1."""
-    t = (f"{{adist}}({{ltrans}}({{seq}}(1, greatest(length({nt}) - {SHINGLE - 1}, 1)), "
-         f"i -> substring({nt}, i, {SHINGLE})))")
-    return render(t, engine)
-
-
 def bands_rows_for(threshold: float, k: int = MINHASH_K) -> tuple[int, int]:
     """Derive (bands, rows-per-band) from a target Jaccard threshold:
     the LSH S-curve 1-(1-s^r)^b is steepest near (1/b)^(1/r), so pick
@@ -172,62 +162,41 @@ def bands_rows_for(threshold: float, k: int = MINHASH_K) -> tuple[int, int]:
     return best[1], best[2]
 
 
-def minhash_signature_sql(engine: str, k: int = MINHASH_K,
-                          fast: bool = False) -> str:
-    """Per-doc MinHash signature (K permutations over shingle hashes),
-    computed entirely per-row: normalize the text once in an inner
-    projection (see _shingles_over), hash the shingle array once, then
-    each permutation is an array_min over a transform. No explode, no
-    groupBy — the earlier explode->K-MIN-aggregations formulation
-    shuffled |docs| x |shingles| rows for the same result.
+def minhash_signature_sql(engine: str, k: int = MINHASH_K) -> str:
+    """Per-doc MinHash signature, computed entirely per-row (no
+    explode, no groupBy — the explode->K-MIN-aggregations form
+    shuffled |docs| x |shingles| rows for the same result).
 
-    ``fast=True`` switches to the CODE-POINT formulation: ascii() runs
-    once per character (one pass builds the code-point array), and
-    each shingle hash is then pure integer arithmetic over 5 array
-    elements — hash31_poly's values exactly (ascii(substring(sh,j,1))
-    == the code point at that text offset; out-of-range access
-    coalesces to 0 == ascii('')), with ZERO string allocation per
-    shingle.  The naive per-shingle form (substring the shingle, then
-    5 more substrings inside the hash) benched SLOWER than one md5 per
-    shingle; this form drops both the md5 and the per-shingle
-    substrings.  Duplicate shingles are kept (array_min is unaffected
-    by multiplicity, so the signature is identical and the distinct
-    pass is saved).  md5 stays the default: the frozen oracles were
-    recorded against it."""
+    One pass builds the text's code-point array (ascii() returns the
+    Unicode code point in Spark and DuckDB alike, non-BMP included),
+    padded with ascii('') = 0 to at least SHINGLE elements, so every
+    shingle index is in range in both engines (Spark arrays are
+    0-based and raise out of range under ANSI; DuckDB lists are
+    1-based).  Each shingle hash is then integer arithmetic over
+    SHINGLE elements, ``h = (h * 131 + c) mod 2^31`` (every product
+    < 2^39), and each of the K permutations (hashing.perm_sql) is an
+    array_min over a transform.  Duplicate shingles are kept:
+    array_min is multiplicity-blind.  NULL text gives NULL minima.
+    _minhash_signature is the Spark side's kernel twin."""
     amin = "array_min" if engine == "spark" else "list_min"
     mins = ", ".join(
         f"{amin}({{ltrans}}(hs, h -> {perm_sql('h', a, b)})) AS m{i}"
         for i, (a, b) in enumerate(minhash_coeffs(k)))
-    if fast:
-        # engine-shifted array indexing: Spark arrays are 0-based,
-        # DuckDB lists 1-based
-        if engine == "spark":
-            pos = f"{{seq}}(0, greatest({{alen}}(cp) - {SHINGLE}, 0))"
-        else:
-            pos = f"{{seq}}(1, greatest({{alen}}(cp) - {SHINGLE - 1}, 1))"
-        h = f"coalesce(cp[i], 0)"
-        for j in range(1, SHINGLE):
-            h = f"(({h}) * 131 + coalesce(cp[i+{j}], 0)) % {1 << 31}"
-        t = f"""
-        WITH cps AS (
-            SELECT doc_id,
-                   {{ltrans}}({{seq}}(1, length(nt)),
-                              j -> ascii(substring(nt, j, 1))) AS cp
-            FROM (SELECT doc_id, {{ntext}} AS nt
-                  FROM documents) _n
-        ), hashed AS (
-            SELECT doc_id, {{ltrans}}({pos}, i -> ({h})) AS hs
-            FROM cps
-        )
-        SELECT doc_id, {mins} FROM hashed
-        """
-        return render(t, engine)
-    sh = _shingles_over(engine)
-    h = hash48("x", engine)
+    # engine-shifted shingle start positions
+    lo, hi = (0, SHINGLE) if engine == "spark" else (1, SHINGLE - 1)
+    h = "cp[i]"
+    for j in range(1, SHINGLE):
+        h = f"(({h}) * 131 + cp[i+{j}]) % {1 << 31}"
     t = f"""
-    WITH hashed AS (
-        SELECT doc_id, {{ltrans}}({sh}, x -> {h}) AS hs
+    WITH cps AS (
+        SELECT doc_id,
+               {{ltrans}}({{seq}}(1, greatest(length(nt), {SHINGLE})),
+                          j -> ascii(substring(nt, j, 1))) AS cp
         FROM (SELECT doc_id, {{ntext}} AS nt FROM documents) _n
+    ), hashed AS (
+        SELECT doc_id, {{ltrans}}({{seq}}({lo}, {{alen}}(cp) - {hi}),
+                                  i -> ({h})) AS hs
+        FROM cps
     )
     SELECT doc_id, {mins} FROM hashed
     """
@@ -310,11 +279,9 @@ def minhash_bands_sql(engine: str, sig_source: str,
 
 
 def minhash_lsh_pairs_sql(engine: str,
-                          threshold: float = DEFAULT_JACCARD_T,
-                          fast: bool = False) -> str:
+                          threshold: float = DEFAULT_JACCARD_T) -> str:
     """MinHash-LSH candidate pairs as one statement (the oracle form):
-    the signature CTE (md5 shingle hash, or the code-point hash with
-    ``fast=True``; see minhash_signature_sql) followed by the
+    the signature CTE (minhash_signature_sql) followed by the
     minhash_bands_sql tail — band the signature, self-join on band
     keys, distinct pairs. The join is on the band hash — equality
     only, no quadratic scan, and bucket membership is capped at
@@ -327,7 +294,7 @@ def minhash_lsh_pairs_sql(engine: str,
     because giant buckets become single-row quadratic arrays with no
     parallelism.  Banding derives from the target Jaccard
     ``threshold`` via bands_rows_for (default 0.7 -> 4x4)."""
-    sig = minhash_signature_sql(engine, fast=fast)
+    sig = minhash_signature_sql(engine)
     b, r = bands_rows_for(threshold)
     t = f"""
     WITH sig AS ({sig}),
@@ -338,55 +305,52 @@ def minhash_lsh_pairs_sql(engine: str,
 
 
 def minhash_lsh_pairs_fn(spark, sf_dir: str,
-                         threshold: float = DEFAULT_JACCARD_T,
-                         fast: bool = False):
+                         threshold: float = DEFAULT_JACCARD_T):
     """Spark execution strategy for the LSH pairs: the signature comes
-    from the vectorized Arrow kernel (the md5 kernel, or the
-    code-point kernel with ``fast=True``), materialized ONCE
+    from the vectorized Arrow kernel, materialized ONCE
     (localCheckpoint + temp view) before the band self-join.  Spark
     evaluates transform()/aggregate() lambda bodies interpreted per
     element, which made the SQL signature stage ~3x the kernel cost
     (guide §4.1/§4.2), and the CTE form would inline the signature
     into every reference of the band join.  Produces exactly the rows
-    of minhash_lsh_pairs_sql(engine, threshold, fast).
+    of minhash_lsh_pairs_sql(engine, threshold).
 
     ``threshold`` is the production knob: banding is DERIVED from the
     target Jaccard threshold via bands_rows_for — lower it and the
     banding reshapes (more bands, fewer rows) so the S-curve's knee
     lands on it. The default 0.7 solves to 4x4."""
-    vectorized_signature_view(
-        spark, sf_dir, "__mh_sig",
-        kernel=_minhash_numpy_signature if fast else None)
+    vectorized_signature_view(spark, sf_dir, "__mh_sig")
     with scoped_parser_mode(spark, "true"):
         return spark.sql(minhash_bands_sql("spark", "__mh_sig", threshold))
 
 
-def _md5_sig_kernel(memo: dict):
-    """Build the md5 signature kernel over a PER-TASK shingle-hash
-    memo (guide §4.5 shape: heavyweight state constructed once per
-    task, amortized over every batch; see hash48_memo).  Shingles are
-    distinct code-point slices (Python slicing == substring
-    semantics; array_min is multiplicity-blind and the SQL template
-    hashes a distinct array too).  The K permutation mins run as ONE
-    (K, n) vectorized op."""
-    coeffs = np.asarray(minhash_coeffs(MINHASH_K), np.int64)
-    a_col = coeffs[:, 0:1]
-    b_col = coeffs[:, 1:2]
-
-    def kern(text: str) -> list:
-        n = max(len(text) - SHINGLE + 1, 1)
-        hs = np.asarray(
-            hash48_memo({text[i:i + SHINGLE] for i in range(n)}, memo),
-            np.int64)
-        return ((a_col * hs[None, :] + b_col) % MERSENNE61) \
-            .min(axis=1).tolist()
-    return kern
+_PERM_A, _PERM_B = (np.asarray(c, np.int64)[:, None]
+                    for c in zip(*minhash_coeffs(MINHASH_K)))
 
 
-def _minhash_md5_signature(text: str) -> list:
-    """One document's md5 signature — the twin of
-    minhash_signature_sql() that the kernel-vs-template tests pin."""
-    return _md5_sig_kernel({})(text)
+def _shingle_hashes(text: str) -> np.ndarray:
+    """The shingle hashes of minhash_signature_sql, duplicates kept:
+    code points via one utf-32 reinterpret, zero-padded to SHINGLE
+    (== ascii('')), then the rolling 31-bit polynomial over
+    SHINGLE-wide windows."""
+    cp = np.frombuffer(text.encode("utf-32-le"), dtype="<u4") \
+        .astype(np.int64)
+    if len(cp) < SHINGLE:
+        cp = np.concatenate([cp, np.zeros(SHINGLE - len(cp), np.int64)])
+    n = len(cp) - SHINGLE + 1
+    h = cp[:n].copy()
+    for j in range(1, SHINGLE):
+        h = (h * 131 + cp[j:j + n]) & 0x7FFFFFFF   # mod 2^31
+    return h
+
+
+def _minhash_signature(text: str) -> list:
+    """One document's signature — the kernel twin of
+    minhash_signature_sql: all K permutation minima of its shingle
+    hashes as ONE (K, n) array op, exact in int64
+    (a*h + b < 2^62 + 2^31)."""
+    return ((_PERM_A * _shingle_hashes(text) + _PERM_B) % MINHASH_PRIME) \
+        .min(axis=1).tolist()
 
 
 def _text_udf(make_kernel, return_type: str):
@@ -405,14 +369,14 @@ def _text_udf(make_kernel, return_type: str):
     return text_udf
 
 
-def vectorized_signature_df(docs, kernel=None, materialize=True):
+def vectorized_signature_df(docs, materialize=True):
     """The checkpointed MinHash signature of a ``(doc_id, text, …)``
-    DataFrame, computed by an Arrow-batched pandas_udf kernel
-    (default: the md5 kernel, bit-identical to
-    minhash_signature_sql()).  The scale-path signature stage shared
-    by the LSH pairs, verified-pair, clustering, observability,
-    incremental and store-write paths — see minhash_lsh_pairs_fn for
-    why the kernel beats the interpreted SQL higher-order functions.
+    DataFrame, computed by an Arrow-batched pandas_udf over
+    _minhash_signature (bit-identical to minhash_signature_sql()).
+    The scale-path signature stage shared by the LSH pairs,
+    verified-pair, clustering, observability, incremental and
+    store-write paths — see minhash_lsh_pairs_fn for why the kernel
+    beats the interpreted SQL higher-order functions.
 
     ``materialize=False`` skips the localCheckpoint for callers that
     consume the signature exactly ONCE (single-reference plans: the
@@ -421,9 +385,7 @@ def vectorized_signature_df(docs, kernel=None, materialize=True):
     reference."""
     from pyspark.sql import functions as F
 
-    sig_udf = _text_udf(
-        (lambda: kernel) if kernel is not None
-        else (lambda: _md5_sig_kernel({})), "array<bigint>")
+    sig_udf = _text_udf(lambda: _minhash_signature, "array<bigint>")
     docs = docs.select("doc_id", F.trim(F.lower("text")).alias("nt"))
     # callers pass a spread input (scan.read_spread) — the documents
     # fixture is a single parquet row group → 1 scan partition, and
@@ -438,37 +400,14 @@ def vectorized_signature_df(docs, kernel=None, materialize=True):
     return sig.localCheckpoint() if materialize else sig
 
 
-def vectorized_signature_view(spark, sf_dir: str, view: str,
-                              kernel=None):
+def vectorized_signature_view(spark, sf_dir: str, view: str):
     """Register vectorized_signature_df over the documents fixture as
     a temp view — the sf_dir-keyed convenience wrapper the registry
     entries use."""
     sig = vectorized_signature_df(
-        read_spread(spark, f"{sf_dir}/documents.parquet"), kernel)
+        read_spread(spark, f"{sf_dir}/documents.parquet"))
     sig.createOrReplaceTempView(view)
     return sig
-
-
-def _minhash_numpy_signature(text: str) -> list:
-    """The fast signature's per-document kernel: code points via a
-    single utf-32 reinterpret (ord(c) == ascii(c) in Spark AND DuckDB,
-    hashing.hash31_poly's contract), rolling 31-bit polynomial over
-    SHINGLE-wide windows as vectorized numpy, then the K permutation
-    mins as K vector ops — a few vector ops per document where the
-    SQL form evaluates ~|shingles| x K interpreted lambda bodies.
-    Bit-identical to minhash_signature_sql(fast=True): short texts
-    pad with 0 (== ascii('')), and every intermediate fits int64
-    (hash < 2^31, a <= 2K+1, so a*h+b < 2^36)."""
-    cp = np.frombuffer(text.encode("utf-32-le"), dtype="<u4") \
-        .astype(np.int64)
-    if len(cp) < SHINGLE:
-        cp = np.concatenate([cp, np.zeros(SHINGLE - len(cp), np.int64)])
-    n = len(cp) - SHINGLE + 1
-    h = cp[:n].copy()
-    for j in range(1, SHINGLE):
-        h = (h * 131 + cp[j:j + n]) % (1 << 31)
-    return [int(((a * h + b) % MERSENNE61).min())
-            for a, b in minhash_coeffs(MINHASH_K)]
 
 
 def _bucket_stats_tail(sig_source: str) -> str:
@@ -503,7 +442,7 @@ def lsh_bucket_stats_sql(engine: str) -> str:
 
 def lsh_bucket_stats_fn(spark, sf_dir: str):
     """Spark strategy for lsh_bucket_stats: the same bucket-population
-    aggregate, over the vectorized md5 signature view instead of the
+    aggregate, over the vectorized kernel's signature view instead of the
     inline HOF signature CTE (identical values; see
     minhash_lsh_pairs_fn for the why)."""
     vectorized_signature_view(spark, sf_dir, "__mh_sig_stats")
@@ -887,11 +826,11 @@ def lsh_verified_pairs_fn(spark, sf_dir: str):
     tokenize+gram work touches a sliver of the data. The verify joins
     are doc_id equi-joins; no quadratic term anywhere.
 
-    The candidate signature comes from the vectorized md5 kernel
+    The candidate signature comes from the vectorized kernel
     (bit-identical to the SQL template the oracle inlines)."""
-    vectorized_signature_view(spark, sf_dir, "__mh_sig_md5")
+    vectorized_signature_view(spark, sf_dir, "__mh_sig")
     with scoped_parser_mode(spark, "true"):
-        pairs = spark.sql(minhash_bands_sql("spark", "__mh_sig_md5"))
+        pairs = spark.sql(minhash_bands_sql("spark", "__mh_sig"))
         # localCheckpoint materializes the candidate pairs ONCE and replaces
         # the CTE-heavy lineage with a scan of the checkpointed partitions.
         # Plain .cache()/CACHE TABLE both fail here on Spark 4.1: .cache()
@@ -1915,7 +1854,7 @@ def dedup_incremental_sql(engine: str, mod: int = INCOMING_MOD,
 
 def dedup_incremental_fn(spark, sf_dir: str, mod: int = INCOMING_MOD,
                          res: int = INCOMING_RES):
-    """Spark strategy: the vectorized md5 signature materialized once
+    """Spark strategy: the vectorized kernel's signature materialized once
     (the CTE form would recompute it for the ex/inc/sized references;
     see minhash_lsh_pairs_fn), then the asymmetric probe SQL."""
     with scoped_parser_mode(spark, "true"):
@@ -1933,11 +1872,11 @@ def dedup_incremental_fn(spark, sf_dir: str, mod: int = INCOMING_MOD,
 
 def _signature_relations(docs_df) -> dict:
     """The signature store's one relation (the store root): MinHash
-    signatures for ``docs_df`` (documents schema).  r16: vectorized
-    md5 kernel (bit-identical to the HOF template; see
-    minhash_lsh_pairs_fn); r17: the parquet write is the signature's
-    ONLY consumer, so it computes inside the write action (no
-    pre-write checkpoint barrier)."""
+    signatures for ``docs_df`` (documents schema), from the vectorized
+    kernel (bit-identical to the HOF template; see
+    minhash_lsh_pairs_fn).  The parquet write is the signature's ONLY
+    consumer, so it computes inside the write action (no pre-write
+    checkpoint barrier)."""
     return {"": vectorized_signature_df(docs_df, materialize=False)}
 
 
@@ -2097,11 +2036,12 @@ def dedup_incremental_store_entry_fn(spark, sf_dir: str,
     the harness-shaped entry (dedup_incremental) pays every run.
     Value-identical to dedup_incremental_sql: the store holds exactly
     the corpus docs' signatures, the probe is the same asymmetric band
-    join."""
+    join.  MINHASH_FAMILY in the fixture identity rebuilds the store
+    when the shingle hash or the permutation family changes."""
     from .storecache import fixture_store
 
     src = f"{sf_dir}/documents.parquet"
-    store = fixture_store("sig", src, mod, res)
+    store = fixture_store("sig", src, mod, res, MINHASH_FAMILY)
     docs = read_spread(spark, src)
     signature_store_write(spark, docs.where(f"doc_id % {mod} < {res}"),
                           store)

@@ -8,16 +8,27 @@ so we derive integers from md5 hex (identical everywhere):
     hash48(s) = int(md5(s)[:12], 16)   # 48 bits, fits comfortably in i64
 
 Spark renders this with conv(); DuckDB 1.0 lacks conv(), so its SQL is
-an ascii()-polynomial over the same 12 hex chars. MinHash permutations
-are (a*h + b) mod P with P = 2^61-1; a bounded so a*h stays < 2^63.
+an ascii()-polynomial over the same 12 hex chars.
+
+MinHash needs no md5: its shingle hash is a code-point polynomial below
+2^31 (dedup.minhash_signature_sql), and its K permutations are a
+Carter–Wegman family ``(a*h + b) mod (2^31 - 1)`` with ``a`` in
+[1, p) and ``b`` in [0, p) drawn from a fixed seed (minhash_coeffs).
+``a*h + b < 2^62 + 2^31``, so every value is exact in numpy int64, in
+Spark with ANSI on, and in DuckDB.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-MERSENNE61 = (1 << 61) - 1
 HASH_BITS = 48
+MINHASH_PRIME = (1 << 31) - 1
+MINHASH_SEED = 0x5EED
+# names the shingle hash + permutation family; a store holding
+# signatures carries it in its fixture identity, so a family change
+# rebuilds the store instead of mixing two families
+MINHASH_FAMILY = f"cp5-cw31-{MINHASH_SEED:x}"
 
 
 def spark_hash48(expr: str) -> str:
@@ -50,7 +61,7 @@ def hash48_memo(strings, memo: dict) -> list:
     int(md5(s)[:12], 16) == the first 6 digest bytes big-endian (SQL
     md5 hashes the UTF-8 bytes; so does ``s.encode()``).  Values are
     memoized in ``memo``, which a kernel builds once per task:
-    shingles, tokens and grams repeat massively across the documents
+    tokens and grams repeat massively across the documents
     of one partition, so most md5 calls become a dict hit.  The cap
     bounds worker memory on adversarially diverse input; past it,
     misses simply compute.  The loop lives here so a kernel makes one
@@ -109,32 +120,26 @@ def hash60(expr: str, engine: str, start: int = 1) -> str:
     return duck_hash_slice(expr, start, 15)
 
 
-def hash31_poly(expr: str, n: int = 5) -> str:
-    """Arithmetic 31-bit polynomial hash over the first ``n`` characters
-    of a string expression — the cheap alternative to the md5-derived
-    hash48 for fixed-width shingles. The SAME text runs in both engines:
-    ascii() returns the Unicode code point in Spark and DuckDB alike
-    (verified incl. non-BMP-adjacent cases), and ascii('') is 0 in both,
-    so short tails degrade identically. Every intermediate stays well
-    under 2^63 (code point < 2^21, running hash < 2^31, base 131 →
-    products < 2^39), so the expression is ANSI-overflow-safe.
-
-    Collision note: 31 bits vs hash48's 48 — fine for MinHash (both
-    engines evaluate the identical expression, so collisions agree and
-    the oracle comparison stays exact; the S-curve shifts negligibly)."""
-    h = f"ascii(substring({expr}, 1, 1))"
-    for j in range(2, n + 1):
-        h = (f"(({h}) * 131 + ascii(substring({expr}, {j}, 1))) "
-             f"% {1 << 31}")
-    return f"({h})"
-
-
 def minhash_coeffs(k: int) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for K permutations. a is odd and small
-    enough that a * (2^48 - 1) + b < 2^63."""
-    return [(2 * i + 3, 0x9E3779B9 + i * 0x85EBCA77) for i in range(k)]
+    """K Carter–Wegman permutations ``(a, b)``, a in [1, p) and b in
+    [0, p) for p = MINHASH_PRIME, drawn from MINHASH_SEED by splitmix64
+    (pure integer arithmetic, so the literals the SQL templates embed
+    never depend on a library's generator)."""
+    mask, x, out = (1 << 64) - 1, MINHASH_SEED, []
+
+    def draw(m: int) -> int:
+        nonlocal x
+        x = (x + 0x9E3779B97F4A7C15) & mask
+        z = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & mask
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
+        return (z ^ (z >> 31)) % m
+
+    for _ in range(k):
+        a = 1 + draw(MINHASH_PRIME - 1)
+        out.append((a, draw(MINHASH_PRIME)))
+    return out
 
 
 def perm_sql(hash_expr: str, a: int, b: int) -> str:
-    """(a*h + b) mod 2^61-1 — same text works in both engines."""
-    return f"(({a} * {hash_expr} + {b}) % {MERSENNE61})"
+    """(a*h + b) mod 2^31-1 — same text works in both engines."""
+    return f"(({a} * {hash_expr} + {b}) % {MINHASH_PRIME})"

@@ -1999,21 +1999,20 @@ REGISTRY["dedup_minhash_lsh_t35"] = QuerySpec(
     "MinHash-LSH candidates at a DERIVED operating point: banding "
     "solved from a target Jaccard threshold of 0.35 (8 bands of 2 via "
     "bands_rows_for) — the production knob next to the frozen K=16/r=4 "
-    "default; signature from the vectorized md5 kernel")
+    "default; signature from the vectorized kernel")
 REGISTRY["dedup_minhash_lsh_fast"] = QuerySpec(
-    lambda spark, sf_dir: _dedup.minhash_lsh_pairs_fn(
-        spark, sf_dir, fast=True),
-    _dedup.minhash_lsh_pairs_sql("duckdb", fast=True),
-    "MinHash-LSH with the arithmetic 31-bit shingle hash computed in "
-    "a vectorized Arrow-batched numpy kernel (no md5, no per-element "
-    "HOF interpretation) — the signature-cost knob for corpus scale; "
-    "same banding, caching, and skew guard as the default")
+    _dedup.minhash_lsh_pairs_fn,
+    _dedup.minhash_lsh_pairs_sql("duckdb"),
+    "MinHash-LSH with the code-point shingle hash and the K "
+    "Carter-Wegman permutation minima computed in the vectorized "
+    "Arrow-batched numpy kernel (no per-element HOF interpretation) — "
+    "the same kernel every LSH entry runs")
 REGISTRY["lsh_bucket_stats"] = QuerySpec(
     _dedup.lsh_bucket_stats_fn,
     _dedup.lsh_bucket_stats_sql("duckdb"),
     "LSH skew-guard observability: band-bucket population stats + how "
     "many buckets/docs the MAX_BUCKET cap drops; signature from the "
-    "vectorized md5 kernel")
+    "vectorized kernel")
 REGISTRY["dedup_lsh_verified"] = QuerySpec(
     _dedup.lsh_verified_pairs_fn,
     _dedup.lsh_verified_pairs_sql("duckdb"),
@@ -3967,8 +3966,10 @@ _CARRYOVER_FROM_PREV_ROUND: list[str] = []
 # any real plan step, plus warc_salvage_stats on the same fused
 # feed) slip to r17 per the declared-carry-over policy.  All 20 are
 # green in this round's two full local sweeps (159/159 twice).
+# q7_volume_shipping slipped after them when the MinHash family's
+# ten entries took the front of the window.
 _CARRYOVER_TO_NEXT_ROUND: list[str] = [
-    "dedup_minhash_lsh_fast",
+    "q7_volume_shipping",
     "bpe_apply",
     "multimodal_features", "multimodal_decode_flac",
     "multimodal_decode_aiff", "multimodal_decode_wav",
@@ -3983,6 +3984,13 @@ _CARRYOVER_TO_NEXT_ROUND: list[str] = [
 ]
 
 _CHANGED_THIS_ROUND: list[str] = [
+    # the MinHash family change (code-point shingle hash + Carter-Wegman
+    # permutations replace the md5 kernel): every entry whose values
+    # move leads the window
+    "dedup_minhash_lsh", "dedup_minhash_lsh_t35", "dedup_minhash_lsh_fast",
+    "lsh_bucket_stats", "dedup_lsh_verified", "dedup_clusters",
+    "dedup_removal_manifest", "dedup_pipeline_materialized",
+    "dedup_incremental", "dedup_incremental_against_store",
     # round 16, VERDICT r15 asks 1/4/5: the perceptual image family
     # changed end-to-end — decode_pixels now dispatches JPEG/GIF/WebP
     # through the in-repo codecs, the dHash kernel box-filters
@@ -4022,8 +4030,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     # round 16, VERDICT r15 ask 3: the 15 entries whose last OFFICIAL
     # window was r12 rotate back in
     "ann_bruteforce", "ann_ivf", "ann_lsh_multiprobe", "ann_recall",
-    "c4_clean", "dedup_clusters", "dedup_pipeline_materialized",
-    "dedup_removal_manifest", "dsir_importance", "dsir_select",
+    "c4_clean", "dsir_importance", "dsir_select",
     "gopher_quality_rules", "warc_ingest", "warc_ingest_gzip",
     "warc_stats", "warc_to_documents",
     # round 16 OPTIMIZATION pass — Spark strategies rewritten with
@@ -4037,27 +4044,19 @@ _CHANGED_THIS_ROUND: list[str] = [
     "multimodal_decode_mp3", "multimodal_decode_mp3_lsf",
     "multimodal_decode_vorbis", "multimodal_decode_vorbis_salvage",
     "multimodal_audio_analysis",
-    # ...then the dedup-family kernel swaps (Arrow md5 signature /
-    # per-cluster cosine kernel / fused label-prop loop):
-    "dedup_minhash_lsh", "dedup_minhash_lsh_t35",
-    "dedup_incremental",
-    "dedup_incremental_against_store", "dedup_lsh_verified",
-    "lsh_bucket_stats", "dedup_semdedup",
+    # ...then the dedup-family kernel swap (per-cluster cosine kernel):
+    "dedup_semdedup",
     # ...then the plan-reshape strategies (rollup pre-aggregation;
     # BPE checkpoint-drop in the merge loop; line_dedup's
     # single-evaluation keyed checkpoint — bpe_apply slips to the
     # carry-over to make room: its change is lineage-only and the
     # shared merge loop is covered by the bpe_train pin):
     "rollup_region_revenue", "bpe_train", "line_dedup_ccnet",
-    # ...and the q7 scan spread (single consumer, four broadcast
-    # joins chained into the scan stage).  dedup_minhash_lsh_fast
-    # slips to the carry-over to make room: it was ALREADY the numpy
-    # kernel path — its only r16 delta is the iterator-form udf the
-    # default-variant pins also cover.
-    "q7_volume_shipping",
     # ---- window boundary: everything below here is the declared
     # ---- carry-over (must mirror _CARRYOVER_TO_NEXT_ROUND)
-    "dedup_minhash_lsh_fast",
+    # ...and the q7 scan spread (single consumer, four broadcast
+    # joins chained into the scan stage).
+    "q7_volume_shipping",
     "bpe_apply",
     "multimodal_features", "multimodal_decode_flac",
     "multimodal_decode_aiff", "multimodal_decode_wav",

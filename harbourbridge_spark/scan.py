@@ -276,3 +276,15 @@ def read_spread(spark, path: str):
     if groups is not None and groups < par:
         df = df.repartition(par)
     return df
+
+
+def descriptor_frame(spark, rows: list, schema: str):
+    """A DataFrame of work descriptors (spans, chunks, ranges) with ONE
+    partition per row, so a per-descriptor kernel runs one task per
+    descriptor.  ``createDataFrame(list)`` always yields
+    ``defaultParallelism`` slices, and repartitioning that to
+    ``len(rows)`` is a round-robin exchange: a shuffle-map job of its
+    own ahead of the kernel.  Slicing the rows at parallelize time
+    gives the same layout with no exchange."""
+    rdd = spark.sparkContext.parallelize(rows, max(len(rows), 1))
+    return spark.createDataFrame(rdd, schema)

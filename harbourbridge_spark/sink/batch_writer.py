@@ -114,14 +114,21 @@ def run_batching_loop(rows_iter, write: Callable[[list], None],
     With ``add_bad``, each row ends in (ERRS_COL, SRC_COL): a row with
     failing columns is not written but counted, and the first
     MAX_DROP_SAMPLES are sampled; ``add_bad(count, samples)`` fires
-    once at the end.  Good rows are written without the two columns."""
-    budget = [cfg.retry_limit]
+    once at the end.  Good rows are written without the two columns.
 
-    def write_and_handle(rows: list) -> None:
+    A ``write`` with a ``prepare(row)`` method (a driver's value
+    adaptation) has each good row prepared ONCE, when it joins a
+    batch; every attempt, bisection retries included, writes the
+    prepared rows, while byte cuts and dropped-row samples still read
+    the original row."""
+    budget = [cfg.retry_limit]
+    prepare = getattr(write, "prepare", lambda row: row)
+
+    def write_and_handle(rows: list, ready: list) -> None:
         if not rows:
             return
         try:
-            write(rows)
+            write(ready)
             add_batches(1)
             add_written(len(rows))
             return
@@ -137,9 +144,10 @@ def run_batching_loop(rows_iter, write: Callable[[list], None],
         for i in range(0, len(rows), step):
             budget[0] -= 1
             add_retries(1)
-            write_and_handle(rows[i:i + step])
+            write_and_handle(rows[i:i + step], ready[i:i + step])
 
     batch: list = []
+    ready: list = []
     nbytes = 0
     n_bad, bad_samples = 0, []
     for row in rows_iter:
@@ -153,11 +161,12 @@ def run_batching_loop(rows_iter, write: Callable[[list], None],
                 continue
             row = row[:-2]
         batch.append(row)
+        ready.append(prepare(row))
         nbytes += _row_bytes(row)
         if len(batch) >= cfg.count_threshold or nbytes >= cfg.byte_threshold:
-            write_and_handle(batch)
-            batch, nbytes = [], 0
-    write_and_handle(batch)
+            write_and_handle(batch, ready)
+            batch, ready, nbytes = [], [], 0
+    write_and_handle(batch, ready)
     if add_bad is not None:
         add_bad(n_bad, bad_samples)
 

@@ -60,6 +60,9 @@ class DbApiInsertWriter:
     one, or a small dataclass with ``__call__``).
     ``paramstyle``: the driver's placeholder style ('qmark' for
     sqlite3, 'format' for pg8000/psycopg; 'numeric' renders :1..:n).
+    The batching loop adapts each row once through ``prepare`` and
+    calls the writer with adapted rows, so a bisecting retry never
+    re-adapts them.
     """
 
     connect_factory: Callable[[], object]
@@ -76,12 +79,15 @@ class DbApiInsertWriter:
             qs = ", ".join(tok for _ in self.columns)
         return f'INSERT INTO "{self.table}" ({cols}) VALUES ({qs})'
 
+    @staticmethod
+    def prepare(row) -> tuple:
+        return tuple(map(_adapt, row))
+
     def __call__(self, rows: list) -> None:
         con = self.connect_factory()
         try:
             cur = con.cursor()
-            cur.executemany(self._sql(),
-                            [tuple(_adapt(v) for v in r) for r in rows])
+            cur.executemany(self._sql(), rows)
             con.commit()
         except Exception:
             try:

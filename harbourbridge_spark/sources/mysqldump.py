@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import schema_ir as ir
 from ..context import MigrationContext
 from ..convert import ConversionResult, convert_table
-from ..scan import file_splits, text_sizes
+from ..scan import descriptor_frame, file_splits, text_sizes
 from ..toddl import schema_to_ddl
 from ..types import SourceType
 from .pgdump import (StagingWriter, _DIST_MIN_SERIAL_SEC,
@@ -1115,9 +1115,8 @@ def _scan_tokenize_mysql_distributed(spark: SparkSession,
                 rows, columns=["path", "rng", "span_start", "table",
                                "ordinal", "off", "kind", "payload"])
 
-    desc_df = spark.createDataFrame(
-        descs, "path string, ri long, start long, end long") \
-        .repartition(len(descs))
+    desc_df = descriptor_frame(
+        spark, descs, "path string, ri long, start long, end long")
     parsed = desc_df.mapInPandas(gen, _PARSED_SCHEMA).localCheckpoint()
     counts, unknowns, recovery, raw_summaries = \
         _collect_mysql_span_meta(parsed)
@@ -1265,9 +1264,8 @@ def _tokenize_mysql_spans(spark: SparkSession, ctx: MigrationContext,
                 rows, columns=["path", "rng", "span_start", "table",
                                "ordinal", "off", "kind", "payload"])
 
-    desc = spark.createDataFrame(
-        span_rows, "path string, rng long, start long, end long") \
-        .repartition(max(len(span_rows), 1))
+    desc = descriptor_frame(
+        spark, span_rows, "path string, rng long, start long, end long")
     parsed = desc.mapInPandas(gen, _PARSED_SCHEMA).localCheckpoint()
     counts, unknowns, recovery, _summaries = \
         _collect_mysql_span_meta(parsed)
@@ -1545,10 +1543,9 @@ def read_tab_chunks(spark: SparkSession, ctx: MigrationContext,
 
     schema_cols = list(ctx.src_schema[src_table].col_names)
     ncols = len(schema_cols)
-    desc = spark.createDataFrame(
-        [(c[0], c[1], c[2], c[3], c[4]) for c in chunks],
+    desc = descriptor_frame(
+        spark, [(c[0], c[1], c[2], c[3], c[4]) for c in chunks],
         "path string, start long, end long, rows long, start_seq long")
-    desc = desc.repartition(max(len(chunks), 1))
 
     def _ends_unescaped_nl(data: bytes) -> bool:
         if not data.endswith(b"\n"):

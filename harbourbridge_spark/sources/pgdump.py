@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from .. import schema_ir as ir
 from ..context import MigrationContext
 from ..convert import SEQ_COL, ConversionResult, convert_table
-from ..scan import file_splits, text_sizes
+from ..scan import descriptor_frame, file_splits, text_sizes
 from ..toddl import schema_to_ddl
 from ..types import SourceType
 
@@ -2158,12 +2158,11 @@ def _tokenize_pg_spans(spark: SparkSession, ctx: MigrationContext,
                 rows, columns=["path", "rng", "span_start", "table",
                                "ordinal", "off", "kind", "payload"])
 
-    desc = spark.createDataFrame(
-        [(p_, r_, s_, e_) for p_, r_, s_, e_ in span_rows],
-        "path string, rng long, start long, end long")
     # one task per span: span size (~chunk_bytes), not span count, is
     # the unit of work
-    desc = desc.repartition(max(len(span_rows), 1))
+    desc = descriptor_frame(
+        spark, [(p_, r_, s_, e_) for p_, r_, s_, e_ in span_rows],
+        "path string, rng long, start long, end long")
     parsed = (desc.mapInPandas(
         gen, _PARSED_SCHEMA).localCheckpoint())
     counts, unknowns, _summaries = _collect_span_meta(parsed)
@@ -2211,12 +2210,11 @@ def read_copy_chunks(spark: SparkSession, ctx: MigrationContext,
     (/root/reference/postgres/pgdump.go:122-152) onto Spark tasks."""
     rows = [(c.path, c.start, c.end, c.rows, c.start_seq, c.reorder)
             for c in chunks]
-    desc = spark.createDataFrame(
-        rows, "path string, start long, end long, rows long, "
-              "start_seq long, reorder array<int>")
     # one task per chunk: chunk size (not row count) is the unit of
-    # work, so round-robin over exactly len(rows) partitions
-    desc = desc.repartition(len(rows))
+    # work
+    desc = descriptor_frame(
+        spark, rows, "path string, start long, end long, rows long, "
+                     "start_seq long, reorder array<int>")
 
     def gen(batches):
         import numpy as np
@@ -2501,9 +2499,8 @@ def process_pg_dump_schema_distributed(spark: SparkSession,
                 rows, columns=["path", "rng", "span_start", "table",
                                "ordinal", "off", "kind", "payload"])
 
-    desc_df = spark.createDataFrame(
-        descs, "path string, ri long, start long, end long") \
-        .repartition(len(descs))
+    desc_df = descriptor_frame(
+        spark, descs, "path string, ri long, start long, end long")
     # every row is metadata (no data rows), so a straight collect is
     # O(DDL + spans x kinds + ranges) driver memory
     meta = desc_df.mapInPandas(gen, _PARSED_SCHEMA).collect()

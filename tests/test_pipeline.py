@@ -899,7 +899,7 @@ def test_vectorized_kernels_match_sql_templates_duckdb():
     import duckdb
 
     from harbourbridge_spark.pipeline.dedup import (_hashed_gram_set,
-                                                    _minhash_md5_signature,
+                                                    _minhash_signature,
                                                     _simhash_int,
                                                     MINHASH_K,
                                                     minhash_signature_sql,
@@ -933,11 +933,11 @@ def test_vectorized_kernels_match_sql_templates_duckdb():
     def norm(s):
         return s.lower().strip(" ")
 
-    # MinHash md5 signature
+    # MinHash signature
     sql_rows = {r[0]: list(r[1:]) for r in con.execute(
         minhash_signature_sql("duckdb")).fetchall()}
     for i, t in enumerate(texts):
-        assert _minhash_md5_signature(norm(t)) == sql_rows[i], f"doc {i}"
+        assert _minhash_signature(norm(t)) == sql_rows[i], f"doc {i}"
 
     # SimHash bits + the integer signature used by the pairs join
     bits_rows = dict(con.execute(simhash_sql("duckdb")).fetchall())
@@ -2499,7 +2499,7 @@ def test_minhash_threshold_knob_on_flagship_path(spark):
     from harbourbridge_spark.oraclecheck import register_views
     from harbourbridge_spark.pipeline import dedup as D
 
-    # default == 4x4 banding, both hash kernels
+    # default == 4x4 banding
     b, r = D.bands_rows_for(D.DEFAULT_JACCARD_T)
     assert (b, r) == (D.MINHASH_K // D.BAND_SIZE, D.BAND_SIZE)
     assert D.minhash_bands_sql("spark", "s") == D.minhash_bands_sql(
@@ -2514,13 +2514,9 @@ def test_minhash_threshold_knob_on_flagship_path(spark):
     want = set(con.execute(
         D.minhash_lsh_pairs_sql("duckdb", 0.35)).fetchall())
     assert got == want
-    # the fast kernel honors the same knob (8x2 banding at 0.35)
-    fast = {(rw.doc_a, rw.doc_b) for rw in
-            D.minhash_lsh_pairs_fn(spark, sf_dir, threshold=0.35,
-                                   fast=True).collect()}
     assert "WHEN 7 THEN" in D.minhash_lsh_pairs_sql(
-        "spark", 0.35, fast=True)   # 8 bands present in the derived SQL
-    assert fast  # non-empty at this permissive threshold
+        "spark", 0.35)   # 8 bands present in the derived SQL
+    assert got  # non-empty at this permissive threshold
 
 
 def test_ann_store_e2e_probe_without_corpus(spark, tmp_path):

@@ -17,7 +17,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from harbourbridge_spark.pipeline.dedup import (_hashed_gram_set,
-                                                _minhash_md5_signature,
+                                                _minhash_signature,
                                                 _simhash_int,
                                                 minhash_signature_sql,
                                                 simhash_sql)
@@ -53,7 +53,7 @@ def test_minhash_kernel_matches_template(texts):
     rows = {r[0]: list(r[1:]) for r in con.execute(
         minhash_signature_sql("duckdb")).fetchall()}
     for i, t in enumerate(texts):
-        assert _minhash_md5_signature(_norm(t)) == rows[i]
+        assert _minhash_signature(_norm(t)) == rows[i]
 
 
 @settings(max_examples=40, deadline=None)

@@ -293,6 +293,43 @@ def test_dbapi_writer_distributed_bisection(spark, tmp_path):
     con.close()
 
 
+def test_dbapi_writer_adapts_each_row_once(tmp_path, monkeypatch):
+    """A write that bisects around duplicate keys adapts each row
+    exactly once: retries write the already-adapted rows, while the
+    dropped-row samples keep the original (unadapted) values."""
+    import datetime as dt
+
+    from harbourbridge_spark.sink import dbapi_writer, write_rows_locally
+    from harbourbridge_spark.sink.dbapi_writer import (DbApiInsertWriter,
+                                                       SqliteConnectFactory)
+
+    calls = []
+    adapt = dbapi_writer._adapt
+    monkeypatch.setattr(dbapi_writer, "_adapt",
+                        lambda v: calls.append(v) or adapt(v))
+    factory = SqliteConnectFactory(str(tmp_path / "once.db"))
+    con = factory()
+    con.execute('CREATE TABLE "t" ("id" BIGINT PRIMARY KEY, "d" TEXT)')
+    con.commit()
+    con.close()
+    day = dt.date(2024, 1, 2)
+    dups = {37, 250, 251, 600}
+    rows = [(i, day) for i in range(1000)] + [(i, day) for i in sorted(dups)]
+    stats = write_rows_locally(
+        rows, DbApiInsertWriter(factory, "t", ["id", "d"]),
+        BatchWriterConfig(count_threshold=256))
+    assert stats.retries > 0
+    assert stats.rows_written == 1000
+    assert stats.rows_dropped == len(dups)
+    assert len(calls) == 2 * len(rows)
+    assert sorted(stats.dropped_samples) == [(i, day) for i in sorted(dups)]
+    con = factory()
+    assert con.execute(
+        'SELECT COUNT(*), MIN("d"), MAX("d") FROM "t"').fetchone() == (
+        1000, "2024-01-02", "2024-01-02")
+    con.close()
+
+
 def test_dbapi_writer_paramstyles():
     from harbourbridge_spark.sink import DbApiInsertWriter
 

@@ -154,3 +154,20 @@ def test_text_splits_match_spark_file_partitions(spark, tmp_path,
     finally:
         for k in confs:
             spark.conf.unset(k)
+
+
+@pytest.mark.parametrize("n", [0, 1, 3, 9])
+def test_descriptor_frame_one_partition_per_row_no_exchange(spark, n):
+    """createDataFrame(list) yields defaultParallelism slices whatever
+    the row count; descriptor_frame yields one per row (one for none)
+    without the round-robin exchange a repartition would plan."""
+    from harbourbridge_spark.scan import descriptor_frame
+
+    rows = [(f"p{i}", i, i * 10) for i in range(n)]
+    df = descriptor_frame(spark, rows, "path string, start long, end long")
+    assert df.rdd.getNumPartitions() == max(n, 1)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert sorted(map(tuple, df.collect())) == rows
+    parts = df.rdd.glom().map(len).collect()
+    assert parts == [1] * n or (n == 0 and parts == [0])

@@ -93,15 +93,15 @@ def probe_lsh(spark):
     with scoped_parser_mode(spark, "true"):
         spark.read.parquet(f"{SF}/documents.parquet") \
             .createOrReplaceTempView("documents")
-        t("HOF md5 signature (noop)",
+        t("HOF signature (noop)",
           lambda: noop(spark.sql(minhash_signature_sql("spark"))))
-        sig = t("HOF md5 signature checkpoint",
+        sig = t("HOF signature checkpoint",
                 lambda: spark.sql(
                     minhash_signature_sql("spark")).localCheckpoint())
         sig.createOrReplaceTempView("__prof_sig")
         t("bands join off checkpoint (noop)",
           lambda: noop(spark.sql(minhash_bands_sql("spark", "__prof_sig"))))
-    t("vectorized md5 sig view (checkpoint)",
+    t("vectorized sig view (checkpoint)",
       lambda: vectorized_signature_view(spark, SF, "__prof_vsig"))
     t("full dedup_minhash_lsh (noop)",
       lambda: noop(Q.REGISTRY["dedup_minhash_lsh"].fn(spark, SF)))
