@@ -62,8 +62,10 @@ def scoped_conf(spark, key: str, value: str):
 # at execution time — mutating it later is the session-conf-coupling
 # class this module exists to end.  Every session this repo creates
 # (tests/conftest.py, bench.py, cli.py, tools/) applies
-# RECOMMENDED_SESSION_CONFS; externally-created sessions that skip it
-# keep the documented residual risk (see extract_features).
+# RECOMMENDED_SESSION_CONFS, except the ingest and WARC rehearsals in
+# tools/, which keep the session default their SCALE.md numbers were
+# measured at; externally-created sessions that skip it keep the
+# documented residual risk (see extract_features).
 ARROW_MAX_RECORDS_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 RECOMMENDED_SESSION_CONFS: dict[str, str] = {

@@ -2000,13 +2000,6 @@ REGISTRY["dedup_minhash_lsh_t35"] = QuerySpec(
     "solved from a target Jaccard threshold of 0.35 (8 bands of 2 via "
     "bands_rows_for) — the production knob next to the frozen K=16/r=4 "
     "default; signature from the vectorized kernel")
-REGISTRY["dedup_minhash_lsh_fast"] = QuerySpec(
-    _dedup.minhash_lsh_pairs_fn,
-    _dedup.minhash_lsh_pairs_sql("duckdb"),
-    "MinHash-LSH with the code-point shingle hash and the K "
-    "Carter-Wegman permutation minima computed in the vectorized "
-    "Arrow-batched numpy kernel (no per-element HOF interpretation) — "
-    "the same kernel every LSH entry runs")
 REGISTRY["lsh_bucket_stats"] = QuerySpec(
     _dedup.lsh_bucket_stats_fn,
     _dedup.lsh_bucket_stats_sql("duckdb"),
@@ -3966,10 +3959,7 @@ _CARRYOVER_FROM_PREV_ROUND: list[str] = []
 # any real plan step, plus warc_salvage_stats on the same fused
 # feed) slip to r17 per the declared-carry-over policy.  All 20 are
 # green in this round's two full local sweeps (159/159 twice).
-# q7_volume_shipping slipped after them when the MinHash family's
-# ten entries took the front of the window.
 _CARRYOVER_TO_NEXT_ROUND: list[str] = [
-    "q7_volume_shipping",
     "bpe_apply",
     "multimodal_features", "multimodal_decode_flac",
     "multimodal_decode_aiff", "multimodal_decode_wav",
@@ -3987,8 +3977,8 @@ _CHANGED_THIS_ROUND: list[str] = [
     # the MinHash family change (code-point shingle hash + Carter-Wegman
     # permutations replace the md5 kernel): every entry whose values
     # move leads the window
-    "dedup_minhash_lsh", "dedup_minhash_lsh_t35", "dedup_minhash_lsh_fast",
-    "lsh_bucket_stats", "dedup_lsh_verified", "dedup_clusters",
+    "dedup_minhash_lsh", "dedup_minhash_lsh_t35", "lsh_bucket_stats",
+    "dedup_lsh_verified", "dedup_clusters",
     "dedup_removal_manifest", "dedup_pipeline_materialized",
     "dedup_incremental", "dedup_incremental_against_store",
     # round 16, VERDICT r15 asks 1/4/5: the perceptual image family
@@ -4052,11 +4042,11 @@ _CHANGED_THIS_ROUND: list[str] = [
     # carry-over to make room: its change is lineage-only and the
     # shared merge loop is covered by the bpe_train pin):
     "rollup_region_revenue", "bpe_train", "line_dedup_ccnet",
-    # ---- window boundary: everything below here is the declared
-    # ---- carry-over (must mirror _CARRYOVER_TO_NEXT_ROUND)
     # ...and the q7 scan spread (single consumer, four broadcast
     # joins chained into the scan stage).
     "q7_volume_shipping",
+    # ---- window boundary: everything below here is the declared
+    # ---- carry-over (must mirror _CARRYOVER_TO_NEXT_ROUND)
     "bpe_apply",
     "multimodal_features", "multimodal_decode_flac",
     "multimodal_decode_aiff", "multimodal_decode_wav",

@@ -24,7 +24,7 @@ NBSP_QUERIES = [
     "text_quality", "lang_id_confusion", "doc_fingerprints",
     "token_counts", "doc_surprisal", "doc_repetition",
     "boilerplate_grams", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_minhash_lsh_fast", "dedup_lsh_verified", "dedup_keep_first",
+    "dedup_lsh_verified", "dedup_keep_first",
     "doc_chunks", "vocab_topk", "dedup_simhash", "dedup_simhash_pairs",
     "dedup_removal_manifest", "dedup_clusters",
 ]

@@ -13,8 +13,10 @@ Usage:
   (or entry prefixes with a trailing '*': multimodal_*)
 
 Sessions run on ``local[$SPARK_GRAFT_CPUS]`` (default 32, as in
-bench.py) with bench.py's shuffle-partition count, so an A/B on a
-small box is not oversubscribed.
+bench.py) with bench.py's shuffle-partition count and its recommended
+session confs (``confscope.apply_recommended``, so Arrow kernels see
+bench.py's batch size), so an A/B on a small box is not
+oversubscribed and times what the bench times.
 
 Prints one JSON blob with, per entry, the per-pass raw readings AND
 the per-pass in-child canaries (VERDICT r13 ask 5): normalization
@@ -36,16 +38,17 @@ tree = os.environ["AB_TREE"]
 sys.path.insert(0, tree)
 from pyspark.sql import SparkSession
 from harbourbridge_spark import queries as Q
+from harbourbridge_spark.confscope import apply_recommended
 
 cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")    # bench.py's default
-spark = (SparkSession.builder.master(f"local[{cpus}]")
+spark = (apply_recommended(SparkSession.builder.master(f"local[{cpus}]")
          .appName("ab-bench")
          .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
          .config("spark.driver.memory", "16g")
-         .config("spark.ui.enabled", "false")
+         .config("spark.ui.enabled", "false"))
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 

@@ -58,10 +58,11 @@ def main(argv: list[str]) -> int:
     from pyspark.sql import SparkSession
 
     from harbourbridge_spark import queries as Q
+    from harbourbridge_spark.confscope import apply_recommended
 
-    spark = (SparkSession.builder.master("local[2]")
+    spark = (apply_recommended(SparkSession.builder.master("local[2]")
              .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.ui.enabled", "false").getOrCreate())
+             .config("spark.ui.enabled", "false")).getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
     names = argv or list(Q.REGISTRY)

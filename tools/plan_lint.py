@@ -110,7 +110,7 @@ TINY_CROSS_OK = {
     # literal VALUES band list (4-8 rows) cross-joined for band
     # expansion (_band_expand_clause)
     "dedup_minhash_lsh": 6, "dedup_minhash_lsh_t35": 6,
-    "dedup_minhash_lsh_fast": 6, "lsh_bucket_stats": 1,
+    "lsh_bucket_stats": 1,
     "dedup_incremental": 5,
     # ANN: the n_queries<=10 query side broadcasts onto a non-equi
     # (vec_id !=) probe — the documented brute-force/recall design
@@ -180,10 +180,11 @@ def main(argv: list[str]) -> int:
     from pyspark.sql import SparkSession
 
     from harbourbridge_spark import queries as Q
+    from harbourbridge_spark.confscope import apply_recommended
 
-    spark = (SparkSession.builder.master("local[4]")
+    spark = (apply_recommended(SparkSession.builder.master("local[4]")
              .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.ui.enabled", "false").getOrCreate())
+             .config("spark.ui.enabled", "false")).getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     names = argv or list(Q.REGISTRY)
     failures = {}

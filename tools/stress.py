@@ -55,7 +55,7 @@ from harbourbridge_spark.confscope import apply_recommended  # noqa: E402
 #   simhash_pairs 3.89 (old shared gate 4.0 left 3 % headroom — below
 #   documented env noise; rebased to measured x1.3) / ann_lsh 2.48.
 OP_BUDGETS = {
-    "dedup_minhash_lsh_fast": 4.0,
+    "dedup_minhash_lsh": 4.0,
     "dedup_lsh_verified": 5.5,
     "dedup_embedding_lsh": 4.0,
     "boilerplate_grams": 3.0,
