@@ -31,6 +31,8 @@ from ..confscope import scoped_parser_mode
 from ..scan import read_cached, read_spread, read_store
 
 import warnings
+from fractions import Fraction
+from itertools import combinations
 from typing import Iterator
 
 import numpy as np
@@ -203,6 +205,13 @@ def minhash_signature_sql(engine: str, k: int = MINHASH_K) -> str:
     return render(t, engine)
 
 
+def _band_key_sql(b: int, band_size: int) -> str:
+    """Band ``b``'s bucket key over the signature columns ``m*``:
+    concat_ws skips NULLs, so every NULL-text document keys ''."""
+    return "concat_ws(',', {})".format(", ".join(
+        f"m{i}" for i in range(b * band_size, (b + 1) * band_size)))
+
+
 def _band_expand_clause(sig_source: str, n_bands: int,
                         band_size: int, cte_name: str = "bands") -> str:
     """Just the band-expansion CTE text (``<cte_name> AS (...)``) over
@@ -211,9 +220,7 @@ def _band_expand_clause(sig_source: str, n_bands: int,
     twice under different names; the name is a parameter so no caller
     has to string-surgery the SQL)."""
     band_key = "CASE t.band " + " ".join(
-        "WHEN {b} THEN concat_ws(',', {cols})".format(
-            b=b, cols=", ".join(
-                f"m{i}" for i in range(b * band_size, (b + 1) * band_size)))
+        f"WHEN {b} THEN {_band_key_sql(b, band_size)}"
         for b in range(n_bands)) + " END"
     values = ",".join(f"({b})" for b in range(n_bands))
     return f"""{cte_name} AS (
@@ -369,7 +376,28 @@ def _text_udf(make_kernel, return_type: str):
     return text_udf
 
 
-def vectorized_signature_df(docs, materialize=True):
+def _signature_grams_udf():
+    """Iterator pandas_udf of the fused per-document pass: each
+    normalized text's MinHash signature (_minhash_signature) and its
+    hashed word-3-gram set (_gram_set_kernel, over a per-task memo)
+    in one Arrow round trip.  NULL text gets what the templates give
+    it: a NULL signature and the gram set of '' (their gram count
+    ``greatest(len(t) - n, 0)`` skips the NULL length, so they form
+    one gram, concat_ws over NULL tokens: '')."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("sig array<bigint>, grams array<bigint>")
+    def sig_grams(texts_it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        grams_of = _gram_set_kernel({})
+        for texts in texts_it:
+            yield pd.DataFrame(
+                [(None, grams_of("")) if t is None
+                 else (_minhash_signature(t), grams_of(t)) for t in texts],
+                columns=["sig", "grams"])
+    return sig_grams
+
+
+def vectorized_signature_df(docs, materialize=True, grams=False):
     """The checkpointed MinHash signature of a ``(doc_id, text, …)``
     DataFrame, computed by an Arrow-batched pandas_udf over
     _minhash_signature (bit-identical to minhash_signature_sql()).
@@ -378,6 +406,10 @@ def vectorized_signature_df(docs, materialize=True):
     store-write paths — see minhash_lsh_pairs_fn for why the kernel
     beats the interpreted SQL higher-order functions.
 
+    ``grams=True`` adds each document's hashed word-3-gram set
+    (``grams``, the values of _gram_relation(hashed=True)) from the
+    same Python pass, for lsh_verified_pairs_fn.
+
     ``materialize=False`` skips the localCheckpoint for callers that
     consume the signature exactly ONCE (single-reference plans: the
     non-admitting store probe, the store write); multi-reference
@@ -385,7 +417,10 @@ def vectorized_signature_df(docs, materialize=True):
     reference."""
     from pyspark.sql import functions as F
 
-    sig_udf = _text_udf(lambda: _minhash_signature, "array<bigint>")
+    if grams:
+        sig_udf = _signature_grams_udf()
+    else:
+        sig_udf = _text_udf(lambda: _minhash_signature, "array<bigint>")
     docs = docs.select("doc_id", F.trim(F.lower("text")).alias("nt"))
     # callers pass a spread input (scan.read_spread) — the documents
     # fixture is a single parquet row group → 1 scan partition, and
@@ -393,10 +428,12 @@ def vectorized_signature_df(docs, materialize=True):
     # into ONE task (the synth_media _spread_ids lesson).  No .rdd
     # probe here: the input may carry an AQE shuffle, whose stages a
     # probe would materialize early.
-    sig = (docs.select("doc_id", sig_udf("nt").alias("sig"))
+    out, sig_col, tail = (("k", "k.sig", ["k.grams"]) if grams
+                          else ("sig", "sig", []))
+    sig = (docs.select("doc_id", sig_udf("nt").alias(out))
            .select("doc_id",
-                   *[F.element_at("sig", i + 1).alias(f"m{i}")
-                     for i in range(MINHASH_K)]))
+                   *[F.element_at(sig_col, i + 1).alias(f"m{i}")
+                     for i in range(MINHASH_K)], *tail))
     return sig.localCheckpoint() if materialize else sig
 
 
@@ -770,41 +807,38 @@ def _hashed_gram_set(nt: str, n: int = 3) -> list:
     return _gram_set_kernel({}, n)(nt)
 
 
+VERIFY_T = 0.4          # n-gram Jaccard a verified pair must reach
+_JACCARD = "inter / CAST(la + lb - inter AS DOUBLE)"
+
+
 def lsh_verify_sql(engine: str, cand_source: str, n: int = 3,
-                   threshold: float = 0.4, extra_ctes: str = "",
-                   gram_source: str = "") -> str:
+                   threshold: float = VERIFY_T,
+                   extra_ctes: str = "") -> str:
     """The verify stage wired to its candidate feed: n-gram Jaccard
     computed ONLY for pairs in ``cand_source`` (doc_a, doc_b). Two
     equi-joins on doc_id bring each side's gram set to the candidate
-    row — work is O(|candidates|), never quadratic in a block. Pass
-    ``gram_source`` (doc_id, grams) to reuse a pre-materialized gram
-    relation (the Spark path caches grams for candidate-involved docs
-    only — at scale candidates << corpus)."""
-    if gram_source:
-        g_cte = ""
-        g = gram_source
-    else:
-        g_cte = (f"g AS (\n        "
-                 f"{_gram_relation(engine, n, hashed=True)}\n    ), ")
-        g = "g"
+    row — work is O(|candidates|), never quadratic in a block."""
+    g = _gram_relation(engine, n, hashed=True)
     # size prefilter: jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs
     # failing the ratio can never reach the threshold — skips the
     # intersection for them without changing any result
     t = f"""
-    WITH {extra_ctes}{g_cte}j AS (
+    WITH {extra_ctes}g AS (
+        {g}
+    ), j AS (
         SELECT c.doc_a, c.doc_b,
                {{alen}}({{ainter}}(a.grams, b.grams)) AS inter,
                {{alen}}(a.grams) AS la, {{alen}}(b.grams) AS lb
         FROM {cand_source} c
-        JOIN {g} a ON a.doc_id = c.doc_a
-        JOIN {g} b ON b.doc_id = c.doc_b
+        JOIN g a ON a.doc_id = c.doc_a
+        JOIN g b ON b.doc_id = c.doc_b
          AND least({{alen}}(a.grams), {{alen}}(b.grams))
              >= {threshold} * greatest({{alen}}(a.grams), {{alen}}(b.grams))
     )
     SELECT doc_a, doc_b,
-           round(inter / CAST(la + lb - inter AS DOUBLE), 6) AS jaccard
+           round({_JACCARD}, 6) AS jaccard
     FROM j
-    WHERE inter / CAST(la + lb - inter AS DOUBLE) >= {threshold}
+    WHERE {_JACCARD} >= {threshold}
     """
     return render(t, engine)
 
@@ -817,59 +851,117 @@ def lsh_verified_pairs_sql(engine: str) -> str:
                           extra_ctes=f"cand AS ({cand}),\n    ")
 
 
+def _with_set(member):
+    doc, grams = member
+    return doc, set(grams.tolist())
+
+
+def _all_pairs(held):
+    if len(held) > 1:
+        yield from combinations(map(_with_set, held), 2)
+
+
+def _candidate_pairs(rows):
+    """The candidate pairs of the bucket pass as ``((doc_a, grams_a),
+    (doc_b, grams_b))`` with gram sets.  ``rows`` are ``(band, key,
+    doc_id, grams)`` sorted by (band, key, doc_id), so each band
+    bucket is one run of rows.  Up to MAX_BUCKET members are held and
+    paired all-vs-all when the run ends; the member that takes a
+    bucket over the cap makes it a star on its first (min) doc_id, as
+    _bands_clause_window_at pairs it, and from then on each member is
+    paired with that representative as it is read.  So at most
+    MAX_BUCKET + 1 members of one bucket are ever held."""
+    cur, held, rep = None, [], None
+    for band, key, doc, grams in rows:
+        if (band, key) != cur:
+            if rep is None:
+                yield from _all_pairs(held)
+            cur, held, rep = (band, key), [], None
+        if rep is not None:
+            yield rep, _with_set((doc, grams))
+        elif len(held) < MAX_BUCKET:
+            held.append((doc, grams))
+        else:
+            rep, *rest = map(_with_set, held + [(doc, grams)])
+            for m in rest:
+                yield rep, m
+            held = []
+    if rep is None:
+        yield from _all_pairs(held)
+
+
+_PAIR_COLS = ["doc_a", "doc_b", "inter", "la", "lb"]
+
+
+def _bucket_verify(batches):
+    """mapInPandas body of lsh_verified_pairs_fn: the pairs of
+    _candidate_pairs over rows streamed across Arrow batches (a bucket
+    over maxRecordsPerBatch rows spans several), kept when they pass
+    lsh_verify_sql's size-ratio prefilter ``min(la, lb) >= t * max(la,
+    lb)``, here in exact integers, and emitted as ``(doc_a, doc_b,
+    inter, la, lb)``."""
+    num, den = Fraction(str(VERIFY_T)).as_integer_ratio()
+    rows = (r for batch in batches for r in zip(
+        batch["band"].tolist(), batch["key"].tolist(),
+        batch["doc_id"].tolist(), batch["grams"].tolist()))
+    out = []
+    for (a, ga), (b, gb) in _candidate_pairs(rows):
+        la, lb = len(ga), len(gb)
+        if min(la, lb) * den >= num * max(la, lb):
+            out.append((a, b, len(ga & gb), la, lb))
+            if len(out) == 10_000:
+                yield pd.DataFrame(out, columns=_PAIR_COLS)
+                out = []
+    if out:
+        yield pd.DataFrame(out, columns=_PAIR_COLS)
+
+
+def _band_rows(sig):
+    """``(band, key, doc_id, grams)``: one row per band of every
+    document of the fused signature relation, keyed as
+    _band_expand_clause keys it."""
+    from pyspark.sql import functions as F
+
+    return sig.where("doc_id IS NOT NULL").select(F.inline(F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.expr(_band_key_sql(b, BAND_SIZE)).alias("key"),
+                 "doc_id", "grams")
+        for b in range(MINHASH_K // BAND_SIZE)])))
+
+
 def lsh_verified_pairs_fn(spark, sf_dir: str):
-    """Spark execution strategy: materialize LSH candidates off the
-    cached signature (minhash_lsh_pairs_fn) into a cached table (they
-    feed three references), then compute gram sets ONLY for docs that
-    appear in a candidate pair — the id semi-join runs BEFORE the gram
-    projection, so at scale (candidates << corpus) the expensive
-    tokenize+gram work touches a sliver of the data. The verify joins
-    are doc_id equi-joins; no quadratic term anywhere.
+    """Spark execution strategy of lsh_verified_pairs_sql in two
+    Python passes and no join:
 
-    The candidate signature comes from the vectorized kernel
-    (bit-identical to the SQL template the oracle inlines)."""
-    vectorized_signature_view(spark, sf_dir, "__mh_sig")
-    with scoped_parser_mode(spark, "true"):
-        pairs = spark.sql(minhash_bands_sql("spark", "__mh_sig"))
-        # localCheckpoint materializes the candidate pairs ONCE and replaces
-        # the CTE-heavy lineage with a scan of the checkpointed partitions.
-        # Plain .cache()/CACHE TABLE both fail here on Spark 4.1: .cache()
-        # crashes the CTE-pruning optimizer rule
-        # (PushdownPredicatesAndPruneColumnsForCTEDef), and CACHE TABLE's
-        # cache lookup misses on re-analyzed CTE plans, silently recomputing
-        # the band join for every reference (3x here — observed in the
-        # executed plan).
-        pairs = pairs.localCheckpoint()
-        pairs.createOrReplaceTempView("__mh_cand")
-        # gram sets for candidate docs via the vectorized kernel (hashed
-        # word 3-grams, values identical to the SQL template — same token
-        # split as the SimHash kernel, same md5 hash48)
-        from pyspark.sql import functions as F
+    1. one Arrow pass per document emits its signature AND its hashed
+       gram set (vectorized_signature_df(grams=True), checkpointed);
+    2. the bands expand with the gram sets, one exchange brings each
+       band bucket into one partition, sorted by (band, key, doc_id),
+       and one mapInPandas pass (_bucket_verify) forms each bucket's
+       candidate pairs (all-vs-all, or star over MAX_BUCKET) and
+       intersects their gram sets where they lie.
 
-        gram_udf = _text_udf(lambda: _gram_set_kernel({}), "array<bigint>")
-        ids = (pairs.select(F.col("doc_a").alias("doc_id"))
-               .union(pairs.select(F.col("doc_b").alias("doc_id")))
-               .distinct())
-        # plain read: the candidate-id semi-join prunes the corpus
-        # to a tiny relation in one cheap task — spreading the full text
-        # column ahead of it would shuffle the whole corpus for nothing;
-        # the repartition AFTER the join is what feeds the gram kernel
-        docs = (read_cached(spark, f"{sf_dir}/documents.parquet")
-                .join(ids, "doc_id")
-                .select("doc_id", F.trim(F.lower("text")).alias("nt")))
-        # spread the gram kernel: AQE coalesces the tiny
-        # semi-join output to ~1 post-shuffle partition, serializing
-        # the Python stage into one task — same starvation class as
-        # the single-row-group signature scan.  Unconditional (no
-        # .rdd probe: materializing an AQE join plan's RDD would
-        # execute its query stages early)
-        par = spark.sparkContext.defaultParallelism
-        docs = docs.repartition(par)
-        grams = (docs.select("doc_id", gram_udf("nt").alias("grams"))
-                 .localCheckpoint())
-        grams.createOrReplaceTempView("__mh_grams")
-        return spark.sql(lsh_verify_sql("spark", "__mh_cand",
-                                        gram_source="__mh_grams"))
+    A pair that shares several buckets is emitted once per bucket with
+    the same counts, so one ``distinct`` dedups them; the Jaccard
+    rounding and threshold stay Spark expressions, the text of
+    lsh_verify_sql.  Gram sets are computed for every document,
+    candidate or not, which is the price of a single kernel pass (at
+    sf0.1, 4,130 of 5,000 documents are candidates).  doc_id is the
+    corpus key and is taken as never NULL: a NULL id, which the
+    template counts toward its bucket's size but never pairs, is
+    dropped here."""
+    sig = vectorized_signature_df(
+        read_spread(spark, f"{sf_dir}/documents.parquet"), grams=True)
+    t = sig.schema["doc_id"].dataType.simpleString()
+    par = spark.sparkContext.defaultParallelism
+    pairs = (_band_rows(sig).repartition(par, "band", "key")
+             .sortWithinPartitions("band", "key", "doc_id")
+             .mapInPandas(_bucket_verify, f"doc_a {t}, doc_b {t}, "
+                                          "inter int, la int, lb int")
+             .distinct())
+    return (pairs.where(f"{_JACCARD} >= {VERIFY_T}")
+            .selectExpr("doc_a", "doc_b",
+                        f"round({_JACCARD}, 6) AS jaccard"))
 
 
 # Largest verified-pair graph, in edge rows, that dedup_clusters_fn

@@ -2009,8 +2009,10 @@ REGISTRY["lsh_bucket_stats"] = QuerySpec(
 REGISTRY["dedup_lsh_verified"] = QuerySpec(
     _dedup.lsh_verified_pairs_fn,
     _dedup.lsh_verified_pairs_sql("duckdb"),
-    "LSH candidates -> n-gram Jaccard verify, computed ONLY for "
-    "candidate pairs (the 100 TB dedup verify stage; no within-block "
+    "LSH candidates -> n-gram Jaccard verify (the 100 TB dedup verify "
+    "stage): one Arrow pass emits each document's signature and gram "
+    "set, then one pass per band bucket pairs and verifies the "
+    "bucket's members where they lie (no join, no within-block "
     "self-join)")
 _register_template(
     "dedup_keep_first", _dedup.dedup_keep_first_sql,
@@ -3976,7 +3978,10 @@ _CARRYOVER_TO_NEXT_ROUND: list[str] = [
 _CHANGED_THIS_ROUND: list[str] = [
     # the MinHash family change (code-point shingle hash + Carter-Wegman
     # permutations replace the md5 kernel): every entry whose values
-    # move leads the window
+    # move leads the window.  The four verified-pair consumers below
+    # also run the bucket-local verify pass (lsh_verified_pairs_fn:
+    # fused signature+gram kernel, no verify joins), so they stay
+    # pinned for that change as well
     "dedup_minhash_lsh", "dedup_minhash_lsh_t35", "lsh_bucket_stats",
     "dedup_lsh_verified", "dedup_clusters",
     "dedup_removal_manifest", "dedup_pipeline_materialized",

@@ -2338,6 +2338,205 @@ def test_lsh_verified_pairs_keeps_callers_documents_view(spark, tmp_path):
         if prior is not None:
             prior.createOrReplaceTempView("documents")
 
+
+FUSED_TEXTS = ["near duplicate documents share shingles",
+               "unicode éü中文 text", "😀🎉 emoji beyond the BMP 😀",
+               "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 fraktur", "abcd", "abc", "ab", "a", "", "   ",
+               " \t ", "tab\tsep\ttokens", "日本", None]
+
+
+def test_fused_signature_pass_matches_kernels_and_templates(spark):
+    """vectorized_signature_df(grams=True) — one Arrow pass — gives
+    each document the signature of _minhash_signature and the gram
+    set of _hashed_gram_set, and both equal the SQL templates in
+    Spark and in DuckDB, on non-ASCII, non-BMP, 1-4 character, empty,
+    whitespace-only and NULL text."""
+    import duckdb
+
+    ms = [f"m{i}" for i in range(dedup.MINHASH_K)]
+    docs = spark.createDataFrame(list(enumerate(FUSED_TEXTS)),
+                                 "doc_id long, text string")
+    fused = dedup.vectorized_signature_df(docs, grams=True).collect()
+    sigs = {r.doc_id: [r[m] for m in ms] for r in fused}
+    grams = {r.doc_id: sorted(r.grams) for r in fused}
+    for i, t in enumerate(FUSED_TEXTS):
+        # NULL text: NULL minima, and the templates' gram set of ''
+        nt = "" if t is None else t.lower().strip(" ")
+        assert sigs[i] == ([None] * dedup.MINHASH_K if t is None
+                           else dedup._minhash_signature(nt)), (i, t)
+        assert grams[i] == sorted(dedup._hashed_gram_set(nt)), (i, t)
+
+    # the Spark gram template indexes past the end of a short text's
+    # token array, which ANSI mode rejects, so only its signature
+    # template runs here; DuckDB runs both
+    docs.createOrReplaceTempView("documents")
+    try:
+        spark_sigs = {r[0]: list(r[1:]) for r in spark.sql(
+            dedup.minhash_signature_sql("spark")).select("doc_id", *ms)
+            .collect()}
+    finally:
+        spark.catalog.dropTempView("documents")
+    assert spark_sigs == sigs
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)",
+                    list(enumerate(FUSED_TEXTS)))
+    assert {r[0]: list(r[1:]) for r in con.execute(
+        dedup.minhash_signature_sql("duckdb")).fetchall()} == sigs
+    assert {i: sorted(g) for i, g in con.execute(
+        dedup._gram_relation("duckdb", hashed=True)).fetchall()} == grams
+
+
+def _bucket_corpus() -> list:
+    """300 identical documents (a bucket over MAX_BUCKET in every
+    band, so longer than one 256-row Arrow batch), 24 one-word edits of
+    them in identical twos, a second base with a handful of edits,
+    unrelated singletons, and NULL, empty and whitespace-only texts."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"{a}{b}" for a in "bcdfghklmnprstvz" for b in "aeiou"]
+
+    def text(n):
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    base, other = text(60).split(), text(40).split()
+    rows = [(i, " ".join(base)) for i in range(300)]
+    for k in range(12):
+        t = list(base)
+        t[5 * k] = f"edit{k}"
+        rows += [(1000 + 2 * k, " ".join(t)), (1001 + 2 * k, " ".join(t))]
+    for k in range(6):
+        t = list(other)
+        t[7 * k] = f"swap{k}"
+        rows.append((2000 + k, " ".join(t)))
+    rows += [(3000 + k, text(50)) for k in range(40)]
+    # NULL texts share the key '' in every band and pair at 1.0, as
+    # '' and whitespace-only text do
+    rows += [(4000, None), (4001, None), (4002, ""), (4003, "   ")]
+    return [(i, t, "en", "s", len(t or "")) for i, t in rows]
+
+
+def _write_docs(spark, rows, sf_dir: str) -> None:
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, "
+        "n_chars long").write.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _duck_verified(sf_dir: str) -> set:
+    import duckdb
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/documents.parquet/*.parquet')")
+    return set(con.execute(dedup.lsh_verified_pairs_sql("duckdb"))
+               .fetchall())
+
+
+def test_bucket_verify_matches_duckdb_over_a_capped_bucket(spark, tmp_path):
+    """A 300-document bucket (star pairs, spread over several Arrow
+    batches) plus near copies and small buckets: the bucket pass gives
+    exactly the rows of DuckDB lsh_verified_pairs_sql."""
+    sf_dir = str(tmp_path)
+    _write_docs(spark, _bucket_corpus(), sf_dir)
+    want = _duck_verified(sf_dir)
+    got = {tuple(r) for r in
+           dedup.lsh_verified_pairs_fn(spark, sf_dir).collect()}
+    assert len(want) > 299 and got == want
+    # the capped bucket pairs each identical doc with doc 0 only
+    assert {(a, b) for a, b, _ in got if b < 300} == \
+        {(0, b) for b in range(1, 300)}
+
+
+def test_bucket_verify_carries_buckets_across_batch_edges(spark, tmp_path):
+    """_bucket_verify fed the real band rows of _bucket_corpus in
+    256-row batches whose first edge falls inside a two-document
+    bucket (the 300-document buckets span edges anyway) emits exactly
+    what it emits from one batch, and those pairs, verified, are the
+    DuckDB pairs."""
+    from fractions import Fraction
+
+    import numpy as np
+
+    sf_dir = str(tmp_path)
+    _write_docs(spark, _bucket_corpus(), sf_dir)
+    sig = dedup.vectorized_signature_df(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), grams=True)
+    rows = dedup._band_rows(sig).toPandas() \
+        .sort_values(["band", "key", "doc_id"], ignore_index=True)
+    # mapInPandas hands the kernel each array<bigint> as an ndarray
+    rows["grams"] = rows["grams"].map(np.asarray)
+    bucket = list(zip(rows.band, rows.key))
+    sizes = pd.Series(bucket).map(pd.Series(bucket).value_counts())
+    cut = next(i for i in range(1, len(rows))
+               if bucket[i] == bucket[i - 1] and sizes[i] == 2)
+    batches = [rows[:cut]] + [rows[i:i + 256]
+                              for i in range(cut, len(rows), 256)]
+    assert len(batches) > 2
+
+    def verify(bs):
+        out = pd.concat(list(dedup._bucket_verify(iter(bs))))
+        return sorted(map(tuple, out.itertuples(index=False)))
+
+    cut_out = verify(batches)
+    assert cut_out == verify([rows])
+    t = Fraction(str(dedup.VERIFY_T))
+    verified = {(a, b) for a, b, i, la, lb in set(cut_out)
+                if Fraction(i, la + lb - i) >= t}
+    assert verified == {(a, b) for a, b, _ in _duck_verified(sf_dir)}
+
+
+def test_candidate_pairs_stream_a_capped_bucket():
+    """A bucket of exactly MAX_BUCKET members pairs all-vs-all; in a
+    bucket over the cap each member is paired with the min doc as soon
+    as it is read, so no more than MAX_BUCKET + 1 rows of a bucket wait
+    in the worker, whatever its size."""
+    import numpy as np
+
+    cap, n = dedup.MAX_BUCKET, 3 * dedup.MAX_BUCKET
+    grams = np.arange(5)
+    pulled = 0
+
+    def rows():
+        nonlocal pulled
+        for i in range(cap):
+            yield 0, "full", i, grams
+        for i in range(n):
+            pulled += 1
+            yield 1, "star", i, grams
+
+    seen = [(a, b, pulled) for (a, _), (b, _) in
+            dedup._candidate_pairs(rows())]
+    full = [(a, b) for a, b, _ in seen[:cap * (cap - 1) // 2]]
+    assert full == [(i, j) for i in range(cap) for j in range(i + 1, cap)]
+    star = seen[cap * (cap - 1) // 2:]
+    assert [(a, b) for a, b, _ in star] == [(0, b) for b in range(1, n)]
+    assert all(p == max(b, cap) + 1 for _, b, p in star)
+
+
+def test_lsh_verified_pairs_job_count_is_fixed(spark, tmp_path):
+    """The verified pairs cost the same number of Spark jobs on every
+    run: the kernel checkpoint, the bucket exchange, the distinct
+    exchange and the caller's checkpoint, with no join whose build
+    side AQE picks by which shuffle finishes first."""
+    from harbourbridge_spark.scan import read_cached
+
+    sf_dir = str(tmp_path)
+    _write_docs(spark, _bucket_corpus(), sf_dir)
+    # a path's first read infers its schema in a job of its own
+    read_cached(spark, f"{sf_dir}/documents.parquet")
+    sc = spark.sparkContext
+    counts = []
+    for run in range(3):
+        group = f"lsh-verified-jobs-{run}"
+        sc.setJobGroup(group, group)
+        try:
+            dedup.lsh_verified_pairs_fn(spark, sf_dir).localCheckpoint()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts[0] == counts[1] == counts[2] <= 6, counts
+
 def test_jpeg_422_subsample_roundtrip():
     """4:2:2 (horizontal-only chroma subsample) exercises the
     decoder's asymmetric upsample path end to end."""

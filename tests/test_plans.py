@@ -133,17 +133,14 @@ def test_partitioned_write_enables_pruning(spark, tmp_path):
 
 
 def test_lsh_verified_no_block_selfjoin(spark):
-    """The verify stage must join documents to the candidate relation
-    on doc_id equality — never a within-block documents self-join and
-    never a cartesian pair-forming term. (The 4-row VALUES band
-    expansion legitimately prints as a Cross BroadcastNestedLoopJoin;
-    what must NOT appear is a nested-loop join whose condition forms
-    doc pairs, i.e. references doc_id.)"""
+    """The verify stage forms and verifies pairs inside the band
+    buckets (one MapInPandas over the bucket exchange): no join of any
+    kind, so never a within-block documents self-join and never a
+    cartesian pair-forming term."""
     plan = _plan(spark, "dedup_lsh_verified")
     assert "CartesianProduct" not in plan
-    for line in plan.splitlines():
-        if "BroadcastNestedLoopJoin" in line:
-            assert "doc_id" not in line, line
+    assert "Join" not in plan
+    assert "MapInPandas" in plan
     opt = _optimized(spark, "dedup_lsh_verified")
     # no join keyed on (lang, len_bucket) blocking anywhere
     assert "len_bucket" not in opt

@@ -83,6 +83,11 @@ PYTHON_KERNEL_OK = {
     # aggregate fold — quadratic-capped blocks, Arrow-batched by
     # design (OPTIMIZATION_r16.md §2)
     "dedup_semdedup",
+    # the LSH verify pass: one mapInPandas over the band buckets
+    # (_bucket_verify) pairs and verifies each bucket where it lies;
+    # its input kernel is checkpointed, the bucket pass is the entry's
+    # final stage
+    "dedup_lsh_verified",
     # NOTE: the perceptual hash64 entries (phash/audio_fp/video_phash
     # batch dedup + every incremental probe) do NOT appear here since
     # r16 — _hash64_cluster localCheckpoints its input, so their
