@@ -30,7 +30,7 @@ import os
 import re
 from typing import Iterator, Optional, TextIO, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .. import schema_ir as ir
 from ..context import MigrationContext
@@ -38,14 +38,11 @@ from ..convert import ConversionResult, convert_table
 from ..scan import descriptor_frame, file_splits, text_sizes
 from ..toddl import schema_to_ddl
 from ..types import SourceType
-from .pgdump import (StagingWriter, _DIST_MIN_SERIAL_SEC,
-                     _DIST_SCAN_FORCE_BYTES, _ESC_OR_QUOTE_RE,
-                     _OffsetReader, _PARSED_SCHEMA, _RANGE_FLOOR,
-                     _VALUE_ACTION_RE, _choose_distributed,
-                     _collect_scan_events,
-                     _estimate_serial_scan_sec,
-                     _reconcile_pg_scan, _scan_pg_range,
-                     _write_sequenced_values, read_staged_table)
+from .pgdump import (StagingWriter, _ESC_OR_QUOTE_RE, _OffsetReader,
+                     _VALUE_ACTION_RE, _collect_span_meta, _data_spans,
+                     _plan_ranges, _range_scan_job, _reconcile_ranges,
+                     _scan_serial, _sequence_spans, _tokenize_spans,
+                     _tokenizer, read_staged_table)
 
 _COND_COMMENT_RE = re.compile(r"/\*!\d{5}\s+(.*?)\*/", re.DOTALL)
 _SPATIAL_TYPES = ("geometry", "point", "linestring", "polygon",
@@ -618,11 +615,6 @@ _ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "0": "\0", "b": "\b",
             "_": "\\_"}
 
 
-# action-character patterns shared with pgdump (byte-identical there;
-# imported, not redefined)
-_MY_VALUE_ACTION_RE = _VALUE_ACTION_RE
-_MY_ESC_OR_QUOTE_RE = _ESC_OR_QUOTE_RE
-
 
 def parse_insert_values(values_text: str) -> list[list[Optional[str]]]:
     """Tokenize (...),(...) tuples with MySQL escaping. Returns rows of
@@ -645,7 +637,7 @@ def parse_insert_values(values_text: str) -> list[list[Optional[str]]]:
         was_quoted = False
         while i < n:
             if in_squote:
-                m = _MY_ESC_OR_QUOTE_RE.search(values_text, i)
+                m = _ESC_OR_QUOTE_RE.search(values_text, i)
                 if not m:
                     i = n
                     break
@@ -668,7 +660,7 @@ def parse_insert_values(values_text: str) -> list[list[Optional[str]]]:
                     cur.append(ch)
                     i += 1
                 continue
-            m = _MY_VALUE_ACTION_RE.search(values_text, i)
+            m = _VALUE_ACTION_RE.search(values_text, i)
             if not m:
                 i = n
                 break
@@ -888,9 +880,11 @@ def stage_mysql_dump_data(ctx: MigrationContext, stream: TextIO,
 #
 # mysqldump data is extended INSERT statements; both the statement-
 # boundary scan AND the VALUES tokenization (quote machine + escapes,
-# parse_insert_values) now run as byte-range Spark tasks in one fused
-# pass, sharing pgdump's speculative-scan + trusted-cursor
-# reconciliation machinery (see the design comment there).  mysql has
+# parse_insert_values) run as byte-range Spark tasks in one fused
+# pass on pgdump's dump reader (range plan and cutover, range job,
+# trusted-cursor reconciliation, span tokenizer and sequence walk; see
+# the design comment there).  This module supplies only its statement
+# scanner, its has-data predicate and its tokenize kernel.  mysql has
 # no COPY data blocks, so no terminator syncs are needed; the one
 # dialect-specific construct is the DELIMITER stored-program block,
 # which travels as a single whole-block event (emitted at its close
@@ -1015,156 +1009,6 @@ def _scan_mysql_statements(f, chunk_bytes: int = 32 << 20,
     yield ("end", r.base + r.pos, True)
 
 
-def _scan_tokenize_mysql_distributed(spark: SparkSession,
-                                     ctx: MigrationContext,
-                                     paths: list, chunk_bytes: int):
-    """mysql twin of pgdump._scan_paths_distributed: byte-range FUSED
-    scan + tokenize as one Spark job, driver reconciliation with the
-    shared trusted-cursor machinery (DELIMITER blocks advance the
-    cursor as single events), serial-scan cutover by timed probe.
-    Returns (file_events, parsed, counts, unknowns, recovery):
-    counts = {(path, rng, span_start, table): (n_rows, first_off)},
-    unknowns = [(path, rng, span_start, off, msg)],
-    recovery = {(path, rng, span_start, table): (reparsed,
-    unparsable)} — per accepted span, so rejected speculative output
-    never pollutes the counters."""
-    import json as _json
-    import math as _math
-
-    schema_cols_by_table = {t: list(s.col_names)
-                           for t, s in ctx.src_schema.items()}
-    sizes = {p: os.path.getsize(p) for p in paths}
-    total = sum(sizes.values())
-    par = max(int(spark.sparkContext.defaultParallelism), 1)
-    range_bytes = max(_RANGE_FLOOR,
-                      min(chunk_bytes, _math.ceil(total / par) or 1))
-    descs = []
-    for p in paths:
-        n = sizes[p]
-        for ri, s in enumerate(range(0, n, range_bytes)):
-            descs.append((p, ri, s, min(s + range_bytes, n)))
-
-    serial = len(descs) <= 1
-    if not serial and total < _DIST_SCAN_FORCE_BYTES:
-        serial = not _choose_distributed(
-            _estimate_serial_scan_sec(
-                paths, sizes, chunk_bytes,
-                scanner=_scan_mysql_statements),
-            total, _DIST_MIN_SERIAL_SEC)
-    if serial:
-        file_events: dict[str, list] = {}
-        span_rows = []
-        for p in paths:
-            if sizes[p] == 0:
-                file_events[p] = []
-                continue
-            with open(p, "rb") as f:
-                events, _stop, _clean = _collect_scan_events(
-                    f, 0, None, chunk_bytes, hard_allowance=None,
-                    scanner=_scan_mysql_statements,
-                    is_data=_my_is_data_stmt)
-            for ev in events:
-                if ev[0] == "span":
-                    ev.append(0)
-                    if ev[4]:
-                        span_rows.append((p, 0, ev[1], ev[2]))
-            file_events[p] = events
-        if span_rows:
-            parsed, counts, unknowns, recovery = _tokenize_mysql_spans(
-                spark, ctx, span_rows)
-        else:
-            parsed, counts, unknowns, recovery = None, {}, [], {}
-        return file_events, parsed, counts, unknowns, recovery
-
-    cb = chunk_bytes
-
-    def gen(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                state = {"span": None}
-                span_counts: dict[tuple, list] = {}
-                span_rec: dict[tuple, list] = {}
-
-                def on_stmt(ev, span_start, rec=rec, rows=rows,
-                            state=state, span_counts=span_counts,
-                            span_rec=span_rec):
-                    if state["span"] != span_start:
-                        state["span"] = span_start
-                        state["ordinals"] = {}
-                    _tokenize_mysql_stmt(
-                        ev, schema_cols_by_table, state["ordinals"],
-                        rec, span_start, rows, span_counts, span_rec)
-
-                res = _scan_pg_range(rec.path, rec.start, rec.end, cb,
-                                     on_stmt=on_stmt,
-                                     scanner=_scan_mysql_statements,
-                                     is_data=_my_is_data_stmt)
-                res["range_end"] = rec.end
-                for (ss, t), (n, first) in span_counts.items():
-                    rows.append((rec.path, rec.ri, ss, t, n, first,
-                                 "c", ""))
-                for (ss, t), (rp, un) in span_rec.items():
-                    if rp or un:
-                        rows.append((rec.path, rec.ri, ss, t, rp, un,
-                                     "m", ""))
-                rows.append((rec.path, rec.ri, rec.start, "", 0,
-                             rec.ri, "s", _json.dumps(res)))
-            yield pd.DataFrame(
-                rows, columns=["path", "rng", "span_start", "table",
-                               "ordinal", "off", "kind", "payload"])
-
-    desc_df = descriptor_frame(
-        spark, descs, "path string, ri long, start long, end long")
-    parsed = desc_df.mapInPandas(gen, _PARSED_SCHEMA).localCheckpoint()
-    counts, unknowns, recovery, raw_summaries = \
-        _collect_mysql_span_meta(parsed)
-    summaries = {k: _json.loads(v) for k, v in raw_summaries.items()}
-
-    file_events = {}
-    rescan_rows = []
-    accepted: set[tuple] = set()
-    rescan_rng = -1
-    for p in paths:
-        ris = sorted(ri for q, ri in summaries if q == p)
-        results = []
-        for ri in ris:
-            res = summaries[(p, ri)]
-            for ev in res["events"]:
-                if ev[0] == "span":
-                    ev.append(ri)
-            results.append(res)
-        events = _reconcile_pg_scan(p, sizes[p], results, chunk_bytes,
-                                    scanner=_scan_mysql_statements,
-                                    is_data=_my_is_data_stmt)
-        for ev in events:
-            if ev[0] != "span":
-                continue
-            if len(ev) >= 6:
-                accepted.add((p, ev[5], ev[1]))
-            else:
-                ev.append(rescan_rng)
-                if ev[4]:
-                    rescan_rows.append((p, rescan_rng, ev[1], ev[2]))
-                rescan_rng -= 1
-        file_events[p] = events
-
-    counts = {k: v for k, v in counts.items()
-              if (k[0], k[1], k[2]) in accepted}
-    unknowns = [u for u in unknowns if (u[0], u[1], u[2]) in accepted]
-    recovery = {k: v for k, v in recovery.items()
-                if (k[0], k[1], k[2]) in accepted}
-    if rescan_rows:
-        parsed2, counts2, unknowns2, recovery2 = _tokenize_mysql_spans(
-            spark, ctx, rescan_rows)
-        parsed = parsed.unionByName(parsed2)
-        counts.update(counts2)
-        unknowns.extend(unknowns2)
-        recovery.update(recovery2)
-    return file_events, parsed, counts, unknowns, recovery
-
-
 class _RecoveryCtx:
     """ctx stand-in for parse_insert_with_recovery inside executors:
     counts the two recovery events per statement (module-level so the
@@ -1180,14 +1024,12 @@ class _RecoveryCtx:
         self.unparsable += 1
 
 
-def _tokenize_mysql_stmt(ev, schema_cols_by_table, ordinals, rec,
-                         span_start, rows, span_counts,
-                         span_rec) -> None:
-    """Tokenize one mysql ("stmt", ...) event exactly as the staged
-    pass would: conditional-comment unwrap, INSERT match, recovery
-    parse; emits staged-layout rows for known tables, count/recovery
-    metadata for all, unknown-table messages.  Shared by the fused
-    range scan and the span tokenizer."""
+def _tokenize_mysql_stmt(ev, span_start: int, out) -> None:
+    """The mysql tokenize kernel (see pgdump._tokenizer): one
+    ("stmt", ...) event, tokenized exactly as the staged pass would:
+    conditional-comment unwrap, INSERT match, recovery parse; emits
+    staged-layout rows for known tables, count/recovery metadata for
+    all, unknown-table messages."""
     s = _unwrap_conditional(ev[1]).strip()
     if not s.upper().startswith("INSERT"):
         return
@@ -1195,102 +1037,21 @@ def _tokenize_mysql_stmt(ev, schema_cols_by_table, ordinals, rec,
     if not m:
         return
     table = _clean(m[0])
-    known = table in schema_cols_by_table
-    rng = rec.rng if hasattr(rec, "rng") else rec.ri
+    known = table in out.schema_cols
     if not known:
-        rows.append((rec.path, rng, span_start, table, 0, ev[2], "u",
-                     f"INSERT into unknown table {table}"))
-    schema_cols = schema_cols_by_table.get(table)
-    cols = ([_clean(c) for c in m[1].split(",")]
-            if m[1] else schema_cols)
+        out.unknown(span_start, ev[2], f"INSERT into unknown table {table}")
     rctx = _RecoveryCtx()
     tuples = parse_insert_with_recovery(rctx, m[2])
-    if rctx.reparsed or rctx.unparsable:
-        sr = span_rec.setdefault((span_start, table), [0, 0])
-        sr[0] += rctx.reparsed
-        sr[1] += rctx.unparsable
+    out.recovered(span_start, table, rctx.reparsed, rctx.unparsable)
     # presence marker even at zero tuples: stats/recovery replay must
     # see tables whose INSERTs all parsed empty or unparsable
-    # (code-review r8)
-    c = span_counts.setdefault((span_start, table), [0, ev[2]])
-    for vals in tuples:
-        c[0] += 1
-        if not known:
-            continue            # counted for row stats, no data row
-        by_col = dict(zip(cols, vals))
-        ordered = [by_col.get(cn) for cn in schema_cols]
-        k = ordinals.get(table, 0)
-        ordinals[table] = k + 1
-        rows.append((rec.path, rng, span_start, table, k, ev[2], "r",
-                     "\t".join(StagingWriter.copy_escape(v)
-                                for v in ordered)))
-
-
-def _tokenize_mysql_spans(spark: SparkSession, ctx: MigrationContext,
-                          span_rows: list):
-    """Non-fused span tokenizer (serial-scan branch + reconciliation
-    rescans), mirroring pgdump._tokenize_pg_spans with the mysql
-    statement scanner and recovery parse."""
-    import io as _io
-
-    schema_cols_by_table = {t: list(s.col_names)
-                           for t, s in ctx.src_schema.items()}
-
-    def gen(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                with open(rec.path, "rb") as fh:
-                    fh.seek(rec.start)
-                    data = fh.read(rec.end - rec.start)
-                ordinals: dict[str, int] = {}
-                span_counts: dict[tuple, list] = {}
-                span_rec: dict[tuple, list] = {}
-                for ev in _scan_mysql_statements(_io.BytesIO(data),
-                                                 base=rec.start):
-                    if ev[0] == "stmt":
-                        _tokenize_mysql_stmt(
-                            ev, schema_cols_by_table, ordinals, rec,
-                            rec.start, rows, span_counts, span_rec)
-                for (ss, t), (n, first) in span_counts.items():
-                    rows.append((rec.path, rec.rng, ss, t, n, first,
-                                 "c", ""))
-                for (ss, t), (rp, un) in span_rec.items():
-                    if rp or un:
-                        rows.append((rec.path, rec.rng, ss, t, rp, un,
-                                     "m", ""))
-            yield pd.DataFrame(
-                rows, columns=["path", "rng", "span_start", "table",
-                               "ordinal", "off", "kind", "payload"])
-
-    desc = descriptor_frame(
-        spark, span_rows, "path string, rng long, start long, end long")
-    parsed = desc.mapInPandas(gen, _PARSED_SCHEMA).localCheckpoint()
-    counts, unknowns, recovery, _summaries = \
-        _collect_mysql_span_meta(parsed)
-    return parsed, counts, unknowns, recovery
-
-
-def _collect_mysql_span_meta(parsed):
-    """One collect for counts ('c'), unknowns ('u'), recovery ('m'),
-    and fused-scan summaries ('s')."""
-    counts: dict = {}
-    unknowns: list = []
-    recovery: dict = {}
-    summaries: dict = {}
-    for r in parsed.where("kind != 'r'").collect():
-        key = (r.path, r.rng, r.span_start, r.table)
-        if r.kind == "c":
-            counts[key] = (r.ordinal, r.off)
-        elif r.kind == "u":
-            unknowns.append(
-                (r.path, r.rng, r.span_start, r.off, r.payload))
-        elif r.kind == "m":
-            recovery[key] = (r.ordinal, r.off)
-        else:
-            summaries[(r.path, r.off)] = r.payload
-    return counts, unknowns, recovery, summaries
+    # (code-review r8); an unknown table's tuples count for row stats
+    # and stage no data
+    out.count(span_start, table, ev[2], 0 if known else len(tuples))
+    if known:
+        out.insert(span_start, table, ev[2],
+                   [_clean(c) for c in m[1].split(",")] if m[1] else None,
+                   tuples)
 
 
 def _staged_result(spark: SparkSession, ctx: MigrationContext,
@@ -1310,65 +1071,47 @@ def _migrate_mysql_distributed(spark: SparkSession, ctx: MigrationContext,
                                paths: list, staging_dir: str,
                                chunk_bytes: int = 32 << 20,
                                ) -> dict[str, ConversionResult]:
-    """Distributed data pass, serial-driver-free like the pg dialect:
-    the statement-boundary scan runs as byte-range Spark tasks with
-    FUSED tokenization (dump bytes read once), the driver reconciles
-    per-range results and sees only per-(span, table) counts, and
-    each table's sequenced rows materialize as staged-layout text via
-    concurrent executor writes.  DELIMITER stored-program blocks
-    travel as single whole-block events so the trusted cursor steps
-    over them atomically; skip/unknown/recovery side effects replay
-    from accepted events in statement order, so ctx stats are
-    bit-identical to the staged pass."""
-    os.makedirs(staging_dir, exist_ok=True)
-    file_events, parsed, counts, unknowns, recovery = \
-        _scan_tokenize_mysql_distributed(spark, ctx, paths,
-                                         chunk_bytes)
-
-    unknowns_by_span: dict[tuple, list] = {}
-    for p_, rng_, ss_, off_, msg_ in unknowns:
-        unknowns_by_span.setdefault((p_, rng_, ss_), []).append(
-            (off_, msg_))
-    counts_by_span: dict[tuple, list] = {}
-    for (p_, rng_, ss_, t_), (n_, first_) in counts.items():
-        # n == 0 entries are PRESENCE markers (a table whose INSERTs
-        # all parsed empty/unparsable) — they drive stats and
-        # recovery replay but contribute no sequence range
-        counts_by_span.setdefault((p_, rng_, ss_), []).append(
-            (t_, n_, first_))
-
-    order: list[str] = []
-    seqs: dict[str, int] = {}
-    present: list[str] = []
-    span_bases: dict[str, list[tuple]] = {}
-
-    def touch(table: str) -> None:
-        if table not in seqs:
-            seqs[table] = 0
-            order.append(table)
-
-    for p in paths:
-        for ev in file_events[p]:
-            if ev[0] == "dblock":
-                for _ in range(ev[3]):
-                    ctx.skip_statement("DelimiterStmt")
-                continue
-            if ev[0] != "span":
-                continue
-            key = (p, ev[5], ev[1])
-            for _off, msg in sorted(unknowns_by_span.get(key, [])):
-                ctx.unexpected(msg)
-            span_tables = sorted(counts_by_span.get(key, []),
-                                 key=lambda x: x[2])
-            for t, n, _first in span_tables:
-                if t not in present:
-                    present.append(t)
-                if n == 0:
-                    continue
-                touch(t)
-                span_bases.setdefault(t, []).append(
-                    (key[0], key[1], key[2], seqs[t]))
-                seqs[t] += n
+    """Distributed data pass on pgdump's byte-range dump reader: the
+    statement-boundary scan runs as byte-range Spark tasks with FUSED
+    tokenization (dump bytes read once), the driver reconciles the
+    ranges and sees only per-(span, table) counts, and each table's
+    sequenced rows materialize as staged-layout text via concurrent
+    executor writes.  Below the cutover the driver scans each file
+    exactly and executors tokenize its spans.  DELIMITER
+    stored-program blocks travel as single whole-block events so the
+    trusted cursor steps over them atomically; skip/unknown/recovery
+    side effects replay from accepted events in statement order, so
+    ctx stats are bit-identical to the staged pass."""
+    scan = {"scanner": _scan_mysql_statements, "is_data": _my_is_data_stmt}
+    sizes, descs, serial = _plan_ranges(spark, paths, chunk_bytes,
+                                        _scan_mysql_statements)
+    if serial:
+        file_events = _scan_serial(paths, chunk_bytes, **scan)
+        parsed, counts, unknowns, recovery = _tokenize_spans(
+            spark, ctx, _data_spans(paths, file_events),
+            _tokenize_mysql_stmt, _scan_mysql_statements)
+    else:
+        parsed = _range_scan_job(
+            spark, descs, chunk_bytes,
+            _tokenizer(ctx, _tokenize_mysql_stmt), **scan).localCheckpoint()
+        counts, unknowns, recovery, summaries = _collect_span_meta(parsed)
+        file_events, accepted, rescans = _reconcile_ranges(
+            paths, sizes, summaries, chunk_bytes, **scan)
+        # the walk reads only reconciled spans; the per-table recovery
+        # sums below must skip the rejected speculative ones too
+        recovery = {k: v for k, v in recovery.items()
+                    if k[:3] in accepted}
+        if rescans:
+            parsed2, counts2, unknowns2, recovery2 = _tokenize_spans(
+                spark, ctx, rescans, _tokenize_mysql_stmt,
+                _scan_mysql_statements)
+            parsed = parsed.unionByName(parsed2)
+            counts.update(counts2)
+            unknowns.extend(unknowns2)
+            recovery.update(recovery2)
+    order, seqs, present, _chunks, txt_paths = _sequence_spans(
+        spark, ctx, paths, file_events, parsed, counts, unknowns,
+        staging_dir)
 
     # per-table recovery counters over every PRESENT table (not just
     # row-yielding ones — code-review r8): staged tokenizes each
@@ -1389,11 +1132,6 @@ def _migrate_mysql_distributed(spark: SparkSession, ctx: MigrationContext,
         # schema-mode row totals deferred from pass 1
         # (count_rows=False)
         ctx.stats_add_row(t, seqs.get(t, 0))
-
-    txt_paths = _write_sequenced_values(
-        spark, parsed, span_bases,
-        [t for t in order if t in ctx.src_schema and t in span_bases],
-        staging_dir)
 
     return {t: _staged_result(spark, ctx, t, txt_paths[t])
             for t in order if t in txt_paths}  # unknown tables: stats only

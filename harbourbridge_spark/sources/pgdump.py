@@ -22,10 +22,10 @@ stream, postgres/pgdump.go:334-371).
 Scale notes (100 TB): the staged pass above is the reference-parity
 path (one driver loop, postgres/pgdump.go:50-84).  For large dumps use
 ``mode="distributed"`` (r8): the statement-boundary scan itself runs
-as byte-range Spark tasks with INSERT tokenization FUSED into the
-same pass — dump bytes are read once, COPY blocks are skipped with
-bulk find/count (~500 MB/s/core) into chunk ranges executors read
-directly, and the driver reconciles per-range speculative scans with
+as byte-range Spark tasks FUSED with the schema pass, COPY blocks are
+skipped with bulk find/count (~500 MB/s/core) into chunk ranges
+executors read directly, INSERT spans are tokenized on executors, and
+the driver reconciles per-range speculative scans with
 a trusted-cursor protocol (see the design comment above
 _SPEC_HARD_ALLOWANCE) whose serial-rescan fallback guarantees
 exactness on any input.  Driver state is O(ranges + spans), never
@@ -43,6 +43,8 @@ comments), which handles the same cases in one pass.
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import re
 from dataclasses import dataclass
@@ -1883,9 +1885,10 @@ def _collect_scan_events(f, base: int, limit: Optional[int],
     hard abort left the tail after the last event unverified.
 
     ``on_stmt(ev, span_start)`` is called for every statement event
-    with the enclosing span's start offset — the FUSED scan+tokenize
-    hook: the range task tokenizes INSERTs in the same pass that
-    discovers their boundaries, so the dump bytes are read once."""
+    with the enclosing span's start offset — the FUSED hook: a range
+    task does its per-statement work (pg: schema events, mysql: INSERT
+    tokenization) in the same pass that discovers the boundaries, so
+    the dump bytes are read once."""
     hard = None if hard_allowance is None or limit is None \
         else limit + hard_allowance
     events: list = []
@@ -1928,14 +1931,12 @@ def _collect_scan_events(f, base: int, limit: Optional[int],
     return events, stop, clean
 
 
-def _tokenize_stmt(ev, schema_cols_by_table: dict, ordinals: dict,
-                   emit_row, emit_unknown) -> None:
-    """Tokenize one ("stmt", text, start, end) event exactly as the
-    staged pass would: INSERT rows become staged-layout TSV via the
-    shared _parse_insert_values; unknown tables report; statements
-    with unparsable VALUES or zero tuples are skipped.  Shared by the
-    fused range scan and the span tokenizer (one implementation, so
-    the two paths cannot drift)."""
+def _tokenize_stmt(ev, span_start: int, out: "_SpanRows") -> None:
+    """The pg tokenize kernel: one ("stmt", text, start, end) event,
+    tokenized exactly as the staged pass would into ``out``: INSERT
+    rows become staged-layout TSV via the shared _parse_insert_values;
+    unknown tables report; statements with unparsable VALUES or zero
+    tuples are skipped and leave no count."""
     s = ev[1].strip()
     if not s.upper().startswith("INSERT"):
         return
@@ -1943,23 +1944,15 @@ def _tokenize_stmt(ev, schema_cols_by_table: dict, ordinals: dict,
     if not m:
         return
     table = _clean_name(m[0])
-    if table not in schema_cols_by_table:
-        emit_unknown(ev[2], f"INSERT into unknown table {table}")
+    if table not in out.schema_cols:
+        out.unknown(span_start, ev[2], f"INSERT into unknown table {table}")
         return
-    schema_cols = schema_cols_by_table[table]
-    cols = ([_clean_name(c) for c in m[1].split(",")]
-            if m[1] else schema_cols)
     try:
         tuples = _parse_insert_values(m[2])
     except ValueError:
         return          # statement-level skip, staged-pass parity
-    for vals in tuples:
-        by_col = dict(zip(cols, vals))
-        ordered = [by_col.get(c) for c in schema_cols]
-        k = ordinals.get(table, 0)
-        ordinals[table] = k + 1
-        emit_row(table, k, ev[2], "\t".join(
-            StagingWriter.copy_escape(v) for v in ordered))
+    cols = [_clean_name(c) for c in m[1].split(",")] if m[1] else None
+    out.insert(span_start, table, ev[2], cols, tuples)
 
 
 def _scan_pg_range(path: str, start: int, end: int,
@@ -2103,25 +2096,223 @@ def _reconcile_pg_scan(path: str, file_size: int, results: list[dict],
     return out
 
 
-def _tokenize_pg_spans(spark: SparkSession, ctx: MigrationContext,
-                       span_rows: list):
+def _plan_ranges(spark: SparkSession, paths: list[str], chunk_bytes: int,
+                 scanner=None) -> tuple[dict, list, bool]:
+    """The byte-range plan of a distributed dump scan and its cutover.
+    Returns (sizes, descs, serial): ``descs`` are (path, range_idx,
+    start, end) ranges of ~total/parallelism bytes, at least
+    _RANGE_FLOOR and at most ``chunk_bytes``; ``serial`` picks the
+    driver-side exact scan instead (one range only, or a timed probe
+    below the cutover, see _choose_distributed)."""
+    sizes = {p: os.path.getsize(p) for p in paths}
+    total = sum(sizes.values())
+    par = max(int(spark.sparkContext.defaultParallelism), 1)
+    range_bytes = max(_RANGE_FLOOR,
+                      min(chunk_bytes, math.ceil(total / par) or 1))
+    descs = [(p, ri, s, min(s + range_bytes, sizes[p]))
+             for p in paths
+             for ri, s in enumerate(range(0, sizes[p], range_bytes))]
+    serial = len(descs) <= 1
+    if not serial and total < _DIST_SCAN_FORCE_BYTES:
+        serial = not _choose_distributed(
+            _estimate_serial_scan_sec(paths, sizes, chunk_bytes, scanner),
+            total, _DIST_MIN_SERIAL_SEC)
+    return sizes, descs, serial
+
+
+def _scan_serial(paths: list[str], chunk_bytes: int, scanner=None,
+                 is_data=None, on_stmt_for=None) -> dict:
+    """The serial-cutover branch: one exact driver-side scan per file.
+    Returns {path: events}, every span tagged with range 0 (ev[5]).
+    ``on_stmt_for(path)`` gives the on_stmt hook of that file's scan."""
+    file_events: dict[str, list] = {}
+    for p in paths:
+        with open(p, "rb") as f:
+            events, _stop, _clean = _collect_scan_events(
+                f, 0, None, chunk_bytes, hard_allowance=None,
+                on_stmt=on_stmt_for(p) if on_stmt_for else None,
+                scanner=scanner, is_data=is_data)
+        for ev in events:
+            if ev[0] == "span":
+                ev.append(0)
+        file_events[p] = events
+    return file_events
+
+
+def _range_scan_job(spark: SparkSession, descs: list, chunk_bytes: int,
+                    range_kernel, scanner=None,
+                    is_data=None) -> DataFrame:
+    """The byte-range scan as one mapInPandas task per range (``descs``
+    from _plan_ranges).  Each task runs the speculative _scan_pg_range
+    with the hooks of ``range_kernel(rows, path, range_idx)`` ->
+    (on_stmt, flush): on_stmt FUSES the dialect's per-statement work
+    into the scan, flush() runs once the range is scanned.  The task
+    then appends the range's summary row (kind 's': off carries the
+    range index, payload the JSON summary).  The caller picks the
+    action."""
+
+    def gen(batches):
+        import pandas as pd
+        for pdf in batches:
+            rows: list[tuple] = []
+            for rec in pdf.itertuples(index=False):
+                on_stmt, flush = range_kernel(rows, rec.path, rec.ri)
+                res = _scan_pg_range(rec.path, rec.start, rec.end,
+                                     chunk_bytes, on_stmt=on_stmt,
+                                     scanner=scanner, is_data=is_data)
+                res["range_end"] = rec.end
+                flush()
+                rows.append((rec.path, rec.ri, rec.start, "", 0,
+                             rec.ri, "s", json.dumps(res)))
+            yield pd.DataFrame(rows, columns=_PARSED_COLS)
+
+    return descriptor_frame(
+        spark, descs, "path string, ri long, start long, end long") \
+        .mapInPandas(gen, _PARSED_SCHEMA)
+
+
+def _reconcile_ranges(paths: list[str], sizes: dict, summaries: dict,
+                      chunk_bytes: int, scanner=None, is_data=None,
+                      on_stmt_for=None) -> tuple[dict, set, list]:
+    """Reconcile the range job's summaries ({(path, range_idx): json})
+    file by file, in path order: each range's spans are tagged with
+    its index (ev[5]) and _reconcile_pg_scan merges the ranges; a span
+    only its exact rescans found gets a negative tag of its own.
+    Returns (file_events, accepted, rescans): ``accepted`` holds the
+    (path, range_idx, span_start) keys whose fused output stands,
+    ``rescans`` the (path, tag, start, end) of rescan spans that hold
+    a data statement.  ``on_stmt_for(path)`` gives the on_stmt hook of
+    one file's rescans."""
+    file_events: dict[str, list] = {}
+    accepted: set[tuple] = set()
+    rescans: list[tuple] = []
+    tag = -1
+    for p in paths:
+        results = []
+        for ri in sorted(ri for q, ri in summaries if q == p):
+            res = json.loads(summaries[(p, ri)])
+            for ev in res["events"]:
+                if ev[0] == "span":
+                    ev.append(ri)
+            results.append(res)
+        events = _reconcile_pg_scan(
+            p, sizes[p], results, chunk_bytes, scanner, is_data,
+            on_stmt_for(p) if on_stmt_for else None)
+        for ev in events:
+            if ev[0] != "span":
+                continue
+            if len(ev) >= 6:
+                accepted.add((p, ev[5], ev[1]))
+            else:
+                ev.append(tag)
+                if ev[4]:
+                    rescans.append((p, tag, ev[1], ev[2]))
+                tag -= 1
+        file_events[p] = events
+    return file_events, accepted, rescans
+
+
+def _data_spans(paths: list[str], file_events: dict) -> list[tuple]:
+    """(path, rng, start, end) of every span holding a data statement."""
+    return [(p, ev[5], ev[1], ev[2]) for p in paths
+            for ev in file_events[p] if ev[0] == "span" and ev[4]]
+
+
+class _SpanRows:
+    """What one tokenize task emits into the parsed relation
+    (_PARSED_SCHEMA), keyed (path, rng, span_start, table): data rows
+    in staged layout (kind 'r', ordinal = the row's index within its
+    span and table) and unknown-table messages ('u') as the kernel
+    goes; at flush() the per-(span, table) counts ('c': ordinal
+    carries n, off the first counted statement's offset) and recovery
+    counters ('m': reparsed, unparsable; mysql only).  Counting
+    executor-side keeps the driver at O(spans x tables) rows."""
+
+    def __init__(self, rows: list, path: str, rng: int,
+                 schema_cols: dict) -> None:
+        self.rows, self.path, self.rng = rows, path, rng
+        self.schema_cols = schema_cols
+        self.counts: dict[tuple, list] = {}
+        self.recovery: dict[tuple, list] = {}
+
+    def unknown(self, span_start: int, off: int, msg: str) -> None:
+        self.rows.append((self.path, self.rng, span_start, "", 0, off,
+                          "u", msg))
+
+    def count(self, span_start: int, table: str, off: int,
+              n: int = 0) -> None:
+        """Count ``n`` rows that stage no data; n=0 marks presence."""
+        self.counts.setdefault((span_start, table), [0, off])[0] += n
+
+    def insert(self, span_start: int, table: str, off: int,
+               cols: Optional[list], tuples: list) -> None:
+        """Stage one INSERT's tuples in schema column order; ``cols``
+        None means the INSERT named no columns."""
+        if not tuples:
+            return
+        schema_cols = self.schema_cols[table]
+        if cols is None:
+            cols = schema_cols
+        c = self.counts.setdefault((span_start, table), [0, off])
+        for vals in tuples:
+            by_col = dict(zip(cols, vals))
+            self.rows.append((
+                self.path, self.rng, span_start, table, c[0], off, "r",
+                "\t".join(StagingWriter.copy_escape(by_col.get(cn))
+                          for cn in schema_cols)))
+            c[0] += 1
+
+    def recovered(self, span_start: int, table: str, reparsed: int,
+                  unparsable: int) -> None:
+        if reparsed or unparsable:
+            r = self.recovery.setdefault((span_start, table), [0, 0])
+            r[0] += reparsed
+            r[1] += unparsable
+
+    def flush(self) -> None:
+        for (ss, t), (n, first) in self.counts.items():
+            self.rows.append((self.path, self.rng, ss, t, n, first,
+                              "c", ""))
+        for (ss, t), (rp, un) in self.recovery.items():
+            self.rows.append((self.path, self.rng, ss, t, rp, un,
+                              "m", ""))
+        self.counts, self.recovery = {}, {}
+
+
+def _tokenizer(ctx: MigrationContext, kernel):
+    """The range kernel (see _range_scan_job) that feeds each statement
+    to the dialect's tokenize ``kernel(ev, span_start, out)`` through a
+    _SpanRows emitter."""
+    schema_cols = {t: list(st.col_names) for t, st in ctx.src_schema.items()}
+
+    def start(rows: list, path: str, rng: int):
+        out = _SpanRows(rows, path, rng, schema_cols)
+        return (lambda ev, span_start: kernel(ev, span_start, out)), \
+            out.flush
+
+    return start
+
+
+def _tokenize_spans(spark: SparkSession, ctx: MigrationContext,
+                    span_rows: list, kernel, scanner=None):
     """Executor-side tokenization of statement-run spans for the
-    NON-FUSED cases (small single-range inputs and reconciliation
+    NON-FUSED cases (serial-cutover timelines and reconciliation
     rescans): mapInPandas re-reads each span's byte range from the
-    dump file, re-runs the SAME token-walk scanner (span starts are
-    proven clean points, so the re-parse is exact), and tokenizes via
-    the shared _tokenize_stmt kernel.  Rows are keyed
-    (path, rng, span_start, table, ordinal) — the same key space the
-    fused scan emits, so both sources union into one relation.
+    dump file, re-runs the dialect's token-walk ``scanner`` (span
+    starts are proven clean points, so the re-parse is exact) and
+    feeds each statement to its tokenize ``kernel`` (_tokenizer).
+    Rows are keyed (path, rng, span_start, table, ordinal), the key
+    space of the fused range scan, so both union into one relation.
 
     ``span_rows``: [(path, rng, start, end)].  Returns (parsed_df,
-    counts, unknowns): counts = {(path, rng, span_start, table):
-    (n_rows, first_stmt_off)}, unknowns = [(path, rng, span_start,
-    off, msg)]."""
+    counts, unknowns, recovery) as _collect_span_meta does; no spans
+    give (None, {}, [], {})."""
     import io as _io
 
-    schema_cols_by_table = {t: list(st.col_names)
-                            for t, st in ctx.src_schema.items()}
+    if not span_rows:
+        return None, {}, [], {}
+    start = _tokenizer(ctx, kernel)
+    scan = scanner or _scan_dump_statements
 
     def gen(batches):
         import pandas as pd
@@ -2131,69 +2322,53 @@ def _tokenize_pg_spans(spark: SparkSession, ctx: MigrationContext,
                 with open(rec.path, "rb") as fh:
                     fh.seek(rec.start)
                     data = fh.read(rec.end - rec.start)
-                ordinals: dict[str, int] = {}
-                span_counts: dict[str, list] = {}
-
-                def emit_row(table, k, off, payload, rec=rec,
-                             rows=rows, span_counts=span_counts):
-                    c = span_counts.setdefault(table, [0, off])
-                    c[0] += 1
-                    rows.append((rec.path, rec.rng, rec.start, table,
-                                 k, off, "r", payload))
-
-                def emit_unknown(off, msg, rec=rec, rows=rows):
-                    rows.append((rec.path, rec.rng, rec.start, "", 0,
-                                 off, "u", msg))
-
-                for ev in _scan_dump_statements(_io.BytesIO(data),
-                                                base=rec.start):
+                on_stmt, flush = start(rows, rec.path, rec.rng)
+                for ev in scan(_io.BytesIO(data), base=rec.start):
                     if ev[0] == "stmt":
-                        _tokenize_stmt(ev, schema_cols_by_table,
-                                       ordinals, emit_row,
-                                       emit_unknown)
-                for t, (n, first) in span_counts.items():
-                    rows.append((rec.path, rec.rng, rec.start, t,
-                                 n, first, "c", ""))
-            yield pd.DataFrame(
-                rows, columns=["path", "rng", "span_start", "table",
-                               "ordinal", "off", "kind", "payload"])
+                        on_stmt(ev, rec.start)
+                flush()
+            yield pd.DataFrame(rows, columns=_PARSED_COLS)
 
     # one task per span: span size (~chunk_bytes), not span count, is
     # the unit of work
     desc = descriptor_frame(
-        spark, [(p_, r_, s_, e_) for p_, r_, s_, e_ in span_rows],
-        "path string, rng long, start long, end long")
-    parsed = (desc.mapInPandas(
-        gen, _PARSED_SCHEMA).localCheckpoint())
-    counts, unknowns, _summaries = _collect_span_meta(parsed)
-    return parsed, counts, unknowns
+        spark, span_rows, "path string, rng long, start long, end long")
+    parsed = desc.mapInPandas(gen, _PARSED_SCHEMA).localCheckpoint()
+    counts, unknowns, recovery, _summaries = _collect_span_meta(parsed)
+    return parsed, counts, unknowns, recovery
 
 
 _PARSED_SCHEMA = ("path string, rng long, span_start long, "
                   "table string, ordinal long, off long, "
                   "kind string, payload string")
+_PARSED_COLS = ["path", "rng", "span_start", "table", "ordinal", "off",
+                "kind", "payload"]
 
 
 def _collect_span_meta(parsed: DataFrame):
     """Pull the executor-emitted metadata rows off a parsed relation
-    in ONE job: per-(span, table) counts (kind 'c': ordinal carries n,
-    off carries the first statement offset — counted executor-side, so
-    no groupBy shuffle), unknown-table messages (kind 'u'), and range
-    summaries (kind 's', fused scan only).  O(ranges + spans x tables
-    + unknowns) driver rows, never per-statement."""
+    in ONE job (see _SpanRows): counts {(path, rng, span_start,
+    table): (n_rows, first_off)}, unknowns [(path, rng, span_start,
+    off, msg)], recovery {(path, rng, span_start, table): (reparsed,
+    unparsable)} and range summaries {(path, range_idx): json} (fused
+    scan only).  O(ranges + spans x tables + unknowns) driver rows,
+    never per-statement."""
     counts: dict = {}
     unknowns: list = []
+    recovery: dict = {}
     summaries: dict = {}
     for r in parsed.where("kind != 'r'").collect():
+        key = (r.path, r.rng, r.span_start, r.table)
         if r.kind == "c":
-            counts[(r.path, r.rng, r.span_start, r.table)] = \
-                (r.ordinal, r.off)
+            counts[key] = (r.ordinal, r.off)
         elif r.kind == "u":
             unknowns.append(
                 (r.path, r.rng, r.span_start, r.off, r.payload))
+        elif r.kind == "m":
+            recovery[key] = (r.ordinal, r.off)
         else:                               # 's'
             summaries[(r.path, r.off)] = r.payload
-    return counts, unknowns, summaries
+    return counts, unknowns, recovery, summaries
 
 
 def read_copy_chunks(spark: SparkSession, ctx: MigrationContext,
@@ -2287,7 +2462,6 @@ def migrate_pg_dump(spark: SparkSession, dump_path: Union[str, list[str]],
                     ctx: Optional[MigrationContext] = None,
                     mode: str = "staged",
                     chunk_bytes: int = 32 << 20,
-                    max_workers: Optional[int] = None,
                     ) -> tuple[MigrationContext, dict[str, ConversionResult]]:
     """Full pg_dump migration: schema pass + data pass + typed
     conversion with bad-row split. Returns (ctx, {src_table: result}).
@@ -2297,12 +2471,13 @@ def migrate_pg_dump(spark: SparkSession, dump_path: Union[str, list[str]],
     - ``"staged"`` — the reference-parity path: one driver loop splits
       COPY/INSERT rows to per-table staging TSVs, Spark reads those
       distributed.  Per-row driver cost; right for small dumps.
-    - ``"distributed"`` — the scale path: per file, a positional scan
-      (bulk byte ops only) finds COPY-block byte ranges; executors
-      read the ranges directly from the dump file(s).  Multiple files
-      scan concurrently on a thread pool; sequence numbers compose
-      deterministically in path order, so results are bit-identical
-      to ``"staged"``.
+    - ``"distributed"`` — the scale path: the schema pass scans the
+      dump as byte-range Spark tasks (below the cutover, one exact
+      driver scan per file) and hands its reconciled event timelines
+      to the data pass.  Executors read COPY blocks as byte-range
+      chunks straight from the dump file(s) and tokenize the INSERT
+      spans; sequence numbers compose in path order, so results are
+      bit-identical to ``"staged"``.
 
     The caller writes results via sink/ (e.g. parquet per table).
     """
@@ -2324,7 +2499,6 @@ def migrate_pg_dump(spark: SparkSession, dump_path: Union[str, list[str]],
         ctx.add_synthetic_pkeys()
         ctx.set_data_mode()
         return ctx, _migrate_distributed(spark, ctx, paths, staging_dir,
-                                         chunk_bytes, max_workers,
                                          file_events)
 
     # staged pass 1 is serial per file (the reference-parity path):
@@ -2363,6 +2537,36 @@ def migrate_pg_dump(spark: SparkSession, dump_path: Union[str, list[str]],
     return ctx, results
 
 
+def _schema_range_kernel(rows: list, path: str, ri: int):
+    """The range kernel of the distributed schema pass (see
+    _range_scan_job): DDL ('D') and unparsable-INSERT ('X') events
+    ship whole at their offsets; INSERT stats ('I'), skip kinds ('K')
+    and shape errors ('E') pre-aggregate per span, emitted at flush,
+    so the driver collects O(DDL + spans x kinds + ranges) rows,
+    never O(statements)."""
+    aggs: dict[tuple, list] = {}
+
+    def on_stmt(ev, span_start):
+        c = _schema_stmt_event(ev[1])
+        k = c[0]
+        if k in ("D", "X"):
+            rows.append((path, ri, span_start, "", 0, ev[2], k, c[1]))
+        elif k == "I":
+            a = aggs.setdefault((span_start, "I", c[1]), [0, 0])
+            a[0] += c[2]
+            a[1] += c[3]
+        elif k == "K":
+            aggs.setdefault((span_start, "K", c[1]), [0, 0])[0] += c[2]
+        else:                                       # "E"
+            aggs.setdefault((span_start, "E", ""), [0, 0])[0] += c[1]
+
+    def flush():
+        for (ss, kind, word), (n, m) in aggs.items():
+            rows.append((path, ri, ss, word, n, m, kind, ""))
+
+    return on_stmt, flush
+
+
 def process_pg_dump_schema_distributed(spark: SparkSession,
                                        ctx: MigrationContext,
                                        paths: list[str],
@@ -2373,191 +2577,73 @@ def process_pg_dump_schema_distributed(spark: SparkSession,
     worst case a hand-assembled dump hits; real pg_dump puts DDL in a
     prefix but nothing guarantees it).
 
-    The byte-range speculative scan (the same _scan_pg_range +
-    _reconcile_pg_scan machinery the data pass trusts) runs once as a
-    Spark job; each range task reduces every statement it finds to a
-    COMPACT schema event via the shared _schema_stmt_event kernel —
-    DDL text ships whole (tiny), INSERTs ship as per-(span, table)
-    row/statement counts, skipped statements as per-kind counts — and
-    the driver replays the reconciled per-file event timeline in byte
-    order through the same switch the serial pass uses, so results
-    are bit-identical: ordering matters only for ctx.location
-    (last-valid-SET-wins) and the capped unexpected log, both
-    preserved by the offset sort; all other effects are order-free
-    counter sums.  Speculative events of ranges the reconciliation
-    rejects are dropped by (path, range, span) key exactly like the
-    data pass drops fused rows; reconciliation rescans re-capture
-    their statements through the forwarded on_stmt.
+    The byte-range speculative scan (_range_scan_job +
+    _reconcile_ranges, the reader the mysql data pass shares) runs
+    once as a Spark job; each range task reduces every statement it
+    finds to a COMPACT schema event via the shared _schema_stmt_event
+    kernel (_schema_range_kernel), and the driver replays the
+    reconciled per-file event timeline in byte order through the same
+    switch the serial pass uses, so results are bit-identical:
+    ordering matters only for ctx.location (last-valid-SET-wins) and
+    the capped unexpected log, both preserved by the offset sort; all
+    other effects are order-free counter sums.  Speculative events of
+    ranges the reconciliation rejects are dropped by (path, range,
+    span) key; reconciliation rescans re-capture their statements
+    through the forwarded on_stmt.
 
     Returns the reconciled per-file event timelines (spans tagged
     with their owning range) for _migrate_distributed to REUSE — the
     dump is never boundary-scanned twice.
 
     Small inputs take the serial-cutover branch: ONE driver walk
-    produces both the schema events and the data-pass timeline
-    (strictly cheaper than the pre-r11 flow, which walked every file
-    serially for schema and then scanned it again for data)."""
-    import json as _json
-    import math as _math
-
+    produces both the schema events and the data-pass timeline."""
     ctx.set_schema_mode()
-    sizes = {p: os.path.getsize(p) for p in paths}
-    total = sum(sizes.values())
-    par = max(int(spark.sparkContext.defaultParallelism), 1)
-    range_bytes = max(_RANGE_FLOOR,
-                      min(chunk_bytes, _math.ceil(total / par) or 1))
-    descs = []               # (path, range_idx, start, end)
-    for p in paths:
-        n = sizes[p]
-        for ri, s in enumerate(range(0, n, range_bytes)):
-            descs.append((p, ri, s, min(s + range_bytes, n)))
+    sizes, descs, serial = _plan_ranges(spark, paths, chunk_bytes)
+    # (offset, compact event) per file: every statement of an exact
+    # scan (the serial walk or the reconciliation rescans), then the
+    # file's COPY blocks and accepted range spans
+    items: dict[str, list] = {p: [] for p in paths}
 
-    serial = len(descs) <= 1
-    if not serial and total < _DIST_SCAN_FORCE_BYTES:
-        serial = not _choose_distributed(
-            _estimate_serial_scan_sec(paths, sizes, chunk_bytes),
-            total, _DIST_MIN_SERIAL_SEC)
+    def on_stmt_for(p):
+        return lambda ev, _span_start: items[p].append(
+            (ev[2], _schema_stmt_event(ev[1])))
 
-    def _copy_item(ev):
-        return (ev[4], ("C", ev[1], sum(n for _s, _e, n in ev[3])))
-
+    span_items: dict[tuple, list] = {}
     if serial:
-        file_events: dict[str, list] = {}
-        for p in paths:
-            if sizes[p] == 0:
-                file_events[p] = []
+        file_events = _scan_serial(paths, chunk_bytes,
+                                   on_stmt_for=on_stmt_for)
+    else:
+        # every row is metadata (no data rows), so a straight collect
+        # is O(DDL + spans x kinds + ranges) driver memory
+        summaries: dict[tuple, str] = {}
+        for r in _range_scan_job(spark, descs, chunk_bytes,
+                                 _schema_range_kernel).collect():
+            if r.kind == "s":
+                summaries[(r.path, r.off)] = r.payload
                 continue
-            items: list[tuple] = []
+            if r.kind in ("D", "X"):
+                item = (r.off, (r.kind, r.payload))
+            elif r.kind == "I":
+                item = (r.span_start, ("I", r.table, r.ordinal, r.off))
+            elif r.kind == "K":
+                item = (r.span_start, ("K", r.table, r.ordinal))
+            else:                                   # "E"
+                item = (r.span_start, ("E", r.ordinal))
+            span_items.setdefault((r.path, r.rng, r.span_start),
+                                  []).append(item)
+        file_events, _accepted, _rescans = _reconcile_ranges(
+            paths, sizes, summaries, chunk_bytes, on_stmt_for=on_stmt_for)
 
-            def on_stmt(ev, span_start, items=items):
-                items.append((ev[2], _schema_stmt_event(ev[1])))
-
-            with open(p, "rb") as f:
-                events, _stop, _clean = _collect_scan_events(
-                    f, 0, None, chunk_bytes, hard_allowance=None,
-                    on_stmt=on_stmt)
-            for ev in events:
-                if ev[0] == "span":
-                    ev.append(0)                    # rng tag
-                else:
-                    items.append(_copy_item(ev))
-            items.sort(key=lambda it: it[0])
-            _replay_schema_events(ctx, (c for _off, c in items))
-            file_events[p] = events
-        return file_events
-
-    cb = chunk_bytes
-
-    def gen(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                # per-span pre-aggregation: INSERT stats and skip
-                # kinds collapse to counts executor-side, so the
-                # driver collects O(DDL + spans x kinds + ranges)
-                # rows, never O(statements)
-                aggs: dict[tuple, list] = {}
-
-                def on_stmt(ev, span_start, rec=rec, rows=rows,
-                            aggs=aggs):
-                    c = _schema_stmt_event(ev[1])
-                    k = c[0]
-                    if k in ("D", "X"):
-                        rows.append((rec.path, rec.ri, span_start,
-                                     "", 0, ev[2], k, c[1]))
-                    elif k == "I":
-                        a = aggs.setdefault((span_start, "I", c[1]),
-                                            [0, 0])
-                        a[0] += c[2]
-                        a[1] += c[3]
-                    elif k == "K":
-                        a = aggs.setdefault((span_start, "K", c[1]),
-                                            [0])
-                        a[0] += c[2]
-                    else:                           # "E"
-                        a = aggs.setdefault((span_start, "E", ""),
-                                            [0])
-                        a[0] += c[1]
-
-                res = _scan_pg_range(rec.path, rec.start, rec.end, cb,
-                                     on_stmt=on_stmt)
-                res["range_end"] = rec.end
-                for (ss, kind, word), a in aggs.items():
-                    if kind == "I":
-                        rows.append((rec.path, rec.ri, ss, word, a[0],
-                                     a[1], "I", ""))
-                    elif kind == "K":
-                        rows.append((rec.path, rec.ri, ss, word, a[0],
-                                     0, "K", ""))
-                    else:
-                        rows.append((rec.path, rec.ri, ss, "", a[0],
-                                     0, "E", ""))
-                rows.append((rec.path, rec.ri, rec.start, "", 0,
-                             rec.ri, "s", _json.dumps(res)))
-            yield pd.DataFrame(
-                rows, columns=["path", "rng", "span_start", "table",
-                               "ordinal", "off", "kind", "payload"])
-
-    desc_df = descriptor_frame(
-        spark, descs, "path string, ri long, start long, end long")
-    # every row is metadata (no data rows), so a straight collect is
-    # O(DDL + spans x kinds + ranges) driver memory
-    meta = desc_df.mapInPandas(gen, _PARSED_SCHEMA).collect()
-
-    summaries: dict[tuple, dict] = {}
-    span_items: dict[tuple, list] = {}   # ordered D/X events per span
-    span_aggs: dict[tuple, list] = {}    # order-free count events
-    for r in meta:
-        key = (r.path, r.rng, r.span_start)
-        if r.kind == "s":
-            summaries[(r.path, r.off)] = _json.loads(r.payload)
-        elif r.kind in ("D", "X"):
-            span_items.setdefault(key, []).append(
-                (r.off, (r.kind, r.payload)))
-        elif r.kind == "I":
-            span_aggs.setdefault(key, []).append(
-                ("I", r.table, r.ordinal, r.off))
-        elif r.kind == "K":
-            span_aggs.setdefault(key, []).append(
-                ("K", r.table, r.ordinal))
-        else:                               # "E"
-            span_aggs.setdefault(key, []).append(("E", r.ordinal))
-
-    file_events = {}
-    rescan_rng = -1
     for p in paths:
-        ris = sorted(ri for q, ri in summaries if q == p)
-        results = []
-        for ri in ris:
-            res = summaries[(p, ri)]
-            for ev in res["events"]:
-                if ev[0] == "span":
-                    ev.append(ri)                   # rng tag
-            results.append(res)
-        rescan_items: list[tuple] = []
-
-        def on_rescan_stmt(ev, span_start, items=rescan_items):
-            items.append((ev[2], _schema_stmt_event(ev[1])))
-
-        events = _reconcile_pg_scan(p, sizes[p], results, chunk_bytes,
-                                    on_stmt=on_rescan_stmt)
-        items = rescan_items
-        for ev in events:
+        file_items = items[p]
+        for ev in file_events[p]:
             if ev[0] == "copy":
-                items.append(_copy_item(ev))
+                file_items.append(
+                    (ev[4], ("C", ev[1], sum(n for _s, _e, n in ev[3]))))
             elif ev[0] == "span":
-                if len(ev) >= 6:            # accepted range span
-                    key = (p, ev[5], ev[1])
-                    items.extend(span_items.get(key, ()))
-                    for a in span_aggs.get(key, ()):
-                        items.append((ev[1], a))
-                else:                       # rescan-discovered span
-                    ev.append(rescan_rng)
-                    rescan_rng -= 1
-        items.sort(key=lambda it: it[0])
-        _replay_schema_events(ctx, (c for _off, c in items))
-        file_events[p] = events
+                file_items.extend(span_items.get((p, ev[5], ev[1]), ()))
+        file_items.sort(key=lambda it: it[0])
+        _replay_schema_events(ctx, (c for _off, c in file_items))
     return file_events
 
 
@@ -2573,8 +2659,7 @@ def _write_sequenced_values(spark: SparkSession, parsed: DataFrame,
     counts, sink writes) rescans cheap text instead of re-running the
     join.  Per-table write jobs are SUBMITTED CONCURRENTLY: each is a
     small scheduler-latency-bound Spark job, so a serial loop would
-    pay T sequential round trips on wide-schema dumps.  Shared by the
-    pg and mysql distributed passes."""
+    pay T sequential round trips on wide-schema dumps."""
 
     def write_one(t: str) -> str:
         base_df = spark.createDataFrame(
@@ -2604,57 +2689,39 @@ def _write_sequenced_values(spark: SparkSession, parsed: DataFrame,
     return {t: f.result() for t, f in futs.items()}
 
 
-def _migrate_distributed(spark: SparkSession, ctx: MigrationContext,
-                         paths: list[str], staging_dir: str,
-                         chunk_bytes: int, max_workers: Optional[int],
-                         file_events: dict[str, list],
-                         ) -> dict[str, ConversionResult]:
-    """Distributed data pass, serial-driver-free end to end:
+def _sequence_spans(spark: SparkSession, ctx: MigrationContext,
+                    paths: list[str], file_events: dict,
+                    parsed: Optional[DataFrame], counts: dict,
+                    unknowns: list, staging_dir: str):
+    """The sequence walk of both distributed data passes: the global
+    timeline (files in path order, events in file order) hands out
+    each table's sequence numbers exactly as the staged writer would.
+    It branches on event kind: a COPY block (pg) becomes sequenced
+    CopyChunks, a DELIMITER block (mysql) replays its skip count, and
+    a span replays its unknown-table messages, then takes each
+    table's rows at the next sequences, tables in order of their
+    first statement in the span.  A table enters ``order`` at its
+    first row-yielding event, when the staged writer would have
+    opened its TSV; a count of 0 is a presence marker (mysql: a table
+    whose INSERTs all parsed empty) and only enters ``present``.  The
+    tokenized rows are then written as sequenced text.
 
-    1. ``file_events`` are the reconciled per-file event timelines the
-       distributed SCHEMA pass already produced (byte-range Spark
-       tasks + driver reconciliation) — the driver never walks dump
-       bytes and the boundary scan never re-runs;
-    2. INSERT tokenization re-reads only the statement-run spans
-       (executor tasks over proven-clean byte ranges,
-       _tokenize_pg_spans) — schema column order is known by now, so
-       rows come out in staged layout; the driver sees per-(span,
-       table) counts, O(spans), never per-statement data;
-    3. sequence numbers compose deterministically by walking the
-       per-file event timelines in path order, so COPY chunks and
-       INSERT tuples interleave into exactly the sequences the staged
-       pass would have written — results are bit-identical to
-       ``"staged"`` (the differential suite pins this).
-
-    ``max_workers`` is kept for signature compatibility (the scan
-    parallelizes as one Spark job regardless of file count)."""
-    del max_workers
+    Returns (order, seqs, present, chunks, txt_paths): chunks =
+    {table: [CopyChunk]}, txt_paths as _write_sequenced_values."""
     os.makedirs(staging_dir, exist_ok=True)
-    span_rows = [(p, ev[5], ev[1], ev[2])
-                 for p in paths for ev in file_events[p]
-                 if ev[0] == "span" and ev[4]]
-    if span_rows:
-        parsed, counts, unknowns = _tokenize_pg_spans(
-            spark, ctx, span_rows)
-    else:
-        parsed, counts, unknowns = None, {}, []
-
     unknowns_by_span: dict[tuple, list] = {}
     for p_, rng_, ss_, off_, msg_ in unknowns:
         unknowns_by_span.setdefault((p_, rng_, ss_), []).append(
             (off_, msg_))
     counts_by_span: dict[tuple, list] = {}
     for (p_, rng_, ss_, t_), (n_, first_) in counts.items():
-        if n_ > 0:
-            counts_by_span.setdefault((p_, rng_, ss_), []).append(
-                (t_, n_, first_))
+        counts_by_span.setdefault((p_, rng_, ss_), []).append(
+            (t_, n_, first_))
 
-    # walk the global timeline (files in path order, events in file
-    # order): a table enters `order` at its first row-yielding event,
-    # exactly when the staged writer would have opened its TSV
     order: list[str] = []
     seqs: dict[str, int] = {}
-    all_chunks: dict[str, list[CopyChunk]] = {}
+    present: list[str] = []
+    chunks: dict[str, list[CopyChunk]] = {}
     # t -> [(path, rng, span_start, base_seq)]
     span_bases: dict[str, list[tuple]] = {}
 
@@ -2680,17 +2747,23 @@ def _migrate_distributed(spark: SparkSession, ctx: MigrationContext,
                     reorder = [idx.get(c, -1) for c in schema_cols]
                 touch(table)
                 for (s, e, n) in ranges:
-                    all_chunks.setdefault(table, []).append(
+                    chunks.setdefault(table, []).append(
                         CopyChunk(p, s, e, n, seqs[table], reorder))
                     seqs[table] += n
-            else:
+            elif ev[0] == "dblock":
+                for _ in range(ev[3]):
+                    ctx.skip_statement("DelimiterStmt")
+            else:                                   # "span"
                 key = (p, ev[5], ev[1])
-                for _off, msg in sorted(
-                        unknowns_by_span.get(key, [])):
+                for _off, msg in sorted(unknowns_by_span.get(key, [])):
                     ctx.unexpected(msg)
                 span_tables = sorted(counts_by_span.get(key, []),
                                      key=lambda x: x[2])
                 for t, n, _first in span_tables:
+                    if t not in present:
+                        present.append(t)
+                    if n == 0:
+                        continue
                     touch(t)
                     span_bases.setdefault(t, []).append(
                         (key[0], key[1], key[2], seqs[t]))
@@ -2699,6 +2772,33 @@ def _migrate_distributed(spark: SparkSession, ctx: MigrationContext,
     txt_paths = _write_sequenced_values(
         spark, parsed, span_bases,
         [t for t in order if t in span_bases and t in ctx.src_schema],
+        staging_dir)
+    return order, seqs, present, chunks, txt_paths
+
+
+def _migrate_distributed(spark: SparkSession, ctx: MigrationContext,
+                         paths: list[str], staging_dir: str,
+                         file_events: dict[str, list],
+                         ) -> dict[str, ConversionResult]:
+    """Distributed data pass, serial-driver-free end to end:
+
+    1. ``file_events`` are the reconciled per-file event timelines the
+       distributed SCHEMA pass already produced (byte-range Spark
+       tasks + driver reconciliation) — the driver never walks dump
+       bytes and the boundary scan never re-runs;
+    2. INSERT tokenization re-reads only the statement-run spans
+       (executor tasks over proven-clean byte ranges, _tokenize_spans
+       with the _tokenize_stmt kernel) — schema column order is known
+       by now, so rows come out in staged layout; the driver sees
+       per-(span, table) counts, O(spans), never per-statement data;
+    3. the sequence walk (_sequence_spans) interleaves COPY chunks and
+       INSERT tuples into exactly the sequences the staged pass would
+       have written — results are bit-identical to ``"staged"`` (the
+       differential suite pins this)."""
+    parsed, counts, unknowns, _recovery = _tokenize_spans(
+        spark, ctx, _data_spans(paths, file_events), _tokenize_stmt)
+    order, _seqs, _present, all_chunks, txt_paths = _sequence_spans(
+        spark, ctx, paths, file_events, parsed, counts, unknowns,
         staging_dir)
 
     def build(t: str) -> ConversionResult:

@@ -836,9 +836,7 @@ def test_mysql_spark_range_split_modes_identical(spark, tmp_path,
     mysql dump splits into many executor ranges; results, recovery
     stats, and reports must stay identical to staged."""
     monkeypatch.setattr(pgdump, "_RANGE_FLOOR", 128)
-    from harbourbridge_spark.sources import mysqldump as M
-    monkeypatch.setattr(M, "_RANGE_FLOOR", 128)
-    monkeypatch.setattr(M, "_DIST_MIN_SERIAL_SEC", 0.0)
+    monkeypatch.setattr(pgdump, "_DIST_MIN_SERIAL_SEC", 0.0)
     f = tmp_path / "mbig.sql"
     f.write_text(
         "CREATE TABLE `t` (`id` int NOT NULL, `v` varchar(60), "
@@ -1107,3 +1105,85 @@ def test_interleaved_random_differential(spark, tmp_path, monkeypatch):
         f = tmp_path / f"ileave_{it}.sql"
         f.write_text("".join(lines))
         _assert_modes_identical(spark, f, tmp_path, chunk_bytes=128)
+
+
+# ---------------------------------------------------------------------------
+# Spark jobs of the distributed ingest, and where its cutover knobs live
+# ---------------------------------------------------------------------------
+
+JOBS_PG_DUMP = (
+    "CREATE TABLE public.t (id integer NOT NULL, v text, "
+    "PRIMARY KEY (id));\n"
+    "CREATE TABLE public.u (a text);\n"
+    + "".join(f"INSERT INTO public.t VALUES ({i}, 'r{i}-multi\n"
+              f"line; with semi');\n" for i in range(40))
+    + "COPY public.t (id, v) FROM stdin;\n"
+    + "".join(f"{i}\tcopy-{i}\n" for i in range(100, 160))
+    + "\\.\n"
+    + "INSERT INTO public.u VALUES ('x'), ('y');\n"
+    + "INSERT INTO public.ghost VALUES (1);\n")
+
+JOBS_MYSQL_DUMP = (
+    "CREATE TABLE `t` (`id` int NOT NULL, `v` varchar(60), "
+    "PRIMARY KEY (`id`));\n"
+    "CREATE TABLE `u` (`a` text);\n"
+    + "".join(f"INSERT INTO `t` VALUES ({i},'r{i}-semi;colon\n"
+              f"line'),({i + 1000},'q''{i}');\n" for i in range(40))
+    + "DELIMITER ;;\n"
+      "CREATE TRIGGER tr BEFORE INSERT ON t FOR EACH ROW BEGIN "
+      "END;;\n"
+      "DELIMITER ;\n"
+    + "INSERT INTO `u` VALUES ('x'), ('y');\n"
+    + "INSERT INTO `ghost` VALUES (1);\n")
+
+# Spark jobs one mode="distributed" migrate call submits (the results
+# stay deferred, so this is the ingest alone): "serial" is the
+# small-input cutover, "ranges" the byte-range job with reconciliation
+# rescans, forced by shrinking the cutover knobs
+_INGEST_JOBS = {("pg", "serial"): 6, ("pg", "ranges"): 7,
+                ("mysql", "serial"): 6, ("mysql", "ranges"): 8}
+
+
+@pytest.mark.parametrize("branch", ["serial", "ranges"])
+@pytest.mark.parametrize("dialect", ["pg", "mysql"])
+def test_distributed_ingest_job_counts(spark, tmp_path, monkeypatch,
+                                       dialect, branch):
+    from harbourbridge_spark import obs
+    if branch == "ranges":
+        monkeypatch.setattr(pgdump, "_RANGE_FLOOR", 128)
+        monkeypatch.setattr(pgdump, "_DIST_MIN_SERIAL_SEC", 0.0)
+    f = tmp_path / "jobs.sql"
+    if dialect == "pg":
+        f.write_text(JOBS_PG_DUMP)
+        migrate = pgdump.migrate_pg_dump
+    else:
+        f.write_text(JOBS_MYSQL_DUMP)
+        migrate = mysqldump.migrate_mysql_dump
+    jobs = []
+    for run in range(2):
+        with obs.ledger(spark) as led:
+            migrate(spark, str(f), str(tmp_path / f"st{run}"),
+                    mode="distributed")
+        jobs.append(led["jobs"])
+    assert jobs == [_INGEST_JOBS[dialect, branch]] * 2
+
+
+def test_mysql_range_split_reads_pgdump_knobs(spark, tmp_path,
+                                              monkeypatch):
+    """The cutover knobs exist once, in pgdump: shrinking them there
+    splits a mysql dump into several byte ranges, which reach the
+    reconciliation as one summary each."""
+    monkeypatch.setattr(pgdump, "_RANGE_FLOOR", 128)
+    monkeypatch.setattr(pgdump, "_DIST_MIN_SERIAL_SEC", 0.0)
+    ranges = []
+    real = pgdump._reconcile_pg_scan
+
+    def spy(path, file_size, results, *args, **kwargs):
+        ranges.append(len(results))
+        return real(path, file_size, results, *args, **kwargs)
+
+    monkeypatch.setattr(pgdump, "_reconcile_pg_scan", spy)
+    f = tmp_path / "knobs.sql"
+    f.write_text(JOBS_MYSQL_DUMP)
+    _assert_mysql_modes_identical(spark, f, tmp_path)
+    assert ranges and ranges[0] > 1, ranges

@@ -4714,3 +4714,28 @@ def test_afp64_mp3_dispatch_channel0():
                      for t in range(AFP_FRAMES - 1)
                      for b in range(AFP_BANDS) if rises[t, b])
         assert afp64(clip) == expect
+
+
+def test_ngram_jaccard_short_texts_match_duckdb(spark, tmp_path):
+    """Texts shorter than one word 3-gram (empty, 1 and 2 tokens) next
+    to 3- and 4-token texts in one block: the Spark rendering of the
+    gram template gives exactly the DuckDB oracle's pairs.  Spark's
+    ANSI mode rejects an out-of-range ``t[i]``, so the Spark form must
+    read the 2nd and 3rd gram words NULL-safely, as DuckDB does."""
+    import duckdb
+    from harbourbridge_spark.pipeline.dedup import (ngram_jaccard_pairs_fn,
+                                                    ngram_jaccard_pairs_sql)
+    texts = ["a", "A", "a b", "a  b", "a b c", "a b c d", "", " ",
+             "x", "x y z w"]
+    spark.createDataFrame(
+        [(i, "en", 50, t) for i, t in enumerate(texts)],
+        "doc_id long, lang string, n_chars long, text string") \
+        .write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    got = sorted(tuple(r) for r in
+                 ngram_jaccard_pairs_fn(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path}/documents.parquet/*.parquet')")
+    want = sorted(con.execute(ngram_jaccard_pairs_sql("duckdb")).fetchall())
+    con.close()
+    assert want and got == want
